@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 
 /** Session factory for the graft engine — the Spark analog of the reference's
   * session/connection object (`Connection.sql`, reference
@@ -61,6 +62,23 @@ object Engine {
     * the comparable-14 total 6.6 → 4.7 s). Above this, full scale path. */
   val SmallBytes: Long = 512L * 1024 * 1024
 
+  /** The session's data regime — `tiny`, `small` or `scale` — written once
+    * by [[create]] from the data dir's largest table (see TinyBytes,
+    * SmallBytes); a session without a data dir is `scale`. */
+  val RegimeConf = "spark.graft.regime"
+
+  /** True unless the regime is `scale`: "the whole dataset is KB-MB
+    * scale", so operators trade scale-safe plan shapes for latency —
+    * single-partition sorts (plans.TinySinglePartitionSort), shuffle-hash
+    * dims instead of broadcasts (Tables.dim, Tables.hashIfSmall) and spread
+    * 1-task generator stages (Dedup). Unset or unknown values count as
+    * `scale`. No consumer tells tiny from small. */
+  def smallRegime(conf: SQLConf): Boolean =
+    conf.getConfString(RegimeConf, "scale") match {
+      case "tiny" | "small" => true
+      case _ => false
+    }
+
   def scanSplitConf(dataDir: String): (Long, Long) = {
     val largest = largestTableBytes(dataDir)
     val cores = Runtime.getRuntime.availableProcessors.toLong
@@ -117,33 +135,29 @@ object Engine {
         // tree and still precedes Catalyst's stats-based join reorder,
         // which skips hinted joins.
         e.injectPreCBORule(s => plans.SampleJoinReorder(s))
-        // tiny-regime single-partition sorts (no-op unless
-        // spark.graft.tinySort=true, set below from the data dir size)
+        // tiny/small-regime single-partition sorts (no-op in the scale
+        // regime, see smallRegime)
         e.injectOptimizerRule(_ => plans.TinySinglePartitionSort)
       }
       .config("spark.sql.shuffle.partitions", shufParts.toString)
-      .config("spark.graft.tinySort", (tiny || small).toString)
-      // Tiny/small regime: the driver's testdata tables are single-row-group
-      // parquet files, so a scan stage is ONE task no matter the split conf —
-      // fine for decode-bound queries (the row group is the decode unit), but
-      // a CPU-dense generator chained onto the scan (shingle explode + hash
-      // mixing, LSH key fan-out) then runs serially on 1 of 32 cores
-      // (StageProbe r11: ngram's main stage 1.58 s single-task). When this
-      // flag is set, those operators repartition their input first — a
-      // KB-scale exchange that spreads the generator across the cores. At
-      // scale the flag is OFF: multi-file tables already give scan
-      // parallelism, and repartitioning raw text/embedding payloads before
-      // exploding would shuffle the whole corpus (guide §2.3's anti-pattern).
-      .config("spark.graft.spreadTinyScan", (tiny || small).toString)
-      // Same predicate, broader consumers (Tables.dim, Dedup.tinyHash):
-      // "the whole dataset is KB-MB scale" — operators flip estimate-
-      // driven broadcasts to co-partitioned shuffle-hash joins (parallel
-      // per-partition builds instead of a single-threaded driver collect,
-      // and the broadcast-free plan stays eligible for the prepared-RDD
-      // tier) and spread 1-task generator stages. Scale sessions keep
-      // their explicit broadcast hints - load-bearing at sf100.
-      .config("spark.graft.smallData", (tiny || small).toString)
-      // Tiny regime scan/broadcast shape (measured, tools.StageProbe sf0.1):
+      // One regime key, read through smallRegime by every operator that
+      // trades a scale-safe plan shape for latency on KB-MB data:
+      // - single-partition sorts (plans.TinySinglePartitionSort);
+      // - spread 1-task generator stages (Dedup.spread): the driver's
+      //   testdata tables are single-row-group parquet files, so a scan
+      //   stage is ONE task no matter the split conf, and a CPU-dense
+      //   generator chained onto the scan (shingle explode + hash mixing,
+      //   LSH key fan-out) would run serially on one core; a KB-scale
+      //   exchange spreads it across the cores;
+      // - co-partitioned shuffle-hash joins instead of estimate-driven
+      //   broadcasts (Tables.dim, Dedup.tinyHash): parallel per-partition
+      //   builds instead of a single-threaded driver collect.
+      // At scale all of these are off: multi-file tables already give scan
+      // parallelism, repartitioning raw payloads before exploding would
+      // shuffle the whole corpus, and explicit broadcast hints are
+      // load-bearing at sf100.
+      .config(RegimeConf, if (tiny) "tiny" else if (small) "small" else "scale")
+      // Tiny regime scan/broadcast shape (measured from the stage timeline at sf0.1):
       // - The driver's testdata files are single-row-group parquet, so a
       //   scan can't parallelize below one file: the default
       //   minPartitionNum(=cores) split produced 21 tasks of which 20 read

@@ -6,40 +6,54 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.ExecSubqueryExpression
 
 import scala.collection.mutable
 
-/** Prepared-query execution — the engine's plan cache.
+/** Prepared-query execution — the engine's compiled-artifact cache.
   *
   * A query that runs repeatedly (a dashboard refresh, a bench loop, a
   * nightly job re-invoked per partition) pays Catalyst's analyze → optimize
-  * → physical-plan pipeline on every submission even though the plan is
-  * identical each time; at small scale factors that driver-side cost rivals
-  * the execution itself (PhaseProbe at sf1: ~0.8 s of the comparable-14's
-  * ~4 s total). Every mature engine amortizes this with a prepared-
-  * statement / plan cache (the reference caches its compiled query module
-  * per statement too — a LingoDB query is JIT-compiled ONCE and re-invoked,
-  * src/execution/Execution.cpp); this is the Spark-native equivalent.
+  * → physical-plan pipeline, whole-stage codegen source generation and RDD
+  * construction on every submission even though all of it is identical each
+  * time; at small scale factors that driver-side cost rivals the execution
+  * itself. The reference compiles a statement ONCE and re-invokes the
+  * compiled module (src/execution/Execution.cpp); this is the Spark-native
+  * equivalent.
   *
-  * Semantics — plan caching, NOT result caching: the cache maps the
-  * canonicalized ANALYZED plan to the prepared physical plan, and every
-  * execution deep-CLONES that plan before running it. Cloning re-instances
-  * every operator, so whole-stage codegen, shuffle exchanges and broadcast
-  * builds are all fresh per execution — scans re-read, shuffles re-write,
-  * hash tables rebuild. Only the driver-side front half (parse/analyze/
-  * optimize/physical planning) is amortized, exactly what EXECUTE of a
-  * prepared statement amortizes elsewhere.
+  * [[freshRdd]] has two paths:
   *
-  * Deliberately NOT cached (falls back to the normal per-query pipeline):
-  *  - adaptive plans (AQE re-plans from runtime stats by design — caching
-  *    its first-run shape would defeat it; AQE is enabled in the scale
-  *    regime where planning cost is immaterial anyway);
-  *  - plans carrying ReusedExchangeExec or subquery expressions: those
-  *    nodes hold CROSS-REFERENCES to sibling operator instances that a
-  *    tree clone does not re-wire, so a cloned run could silently reuse
-  *    the previous run's shuffle output — result caching by accident.
+  *  - RDD tier: the BUILT RDD DAG of an eligible plan is cached per session,
+  *    keyed on the canonicalized analyzed plan, and re-drained on every
+  *    later call. Honesty is restored by the one primitive Spark itself uses
+  *    to force stage recomputation: before every re-drain the map outputs of
+  *    EVERY shuffle in the DAG are unregistered
+  *    (org.apache.spark.graft.ShuffleReset), so the DAGScheduler re-runs each
+  *    map stage from the scans up — scans re-read, shuffles re-write,
+  *    aggregates rebuild. Broadcast-bearing plans qualify too: every
+  *    BroadcastExchangeExec is rewritten at install time to
+  *    org.apache.spark.graft.RebroadcastExchangeExec, whose consumer-visible
+  *    Broadcast is a stable RefreshableBroadcast wrapper; before each
+  *    re-drain [[RebroadcastExchangeExec.refresh]] re-runs the FULL build
+  *    (child subtree re-executed with its own shuffle outputs forgotten,
+  *    rows re-collected, hash relation rebuilt, fresh TorrentBroadcast) and
+  *    swaps it in, innermost-first so a nested rebuild only observes
+  *    already-refreshed inner relations. Amortized per run: plan, codegen
+  *    source text, RDD object construction. Recomputed per run: every byte
+  *    of data movement, every broadcast build and all operator work.
+  *    ReusedExchangeExec is fine here: the DAG is reused as-is, so a shared
+  *    shuffle recomputes once per drain and a shared broadcast resolves to
+  *    the SAME RebroadcastExchangeExec (identity-preserving rewrite) and
+  *    rebuilds once per drain — exactly the plan's intra-query reuse.
+  *
+  *  - Fresh re-plan ([[freshExec]]) for everything else:
+  *     - adaptive plans (AQE re-plans from runtime stats by design; it is
+  *       on only in the scale regime, where planning cost is immaterial);
+  *     - subquery expressions (memoized results inside the expression);
+  *     - InMemoryTableScan (persist caches data by design — intra-query
+  *       reuse is its semantics, but a cross-RUN re-drain would read the
+  *       materialized cache).
   *
   * Staleness: the cache is session-scoped and keyed purely on the plan, so
   * a session that mutates the underlying files or flips planning-relevant
@@ -47,109 +61,27 @@ import scala.collection.mutable
   * either; Tables.invalidate calls through).
   */
 object Prepared {
-  private val cache =
-    new java.util.WeakHashMap[SparkSession, mutable.Map[LogicalPlan, SparkPlan]]()
-
-  /** Second tier (round 11): prepared-RDD cache — the compiled-artifact
-    * analog of the reference's JIT-once/re-invoke execution model. For
-    * eligible plans the BUILT RDD DAG is cached, so a repeat execution
-    * skips whole-stage codegen SOURCE generation too (PhaseProbe sf1:
-    * toRdd ≈ 1.04 s across the comparable-14 — the largest driver-side
-    * term left after the r10 plan cache). Honesty is restored by the one
-    * primitive Spark itself uses to force stage recomputation: before
-    * every re-drain, the map outputs of EVERY shuffle in the DAG are
-    * unregistered (org.apache.spark.graft.ShuffleReset), so the
-    * DAGScheduler sees each map stage as unavailable and re-runs it from
-    * the scans up — scans re-read, shuffles re-write, aggregates rebuild.
-    * Amortized per run: plan, codegen source text, class lookup (Spark's
-    * CodeGenerator cache already dedupes identical source — the saving is
-    * not re-GENERATING it), RDD object construction. Recomputed per run:
-    * every byte of data movement and operator work.
-    *
-    * Round 12 extends the tier to BROADCAST-bearing plans. A stock
-    * BroadcastExchangeExec memoizes its built relation (and the consuming
-    * join captures the Broadcast object into its codegen references), so
-    * r11 excluded those plans — leaving q5/q9/q10/q21/sim_cosine_topk on
-    * the clone tier paying plan-clone + codegen-source + RDD construction
-    * per run (HitProbe r12: 0.06-0.15 s/run each). Now every
-    * BroadcastExchangeExec is rewritten at install time to
-    * org.apache.spark.graft.RebroadcastExchangeExec, whose consumer-visible
-    * Broadcast is a stable RefreshableBroadcast wrapper; before each
-    * re-drain [[RebroadcastExchangeExec.refresh]] re-runs the FULL build
-    * (child subtree re-executed with its own shuffle outputs forgotten,
-    * rows re-collected, hash relation rebuilt, fresh TorrentBroadcast) and
-    * swaps it in, destroying the old generation. Refresh order is
-    * innermost-first so a nested rebuild only observes already-refreshed
-    * inner relations. Recomputed per run: the broadcast build itself —
-    * the same per-run work the clone tier paid — plus all shuffle/scan
-    * work; amortized: the driver-side plan/codegen/RDD front half only.
-    *
-    * Still ineligible (falls back to the clone tier / fresh pipeline):
-    *  - InMemoryTableScan (persist caches data by design — intra-query
-    *    reuse is its semantics, but a cross-RUN re-drain would read the
-    *    materialized cache);
-    *  - subquery expressions (memoized results inside the expression);
-    *  - adaptive plans (AQE re-plans per run by design).
-    *  ReusedExchangeExec over a SHUFFLE is fine here (unlike the clone
-    *  tier): the DAG is reused as-is, so the cross-reference stays wired
-    *  to the same dependency, and after forgetMapOutputs the shared
-    *  shuffle recomputes once per drain — exactly the plan's intra-query
-    *  reuse semantics. ReusedExchangeExec over a BROADCAST keeps its
-    *  sharing: both sites resolve to the SAME RebroadcastExchangeExec
-    *  (identity-preserving rewrite), so a shared relation rebuilds once
-    *  per drain, exactly the plan's intra-query reuse semantics. */
   private val rddCache =
     new java.util.WeakHashMap[SparkSession,
       mutable.Map[LogicalPlan, (RDD[InternalRow], Seq[Int],
         Seq[Seq[org.apache.spark.graft.RebroadcastExchangeExec]])]]()
 
-  private def sessionCache(spark: SparkSession) = cache.synchronized {
-    var m = cache.get(spark)
-    if (m == null) { m = mutable.Map.empty; cache.put(spark, m) }
-    m
-  }
-
-  private def sessionRddCache(spark: SparkSession) = cache.synchronized {
+  private def sessionRddCache(spark: SparkSession) = rddCache.synchronized {
     var m = rddCache.get(spark)
     if (m == null) { m = mutable.Map.empty; rddCache.put(spark, m) }
     m
   }
 
   def invalidate(spark: SparkSession): Unit =
-    cache.synchronized { cache.remove(spark); rddCache.remove(spark); () }
+    rddCache.synchronized { rddCache.remove(spark); () }
 
   /** Conservative full flush (Tables.invalidate is dir-keyed across
     * sessions; prepared plans don't record their dir, so drop them all). */
-  def invalidateAll(): Unit = cache.synchronized { cache.clear(); rddCache.clear() }
-
-  /** True when the plan is safe to cache+clone (see object scaladoc).
-    * ReusedExchangeExec over a BROADCAST exchange is allowed — cloneForRun
-    * re-wires it to a fresh copy of the exchange (duplicate build of a
-    * small broadcast, honest and cheap); SHUFFLE reuse is not re-wired
-    * (duplicating a fact-scale shuffle would change the plan's cost), so
-    * those plans fall back. */
-  private def cacheable(p: SparkPlan): Boolean = p match {
-    case _: AdaptiveSparkPlanExec => false
-    case _ => !p.exists {
-      case r: ReusedExchangeExec => !r.child.isInstanceOf[BroadcastExchangeExec]
-      case q => q.expressions.exists(_.exists(_.isInstanceOf[ExecSubqueryExpression]))
-    }
-  }
-
-  /** Deep-clone for one execution: every operator re-instanced (fresh
-    * codegen/exchanges/broadcasts), and broadcast-reuse cross-references
-    * re-pointed at fresh exchange copies so no run can observe a previous
-    * run's broadcast relation. The ReusedExchangeExec wrapper stays (it
-    * carries the output-attribute mapping its parents reference). */
-  private def cloneForRun(planned: SparkPlan): SparkPlan =
-    planned.clone().transformUp {
-      case r: ReusedExchangeExec if r.child.isInstanceOf[BroadcastExchangeExec] =>
-        ReusedExchangeExec(r.output, r.child.clone().asInstanceOf[BroadcastExchangeExec])
-    }
+  def invalidateAll(): Unit = rddCache.synchronized { rddCache.clear() }
 
   /** A FRESH QueryExecution over `df`'s analyzed plan — fresh optimizer/
     * planner run, fresh exchanges, fresh shuffle ids. The uncacheable
-    * paths must use this, never `df.queryExecution.toRdd`: `toRdd` is a
+    * path must use this, never `df.queryExecution.toRdd`: `toRdd` is a
     * memoized lazy val, so a caller holding one Dataset across runs (the
     * bench's prepared-statement protocol) would get the SAME RDD back and
     * a re-drain would skip every completed shuffle map stage — silent
@@ -157,13 +89,8 @@ object Prepared {
   private def freshExec(df: DataFrame): RDD[InternalRow] =
     df.sparkSession.sessionState.executePlan(df.queryExecution.analyzed).toRdd
 
-  /** Execute `df`'s query through the plan cache: on a hit the analyzed
-    * plan's canonical form resolves to the prepared physical plan, which is
-    * cloned and executed from scratch. Uncacheable plans re-run the normal
-    * pipeline on a fresh QueryExecution per call (honest re-plan — see
-    * [[freshExec]]). The returned RDD recomputes fully when drained. */
   /** True when the BUILT RDD DAG itself may be cached and re-drained after
-    * a shuffle-output reset + broadcast refresh (see rddCache scaladoc). */
+    * a shuffle-output reset + broadcast refresh (see the object scaladoc). */
   private def rddCacheable(p: SparkPlan): Boolean = p match {
     case _: AdaptiveSparkPlanExec => false
     case _ => !p.exists {
@@ -220,15 +147,16 @@ object Prepared {
     rebs.groupBy(depth.get(_)).toSeq.sortBy(-_._1).map(_._2)
   }
 
+  /** Execute `df`'s query: a hit re-drains the cached RDD after a shuffle
+    * reset and broadcast refresh; a miss builds and caches the RDD when the
+    * plan is eligible, else re-plans on a fresh QueryExecution (see
+    * [[freshExec]]). The returned RDD recomputes fully when drained. */
   def freshRdd(df: DataFrame): RDD[InternalRow] = {
     val spark = df.sparkSession
     val qe = df.queryExecution
-    if (!spark.conf.get("spark.graft.planCache.enabled", "true").toBoolean)
-      return freshExec(df) // A/B escape hatch
-    val rddTier = spark.conf.get("spark.graft.rddCache.enabled", "true").toBoolean
     val key = qe.analyzed.canonicalized
     val rm = sessionRddCache(spark)
-    if (rddTier) rm.get(key) match {
+    rm.get(key) match {
       case Some((rdd, shuffles, rebroadcastGroups)) =>
         // honest re-drain: every map stage forgets its outputs first, so
         // the scheduler recomputes the full DAG from the scans up, and
@@ -240,15 +168,10 @@ object Prepared {
         rebroadcastGroups.foreach { g =>
           g.foreach(_.beginRefresh()); g.foreach(_.awaitRefresh())
         }
-        return rdd
-      case None => ()
-    }
-    val m = sessionCache(spark)
-    m.get(key) match {
-      case Some(planned) => cloneForRun(planned).execute()
+        rdd
       case None =>
         val p = qe.executedPlan
-        if (rddTier && rddCacheable(p)) {
+        if (rddCacheable(p)) {
           // burn the plan instance into the cached DAG on purpose — this
           // tier's whole point is reusing the built artifact; run 1 needs
           // no reset (no outputs registered yet) and builds generation-1
@@ -261,12 +184,6 @@ object Prepared {
           rm(key) = (rdd, org.apache.spark.graft.ShuffleReset.shuffleIds(rdd),
             depthGroups(rebroadcasts.toSeq))
           rdd
-        } else if (cacheable(p)) {
-          m(key) = p
-          // run the clone, not the original: the original stays pristine in
-          // the cache (executing it would burn its lazy exchange state) and
-          // run 1 measures the same path as run N
-          cloneForRun(p).execute()
         } else freshExec(df)
     }
   }

@@ -34,7 +34,7 @@ object Tables {
     * `spark.read.parquet` pays a directory listing plus a schema-inference
     * Spark job (a footer read) on EVERY call — measured ~68 ms per table at
     * sf0.1, so a 6-table query spent ~0.4 s re-deriving schemas it already
-    * knew (tools.StageProbe, PERF_r10 §2). A real engine resolves tables
+    * knew (stage timeline, PERF_r10 §2). A real engine resolves tables
     * against a persistent catalog (the reference keeps Arrow-table metadata
     * in src/catalog/Catalog.cpp; DuckDB likewise never re-reads footers per
     * query), so caching the resolved LogicalRelation is the Spark-native
@@ -98,7 +98,7 @@ object Tables {
     * over orderkey-bucketed orders) gets nothing back for the lost
     * splittability: at sf100 the 32 unsplittable ~400 MB bucket files
     * serialize q1's scan to one wave of 32 tasks with no straggler
-    * absorption — measured 7.6 → 5.8 s (tools.LayoutProbe) against the
+    * absorption — measured 7.6 → 5.8 s (layout A/B) against the
     * plain layout's 32 MB-row-group size-based splits. The same choice an
     * optimizer makes between a clustered index scan and a heap scan. */
   def loadScan(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -147,8 +147,7 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
-  /** Dimension-side join strategy, regime-aware (Engine sets
-    * spark.graft.smallData from the data dir's largest table).
+  /** Dimension-side join strategy, regime-aware (Engine.smallRegime).
     *
     * At scale: an explicit BROADCAST hint — the estimate-blind choice the
     * fact-side plans rely on at sf100 (a 20 MB key set pruning a 600M-row
@@ -164,8 +163,7 @@ object Tables {
     * prepared-RDD execution tier (Prepared.scala), which amortizes
     * whole-stage-codegen source generation across runs. */
   def dim(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.smallData", "false").toBoolean)
-      df.hint("shuffle_hash")
+    if (Engine.smallRegime(df.sparkSession.sessionState.conf)) df.hint("shuffle_hash")
     else org.apache.spark.sql.functions.broadcast(df)
 
   /** Shuffle-hash hint applied ONLY on small data (identity at scale) —
@@ -174,8 +172,7 @@ object Tables {
     * planner's estimate-driven pick at KB-MB sizes is a broadcast whose
     * driver-side build costs more than the join (see [[dim]]). */
   def hashIfSmall(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.smallData", "false").toBoolean)
-      df.hint("shuffle_hash")
+    if (Engine.smallRegime(df.sparkSession.sessionState.conf)) df.hint("shuffle_hash")
     else df
 
 }

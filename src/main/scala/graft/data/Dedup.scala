@@ -25,13 +25,13 @@ object Dedup {
   type Q = (SparkSession, String) => DataFrame
 
   /** Spread a CPU-dense generator's input across the cores in the tiny/small
-    * regime (Engine sets spark.graft.spreadTinyScan there): the driver's
+    * regime (Engine.smallRegime): the driver's
     * single-row-group parquet files make every scan stage ONE task, so a
     * shingle explode / LSH key fan-out chained onto the scan runs serially
     * on 1 of 32 cores (StageProbe r11: ngram's main stage was 1.58 s
     * single-task of a 2.6 s query). The exchange this inserts moves the raw
     * KB-scale input once; the generator then runs `defaultParallelism`-wide.
-    * At scale the conf is off and this is the identity — multi-file tables
+    * At scale this is the identity — multi-file tables
     * already split, and repartitioning a 100 TB corpus' raw payload before
     * exploding it would be the guide §2.3 anti-pattern. Hash-partitioned on
     * the row key (deterministic under retry, unlike round-robin of a
@@ -41,12 +41,11 @@ object Dedup {
     * heavy (embed_cos 0.29 vs 0.54 s median) — at KB-per-task sizes the
     * extra tasks cost more in scheduling+GC than they buy in parallelism,
     * the same trade the Engine's narrow tiny-regime shuffles encode. */
-  private def spread(df: DataFrame, key: String): DataFrame = {
-    val s = df.sparkSession
-    if (s.conf.get("spark.graft.spreadTinyScan", "false").toBoolean)
-      df.repartition(col(key))
-    else df
-  }
+  private def spread(df: DataFrame, key: String): DataFrame =
+    if (smallRegime(df)) df.repartition(col(key)) else df
+
+  private def smallRegime(df: DataFrame): Boolean =
+    graft.Engine.smallRegime(df.sparkSession.sessionState.conf)
 
   /** Tiny/small-regime shuffle-hash hint for joins whose both sides are
     * corpus-scale (e.g. the shared-shingle self-join): per-partition hash
@@ -60,8 +59,7 @@ object Dedup {
     * structurally bounded (candidate sets) hint shuffle_hash
     * unconditionally instead — see jaccardForCandidates. */
   private def tinyHash(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.spreadTinyScan", "false").toBoolean)
-      df.hint("shuffle_hash")
+    if (smallRegime(df)) df.hint("shuffle_hash")
     else df
 
   /** Df-capped shingles shared by several consumers of one query (signature
@@ -208,9 +206,7 @@ object Dedup {
     * anti probe's build is the df>cap COMPLEMENT, thousands of rows, which
     * has no such footprint. */
   private[graft] def dfCapped(grams: DataFrame, maxDf: Int = MaxShingleDf): DataFrame = {
-    val small = grams.sparkSession.conf
-      .get("spark.graft.smallData", "false").toBoolean
-    if (small) {
+    if (smallRegime(grams)) {
       val gx = grams.repartition(col("g"))
       // count(doc_id), not count(*): doc_id is null-filtered upstream so the
       // value is identical, but referencing it stops column pruning from
@@ -276,9 +272,7 @@ object Dedup {
     * sizes joins are hinted shuffle-hash with sizes as build — receipts in
     * the branch comment below (r12 StageProbe at sf100). */
   private[data] def jaccardPairs(grams: DataFrame): DataFrame = {
-    val small = grams.sparkSession.conf
-      .get("spark.graft.smallData", "false").toBoolean
-    if (small) {
+    if (smallRegime(grams)) {
       val byDoc = byDocId(grams)
       // count(g): non-null by construction, and referencing it keeps the
       // aggregate's input projection identical to byDoc so the doc_id

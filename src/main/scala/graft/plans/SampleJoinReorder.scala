@@ -120,10 +120,14 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
     * 40 ms ≈ 4e5 rows: a composite-side hint must save at least a probe
     * exchange of that order to buy its serialization. Leaf-side broadcasts
     * are exempt — broadcast-over-scan stages are independent leaf stages
-    * and AQE materializes them concurrently. */
+    * and AQE materializes them concurrently. A value that is not a finite,
+    * non-negative number falls back to the default instead of failing
+    * planning. */
   private def stagePenaltyRows: Double =
     spark.conf.getOption("spark.graft.sampleReorder.stagePenaltyRows")
-      .map(_.toDouble).getOrElse(SampleJoinReorder.StagePenaltyRows)
+      .flatMap(v => scala.util.Try(v.trim.toDouble).toOption)
+      .filter(d => d >= 0 && !d.isInfinite)
+      .getOrElse(SampleJoinReorder.StagePenaltyRows)
 
   /** [[hintFor]] with the serialized-stage pricing (VERDICT r11 #3): a side
     * that CONTAINS joins ("composite") is only hinted when the probe side's

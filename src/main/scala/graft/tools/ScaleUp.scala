@@ -131,7 +131,7 @@ object ScaleUp {
     // default group size at most SFs), so a scan CANNOT parallelize below one
     // file — the old 8-file documents/embeddings layout pinned every corpus
     // scan (the dominant stage of all text/embedding pipelines) to 8 of 32
-    // cores at EVERY decade (tools.StageProbe: the sf100 ngram "68 s bimodal
+    // cores at EVERY decade (stage timeline: the sf100 ngram "68 s bimodal
     // stage" was 8 scan tasks at 55-65 s with 24 cores idle). 32 files match
     // the bench machine; a cluster deployment sizes this to executors, same
     // as the bucket counts below. The 32 MB row-group override on the writes

@@ -37,9 +37,11 @@ object ShuffleReset {
   }
 
   /** Forget the map outputs of `ids` so the next job that needs them
-    * re-runs their map stages (and everything upstream of those stages). */
+    * re-runs their map stages (and everything upstream of those stages).
+    * A shuffle the scheduler has not registered yet (its RDD was never
+    * drained) has no outputs to forget and is skipped. */
   def forgetMapOutputs(sc: SparkContext, ids: Seq[Int]): Unit = {
     val tracker = sc.env.mapOutputTracker.asInstanceOf[MapOutputTrackerMaster]
-    ids.foreach(tracker.unregisterAllMapAndMergeOutput)
+    ids.filter(tracker.containsShuffle).foreach(tracker.unregisterAllMapAndMergeOutput)
   }
 }

@@ -211,14 +211,27 @@ class DedupSpec extends SparkSpec {
     // sizes attachment at scale (r12). The driver's oracle gate only ever
     // runs the small branch (sf0.01 is tiny-regime), so this spec is what
     // pins the SCALE branch to the same result set.
-    def rows(small: Boolean) = {
-      spark.conf.set("spark.graft.smallData", small.toString)
-      try SparkEntry.queries("dedup_ngram_jaccard")(spark, sf)
-        .collect().map(_.toString).toSeq.sorted
-      finally spark.conf.unset("spark.graft.smallData")
+    // Flips the one regime key Engine.create writes, so each side is a
+    // shape some Engine session really produces.
+    def withRegime[T](regime: String)(f: => T): T = {
+      spark.conf.set(Engine.RegimeConf, regime)
+      try f finally spark.conf.unset(Engine.RegimeConf)
     }
-    val smallRows = rows(small = true)
-    val scaleRows = rows(small = false)
+    def rows(regime: String) = withRegime(regime) {
+      SparkEntry.queries("dedup_ngram_jaccard")(spark, sf)
+        .collect().map(_.toString).toSeq.sorted
+    }
+    // expression ids, lambda variable ids and plan ids differ between any
+    // two builds
+    def plan(regime: String) = withRegime(regime) {
+      SparkEntry.queries("dedup_ngram_jaccard")(spark, sf).queryExecution.executedPlan
+        .toString.replaceAll("(#|_|plan_id=)\\d+", "$1")
+    }
+    assert(plan("scale") == plan("scale"), "normalized plans must be reproducible")
+    assert(plan("small") != plan("scale"),
+      "the regime flip must change the executed plan, or the row check below is vacuous")
+    val smallRows = rows("small")
+    val scaleRows = rows("scale")
     assert(smallRows.nonEmpty, "fixture corpus should produce jaccard pairs")
     assert(smallRows == scaleRows,
       s"branch divergence: ${(smallRows.toSet -- scaleRows.toSet).take(3)} vs " +

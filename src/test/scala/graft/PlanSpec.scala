@@ -423,10 +423,16 @@ class PlanSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "50000")
     spark.conf.set("spark.graft.sampleReorder.enabled", "true")
     try {
-      // probe est rows (20000) <= default penalty (4e5): hint suppressed
+      // probe est rows (20000) <= default penalty (5e4): hint suppressed
       val gated = topHint(q())
       assert(!hasBroadcastSide(gated),
         s"composite-side hint must be gated when the probe is small: $gated")
+      // a malformed penalty falls back to the default: still plans, still gated
+      for (bad <- Seq("not-a-number", "", "-5")) {
+        spark.conf.set("spark.graft.sampleReorder.stagePenaltyRows", bad)
+        val h = topHint(q())
+        assert(!hasBroadcastSide(h), s"malformed penalty '$bad' must fall back to the default: $h")
+      }
       // penalty lowered below the probe rows: the composite side is hinted
       spark.conf.set("spark.graft.sampleReorder.stagePenaltyRows", "1000")
       val hinted = topHint(q())
@@ -634,32 +640,91 @@ class PlanSpec extends SparkSpec {
         s"required; extend the allowed set WITH justification): $offenders")
   }
 
-  test("Prepared plan cache: cloned executions reproduce fresh results, every run recomputes") {
-    // shape-diverse slice of the headline set: scan+agg, multi-join,
-    // rollup/Expand, window, session window
-    for (name <- Seq("tpch_q1", "tpch_q5", "agg_rollup", "win_running_sum", "ev_sessions")) {
-      val q = SparkEntry.queries(name)
-      val freshRows = q(spark, sf).count()
-      val counts = Seq.fill(3) { // run 1 primes the cache; 2-3 are clone hits
-        Prepared.freshRdd(q(spark, sf))
-          .mapPartitions(it => Iterator.single(it.size.toLong)).collect().sum
+  test("regime accessor: tiny/small take the latency shapes, bogus/unset the scale shapes") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint, SHUFFLE_HASH, Sort}
+    import org.apache.spark.sql.functions.col
+    val prior = spark.conf.getOption(Engine.RegimeConf)
+    def shapes(regime: Option[String]) = {
+      regime match {
+        case Some(r) => spark.conf.set(Engine.RegimeConf, r)
+        case None => spark.conf.unset(Engine.RegimeConf)
       }
-      assert(counts.forall(_ == freshRows),
-        s"$name: prepared runs $counts != fresh $freshRows")
+      val nation = Tables.load(spark, sf, "nation")
+      val sortGlobal = nation.orderBy(col("n_name").desc).queryExecution.optimizedPlan
+        .collectFirst { case s: Sort => s.global }
+      val dimHint = Tables.dim(nation).queryExecution.analyzed
+        .collectFirst { case h: ResolvedHint => h.hints.strategy }.flatten
+      (sortGlobal, dimHint)
     }
-    // a plan with ReusedExchangeExec cross-references must FALL BACK (a
-    // cloned tree would silently reuse the previous run's shuffle output)
+    try {
+      for (r <- Seq("tiny", "small"))
+        assert(shapes(Some(r)) == (Some(false), Some(SHUFFLE_HASH)),
+          s"regime $r must take the single-partition sort and shuffle-hash dims")
+      for (r <- Seq(Some("bogus"), Some("scale"), None))
+        assert(shapes(r) == (Some(true), Some(BROADCAST)),
+          s"regime $r must take the scale shapes (global sort, broadcast dims)")
+    } finally prior match {
+      case Some(v) => spark.conf.set(Engine.RegimeConf, v)
+      case None => spark.conf.unset(Engine.RegimeConf)
+    }
+  }
+
+  test("Prepared rdd tier: re-drains match fresh rows; persisted and AQE plans re-plan") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    def rowsOf(rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+        df: DataFrame): Seq[String] = {
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      rdd.map(_.copy()).collect().map(r => toRow(r).asInstanceOf[Row].toString).toSeq.sorted
+    }
+    def freshRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    // the rdd tier only engages for non-adaptive plans (the engine's
+    // tiny/small regime); this shared test session has no dataDir, so pin
+    // AQE off the way Engine.create's tiny regime does
+    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    Prepared.invalidate(spark)
+    try {
+      // shape-diverse slice of the headline set: scan+agg, multi-join with
+      // broadcasts, rollup/Expand, window, session window
+      for (name <- Seq("tpch_q1", "tpch_q5", "agg_rollup", "win_running_sum", "ev_sessions")) {
+        val df = SparkEntry.queries(name)(spark, sf)
+        val expected = freshRows(SparkEntry.queries(name)(spark, sf))
+        assert(expected.nonEmpty, s"$name: fixture should produce rows")
+        // call, then drain, as the prepared-statement protocol does: run 1
+        // builds the RDD; runs 2-3 reset it and re-drain
+        val rdds = (1 to 3).map { i =>
+          val rdd = Prepared.freshRdd(df)
+          // a repeat call before the first drain has no map outputs to reset
+          if (i == 1) assert(Prepared.freshRdd(df) eq rdd, s"$name: undrained repeat call")
+          assert(rowsOf(rdd, df) == expected, s"$name: drain $i rows differ from a fresh collect")
+          rdd
+        }
+        assert(rdds(1) eq rdds(0), s"$name did not hit the prepared-RDD tier")
+      }
+      // a persisted subtree (InMemoryTableScan) must FALL BACK to a fresh
+      // re-plan per call: a cross-run re-drain would read the materialized
+      // cache of a previous run
+      val tmp = SparkEntry.queries("rel_tmp_reuse")(spark, sf)
+      val tmpExpected = freshRows(SparkEntry.queries("rel_tmp_reuse")(spark, sf))
+      val tmpRdds = (1 to 2).map { i =>
+        val rdd = Prepared.freshRdd(tmp)
+        assert(rowsOf(rdd, tmp) == tmpExpected, s"rel_tmp_reuse: drain $i rows differ")
+        rdd
+      }
+      assert(tmpRdds(0).id != tmpRdds(1).id, "rel_tmp_reuse was cached on the rdd tier")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
+    // AQE on: repeated calls on the SAME Dataset must each get a FRESH
+    // execution. queryExecution.toRdd is a memoized lazy val, so handing
+    // it back twice would let the second drain skip every completed
+    // shuffle map stage — silent result reuse under the bench's
+    // construct-once protocol
     val heavy = SparkEntry.queries("dedup_minhash_lsh")(spark, sf)
     val n1 = Prepared.freshRdd(heavy)
       .mapPartitions(it => Iterator.single(it.size.toLong)).collect().sum
     assert(n1 == SparkEntry.queries("dedup_minhash_lsh")(spark, sf).count())
-    // …and repeated calls on the SAME Dataset must each get a FRESH
-    // execution: queryExecution.toRdd is a memoized lazy val, so handing
-    // it back twice would let the second drain skip every completed
-    // shuffle map stage — silent result reuse under the bench's
-    // construct-once protocol
     assert(Prepared.freshRdd(heavy).id != Prepared.freshRdd(heavy).id,
-      "uncacheable fallback returned the memoized toRdd twice")
+      "adaptive fallback returned the memoized toRdd twice")
   }
 
   test("Prepared rdd cache: re-drain re-runs the map stages (no silent result reuse)") {
