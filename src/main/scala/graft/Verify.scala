@@ -29,7 +29,7 @@ object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness. */
-  private def q(s: String): String = "\"" + s.flatMap {
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -43,7 +43,7 @@ object Verify {
     * independently of (and before) any query dump. */
   def writeOracleJson(outDir: String): Unit = {
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 

@@ -1,9 +1,8 @@
 package graft.clickbench
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
+import graft.util.Suites
 
 /** ClickBench surface: the reference's 43 query texts
   * (resources/sql/clickbench/1.sql..43.sql) over [[ClickbenchGen]]'s
@@ -101,80 +100,37 @@ object Clickbench {
   private def sparkRegexFix(sql: String): String =
     sql.replace("'\\1'", "'$1'")
 
-  def sparkSql(sql: String): String =
+  private def sparkSql(sql: String): String =
     sparkRegexFix(detOrder(sql)).replaceAll("(?i)\\bhits\\b", "cb_hits")
 
-  def duckSql(sql: String): String =
+  private def duckSql(sql: String): String =
     detOrder(sql).replaceAll("(?i)\\bhits\\b", "cb_hits")
 
   // ------------------------------------------------------------ registration
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  private def dataDir: String =
+  /** Single-table suite: stats still help selectivity-driven choices past
+    * toy scale (see util.CatalogStats). */
+  private val tables = new Suites.TableSet(
     s"${sys.props("java.io.tmpdir")}/graft_cb_data" +
-      (if (ClickbenchGen.Scale > 1) s"_x${ClickbenchGen.Scale}" else "")
+      (if (ClickbenchGen.Scale > 1) s"_x${ClickbenchGen.Scale}" else ""),
+    Seq("hits" -> (ClickbenchGen.hits _)), "cb_", analyzed = ClickbenchGen.Scale > 1)
 
-  def ensure(spark: SparkSession): Unit =
-    if (!registered.containsKey(spark)) Clickbench.synchronized {
-      if (!registered.containsKey(spark)) {
-        val ver = Integer.toHexString(
-          ClickbenchGen.hits(graft.tpcds.TpcdsGen.SparkDia).hashCode)
-        val done = Paths.get(s"$dataDir/_ALL_TABLES_OK_$ver")
-        graft.util.GenLock.withFileLock(s"$dataDir.lock") {
-          if (!Files.exists(done)) {
-            spark.sql(ClickbenchGen.hits(graft.tpcds.TpcdsGen.SparkDia))
-              .write.mode("overwrite").parquet(s"$dataDir/hits")
-            Files.createFile(done)
-          }
-          // planning samples for SampleJoinReorder (idempotent backfill)
-          graft.util.PlanningSamples.ensure(spark, dataDir, Seq("hits"))
-        }
-        // single-table suite: stats still help selectivity-driven choices
-        // past toy scale (see util.CatalogStats)
-        if (ClickbenchGen.Scale > 1)
-          graft.util.CatalogStats.registerAnalyzed(spark, "cb_hits", s"$dataDir/hits")
-        else
-          spark.read.parquet(s"$dataDir/hits").createOrReplaceTempView("cb_hits")
-        // mark only after the view exists: a transient generation failure
-        // must retry on the next query, not poison the whole session
-        registered.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
+  def ensure(spark: SparkSession): Unit = tables.ensure(spark)
 
   // ------------------------------------------------------------------ output
 
   /** Round to 10 significant digits via scale-to-integer — expressible
     * identically in both engines (Spark's round() needs a constant scale). */
-  private def sigRound(c: Column): Column = {
-    val d = c.cast("double")
-    val p = pow(lit(10.0), floor(log10(abs(d))) - 9)
-    when(d.isNull || d === 0.0, d).otherwise(round(d / p) * p)
-  }
-
-  private def wrap(df: DataFrame): DataFrame = {
-    val renamed = df.toDF((1 to df.schema.length).map("c" + _): _*)
-    val outs = renamed.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType => sigRound(col(f.name)).as(f.name)
-        case ByteType | ShortType | IntegerType | LongType =>
-          col(f.name).cast("long").as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    renamed.select(outs.toIndexedSeq: _*)
-  }
-
-  def sigOf(df: DataFrame): String =
-    df.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType => 'd'
-        case ByteType | ShortType | IntegerType | LongType => 'l'
-        case _ => 'r'
-      }
-    }.mkString
+  private val sigRound: Suites.Rounding = Suites.Rounding(
+    c => {
+      val d = c.cast("double")
+      val p = pow(lit(10.0), floor(log10(abs(d))) - 9)
+      when(d.isNull || d === 0.0, d).otherwise(round(d / p) * p)
+    },
+    c => s"CASE WHEN cast($c as double) IS NULL OR cast($c as double) = 0 " +
+      s"THEN cast($c as double) ELSE " +
+      s"round(cast($c as double) / pow(10, floor(log10(abs(cast($c as double)))) - 9)) * " +
+      s"pow(10, floor(log10(abs(cast($c as double)))) - 9) END")
 
   /** `SELECT * FROM hits WHERE <pred> ORDER BY <ord> LIMIT <n>` — the q24
     * shape: a wide-row top-k. Spark's TakeOrderedAndProject decodes EVERY
@@ -207,29 +163,13 @@ object Clickbench {
           if (ids.isEmpty) spark.sql("SELECT * FROM cb_hits WHERE 1=0")
           else spark.sql(s"SELECT * FROM cb_hits WHERE WatchID IN (${ids.mkString(",")}) " +
             s"ORDER BY $ord, WatchID LIMIT $n")
-        wrap(df)
-      case q => wrap(spark.sql(sparkSql(q)))
+        Suites.wrap(df, sigRound)
+      case q => Suites.wrap(spark.sql(sparkSql(q)), sigRound)
     }
   }
 
-  def oracleFor(qn: String, sig: String): String = {
-    val cols = (1 to sig.length).map("c" + _)
-    val sel = sig.zipWithIndex.map { case (ch, i) =>
-      val c = cols(i)
-      ch match {
-        case 'd' =>
-          s"CASE WHEN cast($c as double) IS NULL OR cast($c as double) = 0 " +
-            s"THEN cast($c as double) ELSE " +
-            s"round(cast($c as double) / pow(10, floor(log10(abs(cast($c as double)))) - 9)) * " +
-            s"pow(10, floor(log10(abs(cast($c as double)))) - 9) END AS $c"
-        case 'l' => s"cast($c as bigint) AS $c"
-        case _   => c
-      }
-    }.mkString(", ")
-    val ddl = s"CREATE TABLE IF NOT EXISTS cb_hits AS (" +
-      s"${ClickbenchGen.hits(graft.tpcds.TpcdsGen.DuckDia)});"
-    s"$ddl\nSELECT $sel FROM (\n${duckSql(loadQuery(qn))}\n) AS t(${cols.mkString(", ")})"
-  }
+  def oracleFor(qn: String, sig: String): String =
+    tables.duckDdl() + "\n" + Suites.oracleSelect(sig, sigRound, duckSql(loadQuery(qn)))
 
   // ------------------------------------------------------- SparkEntry wiring
 

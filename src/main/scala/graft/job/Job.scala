@@ -1,9 +1,7 @@
 package graft.job
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
+import graft.util.Suites
 
 /** Join Order Benchmark surface: the reference's 113 query texts
   * (resources/sql/job/1a.sql .. 33c.sql, scored by
@@ -35,132 +33,33 @@ object Job {
   def loadQuery(qn: String): String =
     graft.util.SqlResources.loadQuery("job", s"$qn.sql", "GRAFT_JOB_SQL")
 
-  private val tableNames: Set[String] = JobGen.tables.map(_._1).toSet
-
-  /** Rename JOB table identifiers to a job_ prefix (outside string literals).
+  /** Prefix JOB table identifiers with job_ (outside string literals).
     * Unlike TPC-DS, the IMDB schema reuses table names as COLUMN names
     * (`n.name`, `t.title`, `k.keyword`, `lt.link`) — qualified members are
-    * column references, never table references, so a word preceded by `.`
-    * is left alone. Unqualified column references don't occur in the 113
-    * query texts (every column is alias-qualified). */
-  private[job] def renameTables(sql: String): String = {
-    val sb = new StringBuilder(sql.length + 64)
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb.append(c); inStr = true; i += 1 }
-      else if (c.isLetter || c == '_') {
-        var j = i
-        while (j < sql.length && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-        val w = sql.substring(i, j)
-        val afterDot = {
-          var k = i - 1
-          while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
-          k >= 0 && sql.charAt(k) == '.'
-        }
-        if (!afterDot && tableNames.contains(w.toLowerCase)) sb.append("job_").append(w)
-        else sb.append(w)
-        i = j
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  def sparkSql(sql: String): String = renameTables(sql)
-  def duckSql(sql: String): String = renameTables(sql)
+    * column references, never table references, so they are left alone.
+    * Unqualified column references don't occur in the 113 query texts
+    * (every column is alias-qualified). */
+  private def renameTables(sql: String): String =
+    Suites.renameTables(sql, JobGen.tables.map(_._1).toSet, "job_", members = false)
 
   // ------------------------------------------------------------ registration
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  private def dataDir: String =
+  private val tables = new Suites.TableSet(
     s"${sys.props("java.io.tmpdir")}/graft_job_data" +
-      (if (JobGen.Scale > 1) s"_x${JobGen.Scale}" else "")
+      (if (JobGen.Scale > 1) s"_x${JobGen.Scale}" else ""),
+    JobGen.tables, "job_", analyzed = JobGen.Scale > 1)
 
-  /** Materialize the closed-form tables to parquet once per machine, then
-    * register parquet-backed views (same scheme as Tpcds.ensure). */
-  def ensure(spark: SparkSession): Unit =
-    if (!registered.containsKey(spark)) Job.synchronized {
-      if (!registered.containsKey(spark)) {
-        val ver = Integer.toHexString(
-          JobGen.tables.map(_._2(graft.tpcds.TpcdsGen.SparkDia)).mkString.hashCode)
-        val done = Paths.get(s"$dataDir/_ALL_TABLES_OK_$ver")
-        graft.util.GenLock.withFileLock(s"$dataDir.lock") {
-          if (!Files.exists(done)) {
-            JobGen.tables.foreach { case (name, gen) =>
-              spark.sql(gen(graft.tpcds.TpcdsGen.SparkDia))
-                .write.mode("overwrite").parquet(s"$dataDir/$name")
-            }
-            Files.createFile(done)
-          }
-          // planning samples for SampleJoinReorder (idempotent backfill)
-          graft.util.PlanningSamples.ensure(spark, dataDir, JobGen.tables.map(_._1))
-        }
-        JobGen.tables.foreach { case (name, _) =>
-          // catalog tables + ANALYZE past toy scale so CBO join reorder
-          // fires (see util.CatalogStats); temp views at the gate scale
-          if (JobGen.Scale > 1)
-            graft.util.CatalogStats.registerAnalyzed(spark, s"job_$name", s"$dataDir/$name")
-          else
-            spark.read.parquet(s"$dataDir/$name")
-              .createOrReplaceTempView(s"job_$name")
-        }
-        // mark only after the views exist: a transient generation failure
-        // must retry on the next query, not poison the whole session
-        registered.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
+  def ensure(spark: SparkSession): Unit = tables.ensure(spark)
 
   // ------------------------------------------------------------------ output
 
-  private def wrap(df: DataFrame): DataFrame = {
-    val n = df.schema.length
-    val renamed = df.toDF((1 to n).map("c" + _): _*)
-    val outs = renamed.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType =>
-          round(col(f.name).cast("double"), 3).as(f.name)
-        case ByteType | ShortType | IntegerType | LongType =>
-          col(f.name).cast("long").as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    renamed.select(outs.toIndexedSeq: _*)
-  }
-
-  def sigOf(df: DataFrame): String =
-    df.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType => 'd'
-        case ByteType | ShortType | IntegerType | LongType => 'l'
-        case _ => 'r'
-      }
-    }.mkString
-
   def run(spark: SparkSession, qn: String): DataFrame = {
     ensure(spark)
-    wrap(spark.sql(sparkSql(loadQuery(qn))))
+    Suites.wrap(spark.sql(renameTables(loadQuery(qn))), Suites.Round3)
   }
 
-  def oracleFor(qn: String, sig: String): String = {
-    val cols = (1 to sig.length).map("c" + _)
-    val sel = sig.zipWithIndex.map { case (ch, i) =>
-      val c = cols(i)
-      ch match {
-        case 'd' => s"round(cast($c as double), 3) AS $c"
-        case 'l' => s"cast($c as bigint) AS $c"
-        case _   => c
-      }
-    }.mkString(", ")
-    val ddl = JobGen.tables.map { case (n, f) =>
-      s"CREATE TABLE IF NOT EXISTS job_$n AS (${f(graft.tpcds.TpcdsGen.DuckDia)});"
-    }.mkString("\n")
-    s"$ddl\nSELECT $sel FROM (\n${duckSql(loadQuery(qn))}\n) AS t(${cols.mkString(", ")})"
-  }
+  def oracleFor(qn: String, sig: String): String =
+    tables.duckDdl() + "\n" + Suites.oracleSelect(sig, Suites.Round3, renameTables(loadQuery(qn)))
 
   // ------------------------------------------------------- SparkEntry wiring
 

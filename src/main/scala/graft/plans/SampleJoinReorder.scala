@@ -609,8 +609,14 @@ object SampleJoinReorder {
     * hint does not restore the CBO's own order: it yields the DP's order
     * WITHOUT its broadcasts, whose SMJ exchanges cost more than the
     * serialized stage chain for any probe beyond ~50k rows on local[32].
-    * Conf-overridable via spark.graft.sampleReorder.stagePenaltyRows
-    * (0 = r11 behavior, gate and DP surcharge both off). */
+    * The gate is NOT inert elsewhere: at generator scale 1 it changes the
+    * plans of job_q1a, job_q2a, job_q3a, job_q8a, tpcds_q7 and tpcds_q42
+    * (graft.tools.Explain with and without stagePenaltyRows=0), where
+    * composite-side broadcast chains become leaf broadcasts — so removing
+    * it needs a timed A/B on perfbench's adhoc_suites workload, not only
+    * the JOB ×50 fleet. Conf-overridable via
+    * spark.graft.sampleReorder.stagePenaltyRows (0 = r11 behavior, gate and
+    * DP surcharge both off). */
   val StagePenaltyRows: Double = 5e4
 
   private val sampleCache = new ConcurrentHashMap[String, (DataFrame, Double)]()

@@ -1,9 +1,7 @@
 package graft.ssb
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
+import graft.util.Suites
 
 /** Star Schema Benchmark surface: the reference's 13 query texts in BOTH
   * shipped variants — resources/sql/ssb (string dimensions) as `ssb_qNN`,
@@ -20,124 +18,38 @@ object Ssb {
       graft.util.SqlResources.loadQuery("ssb_simplified", s"$qn.sql", "GRAFT_SSB2_SQL")
     else graft.util.SqlResources.loadQuery("ssb", s"$qn.sql", "GRAFT_SSB_SQL")
 
-  private val tableNames = Set("date", "customer", "supplier", "part", "lineorder")
+  private def prefix(simplified: Boolean): String = if (simplified) "ssb2_" else "ssb_"
 
-  /** Whole-word table rename outside string literals, skipping qualified
-    * members (same as Job.renameTables). `date` must be renamed in table
-    * position; `d_date`-style columns are single words and unaffected. */
-  private def renameTables(sql: String, prefix: String): String = {
-    val sb = new StringBuilder(sql.length + 32)
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb.append(c); inStr = true; i += 1 }
-      else if (c.isLetter || c == '_') {
-        var j = i
-        while (j < sql.length && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-        val w = sql.substring(i, j)
-        val afterDot = {
-          var k = i - 1
-          while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
-          k >= 0 && sql.charAt(k) == '.'
-        }
-        if (!afterDot && tableNames.contains(w.toLowerCase)) sb.append(prefix).append(w)
-        else sb.append(w)
-        i = j
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  /** Whole-word table rename skipping qualified members (as in Job). `date`
+    * must be renamed in table position; `d_date`-style columns are single
+    * words and unaffected. */
+  private def sqlText(qn: String, simplified: Boolean): String =
+    Suites.renameTables(loadQuery(qn, simplified),
+      Set("date", "customer", "supplier", "part", "lineorder"), prefix(simplified),
+      members = false)
 
   // ------------------------------------------------------------ registration
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  /** Both variants' tables in one set: the parquet dir names carry the
+    * variant prefix, so they register under their own names. */
+  private val tables = new Suites.TableSet(
+    s"${sys.props("java.io.tmpdir")}/graft_ssb_data",
+    SsbGen.tables.map { case (n, g) => (s"ssb_$n", g) } ++
+      SsbGen.tablesCoded.map { case (n, g) => (s"ssb2_$n", g) },
+    "", analyzed = false)
 
-  private def dataDir: String = s"${sys.props("java.io.tmpdir")}/graft_ssb_data"
-
-  def ensure(spark: SparkSession): Unit =
-    if (!registered.containsKey(spark)) Ssb.synchronized {
-      if (!registered.containsKey(spark)) {
-        val ver = Integer.toHexString(
-          (SsbGen.tables ++ SsbGen.tablesCoded)
-            .map(_._2(graft.tpcds.TpcdsGen.SparkDia)).mkString.hashCode)
-        val done = Paths.get(s"$dataDir/_ALL_TABLES_OK_$ver")
-        graft.util.GenLock.withFileLock(s"$dataDir.lock") {
-          if (!Files.exists(done)) {
-            (SsbGen.tables.map(("ssb_", _)) ++ SsbGen.tablesCoded.map(("ssb2_", _)))
-              .foreach { case (pfx, (name, gen)) =>
-                spark.sql(gen(graft.tpcds.TpcdsGen.SparkDia))
-                  .write.mode("overwrite").parquet(s"$dataDir/$pfx$name")
-              }
-            Files.createFile(done)
-          }
-          // planning samples for SampleJoinReorder (idempotent backfill)
-          graft.util.PlanningSamples.ensure(spark, dataDir,
-            (SsbGen.tables.map(("ssb_", _)) ++ SsbGen.tablesCoded.map(("ssb2_", _)))
-              .map { case (pfx, (name, _)) => s"$pfx$name" })
-        }
-        (SsbGen.tables.map(("ssb_", _)) ++ SsbGen.tablesCoded.map(("ssb2_", _)))
-          .foreach { case (pfx, (name, _)) =>
-            spark.read.parquet(s"$dataDir/$pfx$name")
-              .createOrReplaceTempView(s"$pfx$name")
-          }
-        // mark only after the views exist: a transient generation failure
-        // must retry on the next query, not poison the whole session
-        registered.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
+  def ensure(spark: SparkSession): Unit = tables.ensure(spark)
 
   // ------------------------------------------------------------------ output
 
-  private def wrap(df: DataFrame): DataFrame = {
-    val renamed = df.toDF((1 to df.schema.length).map("c" + _): _*)
-    val outs = renamed.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType =>
-          round(col(f.name).cast("double"), 3).as(f.name)
-        case ByteType | ShortType | IntegerType | LongType =>
-          col(f.name).cast("long").as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    renamed.select(outs.toIndexedSeq: _*)
-  }
-
-  def sigOf(df: DataFrame): String =
-    df.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType => 'd'
-        case ByteType | ShortType | IntegerType | LongType => 'l'
-        case _ => 'r'
-      }
-    }.mkString
-
   def run(spark: SparkSession, qn: String, simplified: Boolean): DataFrame = {
     ensure(spark)
-    val pfx = if (simplified) "ssb2_" else "ssb_"
-    wrap(spark.sql(renameTables(loadQuery(qn, simplified), pfx)))
+    Suites.wrap(spark.sql(sqlText(qn, simplified)), Suites.Round3)
   }
 
-  def oracleFor(qn: String, simplified: Boolean, sig: String): String = {
-    val cols = (1 to sig.length).map("c" + _)
-    val sel = sig.zipWithIndex.map { case (ch, i) =>
-      val c = cols(i)
-      ch match {
-        case 'd' => s"round(cast($c as double), 3) AS $c"
-        case 'l' => s"cast($c as bigint) AS $c"
-        case _   => c
-      }
-    }.mkString(", ")
-    val pfx = if (simplified) "ssb2_" else "ssb_"
-    val gens = if (simplified) SsbGen.tablesCoded else SsbGen.tables
-    val ddl = gens.map { case (n, f) =>
-      s"CREATE TABLE IF NOT EXISTS $pfx$n AS (${f(graft.tpcds.TpcdsGen.DuckDia)});"
-    }.mkString("\n")
-    s"$ddl\nSELECT $sel FROM (\n${renameTables(loadQuery(qn, simplified), pfx)}\n) AS t(${cols.mkString(", ")})"
-  }
+  def oracleFor(qn: String, simplified: Boolean, sig: String): String =
+    tables.duckDdl(_.startsWith(prefix(simplified))) + "\n" +
+      Suites.oracleSelect(sig, Suites.Round3, sqlText(qn, simplified))
 
   // ------------------------------------------------------- SparkEntry wiring
 
@@ -151,7 +63,6 @@ object Ssb {
     SsbSig.sigs.map { case (key, sig) =>
       val simplified = key.startsWith("s")
       val qn = key.stripPrefix("s")
-      (if (simplified) s"ssb2_q$qn" else s"ssb_q$qn") ->
-        oracleFor(qn, simplified, sig)
+      s"${prefix(simplified)}q$qn" -> oracleFor(qn, simplified, sig)
     }
 }

@@ -1,7 +1,8 @@
 package graft.ssb
 
 /** Static output signatures for the SSB queries (key: "NN" named variant,
-  * "sNN" Crystal-coded variant), captured by graft.tools.SsbDev. */
+  * "sNN" Crystal-coded variant); SuiteSpec checks them and prints
+  * replacements. */
 object SsbSig {
   val sigs: Map[String, String] = Map(
     "11" -> "d",

@@ -13,19 +13,11 @@ import java.nio.charset.StandardCharsets
 object DumpOracle {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/oracle_sql.json")
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"  ${jq(k)}: ${jq(v)}" }
+    val oracle = graft.SparkEntry.oracleSql
+    val json = oracle.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"  ${graft.Verify.jsonStr(k)}: ${graft.Verify.jsonStr(v)}" }
       .mkString("{\n", ",\n", "\n}\n")
     Files.write(Paths.get(out), json.getBytes(StandardCharsets.UTF_8))
-    println(s"[dump] ${graft.SparkEntry.oracleSql.size} oracle entries -> $out")
+    println(s"[dump] ${oracle.size} oracle entries -> $out")
   }
 }

@@ -26,10 +26,6 @@ import graft.{Engine, SparkEntry}
   * run, followed by the counts of reused exchanges and subqueries.
   */
 object Explain {
-  private val suiteQueries: Set[String] = Seq(
-    graft.tpcds.Tpcds.queries, graft.tpcds.Tpcxbb.queries, graft.job.Job.queries,
-    graft.ssb.Ssb.queries, graft.clickbench.Clickbench.queries).flatMap(_.keys).toSet
-
   def main(args: Array[String]): Unit = {
     val exec = args.headOption.contains("exec")
     val names = (if (exec) args.drop(1) else args).toSeq
@@ -42,7 +38,7 @@ object Explain {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString).toInt
-    val (suite, dataDir) = names.partition(suiteQueries)
+    val (suite, dataDir) = names.partition(graft.util.Suites.names)
     for ((group, dir) <- Seq(dataDir -> Some(sfDir), suite -> None) if group.nonEmpty) {
       val spark = Engine.create(master = s"local[$cpus]", shufflePartitions = cpus,
         appName = "graft-explain", dataDir = dir)

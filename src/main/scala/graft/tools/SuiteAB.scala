@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 
 /** Result-equality A/B for the sample-driven join reorder + broadcast-hint
-  * rule over the vendored suites: every named query (default: ALL tpcds/
-  * job/cb/tpcxbb/ssb queries) runs once with
+  * rule over the vendored suites: every named query (default: every
+  * tpcds/tpcxbb/job/ssb/ssb2/cb query) runs once with
   * spark.graft.sampleReorder.enabled=false and once =true at the current
   * generator scale, and the collected row multisets must be identical.
   * This is the correctness gate for a rule the driver's oracle contract
@@ -30,22 +30,10 @@ object SuiteAB {
         "spark.sql.files.maxPartitionBytes" -> (64L * 1024 * 1024).toString,
         "spark.sql.files.openCostInBytes" -> (4L * 1024 * 1024).toString))
 
-    def build(name: String): DataFrame = name match {
-      case n if n.startsWith("tpcds_q") => graft.tpcds.Tpcds.run(spark, n.stripPrefix("tpcds_q"))
-      case n if n.startsWith("tpcxbb_q") => graft.tpcds.Tpcxbb.run(spark, n.stripPrefix("tpcxbb_q"))
-      case n if n.startsWith("job_q") => graft.job.Job.run(spark, n.stripPrefix("job_q"))
-      case n if n.startsWith("cb_q") => graft.clickbench.Clickbench.run(spark, n.stripPrefix("cb_q"))
-      case n if n.startsWith("ssb2_q") => graft.ssb.Ssb.run(spark, n.stripPrefix("ssb2_q"), simplified = true)
-      case n if n.startsWith("ssb_q") => graft.ssb.Ssb.run(spark, n.stripPrefix("ssb_q"), simplified = false)
-      case other => throw new IllegalArgumentException(s"unknown suite query: $other")
-    }
+    val queries = graft.SparkEntry.queries
+    def build(name: String): DataFrame = queries(name)(spark, "")
     val names: Seq[String] =
-      if (qargs.nonEmpty) qargs.toSeq
-      else graft.tpcds.Tpcds.qnames.map("tpcds_q" + _) ++
-        graft.job.Job.qnames.map("job_q" + _) ++
-        graft.clickbench.Clickbench.qnames.map("cb_q" + _) ++
-        graft.tpcds.Tpcxbb.qnames.map("tpcxbb_q" + _) ++
-        graft.ssb.Ssb.qnames.map("ssb_q" + _)
+      if (qargs.nonEmpty) qargs.toSeq else graft.util.Suites.names.toSeq.sorted
 
     // row multiset fingerprint: sorted toString lines (results are LIMITed
     // or aggregated in every suite — driver-sized by construction)

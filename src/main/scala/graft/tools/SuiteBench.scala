@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 
-/** Benchmark leg for the vendored query suites (TPC-DS / JOB / ClickBench)
-  * at GENERATOR SCALE — the round-7 verdict's "scale-unproven suites" item:
-  * the suites are hash-checked at the gate scale, but none of their plans
+/** Benchmark leg for the vendored query suites (TPC-DS / TPCx-BB / JOB /
+  * SSB / ClickBench) at GENERATOR SCALE — the round-7 verdict's
+  * "scale-unproven suites" item: the suites are hash-checked at the gate scale, but none of their plans
   * had ever run past toy size. The generators read GRAFT_TPCDS_SCALE /
   * GRAFT_JOB_SCALE / GRAFT_CB_SCALE (fact-table multipliers; dims fixed),
   * and the identical interpolated sizes reach the DuckDB oracle DDL, so
@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * Protocol matches Bench: 1 warmup + 5 measured runs per query, median,
   * direct plan execution with every partition drained. Prints ONE JSON
   * line. With `dumpOracle=<path>` it also writes the scaled oracle SQL
-  * (DDL + select per query) for the DuckDB side.
+  * (SparkEntry.oracleSql: DDL + select per query) for the DuckDB side.
   *
   * Usage:
   *   GRAFT_TPCDS_SCALE=100 runMain graft.tools.SuiteBench \
@@ -24,6 +24,11 @@ object SuiteBench {
     val runs = args.find(_.startsWith("runs=")).map(_.stripPrefix("runs=").toInt).getOrElse(5)
     val dump = args.find(_.startsWith("dumpOracle=")).map(_.stripPrefix("dumpOracle="))
     val names = args.filterNot(a => a.startsWith("runs=") || a.startsWith("dumpOracle=")).toSeq
+    val unknown = names.filterNot(graft.util.Suites.names)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[suitebench] not suite queries: ${unknown.mkString(" ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString).toInt
     // No dataDir: the suite tables live in the generators' own tmp dirs —
@@ -35,41 +40,13 @@ object SuiteBench {
         "spark.sql.files.maxPartitionBytes" -> (64L * 1024 * 1024).toString,
         "spark.sql.files.openCostInBytes" -> (4L * 1024 * 1024).toString))
 
-    def build(name: String): DataFrame = name match {
-      case n if n.startsWith("tpcds_q") => graft.tpcds.Tpcds.run(spark, n.stripPrefix("tpcds_q"))
-      case n if n.startsWith("tpcxbb_q") => graft.tpcds.Tpcxbb.run(spark, n.stripPrefix("tpcxbb_q"))
-      case n if n.startsWith("job_q") => graft.job.Job.run(spark, n.stripPrefix("job_q"))
-      case n if n.startsWith("cb_q") => graft.clickbench.Clickbench.run(spark, n.stripPrefix("cb_q"))
-      case other => throw new IllegalArgumentException(s"unknown suite query: $other")
-    }
-    def oracleOf(name: String): Option[String] = {
-      def sig(df: DataFrame) = graft.tpcds.Tpcds.sigOf(df)
-      name match {
-        case n if n.startsWith("tpcds_q") =>
-          val qn = n.stripPrefix("tpcds_q")
-          Some(graft.tpcds.Tpcds.oracleFor(qn, sig(build(name))))
-        case n if n.startsWith("job_q") =>
-          val qn = n.stripPrefix("job_q")
-          Some(graft.job.Job.oracleFor(qn, graft.job.Job.sigOf(build(name))))
-        case n if n.startsWith("cb_q") =>
-          val qn = n.stripPrefix("cb_q")
-          Some(graft.clickbench.Clickbench.oracleFor(qn,
-            graft.clickbench.Clickbench.sigOf(build(name))))
-        case _ => None
-      }
-    }
+    val queries = graft.SparkEntry.queries
+    def build(name: String): DataFrame = queries(name)(spark, "")
 
     dump.foreach { path =>
-      def esc(s: String): String = "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val entries = names.flatMap(n => oracleOf(n).map(o => s"${esc(n)}:${esc(o)}"))
+      val oracle = graft.SparkEntry.oracleSql
+      val entries = names.flatMap(n => oracle.get(n).map(o =>
+        s"${graft.Verify.jsonStr(n)}:${graft.Verify.jsonStr(o)}"))
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         entries.mkString("{", ",", "}").getBytes("UTF-8"))
       System.err.println(s"[suitebench] oracle dump -> $path (${entries.size} queries)")

@@ -2,21 +2,16 @@ package graft.tpcds
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sqlsurface.SqlCanonicalizer
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
+import graft.util.Suites
+import org.apache.spark.sql.functions.floor
 
 /** TPC-DS query surface: runs the reference's 99 benchmark queries
   * (reference resources/sql/tpcds/<n>.sql, scored by
   * test/sqlite-datasets/tpcdsSf1.test) over the deterministic closed-form
   * dataset of [[TpcdsGen]], with a DuckDB oracle built from the same
-  * closed forms.
-  *
-  * Output determinism: every result is renamed positionally to c1..cN and
-  * numerically normalized — decimals/doubles to round(double, 3) (matching
-  * the reference harness's `precision=3 roundfloats` for this suite),
-  * integers to bigint — on BOTH the Spark and the DuckDB side, so the
-  * driver's sorted hash-compare is well-defined.
+  * closed forms. Fractional outputs round to 3 decimals (the reference
+  * harness's `precision=3 roundfloats` for this suite) with a shifted tie
+  * boundary, see [[round3]].
   */
 object Tpcds {
 
@@ -74,52 +69,22 @@ object Tpcds {
 
   private val tableNames: Set[String] = TpcdsGen.tables.map(_._1).toSet
 
-  /** Rename TPC-DS table identifiers to a tpcds_ prefix (outside string
-    * literals). The plain names collide with the driver's TPC-H tables —
-    * `customer` exists in both schemas — on the shared Spark session and in
-    * the oracle's DuckDB catalog. A consistent whole-word rename (aliases
-    * included) is semantics-preserving. */
-  private[tpcds] def renameTables(sql: String): String =
-    renameTablesIn(sql, tableNames)
-
-  private[tpcds] def renameTablesIn(sql: String, names: Set[String]): String = {
-    val sb = new StringBuilder(sql.length + 64)
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb.append(c); inStr = true; i += 1 }
-      else if (c.isLetter || c == '_') {
-        var j = i
-        while (j < sql.length && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-        val w = sql.substring(i, j)
-        // qualified members included: a column alias can shadow a table name
-        // (q49 aliases a column `item`); renaming every occurrence keeps the
-        // rename a pure, semantics-preserving alpha-rename
-        if (names.contains(w.toLowerCase)) sb.append("tpcds_").append(w)
-        else sb.append(w)
-        i = j
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Spark dialect: TPC-DS double-quotes identifiers (e.g. `as "30 days"`);
-    * Spark wants backticks. ORDER BY gets the Postgres null ordering the
-    * reference (and DuckDB) default to — Spark's NULLS FIRST default would
-    * select different LIMIT-100 windows on the ROLLUP queries. */
-  def sparkSql(sql: String): String =
-    SqlCanonicalizer.pgNullOrder(
-      renameTables(uncolon(sql)).replaceAll("\"([^\"]+)\"", "`$1`"))
-
-  /** Tpcxbb shares the rename/dialect pipeline with an extended name set. */
+  /** Spark dialect over the table names `names`, each renamed to a tpcds_
+    * prefix (outside string literals): the plain names collide with the
+    * TPC-H tables — `customer` exists in both schemas — on the
+    * shared Spark session and in the oracle's DuckDB catalog. Qualified
+    * members are renamed too: a column alias can shadow a table name (q49
+    * aliases a column `item`). TPC-DS double-quotes identifiers (e.g.
+    * `as "30 days"`); Spark wants backticks. ORDER BY gets the Postgres null
+    * ordering the reference (and DuckDB) default to — Spark's NULLS FIRST
+    * default would select different LIMIT-100 windows on the ROLLUP
+    * queries. Tpcxbb shares this pipeline with an extended name set. */
   private[tpcds] def sparkSqlText(sql: String, names: Set[String]): String =
-    SqlCanonicalizer.pgNullOrder(
-      renameTablesIn(uncolon(sql), names).replaceAll("\"([^\"]+)\"", "`$1`"))
+    SqlCanonicalizer.pgNullOrder(Suites.renameTables(uncolon(sql), names, "tpcds_",
+      members = true).replaceAll("\"([^\"]+)\"", "`$1`"))
 
   private[tpcds] def duckSqlText(sql: String, names: Set[String]): String =
-    renameTablesIn(uncolon(sql, truncInt = true), names)
+    Suites.renameTables(uncolon(sql, truncInt = true), names, "tpcds_", members = true)
 
   /** Duck-only ORDER BY disambiguations: DuckDB binds ORDER BY names in the
     * input scope (ambiguous), Spark against the output columns; the picked
@@ -131,111 +96,39 @@ object Tpcds {
     // fptosi) truncates; same rewrite uncolon() applies to `::int` casts.
     "54" -> Seq("cast((revenue/50) as int)" -> "cast(trunc(revenue/50) as int)"))
 
-  def duckSql(qn: String, sql: String): String = {
-    val fixed = duckFixups.getOrElse(qn, Nil)
-      .foldLeft(sql) { case (s, (from, to)) => s.replace(from, to) }
-    renameTables(uncolon(fixed, truncInt = true))
-  }
+  private def duckSql(qn: String, sql: String): String =
+    duckSqlText(duckFixups.getOrElse(qn, Nil)
+      .foldLeft(sql) { case (s, (from, to)) => s.replace(from, to) }, tableNames)
 
   // ------------------------------------------------------------ registration
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  private def dataDir: String =
+  private[tpcds] val tables = new Suites.TableSet(
     s"${sys.props("java.io.tmpdir")}/graft_tpcds_data" +
-      (if (TpcdsGen.Scale > 1) s"_x${TpcdsGen.Scale}" else "")
+      (if (TpcdsGen.Scale > 1) s"_x${TpcdsGen.Scale}" else ""),
+    TpcdsGen.tables, "tpcds_", analyzed = TpcdsGen.Scale > 1)
 
-  /** Materialize the closed-form tables to parquet once per machine, then
-    * register parquet-backed views. Scanning parquet (vectorized, with
-    * pushdown/pruning) beats re-evaluating the generator expressions on
-    * every one of the 103 queries, and sidesteps a Spark interaction where
-    * a cached generator view breaks attribute resolution when a WITH-CTE
-    * references it through deduplicated branches. */
-  def ensure(spark: SparkSession): Unit =
-    if (!registered.containsKey(spark)) Tpcds.synchronized {
-      if (!registered.containsKey(spark)) {
-        // marker carries the generator-text hash: a changed closed form
-        // invalidates the parquet cache instead of silently serving stale rows
-        val ver = Integer.toHexString(
-          TpcdsGen.tables.map(_._2(TpcdsGen.SparkDia)).mkString.hashCode)
-        val done = Paths.get(s"$dataDir/_ALL_TABLES_OK_$ver")
-        graft.util.GenLock.withFileLock(s"$dataDir.lock") {
-          if (!Files.exists(done)) {
-            TpcdsGen.tables.foreach { case (name, gen) =>
-              spark.sql(gen(TpcdsGen.SparkDia))
-                .write.mode("overwrite").parquet(s"$dataDir/$name")
-            }
-            Files.createFile(done)
-          }
-          // planning samples for SampleJoinReorder (idempotent backfill)
-          graft.util.PlanningSamples.ensure(spark, dataDir, TpcdsGen.tables.map(_._1))
-        }
-        TpcdsGen.tables.foreach { case (name, _) =>
-          // past toy scale, catalog tables + ANALYZE so CBO join reorder
-          // fires (q72 trap — see util.CatalogStats); temp views at the
-          // gate scale where stats buy nothing
-          if (TpcdsGen.Scale > 1)
-            graft.util.CatalogStats.registerAnalyzed(spark, s"tpcds_$name", s"$dataDir/$name")
-          else
-            spark.read.parquet(s"$dataDir/$name")
-              .createOrReplaceTempView(s"tpcds_$name")
-        }
-        // mark only after the views exist: a transient generation failure
-        // must retry on the next query, not poison the whole session
-        registered.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
+  def ensure(spark: SparkSession): Unit = tables.ensure(spark)
 
   // ------------------------------------------------------------------ output
 
-  /** Positional rename + deterministic numeric normalization (both sides of
-    * the compare apply the same shape — see oracleFor). */
   /** 3-decimal normalization with the tie boundary shifted by 1e-4:
     * money averages concentrate EXACTLY on .0005 boundaries, where Spark's
     * exact-decimal aggregation and DuckDB's double accumulation land on
     * opposite sides of HALF_UP (q89 hit this) — floor(x·1000 + 0.5001)
     * moves the cut to an unnatural value and is applied verbatim on both
     * compare sides, so it cancels in the hash. */
-  private[tpcds] def round3(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(c.cast("double") * 1000 + 0.5001) / 1000
+  private[tpcds] val round3: Suites.Rounding = Suites.Rounding(
+    c => floor(c.cast("double") * 1000 + 0.5001) / 1000,
+    c => s"floor(cast($c as double) * 1000 + 0.5001) / 1000")
 
-  private[tpcds] def wrap(df: DataFrame): DataFrame = {
-    val n = df.schema.length
-    val renamed = df.toDF((1 to n).map("c" + _): _*)
-    val outs = renamed.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType =>
-          round3(col(f.name)).as(f.name)
-        case ByteType | ShortType | IntegerType | LongType =>
-          col(f.name).cast("long").as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    renamed.select(outs.toIndexedSeq: _*)
-  }
-
-  /** One char per output column: d=double(round3), l=long, r=raw. */
-  def sigOf(df: DataFrame): String =
-    df.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType => 'd'
-        case ByteType | ShortType | IntegerType | LongType => 'l'
-        case _ => 'r'
-      }
-    }.mkString
-
-  /** Build the (pre-wrap) frame for one query. Analysis runs with
-    * ansi=false so x/0 yields NULL, matching DuckDB. */
-  def run(spark: SparkSession, qn: String): DataFrame = {
-    ensure(spark)
+  /** Build `body` with ansi=false, so x/0 yields NULL as in DuckDB; the
+    * frame is analyzed before the conf is restored. */
+  private[tpcds] def nonAnsi(spark: SparkSession)(body: => DataFrame): DataFrame = {
     val prev = spark.conf.getOption("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try {
-      val df = spark.sql(sparkSql(loadQuery(qn)))
-      val out = wrap(df)
-      out.queryExecution.analyzed // force analysis under non-ANSI semantics
+      val out = body
+      out.queryExecution.analyzed
       out
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
@@ -243,26 +136,15 @@ object Tpcds {
     }
   }
 
-  /** DuckDB oracle for one query, given its output signature. The tables
-    * are materialized with CREATE TABLE IF NOT EXISTS (cheap after the first
-    * oracle query on a shared connection) rather than inlined as CTEs —
-    * inlining the generator expressions into multi-join plans made DuckDB's
-    * optimizer blow up on the larger queries. */
-  def oracleFor(qn: String, sig: String): String = {
-    val cols = (1 to sig.length).map("c" + _)
-    val sel = sig.zipWithIndex.map { case (ch, i) =>
-      val c = cols(i)
-      ch match {
-        case 'd' => s"floor(cast($c as double) * 1000 + 0.5001) / 1000 AS $c"
-        case 'l' => s"cast($c as bigint) AS $c"
-        case _   => c
-      }
-    }.mkString(", ")
-    val ddl = TpcdsGen.tables.map { case (n, f) =>
-      s"CREATE TABLE IF NOT EXISTS tpcds_$n AS (${f(TpcdsGen.DuckDia)});"
-    }.mkString("\n")
-    s"$ddl\nSELECT $sel FROM (\n${duckSql(qn, loadQuery(qn))}\n) AS t(${cols.mkString(", ")})"
+  def run(spark: SparkSession, qn: String): DataFrame = {
+    ensure(spark)
+    nonAnsi(spark) {
+      Suites.wrap(spark.sql(sparkSqlText(loadQuery(qn), tableNames)), round3)
+    }
   }
+
+  def oracleFor(qn: String, sig: String): String =
+    tables.duckDdl() + "\n" + Suites.oracleSelect(sig, round3, duckSql(qn, loadQuery(qn)))
 
   // ------------------------------------------------------- SparkEntry wiring
 

@@ -1,9 +1,7 @@
 package graft.tpcds
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
+import graft.util.Suites
 
 /** TPCx-BB (BigBench) surface: the reference's 14 adapted SQL queries
   * (resources/sql/tpcxbb/{6,7,9,11,12,13,14,15,16,17,21,22,23,24}.sql) over
@@ -121,113 +119,37 @@ object Tpcxbb {
 
   // ------------------------------------------------------------ registration
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  private def dataDir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_tpcxbb_data"
+  /** The extension tables register under the tpcds_ prefix, beside the
+    * TPC-DS tables they join. */
+  private val tables = new Suites.TableSet(
+    s"${sys.props("java.io.tmpdir")}/graft_tpcxbb_data",
+    extraTables, "tpcds_", analyzed = TpcdsGen.Scale > 1)
 
   def ensure(spark: SparkSession): Unit = {
     Tpcds.ensure(spark)
-    if (!registered.containsKey(spark)) Tpcxbb.synchronized {
-      if (!registered.containsKey(spark)) {
-        val ver = Integer.toHexString(
-          extraTables.map(_._2(TpcdsGen.SparkDia)).mkString.hashCode)
-        val done = Paths.get(s"$dataDir/_ALL_TABLES_OK_$ver")
-        graft.util.GenLock.withFileLock(s"$dataDir.lock") {
-          if (!Files.exists(done)) {
-            extraTables.foreach { case (name, gen) =>
-              spark.sql(gen(TpcdsGen.SparkDia))
-                .write.mode("overwrite").parquet(s"$dataDir/$name")
-            }
-            Files.createFile(done)
-          }
-          // planning samples for SampleJoinReorder (idempotent backfill)
-          graft.util.PlanningSamples.ensure(spark, dataDir, extraTables.map(_._1))
-        }
-        extraTables.foreach { case (name, _) =>
-          if (TpcdsGen.Scale > 1)
-            graft.util.CatalogStats.registerAnalyzed(spark, s"tpcds_$name", s"$dataDir/$name")
-          else
-            spark.read.parquet(s"$dataDir/$name")
-              .createOrReplaceTempView(s"tpcds_$name")
-        }
-        // mark only after the views exist: a transient generation failure
-        // must retry on the next query, not poison the whole session
-        registered.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
+    tables.ensure(spark)
   }
 
   // ------------------------------------------------------------------ output
 
-  /** The query texts reference TPC-DS tables + the two extras; all live
-    * under the tpcds_ prefix, so Tpcds.renameTables covers them once the
-    * extras are in its name set — they are, via this override list. */
-  private[tpcds] val allNames: Set[String] =
+  /** The query texts reference TPC-DS tables plus the extras, all renamed
+    * into the tpcds_ prefix by Tpcds' dialect pipeline. */
+  private val allNames: Set[String] =
     TpcdsGen.tables.map(_._1).toSet ++ extraTables.map(_._1)
-
-  private def wrap(df: DataFrame): DataFrame = {
-    val renamed = df.toDF((1 to df.schema.length).map("c" + _): _*)
-    val outs = renamed.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType =>
-          Tpcds.round3(col(f.name)).as(f.name)
-        case ByteType | ShortType | IntegerType | LongType =>
-          col(f.name).cast("long").as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    renamed.select(outs.toIndexedSeq: _*)
-  }
-
-  def sigOf(df: DataFrame): String =
-    df.schema.fields.map { f =>
-      f.dataType match {
-        case _: DecimalType | DoubleType | FloatType => 'd'
-        case ByteType | ShortType | IntegerType | LongType => 'l'
-        case _ => 'r'
-      }
-    }.mkString
 
   def run(spark: SparkSession, qn: String): DataFrame = {
     ensure(spark)
-    val prev = spark.conf.getOption("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
-      // Spark dialect shims: FLOAT8 type synonym; DuckDB/Postgres-style
-      // datediff('unit', a, b) → timestampdiff(UNIT, a, b)
-      val text = Tpcds.sparkSqlText(loadQuery(qn), allNames)
-        .replaceAll("(?i)\\bFLOAT8\\b", "double")
-        .replaceAll("(?i)\\bdatediff\\(\\s*'(\\w+)'\\s*,", "timestampdiff($1,")
-      val df = spark.sql(text)
-      val out = wrap(df)
-      out.queryExecution.analyzed
-      out
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
-      case None    => spark.conf.unset("spark.sql.ansi.enabled")
-    }
+    // Spark dialect shims: FLOAT8 type synonym; DuckDB/Postgres-style
+    // datediff('unit', a, b) → timestampdiff(UNIT, a, b)
+    val text = Tpcds.sparkSqlText(loadQuery(qn), allNames)
+      .replaceAll("(?i)\\bFLOAT8\\b", "double")
+      .replaceAll("(?i)\\bdatediff\\(\\s*'(\\w+)'\\s*,", "timestampdiff($1,")
+    Tpcds.nonAnsi(spark)(Suites.wrap(spark.sql(text), Tpcds.round3))
   }
 
-  def oracleFor(qn: String, sig: String): String = {
-    val cols = (1 to sig.length).map("c" + _)
-    val sel = sig.zipWithIndex.map { case (ch, i) =>
-      val c = cols(i)
-      ch match {
-        case 'd' => s"floor(cast($c as double) * 1000 + 0.5001) / 1000 AS $c"
-        case 'l' => s"cast($c as bigint) AS $c"
-        case _   => c
-      }
-    }.mkString(", ")
-    val ddl = (TpcdsGen.tables.map { case (n, f) =>
-      s"CREATE TABLE IF NOT EXISTS tpcds_$n AS (${f(TpcdsGen.DuckDia)});"
-    } ++ extraTables.map { case (n, f) =>
-      s"CREATE TABLE IF NOT EXISTS tpcds_$n AS (${f(TpcdsGen.DuckDia)});"
-    }).mkString("\n")
-    s"$ddl\nSELECT $sel FROM (\n${Tpcds.duckSqlText(loadQuery(qn), allNames)}\n) AS t(${cols.mkString(", ")})"
-  }
+  def oracleFor(qn: String, sig: String): String =
+    Tpcds.tables.duckDdl() + "\n" + tables.duckDdl() + "\n" +
+      Suites.oracleSelect(sig, Tpcds.round3, Tpcds.duckSqlText(loadQuery(qn), allNames))
 
   // ------------------------------------------------------- SparkEntry wiring
 
@@ -239,7 +161,8 @@ object Tpcxbb {
     TpcxbbSig.sigs.map { case (qn, sig) => s"tpcxbb_q$qn" -> oracleFor(qn, sig) }
 }
 
-/** Static output signatures captured by graft.tools.TpcxbbDev. */
+/** Static output signatures (one char per column: d=double, l=long, r=raw)
+  * of the TPCx-BB queries; SuiteSpec checks them and prints replacements. */
 object TpcxbbSig {
   val sigs: Map[String, String] = Map(
     "6" -> "dlrrrrrr", "7" -> "rl", "9" -> "l", "11" -> "ld", "12" -> "l",

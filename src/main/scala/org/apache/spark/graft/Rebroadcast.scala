@@ -6,6 +6,7 @@ import scala.concurrent.{ExecutionContext, Future => SFuture}
 import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 
+import org.apache.spark.SparkException
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -14,8 +15,11 @@ import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastMode, BroadcastPartitioning, Partitioning}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, BroadcastExchangeLike, Exchange}
+import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.util.{KnownSizeEstimation, ThreadUtils}
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.map.BytesToBytesMap
+import org.apache.spark.util.{KnownSizeEstimation, ThreadUtils, Utils}
 
 /** A stable [[Broadcast]] handle over a swappable current generation.
   *
@@ -50,6 +54,28 @@ private[graft] object Rebroadcast {
     * BroadcastExchangeExec.executionContext). */
   lazy val ec: ExecutionContext = ExecutionContext.fromExecutorService(
     ThreadUtils.newDaemonCachedThreadPool("graft-rebroadcast", 32))
+
+  /** BroadcastExchangeExec's build limits, with its errors. A hashed build
+    * on anything but one bigint key is an UnsafeHashedRelation, capped by
+    * BytesToBytesMap's capacity at its 70% load factor. */
+  def checkLimits(mode: BroadcastMode, rows: Long, bytes: Long): Unit = {
+    val maxRows = mode match {
+      case HashedRelationBroadcastMode(key, _)
+          if !(key.length == 1 && key.head.dataType == LongType) =>
+        (BytesToBytesMap.MAX_CAPACITY / 1.5).toLong
+      case _ => 512000000L
+    }
+    // QueryExecutionErrors is private to the sql package: these are its
+    // cannotBroadcastTableOverMaxTable{Rows,Bytes}Error, verbatim
+    if (rows >= maxRows)
+      throw new SparkException("_LEGACY_ERROR_TEMP_2248", Map(
+        "maxBroadcastTableRows" -> maxRows.toString, "numRows" -> rows.toString), null)
+    val maxBytes = SQLConf.get.maxBroadcastTableSizeInBytes
+    if (bytes >= maxBytes)
+      throw new SparkException("_LEGACY_ERROR_TEMP_2249", Map(
+        "maxBroadcastTableBytes" -> Utils.bytesToString(maxBytes),
+        "dataSize" -> Utils.bytesToString(bytes)), null)
+  }
 }
 
 /** A broadcast exchange whose built relation is honestly REBUILT per drain.
@@ -73,9 +99,12 @@ private[graft] object Rebroadcast {
   *  - the relation is rebuilt on the driver (`mode.transform`) and shipped
   *    as a fresh TorrentBroadcast; the previous generation is destroyed.
   *
-  * The 512M-row/8GB broadcast caps the stock node enforces are not
-  * re-checked here: the tier only engages in the engine's tiny/small
-  * regime (AQE-off sessions), where build sides are KB-MB scale.
+  * Every build enforces the stock node's limits with its errors: the row
+  * cap (512M rows, ~358M for a hashed build on anything but one bigint
+  * key) and `spark.sql.maxBroadcastTableSize`. Both are checked on the
+  * collected rows, before `mode.transform` builds the relation, so an
+  * oversized build side fails before its hash table is built (the stock
+  * node sizes the built relation instead of the rows).
   *
   * Nested broadcasts compose: an inner RebroadcastExchangeExec inside this
   * node's child subtree keeps its own wrapper, which the re-collected child
@@ -108,17 +137,17 @@ case class RebroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
     * relation build, fresh TorrentBroadcast. */
   private def buildOnce(): Broadcast[Any] = {
     val rows = collectRdd.collect()
+    val rowBytes = rows.iterator.map {
+      case u: UnsafeRow => u.getSizeInBytes.toLong
+      case _ => 64L
+    }.sum
+    Rebroadcast.checkLimits(mode, rows.length.toLong, rowBytes)
     val relation = mode.transform(rows)
     synchronized {
       lastRows = rows.length.toLong
       lastBytes = relation match {
         case h: KnownSizeEstimation => h.estimatedSize // HashedRelation
-        case a: Array[InternalRow] =>
-          a.iterator.map {
-            case u: UnsafeRow => u.getSizeInBytes.toLong
-            case _ => 64L
-          }.sum
-        case _ => 64L
+        case _ => rowBytes
       }
     }
     session.sparkContext.broadcastInternal(relation, serializedOnly = true)

@@ -784,4 +784,30 @@ class PlanSpec extends SparkSpec {
         s"build rows, expected $afterJoin1 — broadcast relation was silently reused")
     } finally spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
   }
+
+  test("Prepared rebroadcast build enforces the stock broadcast size limit") {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    // the rdd tier replaces every BroadcastExchangeExec before it runs, so
+    // the limit the stock node checks must hold inside the rebuild too
+    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.maxBroadcastTableSize", "1k")
+    try {
+      val joined = Tables.load(spark, sf, "lineitem")
+        .join(broadcast(Tables.load(spark, sf, "orders")),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("o_orderstatus")).count()
+      val e = intercept[Exception] {
+        Prepared.freshRdd(joined).foreachPartition(it => while (it.hasNext) it.next())
+      }
+      val conditions = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collect { case s: org.apache.spark.SparkException => s.getCondition }.toSeq
+      assert(conditions.contains("_LEGACY_ERROR_TEMP_2249"),
+        s"expected the stock over-size broadcast error, got $e")
+    } finally {
+      spark.conf.unset("spark.sql.maxBroadcastTableSize")
+      spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
+      Prepared.invalidate(spark)
+    }
+  }
 }
