@@ -1,14 +1,17 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Expression, SubqueryExpression}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, BoundReference, EqualTo, ExprId, Expression, InterpretedPredicate, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+
+import graft.util.PlanningSamples
+import graft.util.PlanningSamples.Sample
 
 /** Sample-driven join reordering — the Spark analog of the reference's
   * per-predicate sample selectivity estimation (reference
@@ -18,15 +21,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * PlanSpec's flip test) but falls back to guesses for complex/correlated
   * predicates — exactly where sampling shines.
   *
-  * Mechanics: `tools.ScaleUp` persists a ~2k-row uniform sample per table
-  * (`_samples/<table>.parquet` + `.count` with the true row count). At
-  * optimize time this rule flattens each maximal inner-join tree, evaluates
-  * every leaf's pushed-down filter against its table's sample (driver-local,
-  * cached per (table, predicate) — the one deliberately driver-sized object,
-  * like the reference's Arrow sample blocks), scales to estimated rows, and
-  * rebuilds a left-deep tree greedily: smallest estimated leaf first, then
-  * repeatedly the smallest leaf connected to the built prefix by a join
-  * predicate (never introducing a cross join the query didn't have).
+  * Mechanics: [[graft.util.PlanningSamples]] stores a ~2k-row uniform
+  * sample per table plus its true row count, and loads each table's sample
+  * into driver memory once per JVM (one Spark job per table — the one
+  * deliberately driver-sized object, like the reference's Arrow sample
+  * blocks). At optimize time this rule flattens each maximal inner-join
+  * tree and estimates every leaf as plain functions over those rows, with
+  * no Spark job: base rows from the stored count, filter selectivity by
+  * evaluating the leaf's pushed-down filter with Catalyst's interpreted
+  * predicate, and join-key NDV by grouping the column's values. Nothing
+  * else is cached: an estimate over ≤2k rows is cheaper than its key. Up to
+  * [[SampleJoinReorder.DpMaxRelations]] leaves an exact DP picks the
+  * (bushy) order; past that, or on a disconnected graph, a greedy pass
+  * builds a left-deep tree: smallest estimated leaf first, then repeatedly
+  * the smallest leaf connected to the built prefix by a join predicate
+  * (never introducing a cross join the query didn't have).
   *
   * Besides the ORDER, the sampled estimates drive the join STRATEGY: each
   * emitted join carries a broadcast hint on a side whose estimated bytes
@@ -49,6 +58,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   */
 case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
+  import SampleJoinReorder._
 
   private def enabled: Boolean =
     spark.conf.getOption("spark.graft.sampleReorder.enabled").exists(_.toBoolean)
@@ -69,23 +79,29 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
             // join. Attach a broadcast hint in the original orientation
             // when a side's estimated bytes fit the session threshold
             // (guide §3.1: hint when you know a side is small).
-            val hint = hintFor(bytesOf(est(0)._1, est(0)._2), bytesOf(est(1)._1, est(1)._2))
+            val hint = hintFor(bytesOf(est(0)._1, est(0)._2), bytesOf(est(1)._1, est(1)._2),
+              est(0)._2, est(1)._2, false, false, broadcastThreshold)
             if (hint == JoinHint.NONE) j
             else Join(j.left, j.right, j.joinType, j.condition, hint)
           case Some(est) =>
-            // ≤8 relations: exact DP enumeration (the reference runs DPhyp
+            // ≤DpMaxRelations: exact DP enumeration (the reference runs DPhyp
             // when the subgraph count is small, OptimizeJoinOrder.cpp:122,
             // queryopt/DPhyp.cpp:4-70); larger trees and disconnected
             // graphs keep the greedy pass
-            // canonical leaf order (estimate, then semantic hash): the DP
-            // must be IDEMPOTENT — after a rewrite the optimizer re-runs
-            // the rule on the rebuilt tree, whose flatten() yields leaves
-            // in a different order; a tie broken differently would emit a
-            // flipped orientation forever (no fixpoint)
-            val canon = est.sortBy { case (p, e) => (e, p.semanticHash()) }
+            // canonical leaf order (estimate, then sample path, then the
+            // canonicalized leaf's text): the DP must be IDEMPOTENT — after
+            // a rewrite the optimizer re-runs the rule on the rebuilt tree,
+            // whose flatten() yields leaves in a different order; a tie
+            // broken differently would emit a flipped orientation forever
+            // (no fixpoint). Ties break by content, never by a hash:
+            // semanticHash() mixes in identity hashes (ParquetFileFormat's
+            // hashCode), so a tied order would depend on JVM history.
+            val canon = est.sortBy { case (p, e) =>
+              (e, relOf(p).flatMap(sampleOf).fold("")(_.path), p.canonicalized.toString)
+            }
             val topNeeded = org.apache.spark.sql.catalyst.expressions.AttributeSet(j.output)
             val ordered =
-              (if (est.size <= SampleJoinReorder.DpMaxRelations)
+              (if (est.size <= DpMaxRelations)
                 dpOrder(canon, conds, topNeeded)
               else None).getOrElse(greedyOrder(est, conds, topNeeded))
             // no-op when the chosen order confirms the written one
@@ -101,74 +117,39 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
   private def bytesOf(side: LogicalPlan, estRows: Double): Double =
     estRows * (8.0 + side.output.map(_.dataType.defaultSize).sum)
 
-  /** Broadcast hint for whichever side fits the session's own broadcast
-    * threshold (the smaller side when both do); NONE when neither fits or
-    * auto-broadcast is disabled. A hint never changes results — only the
-    * physical strategy — and the planner would make the same call itself
-    * if its row counts were right. */
-  private def hintFor(leftBytes: Double, rightBytes: Double): JoinHint =
-    hintForSides(leftBytes, rightBytes,
-      Double.PositiveInfinity, Double.PositiveInfinity, false, false)
+  /** The session's broadcast threshold, read once per call site: the DP
+    * prices hints inside its 3^n split enumeration, where a per-call conf
+    * lookup is measurable. */
+  private def broadcastThreshold: Long =
+    org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
 
-  /** Equivalent shuffle rows of one SERIALIZED broadcast-stage round
-    * (conf-overridable for tests). Broadcasting a COMPOSITE subtree nests
-    * that subtree inside the BroadcastQueryStage, so a chain of such hints
-    * materializes strictly sequentially — StageProbe on JOB q11b measured 8
-    * one-at-a-time AQE stages with ~40 ms of driver re-plan gap each, where
-    * the unhinted plan runs its independent leaf stages concurrently. At
-    * this host's measured exchange throughput (~10M narrow rows/s/stage)
-    * 40 ms ≈ 4e5 rows: a composite-side hint must save at least a probe
-    * exchange of that order to buy its serialization. Leaf-side broadcasts
-    * are exempt — broadcast-over-scan stages are independent leaf stages
-    * and AQE materializes them concurrently. A value that is not a finite,
-    * non-negative number falls back to the default instead of failing
-    * planning. */
-  private def stagePenaltyRows: Double =
-    spark.conf.getOption("spark.graft.sampleReorder.stagePenaltyRows")
-      .flatMap(v => scala.util.Try(v.trim.toDouble).toOption)
-      .filter(d => d >= 0 && !d.isInfinite)
-      .getOrElse(SampleJoinReorder.StagePenaltyRows)
-
-  /** [[hintFor]] with the serialized-stage pricing (VERDICT r11 #3): a side
-    * that CONTAINS joins ("composite") is only hinted when the probe side's
-    * estimated rows exceed [[stagePenaltyRows]] — otherwise the saved
+  /** Broadcast hint for whichever side fits `thr` (the smaller side when
+    * both do); NONE when neither fits or auto-broadcast is disabled. A hint
+    * never changes results — only the physical strategy — and the planner
+    * would make the same call itself if its row counts were right.
+    *
+    * Serialized-stage pricing (VERDICT r11 #3): broadcasting a side that
+    * CONTAINS joins ("composite") nests that subtree inside the
+    * BroadcastQueryStage, so a chain of such hints materializes strictly
+    * sequentially (StageProbe on JOB q11b: 8 one-at-a-time AQE stages,
+    * ~40 ms of driver re-plan gap each), while leaf-side broadcasts are
+    * independent leaf stages that AQE runs concurrently. A composite side
+    * is therefore only hinted when the other (probe) side's estimated rows
+    * exceed [[SampleJoinReorder.StagePenaltyRows]] — otherwise the saved
     * exchange is smaller than the dependent-stage chain the hint creates,
     * the reproducible JOB q6f/q7c/q11b loss (+0.3–0.8 s on tiny-result
-    * variants). penaltyRows = 0 reproduces the r11 behavior exactly (the
-    * gate never fires and the DP surcharge is zero), which is the A/B
-    * lever. */
-  private def hintForSides(leftBytes: Double, rightBytes: Double,
+    * variants). */
+  private def hintFor(leftBytes: Double, rightBytes: Double,
       leftRows: Double, rightRows: Double,
-      leftComposite: Boolean, rightComposite: Boolean): JoinHint =
-    hintCore(leftBytes, rightBytes, leftRows, rightRows,
-      leftComposite, rightComposite,
-      org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold,
-      stagePenaltyRows)
-
-  /** [[hintForSides]] with the two conf reads hoisted — the DP calls this
-    * inside its 3^n split enumeration, where a per-call conf lookup is
-    * measurable. */
-  private def hintCore(leftBytes: Double, rightBytes: Double,
-      leftRows: Double, rightRows: Double,
-      leftComposite: Boolean, rightComposite: Boolean,
-      thr: Long, penaltyRows: Double): JoinHint = {
-    if (thr <= 0) JoinHint.NONE
-    else {
-      val b = Some(HintInfo(strategy = Some(BROADCAST)))
-      val lFit = leftBytes <= thr
-      val rFit = rightBytes <= thr
-      if (!lFit && !rFit) JoinHint.NONE
-      else {
-        val pickLeft = lFit && (!rFit || leftBytes <= rightBytes)
-        if (pickLeft) {
-          if (leftComposite && rightRows <= penaltyRows) JoinHint.NONE
-          else JoinHint(b, None)
-        } else {
-          if (rightComposite && leftRows <= penaltyRows) JoinHint.NONE
-          else JoinHint(None, b)
-        }
-      }
-    }
+      leftComposite: Boolean, rightComposite: Boolean, thr: Long): JoinHint = {
+    val b = Some(HintInfo(strategy = Some(BROADCAST)))
+    val lFit = thr > 0 && leftBytes <= thr
+    val rFit = thr > 0 && rightBytes <= thr
+    if (lFit && (!rFit || leftBytes <= rightBytes))
+      if (leftComposite && rightRows <= StagePenaltyRows) JoinHint.NONE else JoinHint(b, None)
+    else if (rFit)
+      if (rightComposite && leftRows <= StagePenaltyRows) JoinHint.NONE else JoinHint(None, b)
+    else JoinHint.NONE
   }
 
   private def eligible(j: Join): Boolean =
@@ -216,75 +197,18 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
     * of its (already pushed-down) filters. */
   private def estimate(leaf: LogicalPlan): Option[Double] = leaf match {
     case Project(_, child) => estimate(child)
-    case Filter(cond, child) =>
-      for {
-        base <- estimate(child)
-        sel <- selectivity(child, cond)
-      } yield base * sel
-    case rel: LogicalRelation => SampleJoinReorder.tableOf(rel).map(_._2.toDouble)
+    case Filter(cond, rel: LogicalRelation)
+        if cond.deterministic && !cond.exists(_.isInstanceOf[SubqueryExpression]) =>
+      sampleOf(rel).flatMap(s => selectivity(s, cond).map(s.count * _))
+    case rel: LogicalRelation => sampleOf(rel).map(_.count.toDouble)
     case _ => None
   }
 
-  private def selectivity(scan: LogicalPlan, cond: Expression): Option[Double] = {
-    val ok = cond.deterministic &&
-      !cond.exists(_.isInstanceOf[SubqueryExpression])
-    if (!ok) return None
-    scan match {
-      case rel: LogicalRelation =>
-        SampleJoinReorder.tableOf(rel).flatMap { case (samplePath, _) =>
-          // cache key by attribute NAME, not exprId: canonicalized
-          // expressions still embed exprIds, which change on every
-          // re-parse of the same query text — the old key missed on every
-          // run and re-ran the sample-filter Spark jobs inside PLANNING
-          // (~0.4 s/run measured on tpcds_q80). Names are the sample's
-          // own column identity (evalOnSample rebinds by name).
-          val key = samplePath + "#" + cond.transform {
-            case a: AttributeReference =>
-              org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(a.name)
-          }.toString
-          Option(SampleJoinReorder.selCache.get(key)).orElse {
-            val computed = evalOnSample(samplePath, cond)
-            computed.foreach(v => SampleJoinReorder.selCache.put(key, v))
-            computed
-          }
-        }
-      case _ => None
-    }
-  }
-
-  /** Runs `f` with this rule's session as the thread's active session.
-    * The rule can be reached through a bare `queryExecution.optimizedPlan`
-    * access (no action), where the active-session thread-local is unset —
-    * the nested sample jobs then build physical plans whose nodes capture
-    * a NULL session and NPE at first metric access. */
-  private def withActive[T](f: => T): T = {
-    val prev = SparkSession.getActiveSession
-    SparkSession.setActiveSession(spark)
-    try f
-    finally prev match {
-      case Some(s) => SparkSession.setActiveSession(s)
-      case None => SparkSession.clearActiveSession()
-    }
-  }
-
-  /** Fraction of the stored sample matching `cond` (attributes re-bound by
-    * name; a name the sample lacks → no estimate). */
-  private def evalOnSample(samplePath: String, cond: Expression): Option[Double] = withActive {
-    val (sample, n) = SampleJoinReorder.sampleCache.computeIfAbsent(
-      sessionKey(samplePath), _ => {
-        val df = spark.read.parquet(samplePath)
-        (df, df.count().toDouble) // count cached with the frame — one job per table, not per predicate
-      })
-    val byName = sample.schema.fieldNames.toSet
-    if (!cond.references.forall(a => byName.contains(a.name))) return None
-    val attrByName: Map[String, Attribute] =
-      sample.queryExecution.analyzed.output.map(a => a.name -> a).toMap
-    val rebound = cond.transform {
-      case a: AttributeReference => attrByName(a.name)
-    }
-    if (n == 0) return Some(1.0)
-    val m = sample.filter(GraftColumnBridge.column(rebound)).count().toDouble
-    Some(m / n)
+  /** The planning sample of a file-based relation, if its table has one. */
+  private def sampleOf(rel: LogicalRelation): Option[Sample] = rel.relation match {
+    case fs: HadoopFsRelation =>
+      fs.location.rootPaths.headOption.flatMap(r => PlanningSamples.of(spark, r.toString))
+    case _ => None
   }
 
   /** Exact bottom-up DP over connected subsets (DPsize shape — the bushy
@@ -372,18 +296,17 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
     // the hint an (s1, s2) split would carry — shared by the DP pricing
     // below and the emitted tree so the cost model prices the plan that is
     // actually built (conf reads hoisted out of the 3^n enumeration)
-    val bcastThr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    val penaltyRows = stagePenaltyRows
+    val thr = broadcastThreshold
     def hintOfSplit(s1: Int, s2: Int): JoinHint =
-      hintCore(bytesOfMask(s1), bytesOfMask(s2), card(s1), card(s2),
-        Integer.bitCount(s1) > 1, Integer.bitCount(s2) > 1, bcastThr, penaltyRows)
+      hintFor(bytesOfMask(s1), bytesOfMask(s2), card(s1), card(s2),
+        Integer.bitCount(s1) > 1, Integer.bitCount(s2) > 1, thr)
     // serialized-stage surcharge (VERDICT r11 #3 — price stage parallelism):
     // a split whose hint broadcasts a COMPOSITE side nests a dependent
-    // broadcast stage; charge one stagePenaltyRows-equivalent so the DP
+    // broadcast stage; charge one StagePenaltyRows-equivalent so the DP
     // prefers an order with concurrent leaf-side builds when C_out is close
     def stageCost(s1: Int, s2: Int): Double = hintOfSplit(s1, s2) match {
-      case JoinHint(Some(_), _) if Integer.bitCount(s1) > 1 => penaltyRows
-      case JoinHint(_, Some(_)) if Integer.bitCount(s2) > 1 => penaltyRows
+      case JoinHint(Some(_), _) if Integer.bitCount(s1) > 1 => StagePenaltyRows
+      case JoinHint(_, Some(_)) if Integer.bitCount(s2) > 1 => StagePenaltyRows
       case _ => 0.0
     }
     // DP: best cost + winning split per connected subset
@@ -452,20 +375,13 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
     Some(build(full))
   }
 
-  /** exprId → (sample path, true count): the relation's own attributes,
-    * traced through Filter/Project pass-throughs (an aliased column simply
-    * doesn't resolve and its conjunct takes the fallback selectivity) */
-  private def attrMapOf(leaves: Seq[LogicalPlan])
-      : Map[org.apache.spark.sql.catalyst.expressions.ExprId, (String, Long)] =
-    leaves.flatMap { leaf =>
-      relOf(leaf) match {
-        case Some(r) => SampleJoinReorder.tableOf(r) match {
-          case Some(info) => r.output.map(a => a.exprId -> info)
-          case None => Nil
-        }
-        case None => Nil
-      }
-    }.toMap
+  /** exprId → sample: the relation's own attributes, traced through
+    * Filter/Project pass-throughs (an aliased column simply doesn't resolve
+    * and its conjunct takes the fallback selectivity) */
+  private def attrMapOf(leaves: Seq[LogicalPlan]): Map[ExprId, Sample] =
+    (for {
+      leaf <- leaves; r <- relOf(leaf).toSeq; sample <- sampleOf(r).toSeq; a <- r.output
+    } yield a.exprId -> sample).toMap
 
   private def relOf(leaf: LogicalPlan): Option[LogicalRelation] = leaf match {
     case Project(_, c) => relOf(c)
@@ -475,58 +391,16 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
   }
 
   /** Selectivity of one join conjunct (see [[dpOrder]] model). */
-  private def selOfConjunct(c: Expression,
-      attrMap: Map[org.apache.spark.sql.catalyst.expressions.ExprId, (String, Long)]): Double =
+  private def selOfConjunct(c: Expression, attrMap: Map[ExprId, Sample]): Double =
     c match {
-      case org.apache.spark.sql.catalyst.expressions.EqualTo(
-          a: AttributeReference, b: AttributeReference) =>
-        (ndvOfAttr(a, attrMap), ndvOfAttr(b, attrMap)) match {
+      case EqualTo(a: AttributeReference, b: AttributeReference) =>
+        val ndvOf = (x: AttributeReference) => attrMap.get(x.exprId).flatMap(ndv(_, x.name))
+        (ndvOf(a), ndvOf(b)) match {
           case (Some(x), Some(y)) => 1.0 / math.max(math.max(x, y), 1.0)
           case _ => 0.1
         }
       case _ => 1.0 / 3.0
     }
-
-  /** NDV of the table column backing `a`, estimated from its stored sample
-    * (Chao1; exact for saturated low-cardinality columns, true-count for
-    * near-unique keys), cached per (sample, column). None if no sampled
-    * table exposes the attribute. */
-  private def ndvOfAttr(a: AttributeReference,
-      attrMap: Map[org.apache.spark.sql.catalyst.expressions.ExprId, (String, Long)])
-      : Option[Double] = {
-    attrMap.get(a.exprId).flatMap { case (samplePath, total) =>
-      val key = samplePath + "#ndv#" + a.name
-      Option(SampleJoinReorder.selCache.get(key)).orElse(withActive {
-        val (sample, _) = SampleJoinReorder.sampleCache.computeIfAbsent(
-          sessionKey(samplePath),
-          _ => { val df = spark.read.parquet(samplePath); (df, df.count().toDouble) })
-        if (!sample.schema.fieldNames.contains(a.name)) None
-        else {
-          import org.apache.spark.sql.functions.{col, count, lit}
-          val freqs = sample.groupBy(col(a.name)).agg(count(lit(1)).as("f"))
-            .collect().map(_.getLong(1))
-          val nS = freqs.sum.toDouble
-          val d = freqs.length.toDouble
-          val f1 = freqs.count(_ == 1L).toDouble
-          val f2 = freqs.count(_ == 2L).toDouble
-          val ndv =
-            if (nS == 0) 1.0
-            else if (f2 > 0) math.min(d + f1 * f1 / (2 * f2), total.toDouble)
-            else if (f1 >= nS) total.toDouble // all singletons: unique key
-            else d // saturated: sample captured the full domain
-          val v = math.max(ndv, 1.0)
-          SampleJoinReorder.selCache.put(key, v)
-          Some(v)
-        }
-      })
-    }
-  }
-
-  /** Sample-frame cache key: per session — a DataFrame pins the session
-    * that read it, and serving it to a different (or stopped) session
-    * breaks at execution time. */
-  private def sessionKey(samplePath: String): String =
-    System.identityHashCode(spark) + "@" + samplePath
 
   /** Left-deep tree: smallest leaf first, then smallest leaf connected via
     * some conjunct; conjuncts are attached as soon as both sides exist.
@@ -536,6 +410,7 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
       est: Seq[(LogicalPlan, Double)], conds: Seq[Expression],
       topNeeded: org.apache.spark.sql.catalyst.expressions.AttributeSet): LogicalPlan = {
     val attrMap = attrMapOf(est.map(_._1))
+    val thr = broadcastThreshold
     val unused = mutable.Buffer(conds: _*)
     var remaining = est.sortBy(_._2)
     var result = remaining.head._1
@@ -558,12 +433,12 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
       // cross joins from a disconnected remainder stay unhinted — the
       // planner's own nested-loop handling is not worth overriding blind.
       // The accumulated prefix is composite after the first join — same
-      // serialized-stage gate as the DP (hintForSides doc)
+      // serialized-stage gate as the DP (hintFor doc)
       val prefixComposite = result.exists(_.isInstanceOf[Join])
       val hint =
         if (applicable.isEmpty) JoinHint.NONE
-        else hintForSides(bytesOf(result, resultRows), bytesOf(p, pRows),
-          resultRows, pRows, prefixComposite, false)
+        else hintFor(bytesOf(result, resultRows), bytesOf(p, pRows),
+          resultRows, pRows, prefixComposite, false, thr)
       result = Join(result, p,
         if (applicable.isEmpty) Cross else Inner,
         applicable.reduceOption(And), hint)
@@ -598,8 +473,10 @@ object SampleJoinReorder {
     * and the greedy pass stays. */
   val DpMaxRelations: Int = 14
 
-  /** Default serialized-stage price in C_out row units (see
-    * [[SampleJoinReorder!.hintForSides]]). Calibrated EMPIRICALLY on the
+  /** Serialized-stage price in C_out row units (see
+    * [[SampleJoinReorder!.hintFor]]): the probe rows a composite-side
+    * broadcast must save before it is hinted, and the DP's surcharge for a
+    * split that broadcasts a composite side. Calibrated EMPIRICALLY on the
     * JOB ×50 fleet (r12): at 4e5 (the naive 40 ms × 10M rows/s estimate)
     * the gate suppressed PROFITABLE composite hints on 16 queries — q1a
     * lost its pure-broadcast pipeline (4 BHJ → 2 BHJ + 2 SMJ) and the
@@ -609,42 +486,67 @@ object SampleJoinReorder {
     * hint does not restore the CBO's own order: it yields the DP's order
     * WITHOUT its broadcasts, whose SMJ exchanges cost more than the
     * serialized stage chain for any probe beyond ~50k rows on local[32].
-    * The gate is NOT inert elsewhere: at generator scale 1 it changes the
-    * plans of job_q1a, job_q2a, job_q3a, job_q8a, tpcds_q7 and tpcds_q42
-    * (graft.tools.Explain with and without stagePenaltyRows=0), where
-    * composite-side broadcast chains become leaf broadcasts — so removing
-    * it needs a timed A/B on perfbench's adhoc_suites workload, not only
-    * the JOB ×50 fleet. Conf-overridable via
-    * spark.graft.sampleReorder.stagePenaltyRows (0 = r11 behavior, gate and
-    * DP surcharge both off). */
+    * The gate is NOT inert at generator scale 1: it changes the plans of
+    * job_q1a, job_q2a, job_q3a, job_q8a, tpcds_q7 and tpcds_q42, where
+    * composite-side broadcast chains become leaf broadcasts, and an
+    * interleaved 5-pair perfbench adhoc_suites A/B on a 4-core host ran
+    * slower with the gate off in 4 of 5 pairs (median pass_s +4.4%) — so
+    * it stays, as this constant. */
   val StagePenaltyRows: Double = 5e4
 
-  private val sampleCache = new ConcurrentHashMap[String, (DataFrame, Double)]()
-  private val selCache = new ConcurrentHashMap[String, Double]()
-
-  /** Resolve a relation to its (sample parquet path, true row count): the
-    * table `<dir>/<name>.parquet` samples to `<dir>/_samples/<name>.parquet`
-    * (+ `.count`); the bucketed layout `<dir>/_bucketed/<name>` resolves to
-    * the same `_samples` of its parent dir. */
-  private[plans] def tableOf(rel: LogicalRelation): Option[(String, Long)] = {
-    val root = rel.relation match {
-      case fs: HadoopFsRelation => fs.location.rootPaths.headOption.map(_.toString)
-      case _ => None
+  /** Fraction of `sample`'s rows on which `cond` holds (a null result does
+    * not hold, as in a Spark filter), with attributes re-bound by name; None
+    * when the sample lacks a referenced column or the predicate cannot be
+    * evaluated in-process. */
+  private[graft] def selectivity(sample: Sample, cond: Expression): Option[Double] = {
+    val names = sample.schema.fieldNames
+    if (!cond.references.forall(a => names.contains(a.name))) None
+    else if (sample.rows.isEmpty) Some(1.0)
+    else {
+      val bound = cond.transform { case a: AttributeReference =>
+        val i = names.indexOf(a.name)
+        BoundReference(i, sample.schema(i).dataType, sample.schema(i).nullable)
+      }
+      scala.util.Try {
+        val p = InterpretedPredicate(bound)
+        p.initialize(0)
+        sample.rows.count(p.eval).toDouble / sample.rows.length
+      }.toOption
     }
-    root.flatMap { r =>
-      val p = r.stripPrefix("file:")
-      val f = new java.io.File(p)
-      val (dir, name) =
-        if (f.getParentFile != null && f.getParentFile.getName == "_bucketed")
-          (f.getParentFile.getParentFile.getPath, f.getName)
-        else (f.getParent, f.getName.stripSuffix(".parquet"))
-      val sample = new java.io.File(s"$dir/_samples/$name.parquet")
-      val countF = new java.io.File(s"$dir/_samples/$name.count")
-      if (sample.isDirectory && countF.isFile) {
-        val src = scala.io.Source.fromFile(countF)
-        try Some((sample.getPath, src.mkString.trim.toLong))
-        finally src.close()
-      } else None
+  }
+
+  /** NDV of `column` in the table behind `sample`, by the Chao1 model of
+    * [[SampleJoinReorder!.dpOrder]]; all-singleton samples take the true
+    * count, saturated ones their distinct count. Values group as Spark's
+    * groupBy compares them: binary by content, -0.0 equal to 0.0, NaN equal
+    * to NaN, null as one group. None if the sample lacks the column. */
+  private[graft] def ndv(sample: Sample, column: String): Option[Double] = {
+    val i = sample.schema.fieldNames.indexOf(column)
+    if (i < 0) None
+    else {
+      val dt = sample.schema(i).dataType
+      val groups = new java.util.HashMap[Any, Long]()
+      sample.rows.foreach { r =>
+        val k = r.get(i, dt) match {
+          case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+          case d: Double if d == 0.0 => 0.0
+          case f: Float if f == 0.0f => 0.0f
+          case v => v
+        }
+        groups.put(k, groups.getOrDefault(k, 0L) + 1L)
+      }
+      val freqs = groups.values.asScala
+      val nS = sample.rows.length.toDouble
+      val d = freqs.size.toDouble
+      val f1 = freqs.count(_ == 1L).toDouble
+      val f2 = freqs.count(_ == 2L).toDouble
+      val total = sample.count.toDouble
+      val est =
+        if (nS == 0) 1.0
+        else if (f2 > 0) math.min(d + f1 * f1 / (2 * f2), total)
+        else if (f1 >= nS) total // all singletons: unique key
+        else d // saturated: sample captured the full domain
+      Some(math.max(est, 1.0))
     }
   }
 }

@@ -189,19 +189,9 @@ object ScaleUp {
     }
 
     // Per-table planning samples (~2k rows, deterministic seed) + true row
-    // counts, consumed by plans.SampleJoinReorder — the stored-sample
-    // selectivity estimation the reference does with Arrow sample blocks
-    // (QueryGraph.cpp:264-294). Tiny by construction: this is planning
-    // metadata, like the reference's persisted samples, not data.
-    new java.io.File(s"$out/_samples").mkdirs()
+    // counts, consumed by plans.SampleJoinReorder (see util.PlanningSamples).
     jobs.map(_._1).filter(tableFilter).foreach { name =>
-      val df = spark.read.parquet(s"$out/$name.parquet")
-      val total = df.count()
-      val frac = math.min(1.0, 2500.0 / math.max(total, 1L))
-      df.sample(withReplacement = false, frac, seed = 42).limit(2000)
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/_samples/$name.parquet")
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/_samples/$name.count"),
-        total.toString.getBytes("UTF-8"))
+      val total = graft.util.PlanningSamples.write(out, name, spark.read.parquet(s"$out/$name.parquet"))
       println(f"[scaleup] $name%-12s sample written ($total%d rows total)")
     }
   }

@@ -1,38 +1,100 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 
 /** Per-table planning samples (~2k deterministic uniform rows + the true
-  * row count) in the layout [[graft.plans.SampleJoinReorder]] consumes —
-  * the Spark analog of the reference's stored Arrow sample blocks
-  * (QueryGraph.cpp:264-294). tools.ScaleUp writes the same layout for the
-  * campaign scale dirs; this helper covers the suite generators'
-  * materialized tables, where Catalyst's stats cannot see the selectivity
+  * row count) that [[graft.plans.SampleJoinReorder]] estimates from — the
+  * Spark analog of the reference's stored Arrow sample blocks
+  * (QueryGraph.cpp:264-294). Catalyst's stats cannot see the selectivity
   * of the suites' string predicates (LIKE/Contains/IN) and therefore
-  * neither broadcasts nor orders the join trees correctly.
+  * neither broadcast nor order those join trees correctly.
   *
-  * Idempotent per (dir, table): existing samples are kept, so an already
-  * materialized data dir is backfilled exactly once. Planning metadata
-  * only — never query data.
+  * Layout: the table `<dir>/<t>` (or `<dir>/<t>.parquet`) samples to
+  * `<dir>/_samples/<t>.parquet` plus `<dir>/_samples/<t>.count` holding the
+  * true row count; the bucketed layout `<dir>/_bucketed/<t>` resolves to
+  * its parent dir's samples. This object is the one writer and the one
+  * reader of that layout. Planning metadata only — never query data.
   */
 object PlanningSamples {
-  def ensure(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
-    val missing = names.filterNot { n =>
+
+  /** A table's sample held in driver memory: `rows` follow `schema`;
+    * `count` is the true row count of the whole table. */
+  final case class Sample(path: String, schema: StructType, rows: Array[InternalRow], count: Long)
+
+  private val loaded = new ConcurrentHashMap[String, Sample]()
+
+  /** Write `name`'s sample under `dir`: `sample` when given (test
+    * fixtures), else the seeded draw (fraction 2500/total, seed 42, at most
+    * 2000 rows). Returns the true row count of `table`. */
+  def write(dir: String, name: String, table: DataFrame, sample: Option[DataFrame] = None): Long = {
+    val total = table.count()
+    val draw = sample.getOrElse(table
+      .sample(withReplacement = false, math.min(1.0, 2500.0 / math.max(total, 1L)), seed = 42)
+      .limit(2000))
+    val path = s"$dir/_samples/$name.parquet"
+    draw.coalesce(1).write.mode("overwrite").parquet(path)
+    Files.write(Paths.get(s"$dir/_samples/$name.count"), total.toString.getBytes("UTF-8"))
+    loaded.remove(path)
+    total
+  }
+
+  /** Samples for the tables `<dir>/<name>` that have none yet: an already
+    * materialized data dir is backfilled exactly once. */
+  def ensure(spark: SparkSession, dir: String, names: Seq[String]): Unit =
+    names.filterNot { n =>
       new java.io.File(s"$dir/_samples/$n.parquet").isDirectory &&
         new java.io.File(s"$dir/_samples/$n.count").isFile
+    }.foreach(n => write(dir, n, spark.read.parquet(s"$dir/$n")))
+
+  /** The sample of the table stored at `tableRoot` (a relation root path,
+    * `file:` prefix allowed), read once per JVM by one Spark job on
+    * `spark`; None when the table has no sample or its count file does
+    * not hold a row count. */
+  def of(spark: SparkSession, tableRoot: String): Option[Sample] = {
+    val f = new java.io.File(tableRoot.stripPrefix("file:"))
+    val (dir, name) =
+      if (f.getParentFile != null && f.getParentFile.getName == "_bucketed")
+        (f.getParentFile.getParentFile.getPath, f.getName)
+      else (f.getParent, f.getName.stripSuffix(".parquet"))
+    val path = s"$dir/_samples/$name.parquet"
+    val countFile = new java.io.File(s"$dir/_samples/$name.count")
+    Option(loaded.get(path)).orElse {
+      val count =
+        if (!new java.io.File(path).isDirectory || !countFile.isFile) None
+        else {
+          val src = scala.io.Source.fromFile(countFile)
+          try scala.util.Try(src.mkString.trim.toLong).toOption finally src.close()
+        }
+      // loaded outside the map's compute lock: the read plans a query,
+      // which re-enters the optimizer
+      count.map { n =>
+        val (schema, rows) = withActive(spark) {
+          val df = spark.read.parquet(path)
+          (df.schema, df.queryExecution.executedPlan.executeCollect())
+        }
+        val fresh = Sample(path, schema, rows, n)
+        Option(loaded.putIfAbsent(path, fresh)).getOrElse(fresh)
+      }
     }
-    if (missing.isEmpty) return
-    new java.io.File(s"$dir/_samples").mkdirs()
-    missing.foreach { name =>
-      val df = spark.read.parquet(s"$dir/$name")
-      val total = df.count()
-      val frac = math.min(1.0, 2500.0 / math.max(total, 1L))
-      df.sample(withReplacement = false, frac, seed = 42).limit(2000)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/_samples/$name.parquet")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_samples/$name.count"),
-        total.toString.getBytes("UTF-8"))
+  }
+
+  /** Runs `f` with `spark` as the thread's active session. The optimizer
+    * can be reached through a bare `queryExecution.optimizedPlan` access
+    * (no action), where the active-session thread-local is unset — the
+    * sample read then builds physical plan nodes that capture a NULL
+    * session and NPE at first metric access. */
+  private def withActive[T](spark: SparkSession)(f: => T): T = {
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(spark)
+    try f
+    finally prev match {
+      case Some(s) => SparkSession.setActiveSession(s)
+      case None => SparkSession.clearActiveSession()
     }
   }
 }

@@ -225,11 +225,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     def save(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
-      df.limit(2000).coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/_samples/$name.parquet")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_samples/$name.count"),
-        df.count().toString.getBytes("UTF-8"))
+      graft.util.PlanningSamples.write(dir, name, df, Some(df.limit(2000)))
     }
     save("s_fact", (0 until 40000)
       .map(i => (i.toLong, (i % 1000).toLong)).toDF("fact_k", "fact_v"))
@@ -275,14 +271,10 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft_dp_").toString
-    new java.io.File(s"$dir/_samples").mkdirs()
     def save(name: String, df: org.apache.spark.sql.DataFrame,
         sample: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
       df.coalesce(1).write.parquet(s"$dir/$name.parquet")
-      sample.getOrElse(df).coalesce(1).write.parquet(s"$dir/_samples/$name.parquet")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_samples/$name.count"),
-        df.count().toString.getBytes("UTF-8"))
+      graft.util.PlanningSamples.write(dir, name, df, Some(sample.getOrElse(df)))
     }
     // The trap: A is the smallest LEAF (greedy leads with it), but A⋈B is
     // 200× bigger than B⋈C — the System-R/ndv model sees it, greedy's
@@ -342,14 +334,9 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft_bh_").toString
-    new java.io.File(s"$dir/_samples").mkdirs()
     def save(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
-      df.limit(2000).coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/_samples/$name.parquet")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_samples/$name.count"),
-        df.count().toString.getBytes("UTF-8"))
+      graft.util.PlanningSamples.write(dir, name, df, Some(df.limit(2000)))
     }
     // big enough that its own estimate clears the 10 MB broadcast threshold
     save("bh_big", (0 until 3000000).map(i => (i.toLong % 20000, i * 2654435761L)).toDF("b_k", "b_v"))
@@ -389,27 +376,26 @@ class PlanSpec extends SparkSpec {
     // materializes its AQE stages strictly sequentially (~40 ms driver gap
     // each, StageProbe on JOB q11b). The rule therefore only hints a
     // composite side when the probe side's estimated rows exceed
-    // spark.graft.sampleReorder.stagePenaltyRows — below that the saved
+    // SampleJoinReorder.StagePenaltyRows (5e4) — below that the saved
     // exchange is cheaper than the serialization it buys.
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+    assert(graft.plans.SampleJoinReorder.StagePenaltyRows == 5e4)
     val dir = java.nio.file.Files.createTempDirectory("graft_sp_").toString
-    new java.io.File(s"$dir/_samples").mkdirs()
     def save(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       df.coalesce(1).write.parquet(s"$dir/$name.parquet")
-      df.limit(2000).coalesce(1).write.parquet(s"$dir/_samples/$name.parquet")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_samples/$name.count"),
-        df.count().toString.getBytes("UTF-8"))
+      graft.util.PlanningSamples.write(dir, name, df, Some(df.limit(2000)))
     }
     save("sp_s1", (0 until 300).map(i => (i.toLong, (i % 300).toLong)).toDF("s1_k", "s1_j"))
     save("sp_s2", (0 until 300).map(i => ((i % 300).toLong, i.toLong)).toDF("s2_j", "s2_v"))
-    save("sp_probe", (0 until 20000).map(i => ((i % 300).toLong, i.toLong)).toDF("p_k", "p_v"))
-    def q(): org.apache.spark.sql.DataFrame = {
+    // probes either side of the penalty: 20k rows (<= 5e4) and 60k (> 5e4)
+    for (n <- Seq(20000, 60000))
+      save(s"sp_probe$n", (0 until n).map(i => ((i % 300).toLong, i.toLong)).toDF("p_k", "p_v"))
+    def q(n: Int): org.apache.spark.sql.DataFrame = {
       val s1 = spark.read.parquet(s"$dir/sp_s1.parquet")
       val s2 = spark.read.parquet(s"$dir/sp_s2.parquet")
-      val probe = spark.read.parquet(s"$dir/sp_probe.parquet")
+      val probe = spark.read.parquet(s"$dir/sp_probe$n.parquet")
       probe.join(s1, col("p_k") === col("s1_k")).join(s2, col("s1_j") === col("s2_j"))
     }
     def topHint(df: org.apache.spark.sql.DataFrame) =
@@ -418,37 +404,155 @@ class PlanSpec extends SparkSpec {
       Seq(h.leftHint, h.rightHint).flatten.exists(_.strategy.contains(BROADCAST))
     val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // threshold sized so ONLY the tiny composite (s1⋈s2, est ~300 rows ×
-    // 40 B = 12 kB) fits — the 20k-row probe (480 kB) must not, or the
+    // 40 B = 12 kB) fits — neither probe (480 kB / 1.4 MB) may, or the
     // leaf-preference path would broadcast the probe and bypass the gate
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "50000")
     spark.conf.set("spark.graft.sampleReorder.enabled", "true")
     try {
-      // probe est rows (20000) <= default penalty (5e4): hint suppressed
-      val gated = topHint(q())
+      val gated = topHint(q(20000))
       assert(!hasBroadcastSide(gated),
         s"composite-side hint must be gated when the probe is small: $gated")
-      // a malformed penalty falls back to the default: still plans, still gated
-      for (bad <- Seq("not-a-number", "", "-5")) {
-        spark.conf.set("spark.graft.sampleReorder.stagePenaltyRows", bad)
-        val h = topHint(q())
-        assert(!hasBroadcastSide(h), s"malformed penalty '$bad' must fall back to the default: $h")
-      }
-      // penalty lowered below the probe rows: the composite side is hinted
-      spark.conf.set("spark.graft.sampleReorder.stagePenaltyRows", "1000")
-      val hinted = topHint(q())
+      val hinted = topHint(q(60000))
       assert(hasBroadcastSide(hinted),
         s"composite-side hint must fire when the probe exchange outweighs the penalty: $hinted")
       // the hint decision must not change results
-      spark.conf.unset("spark.graft.sampleReorder.stagePenaltyRows")
-      val onRows = q().collect().map(_.toString).sorted.toSeq
-      spark.conf.set("spark.graft.sampleReorder.enabled", "false")
-      val offRows = q().collect().map(_.toString).sorted.toSeq
-      assert(onRows == offRows, "gated hints must not change results")
+      for (n <- Seq(20000, 60000)) {
+        spark.conf.set("spark.graft.sampleReorder.enabled", "true")
+        val onRows = q(n).collect().map(_.toString).sorted.toSeq
+        spark.conf.set("spark.graft.sampleReorder.enabled", "false")
+        val offRows = q(n).collect().map(_.toString).sorted.toSeq
+        assert(onRows == offRows, s"gated hints must not change results (probe $n)")
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
-      spark.conf.unset("spark.graft.sampleReorder.stagePenaltyRows")
       spark.conf.set("spark.graft.sampleReorder.enabled", "true")
     }
+  }
+
+  test("sample estimates run no Spark job once a table's sample is loaded") {
+    // The reference evaluates predicates on in-memory Arrow samples
+    // (QueryGraph.cpp:264-294); SampleJoinReorder does the same over the
+    // rows PlanningSamples loads once per JVM. Planning a second query over
+    // the same tables, with new predicates and new join columns, must not
+    // start a single Spark job — and each in-memory selectivity must equal
+    // the Spark filter's own count over the sample.
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint}
+    import graft.plans.SampleJoinReorder
+    import graft.util.PlanningSamples
+    val dir = java.nio.file.Files.createTempDirectory("graft_nj_").toString
+    def save(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      df.write.parquet(s"$dir/$name.parquet")
+      PlanningSamples.write(dir, name, spark.read.parquet(s"$dir/$name.parquet"))
+    }
+    save("nj_fact", (0 until 6000).map { i =>
+      (i.toLong % 500, i.toLong % 40, (i * 7L) % 900, i.toLong)
+    }.toDF("f_a", "f_b", "f_c", "f_v"))
+    save("nj_dim", (0 until 3000).map { i =>
+      (i.toLong % 500, i.toLong % 40, s"name_${i % 97}_x${i % 5}",
+        if (i % 7 == 0) None else Some(i % 11), i * 0.5)
+    }.toDF("d_a", "d_b", "d_s", "d_n", "d_r"))
+    save("nj_side", (0 until 2000).map { i =>
+      ((i * 7L) % 900, i.toLong % 40, s"tag${i % 13}")
+    }.toDF("s_c", "s_b", "s_t"))
+    def read(t: String) = spark.read.parquet(s"$dir/$t.parquet")
+    def q1() = read("nj_fact")
+      .join(read("nj_dim").filter(col("d_s").contains("_3")), col("f_a") === col("d_a"))
+      .join(read("nj_side").filter(col("s_t") === "tag1"), col("f_c") === col("s_c"))
+    // new predicates AND new join columns (f_b/d_b, s_b) over the same tables
+    def q2() = read("nj_fact")
+      .join(read("nj_dim").filter(col("d_n") > 4 && col("d_s").like("%x1")),
+        col("f_b") === col("d_b"))
+      .join(read("nj_side").filter(col("s_t").isin("tag2", "tag5")), col("f_b") === col("s_b"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.sentinel") != null)
+          sentinel.countDown()
+        else jobs.incrementAndGet()
+    }
+    spark.conf.set("spark.graft.sampleReorder.enabled", "true")
+    try {
+      q1().queryExecution.optimizedPlan // loads the three samples
+      val df2 = q2() // built (schema resolved) before counting starts
+      spark.sparkContext.addSparkListener(listener)
+      val plan2 = try df2.queryExecution.optimizedPlan finally {
+        // the listener bus delivers in order: once the sentinel job's start
+        // arrives, every job started while planning has been counted
+        spark.sparkContext.setLocalProperty("graft.test.sentinel", "1")
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.setLocalProperty("graft.test.sentinel", null)
+        assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(plan2.collect { case j: Join => j.hint }.exists(_ != JoinHint.NONE),
+        s"the rule must have estimated q2 (it hints the small sides):\n$plan2")
+      assert(jobs.get == 0, s"planning q2 started ${jobs.get} Spark job(s)")
+      // pinned: in-memory selectivity == Spark's filter count over the sample
+      val sample = PlanningSamples.of(spark, s"$dir/nj_dim.parquet").get
+      val frame = spark.read.parquet(sample.path)
+      val n = frame.count().toDouble
+      for (c <- Seq(col("d_s").contains("_3"), col("d_s").like("name_1%x2"),
+          col("d_n").isin(1, 4, 9), col("d_r") >= 100.0 && col("d_r") < 612.5,
+          col("d_n") > 4 || col("d_s").contains("_9"))) {
+        val f = frame.filter(c)
+        val cond = f.queryExecution.analyzed match { case Filter(e, _) => e }
+        assert(SampleJoinReorder.selectivity(sample, cond) == Some(f.count() / n), s"selectivity of $c")
+      }
+    } finally spark.conf.set("spark.graft.sampleReorder.enabled", "true")
+  }
+
+  test("sample NDV groups values as Spark's groupBy does") {
+    // binary by content, -0.0 equal to 0.0, NaN equal to NaN, null one group
+    import spark.implicits._
+    import graft.plans.SampleJoinReorder
+    import graft.util.PlanningSamples
+    val dir = java.nio.file.Files.createTempDirectory("graft_ndv_").toString
+    val vals = Seq[Option[Double]](Some(0.0), Some(-0.0), Some(1.5), Some(Double.NaN), None)
+    val df = (0 until 400).map { i =>
+      (vals(i % 5), Array[Byte]((i % 3).toByte, 7), i.toLong % 6)
+    }.toDF("x", "b", "k")
+    df.write.parquet(s"$dir/ndv_t.parquet")
+    PlanningSamples.write(dir, "ndv_t", df)
+    val sample = PlanningSamples.of(spark, s"$dir/ndv_t.parquet").get
+    val frame = spark.read.parquet(sample.path)
+    // every column is saturated (each value many times), so NDV = groups
+    for (c <- Seq("x", "b", "k"))
+      assert(SampleJoinReorder.ndv(sample, c) == Some(frame.groupBy(c).count().count().toDouble), c)
+    assert(SampleJoinReorder.ndv(sample, "x") == Some(4.0))
+    assert(SampleJoinReorder.ndv(sample, "missing").isEmpty)
+  }
+
+  test("sample reorder: a malformed row-count file makes the rule stand down") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_bad_").toString
+    def save(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      df.write.parquet(s"$dir/$name.parquet")
+      graft.util.PlanningSamples.write(dir, name, df)
+    }
+    save("bad_a", (0 until 3000).map(i => (i.toLong % 100, i.toLong)).toDF("a_k", "a_v"))
+    save("bad_b", (0 until 100).map(i => (i.toLong, s"b$i")).toDF("b_k", "b_s"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/_samples/bad_b.count"),
+      "not-a-number".getBytes("UTF-8"))
+    assert(graft.util.PlanningSamples.of(spark, s"$dir/bad_b.parquet").isEmpty)
+    def q() = spark.read.parquet(s"$dir/bad_a.parquet")
+      .join(spark.read.parquet(s"$dir/bad_b.parquet").filter(col("b_s").contains("1")),
+        col("a_k") === col("b_k"))
+    spark.conf.set("spark.graft.sampleReorder.enabled", "false")
+    val offRows = q().collect().map(_.toString).sorted.toSeq
+    spark.conf.set("spark.graft.sampleReorder.enabled", "true")
+    try {
+      val df = q()
+      val onRows = df.collect().map(_.toString).sorted.toSeq
+      assert(df.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.hint
+      }.forall(_ == org.apache.spark.sql.catalyst.plans.logical.JoinHint.NONE),
+        "a table without a usable sample must leave the join untouched")
+      assert(onRows.nonEmpty && onRows == offRows)
+    } finally spark.conf.set("spark.graft.sampleReorder.enabled", "true")
   }
 
   test("bucketed layout: q21's fact pipeline is exchange-free; results match plain layout") {
