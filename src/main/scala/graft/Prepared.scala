@@ -35,7 +35,7 @@ import scala.collection.mutable
   *    BroadcastExchangeExec is rewritten at install time to
   *    org.apache.spark.graft.RebroadcastExchangeExec, whose consumer-visible
   *    Broadcast is a stable RefreshableBroadcast wrapper; before each
-  *    re-drain [[RebroadcastExchangeExec.refresh]] re-runs the FULL build
+  *    re-drain RebroadcastExchangeExec.beginRefresh/awaitRefresh re-runs the FULL build
   *    (child subtree re-executed with its own shuffle outputs forgotten,
   *    rows re-collected, hash relation rebuilt, fresh TorrentBroadcast) and
   *    swaps it in, innermost-first so a nested rebuild only observes
@@ -58,7 +58,7 @@ import scala.collection.mutable
   * Staleness: the cache is session-scoped and keyed purely on the plan, so
   * a session that mutates the underlying files or flips planning-relevant
   * conf mid-stream should [[invalidate]] first (the bench never does
-  * either; Tables.invalidate calls through).
+  * either).
   */
 object Prepared {
   private val rddCache =
@@ -74,10 +74,6 @@ object Prepared {
 
   def invalidate(spark: SparkSession): Unit =
     rddCache.synchronized { rddCache.remove(spark); () }
-
-  /** Conservative full flush (Tables.invalidate is dir-keyed across
-    * sessions; prepared plans don't record their dir, so drop them all). */
-  def invalidateAll(): Unit = rddCache.synchronized { rddCache.clear() }
 
   /** A FRESH QueryExecution over `df`'s analyzed plan — fresh optimizer/
     * planner run, fresh exchanges, fresh shuffle ids. The uncacheable

@@ -40,8 +40,7 @@ object Tables {
     * query), so caching the resolved LogicalRelation is the Spark-native
     * catalog analog, not a benchmark trick. The logical plan is immutable
     * and the file listing is a snapshot — correct for the engine's
-    * read-only table contract; call [[invalidate]] after rewriting a dir
-    * in-place (no in-repo caller does).
+    * read-only table contract: a dir rewritten in place needs a new session.
     *
     * Keyed weakly per SparkSession so a stopped session's plans are
     * collectable and tests with multiple sessions don't cross-wire. */
@@ -56,16 +55,6 @@ object Tables {
       catalogCache.put(spark, m)
     }
     m
-  }
-
-  /** Drop cached plans for `dir` (all sessions); use after an in-place
-    * rewrite. Prepared physical plans capture scan file listings, so the
-    * plan cache goes with it. */
-  def invalidate(dir: String): Unit = catalogCache.synchronized {
-    catalogCache.values.forEach { m =>
-      m.keySet.removeIf(k => k._1 == dir)
-    }
-    Prepared.invalidateAll()
   }
 
   /** Bucketed-layout marker written by tools.ScaleUp:

@@ -12,11 +12,15 @@ import graft.sqlsurface.GraftSql
   * normalization + md5 hashing `ResultHasher` :39-170). Runs the SAME corpus
   * files (test/sqlite-small, test/sqlite, uni) against the Spark engine via
   * the GraftSql statement router, so CREATE TABLE / INSERT / CREATE FUNCTION /
-  * SELECT all flow through the engine's own surface.
+  * SELECT all flow through the engine's own surface, canonicalization
+  * included ([[graft.sqlsurface.SqlCanonicalizer]]: quantified comparisons,
+  * decorrelation rewrites, table-level PRIMARY KEY).
   *
-  * DDL dialect adaptation: Spark v1 datasource tables accept neither NOT NULL
-  * column constraints nor PRIMARY KEY clauses — both are metadata-only in the
-  * reference tests and are stripped (semantics of the queries are unaffected).
+  * The only harness shims left: Postgres cast-type synonyms (`::text`, …),
+  * the column-level PRIMARY KEY strip (Spark's DDL rejects it; metadata-only
+  * in the corpus) and bare CHAR/VARCHAR (no length) as STRING. Queries also
+  * get the corpus's Postgres null ordering through
+  * [[graft.sqlsurface.SqlCanonicalizer.pgNullOrder]].
   */
 object SltRunner {
 
@@ -81,35 +85,18 @@ object SltRunner {
     records.result()
   }
 
-  /** Strip constraints Spark's v1 DDL rejects (metadata-only in the corpus). */
+  /** Column-level PRIMARY KEY (Spark's DDL rejects it) and bare CHAR/VARCHAR. */
   private[slt] def adaptDdl(sql: String): String = {
-    val up = sql.toUpperCase
-    if (!up.startsWith("CREATE TABLE")) sql
+    if (!sql.toUpperCase.startsWith("CREATE TABLE")) sql
     else sql
-      .replaceAll("(?i)\\s+not\\s+null", "")
-      .replaceAll("(?i),?\\s*primary\\s+key\\s*\\([^)]*\\)", "")
-      .replaceAll("(?i)\\s+primary\\s+key", "")          // column-level form
+      .replaceAll("(?i)\\s+primary\\s+key\\b(?!\\s*\\()", "")
       .replaceAll("(?i)\\bchar\\b(?!\\s*\\()", "string") // bare CHAR has no length
       .replaceAll("(?i)\\bvarchar\\b(?!\\s*\\()", "string") // bare VARCHAR too
   }
 
-  /** Quantified-comparison rewrite: `x = SOME(sub)` has identical semantics to
-    * `x IN (sub)` (reference SubqueryType ANY, parsed_expression.h:495-502);
-    * Spark only parses the IN form. */
-  /** Harness-only dialect shims: type synonyms, quantified comparisons and
-    * the corpus's Postgres null ordering. Everything structural (outer-agg
-    * decomposition, deep-correlation hoisting, no-FROM scalar collapse, …)
-    * now lives engine-side in [[graft.sqlsurface.SqlCanonicalizer]] and is
-    * applied by GraftSql itself. */
+  /** Query-side shims: cast-type synonyms, then Postgres null ordering. */
   private[slt] def adaptQuery(sql: String): String =
-    explicitNullOrder(rewriteQuantified(castTextSynonym(sql)))
-
-
-
-
-
-
-
+    graft.sqlsurface.SqlCanonicalizer.pgNullOrder(castTextSynonym(sql))
 
   /** Postgres cast-type synonyms → Spark type names. */
   private[slt] def castTextSynonym(sql: String): String =
@@ -119,55 +106,6 @@ object SltRunner {
       .replaceAll("(?i)::int8\\b", "::bigint")
       .replaceAll("(?i)::int4\\b", "::int")
       .replaceAll("(?i)::int2\\b", "::smallint")
-
-
-
-
-
-
-
-
-
-
-  /** Postgres null ordering, delegated to the engine-side canonicalizer. */
-  private[slt] def explicitNullOrder(sql: String): String =
-    graft.sqlsurface.SqlCanonicalizer.pgNullOrder(sql)
-
-  /** Quantified comparisons `expr <op> ANY|SOME|ALL (sub)` → EXISTS forms
-    * (reference SubqueryType ANY/ALL, parsed_expression.h:495-502). Spark
-    * parses none of them. Two-valued approximation of the ANSI three-valued
-    * result (the corpus subqueries are null-free).
-    */
-  private val quantRe =
-    "(?i)([\\w.]+)\\s*(=|<>|!=|<=|>=|<|>)\\s*(ANY|SOME|ALL)\\s*\\(".r
-
-  private def rewriteQuantified(sql: String): String = {
-    quantRe.findFirstMatchIn(sql) match {
-      case None => sql
-      case Some(m) =>
-        val open = m.end - 1
-        var depth = 0; var i = open; var close = -1
-        while (i < sql.length && close < 0) {
-          sql.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (close < 0) sql
-        else {
-          val (lhs, op, quant) = (m.group(1), m.group(2), m.group(3).toUpperCase)
-          val sub = rewriteQuantified(sql.substring(open + 1, close))
-          val repl =
-            if (quant == "ALL")
-              s"NOT EXISTS (SELECT 1 FROM ($sub) AS __all_t(__v) WHERE ($lhs $op __v) IS DISTINCT FROM true)"
-            else
-              s"EXISTS (SELECT 1 FROM ($sub) AS __any_t(__v) WHERE $lhs $op __v)"
-          rewriteQuantified(sql.substring(0, m.start) + repl + sql.substring(close + 1))
-        }
-    }
-  }
 
   private def fmt(v: Any): String = v match {
     case null => "NULL"
@@ -220,11 +158,11 @@ object SltRunner {
         val table = m.group(1).toLowerCase
         val cols = Option(m.group(2)).map(_.split(",").toSeq.map(_.trim.toLowerCase))
           .getOrElse(Seq.empty)
-        val tuples = graft.sqlsurface.PipeSql.splitTop(m.group(3).trim, ",").map(_.trim)
+        val tuples = graft.sqlsurface.SqlScan.splitTop(m.group(3).trim, ",").map(_.trim)
         // each top-level element must be a parenthesized tuple
         if (tuples.forall(t => t.startsWith("(") && t.endsWith(")")))
           Some((table, cols,
-            tuples.map(t => graft.sqlsurface.PipeSql.splitTop(
+            tuples.map(t => graft.sqlsurface.SqlScan.splitTop(
               t.substring(1, t.length - 1), ",").map(_.trim))))
         else None
       }
@@ -320,7 +258,7 @@ object SltRunner {
             case Failure(e) => failed += 1; failures += s"${short(sql)} -> ${short(e.getMessage)}"
             case Success(rows) =>
               val got: Seq[Seq[String]] = sortMode match {
-                case "rowsort" => rows.sortBy(_.mkString(" "))
+                case "rowsort" => rows.sortBy(_.mkString("\u0000"))
                 case "valuesort" => rows.flatten.sorted.map(Seq(_))
                 case _ => rows
               }
@@ -355,7 +293,7 @@ object SltRunner {
                   def rstrip(s: String): String = s.replaceAll("\\s+$", "")
                   val want = expected.map(_.split("\t").toSeq.map(rstrip))
                   val wantSorted = sortMode match {
-                    case "rowsort" => want.sortBy(_.mkString(" "))
+                    case "rowsort" => want.sortBy(_.mkString("\u0000"))
                     case "valuesort" => want.flatten.sorted.map(Seq(_))
                     case _ => want
                   }

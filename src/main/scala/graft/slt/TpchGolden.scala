@@ -2,59 +2,31 @@ package graft.slt
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
 
 import graft.sqlsurface.GraftSql
 
-/** Runner for the reference's TPC-H SF1 golden corpus
-  * (reference test/sqlite-datasets/tpchSf1.test — 22 queries with INLINE
-  * expected results, the official TPC-H SF1 validation answer set; the
-  * reference CI generates its dataset with the pinned dbgen in
-  * tools/generate/tpch.sh and runs the file per backend,
-  * .github/workflows/workflow-ubuntu-latest-x86_64.yml:80-126).
+/** TPC-H golden-answer check: the 22 queries end to end through GraftSql
+  * (parse, canonicalize, Catalyst plan, execute) against a known answer set.
   *
-  * The dataset here is provisioned offline by tools/gen_tpch_sf1.py
-  * (DuckDB's bundled spec-faithful dbgen) — the goldens then exercise OUR
-  * engine end-to-end: GraftSql parse/canonicalize → Catalyst plans → the
-  * same 22 result sets, cell-compared under the reference's fuzzy-float
-  * rule (sqlite-tester.cpp compareFuzzy).
-  *
-  * Fixture fidelity, measured: every numeric, key, name, phone, date and
-  * planted-text stream matches the pinned dbgen bit-for-bit (17/22 queries
-  * compare EXACTLY against the reference's inline answers, including Q16's
-  * planted Customer-Complaints suppliers). The one infidelity is the pooled
-  * free-text generator (addresses and comments): DuckDB's dbgen follows
-  * TPC-H v3's text pool, the reference pins a 2.14-era dbgen
-  * (tools/generate/tpch.sh:6), and the two pools differ. Consequences and
-  * honest handling:
-  *  - Q2/Q10/Q15/Q20 select an address/comment column: those CELLS are
-  *    masked from the golden compare (every other column — keys, revenues,
-  *    balances, names, phones — still compares exactly, and row order/count
-  *    must match);
-  *  - Q13 aggregates over `o_comment NOT LIKE '%special%requests%'`, so its
-  *    whole histogram shifts with the pool: it is compared against a
-  *    fixture-derived expected result computed by the generator
-  *    (q13_expected.tsv, DuckDB on the very same tables).
-  * A CHAR-padding note: dbgen CHAR(n) columns print blank-padded in the
-  * goldens; the fixture stores unpadded VARCHAR, so cells are right-trimmed
-  * before comparison (CHAR comparison semantics ignore the pad).
+  * The fixture comes from one offline dbgen, DuckDB's bundled `tpch`
+  * extension (tools/gen_tpch_sf1.py): the eight tables as parquet, the
+  * extension's own query texts (`qNN.sql`, from `tpch_queries()`) and its
+  * answers at the same scale (`qNN.ans`, from `tpch_answers()`). Data,
+  * queries and answers therefore agree, so every cell of every query is
+  * compared; nothing is masked. These are DuckDB's texts of the 22 queries,
+  * not the reference's verbatim corpus (test/sqlite-datasets/tpchSf1.test,
+  * whose answers come from a 2.14-era dbgen with a different free-text
+  * pool). Cells compare under the reference's fuzzy-float rule
+  * ([[SltRunner.cellEq]], sqlite-tester.cpp compareFuzzy), right-trimmed:
+  * CHAR(n) columns may print blank-padded.
   */
 object TpchGolden {
   val tables: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "partsupp", "orders", "lineitem")
-
-  val testFile: String = "/root/reference/test/sqlite-datasets/tpchSf1.test"
-
-  /** Column indexes whose cells come from dbgen's pooled free-text
-    * generator (address/comment) — the one stream the offline fixture
-    * cannot reproduce against the pinned 2.14 dbgen (see scaladoc). */
-  val pooledTextCols: Map[String, Set[Int]] = Map(
-    "tpchq2" -> Set(5, 7),  // s_address, s_comment
-    "tpchq10" -> Set(5, 7), // c_address, c_comment
-    "tpchq15" -> Set(2),    // s_address
-    "tpchq20" -> Set(1))    // s_address
 
   def register(spark: SparkSession, dir: String): Unit =
     tables.foreach { t =>
@@ -63,43 +35,27 @@ object TpchGolden {
 
   private def rstrip(s: String): String = s.replaceAll("\\s+$", "")
 
-  def run(spark: SparkSession, dir: String,
-      file: String = testFile): SltRunner.FileResult = {
+  def run(spark: SparkSession, dir: String): SltRunner.FileResult = {
     register(spark, dir)
-    val records = SltRunner.parse(Files.readString(Paths.get(file)))
-    var passed = 0
-    var failed = 0
-    val failures = Vector.newBuilder[String]
-    records.foreach {
-      case q: SltRunner.Query =>
-        val mask = pooledTextCols.getOrElse(q.label, Set.empty[Int])
-        val want: Seq[Seq[String]] =
-          if (q.label == "tpchq13")
-            Files.readString(Paths.get(s"$dir/q13_expected.tsv")).trim
-              .linesIterator.map(_.split("\t").toSeq).toSeq
-          else q.expected.map(_.split("\t").toSeq.map(rstrip))
-        Try(SltRunner.rowsOf(GraftSql(spark, SltRunner.adaptQuery(q.sql)))) match {
-          case Failure(e) =>
-            failed += 1
-            failures += s"${q.label}: ${String.valueOf(e.getMessage).take(200)}"
-          case Success(rows) =>
-            val ok = rows.length == want.length &&
-              rows.zip(want).forall { case (g, w) =>
-                g.length == w.length && g.indices.forall(j =>
-                  mask(j) || SltRunner.cellEq(rstrip(g(j)), w(j)))
-              }
-            if (ok) passed += 1
-            else {
-              failed += 1
-              val diff = rows.zip(want).zipWithIndex.collectFirst {
-                case ((g, w), i) if g.map(rstrip) != w =>
-                  s"row $i got=${g.mkString("|")} want=${w.mkString("|")}"
-              }.getOrElse(s"rows ${rows.length} want ${want.length}")
-              failures += s"${q.label}: $diff"
-            }
-        }
-      case _ => () // the corpus is query-only
+    val failures = (1 to 22).flatMap { n =>
+      val q = f"q$n%02d"
+      val sql = Files.readString(Paths.get(s"$dir/$q.sql")).trim.stripSuffix(";")
+      // header line, then one `|`-separated row per line
+      val want = Files.readAllLines(Paths.get(s"$dir/$q.ans")).asScala.toSeq.drop(1)
+        .filter(_.nonEmpty).map(_.split("\\|", -1).toSeq.map(rstrip))
+      Try(SltRunner.rowsOf(GraftSql(spark, SltRunner.adaptQuery(sql)))) match {
+        case Failure(e) => Some(s"$q: ${String.valueOf(e.getMessage).take(200)}")
+        case Success(rows) =>
+          val got = rows.map(_.map(rstrip))
+          val ok = got.length == want.length && got.zip(want).forall { case (g, w) =>
+            g.length == w.length && g.zip(w).forall((SltRunner.cellEq _).tupled)
+          }
+          if (ok) None
+          else Some(s"$q: " + got.zip(want).zipWithIndex.collectFirst {
+            case ((g, w), i) if g != w => s"row $i got=${g.mkString("|")} want=${w.mkString("|")}"
+          }.getOrElse(s"rows ${got.length} want ${want.length}"))
+      }
     }
-    SltRunner.FileResult(file, passed, failed, failures.result())
+    SltRunner.FileResult(dir, 22 - failures.size, failures.size, failures)
   }
 }

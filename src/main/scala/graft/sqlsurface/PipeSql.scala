@@ -3,6 +3,7 @@ package graft.sqlsurface
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import SqlScan.{closeParen, splitTop, topLevelIndexOf}
 
 /** GoogleSQL-style pipe-syntax SQL, the reference's second query language
   * (reference src/compiler/frontend/parser.y:450-566 "GOOLE PIPE syntax",
@@ -40,9 +41,9 @@ object PipeSql {
       else {
         // plain SELECT head is allowed (parser.y:551); keep its FROM clause
         // pending so later stages still see the table aliases
-        val fromIdx = findTopLevel(headSql.toUpperCase, " FROM ")
+        val fromIdx = topLevelIndexOf(headSql, "FROM")
         if (headSql.toUpperCase.startsWith("SELECT") && fromIdx > 0)
-          Left(Pending(headSql.substring(fromIdx + 6).trim, Nil,
+          Left(Pending(headSql.substring(fromIdx + 4).trim, Nil,
             Some(headSql.substring(6, fromIdx).trim)))
         else Right(spark.sql(headSql))
       }
@@ -94,7 +95,7 @@ object PipeSql {
       case s if s.startsWith("AGGREGATE") =>
         val rest = stage.drop(9)
         // AGGREGATE <aggs with aliases> [GROUP BY <keys with aliases>]
-        val gbIdx = findTopLevel(rest.toUpperCase, "GROUP BY")
+        val gbIdx = topLevelIndexOf(rest, "GROUP BY")
         if (gbIdx < 0) Right(spark.sql(s"SELECT ${rest.trim} ${fromCtx.sqlFrom}"))
         else {
           val aggs = rest.substring(0, gbIdx).trim.stripSuffix(",")
@@ -166,58 +167,24 @@ object PipeSql {
 
   /** `a.b` → `b` outside string literals (post-projection re-resolution). */
   private def stripQualifiers(s: String): String =
-    "(?<!')\\b\\w+\\.(\\w+)\\b(?!')".r.replaceAllIn(s, "$1")
+    SqlScan.splice(s, "\\b\\w+\\.(\\w+)\\b".r.findAllMatchIn(SqlScan.mask(s))
+      .map(m => (m.start, m.end, m.group(1))).toSeq)
 
   /** Rewrite innermost parenthesized pipe fragments `( from t |> ... )` into
     * classic SQL subqueries so they can appear inside expressions
     * (EXISTS/IN — the reference allows pipe syntax anywhere a subquery is
     * legal, pipe_sql_with_parens parser.y:465-468). */
   private[sqlsurface] def inlineNestedPipes(q: String): String = {
-    val sb = new StringBuilder(q)
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      var inStr = false
-      while (i < sb.length && !changed) {
-        val c = sb.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        else if (c == '(') {
-          val close = matchParen(sb, i)
-          if (close > 0) {
-            val inner = sb.substring(i + 1, close)
-            if (!inner.contains("(") && inner.trim.toUpperCase.startsWith("FROM") &&
-              splitTop(inner, "|>").length > 1) {
-              assembleSql(inner).foreach { sqlText =>
-                sb.replace(i, close + 1, s"($sqlText)")
-                changed = true
-              }
-            }
-          }
-        }
-        i += 1
-      }
-    }
-    sb.toString
-  }
-
-  private def matchParen(sb: StringBuilder, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var inStr = false
-    while (i < sb.length) {
-      val c = sb.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
+    val m = SqlScan.mask(q)
+    m.indices.iterator.filter(m.charAt(_) == '(').flatMap { open =>
+      val close = closeParen(q, open)
+      val inner = if (close > 0) m.substring(open + 1, close) else ""
+      if (!inner.contains("(") && inner.trim.toUpperCase.startsWith("FROM") &&
+        splitTop(inner, "|>").length > 1)
+        assembleSql(q.substring(open + 1, close)).map(sqlText =>
+          q.substring(0, open) + s"($sqlText)" + q.substring(close + 1))
+      else None
+    }.nextOption().fold(q)(inlineNestedPipes)
   }
 
   /** Pure-SQL assembly of a simple pipe chain (FROM/JOIN/WHERE/SELECT/ORDER
@@ -246,61 +213,12 @@ object PipeSql {
     Some(s"SELECT $select FROM $from$whereSql$suffix")
   }
 
-  /** Split on a delimiter at paren/quote depth zero. */
-  private[graft] def splitTop(s: String, delim: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var inStr = false; var last = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && s.regionMatches(true, i, delim, 0, delim.length)) {
-            out += s.substring(last, i); last = i + delim.length; i += delim.length - 1
-          }
-      }
-      i += 1
-    }
-    out += s.substring(last)
-    out.result()
-  }
-
-  private def findTopLevel(sUp: String, token: String): Int = {
-    var depth = 0; var inStr = false; var i = 0
-    while (i < sUp.length) {
-      val c = sUp.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => if (depth == 0 && sUp.regionMatches(i, token, 0, token.length)) return i
-      }
-      i += 1
-    }
-    -1
-  }
-
   private def containsTop(s: String, delim: String): Boolean = splitTop(s, delim).length > 1
 
   private def stripParens(s: String): String = {
     val t = s.trim
-    if (t.startsWith("(") && t.endsWith(")")) {
-      // only strip if the parens wrap the whole string
-      var depth = 0
-      var wraps = true
-      for (i <- 0 until t.length - 1) {
-        t.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) wraps = false
-          case _ =>
-        }
-      }
-      if (wraps) t.substring(1, t.length - 1) else t
-    } else t
+    // only strip parens that wrap the whole string
+    if (t.startsWith("(") && closeParen(t, 0) == t.length - 1) t.substring(1, t.length - 1) else t
   }
 }
 

@@ -1,14 +1,20 @@
 package graft.sqlsurface
 
+import SqlScan.{closeParen, declaredNames, fromKeywords, mask, selectBlocks, topLevelIndexOf}
+
 /** Engine-side SQL canonicalization: source-level rewrites that widen the
   * accepted SQL surface beyond what Catalyst resolves, applied by
   * [[GraftSql]] to every statement BEFORE `spark.sql` — the Spark analog of
   * the reference's SQL canonicalization inside the engine front-end
   * (reference src/compiler/frontend/SQL/sql_analyzer.cpp; general unnesting
-  * in Transforms/Unnesting.cpp). Moved out of the sqllogictest harness so a
-  * user issuing the same SQL through GraftSql gets identical treatment —
-  * the harness (graft.slt.SltRunner) now keeps only genuine dialect shims
-  * (null ordering, quantified comparisons, type synonyms).
+  * in Transforms/Unnesting.cpp). A user issuing SQL through GraftSql gets
+  * the same treatment as the sqllogictest harness, whose only remaining
+  * shims ([[graft.slt.SltRunner]]) are cast-type synonyms, the column-level
+  * PRIMARY KEY strip and bare CHAR/VARCHAR.
+  *
+  * Every rewrite finds its offsets through [[SqlScan]] on the literal-masked
+  * text and slices the original by them, so no rewrite fires inside a string
+  * literal, a quoted identifier or a comment.
   *
   * The rewrites are exact (algebraic identities / scope hoists), not
   * approximations; [[graft.plans.DecorrelateComplexAggs]] handles the
@@ -23,54 +29,6 @@ object SqlCanonicalizer {
         joinOnSubqueryToWhere(existsNoFromToTrue(
           quantifiedCmp(canonTypes(sql))))))))))
 
-  /** Masked copy for keyword/offset scans: contents of single-quoted string
-    * literals (with `''` escapes), double-quoted identifiers, `--` line
-    * comments and block comments are blanked to spaces. Length-preserving,
-    * so every offset found on the mask applies verbatim to the original —
-    * rewrites can never fire inside literal data (ADVICE r10). */
-  private[sqlsurface] def maskLiterals(sql: String): String = {
-    val a = sql.toCharArray
-    var i = 0
-    while (i < a.length) {
-      a(i) match {
-        case '\'' =>
-          var j = i + 1
-          var done = false
-          while (j < a.length && !done) {
-            if (a(j) == '\'') {
-              if (j + 1 < a.length && a(j + 1) == '\'') {
-                a(j) = ' '; a(j + 1) = ' '; j += 2
-              } else done = true
-            } else { a(j) = ' '; j += 1 }
-          }
-          i = j + 1
-        case '"' =>
-          var j = i + 1
-          while (j < a.length && a(j) != '"') { a(j) = ' '; j += 1 }
-          i = j + 1
-        case '-' if i + 1 < a.length && a(i + 1) == '-' =>
-          var j = i
-          while (j < a.length && a(j) != '\n') { a(j) = ' '; j += 1 }
-          i = j
-        case '/' if i + 1 < a.length && a(i + 1) == '*' =>
-          var j = i
-          while (j + 1 < a.length && !(a(j) == '*' && a(j + 1) == '/')) {
-            a(j) = ' '; j += 1
-          }
-          if (j + 1 < a.length) { a(j) = ' '; a(j + 1) = ' ' }
-          i = j + 2
-        case _ => i += 1
-      }
-    }
-    new String(a)
-  }
-
-  /** Apply (start, end, replacement) spans to `sql`, right-to-left. */
-  private def applySpans(sql: String, spans: Seq[(Int, Int, String)]): String =
-    spans.sortBy(-_._1).foldLeft(sql) { case (s, (from, until, rep)) =>
-      s.substring(0, from) + rep + s.substring(until)
-    }
-
   /** Parameterized FLOAT(p): the SQL-standard binary-precision spec Spark's
     * parser rejects — p <= 24 is single precision, larger is double
     * (Postgres rule; reference parser accepts it, test/lit/SQL/syntax.sql).
@@ -82,14 +40,14 @@ object SqlCanonicalizer {
     * a CTAS select list survives). All scans run on the literal-masked text
     * (ADVICE r10): occurrences inside strings/comments are never touched. */
   private def canonTypes(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     // column-definition region of a plain CREATE TABLE (never CTAS: a
     // paren group followed by AS is a column-ALIAS list, not types)
     val colDefRegion: Option[(Int, Int)] =
       "(?is)^\\s*CREATE\\s+TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?[\\w.\"`]+\\s*\\(".r
         .findPrefixMatchOf(masked).flatMap { m =>
           val open = m.end - 1
-          val close = closeParenOf(masked, open)
+          val close = closeParen(masked, open)
           val after = masked.drop(close + 1).trim.toUpperCase
           if (close > 0 && !after.startsWith("AS")) Some((open, close)) else None
         }
@@ -113,7 +71,7 @@ object SqlCanonicalizer {
       .filter(m => inColDefs(m.start))
       .map(m => (m.start, m.end, "boolean"))
       .toSeq
-    applySpans(sql, floatSpans ++ boolSpans)
+    SqlScan.splice(sql, floatSpans ++ boolSpans)
   }
 
   /** Quantified comparisons `<lhs> <op> ALL|ANY|SOME (<subquery>)` — the
@@ -140,7 +98,7 @@ object SqlCanonicalizer {
       // `op ALL(SELECT…` shape inside a string literal or comment is never
       // rewritten, and a stray paren inside a literal cannot mis-slice the
       // statement (ADVICE r10)
-      val masked = maskLiterals(text)
+      val masked = mask(text)
       val hit = kwRe.findAllMatchIn(masked).find { m =>
         val inner = masked.substring(m.end).trim.toUpperCase
         val isSub = Seq("SELECT", "WITH", "VALUES", "FROM").exists(inner.startsWith)
@@ -149,7 +107,7 @@ object SqlCanonicalizer {
       hit.foreach { m =>
         val (op, opStart) = cmpBefore(masked, m.start).get
         val open = masked.indexOf('(', m.end - 1)
-        val close = closeParenOf(masked, open)
+        val close = closeParen(masked, open)
         if (close > 0) {
           lhsBefore(masked, opStart) match {
             case Some(lhsStart) =>
@@ -223,78 +181,41 @@ object SqlCanonicalizer {
   /** Does the expression text reference any LOCAL (non-outer) column: a bare
     * identifier (inner column) or a qualifier not in `outerAliases`. */
   private def refsLocal(expr: String, outerAliases: Set[String]): Boolean = {
-    val idRe = "[A-Za-z_]\\w*".r
-    var i = 0
-    while (i < expr.length) {
-      idRe.findPrefixMatchOf(expr.substring(i)) match {
-        case Some(m) if i == 0 || !expr.charAt(i - 1).isLetterOrDigit &&
-            expr.charAt(i - 1) != '_' && expr.charAt(i - 1) != '.' =>
-          val word = m.matched
-          val after = expr.substring(i + word.length).dropWhile(_.isWhitespace)
-          val isFunc = after.startsWith("(")
-          val isQualifier = after.startsWith(".")
-          if (!isFunc && !sqlKeywords.contains(word.toUpperCase)) {
-            if (isQualifier) { if (!outerAliases.contains(word)) return true }
-            else return true // bare identifier = inner column
-          }
-          i += m.matched.length.max(1)
-        case _ => i += 1
-      }
+    val m = mask(expr)
+    "(?<![\\w.])[A-Za-z_]\\w*".r.findAllMatchIn(m).exists { w =>
+      val after = m.substring(w.end).dropWhile(_.isWhitespace)
+      !after.startsWith("(") && !sqlKeywords(w.matched.toUpperCase) &&
+        !(after.startsWith(".") && outerAliases(w.matched))
     }
-    false
   }
 
-  private def refsOuter(expr: String, outerAliases: Set[String]): Boolean =
-    outerAliases.exists(a => s"(?i)\\b$a\\s*\\.".r.findFirstIn(expr).isDefined)
+  private def refsOuter(expr: String, outerAliases: Set[String]): Boolean = {
+    val m = mask(expr)
+    outerAliases.exists(a => s"(?i)\\b$a\\s*\\.".r.findFirstIn(m).isDefined)
+  }
 
-  /** Split an expression text at top-level '+'/'-' into signed terms; None if
-    * it isn't a sum (single term). */
+  /** Split an expression text at top-level binary '+'/'-' into signed terms. */
   private def signedTerms(expr: String): Seq[(Char, String)] = {
-    val terms = Seq.newBuilder[(Char, String)]
-    var depth = 0; var inStr = false; var start = 0; var sign = '+'
-    var i = 0
-    while (i < expr.length) {
-      val c = expr.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case '+' | '-' if depth == 0 && i > start =>
-          val prev = expr.substring(0, i).reverse.dropWhile(_.isWhitespace)
-          // binary only: previous non-space char must end an operand
-          if (prev.nonEmpty && (prev.head.isLetterOrDigit || prev.head == ')' || prev.head == '\'')) {
-            terms += ((sign, expr.substring(start, i).trim)); sign = c; start = i + 1
-          }
-        case _ =>
-      }
-      i += 1
+    val m = mask(expr)
+    // binary only: the previous non-space char must end an operand
+    def binary(i: Int): Boolean = {
+      val p = m.lastIndexWhere(!_.isWhitespace, i - 1)
+      p >= 0 && (m.charAt(p).isLetterOrDigit || m.charAt(p) == ')' || m.charAt(p) == '\'')
     }
-    terms += ((sign, expr.substring(start).trim))
-    terms.result().filter(_._2.nonEmpty)
+    val cuts = SqlScan.topLevelHits(expr)(i => (m.charAt(i) == '+' || m.charAt(i) == '-') && binary(i))
+    ((-1 +: cuts) zip (cuts :+ expr.length)).map { case (from, until) =>
+      (if (from < 0) '+' else m.charAt(from), expr.substring(from + 1, until).trim)
+    }.filter(_._2.nonEmpty)
   }
 
-  /** Split at top-level '*' into factors (no division). */
+  /** Split at top-level '*' into factors (no split across '/' or '%'). */
   private def factors(expr: String): Seq[String] = {
-    val fs = Seq.newBuilder[String]
-    var depth = 0; var inStr = false; var start = 0
-    var i = 0
-    while (i < expr.length) {
-      val c = expr.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case '*' if depth == 0 => fs += expr.substring(start, i).trim; start = i + 1
-        case '/' | '%' if depth == 0 => return Seq(expr) // don't split
-        case _ =>
-      }
-      i += 1
-    }
-    fs += expr.substring(start).trim
-    fs.result().filter(_.nonEmpty)
+    val m = mask(expr)
+    if (SqlScan.topLevelHits(expr)(i => m.charAt(i) == '/' || m.charAt(i) == '%').nonEmpty) Seq(expr)
+    else SqlScan.splitTop(expr, "*").map(_.trim).filter(_.nonEmpty)
   }
+
+  private val aggCallRe = "(?i)\\b(SUM|MIN|MAX|COUNT|AVG)\\s*\\(".r
 
   /** Remove outer references from INSIDE aggregate-function arguments using
     * exact algebraic identities, keeping the block an aggregate query:
@@ -311,63 +232,29 @@ object SqlCanonicalizer {
     * happen before analysis; [[graft.plans.DecorrelateComplexAggs]] then
     * handles the outer references that remain OUTSIDE aggregate calls. */
   def decomposeOuterAggs(sql: String): String = {
-    if (!"(?i)\\(\\s*SELECT".r.findFirstIn(sql).isDefined) return sql
-    val declRe = "(?i)(?:FROM|JOIN|,)\\s+(\\w+)(?:\\s+(\\w+))?".r
-    val allAliases = declRe.findAllMatchIn(sql)
-      .flatMap(m => Seq(Option(m.group(1)), Option(m.group(2))).flatten).toSet
-      .filterNot(w => fromKeywords.contains(w.toUpperCase))
-    var cur = sql
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < 8) {
-      changed = false; rounds += 1
-      val opens = "(?i)\\(\\s*SELECT\\b".r.findAllMatchIn(cur).map(_.start).toSeq
-      opens.foreach { open =>
-        if (!changed) {
-          var depth = 0; var j = open; var close = -1
-          while (j < cur.length && close < 0) {
-            cur.charAt(j) match {
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = j
-              case _ =>
-            }
-            j += 1
-          }
-          if (close > 0) {
-            val body = cur.substring(open + 1, close)
-            val ownAliases = declRe.findAllMatchIn(body)
-              .flatMap(m => Seq(Option(m.group(1)), Option(m.group(2))).flatten).toSet
-            val outerAliases = allAliases -- ownAliases
-            rewriteAggsIn(body, outerAliases).foreach { newBody =>
-              cur = cur.substring(0, open + 1) + newBody + cur.substring(close)
-              changed = true
-            }
-          }
-        }
+    val allAliases = declaredNames(sql)
+    @annotation.tailrec def go(cur: String, rounds: Int): String =
+      if (rounds == 8) cur
+      else selectBlocks(cur).iterator.flatMap { case (open, close) =>
+        val body = cur.substring(open + 1, close)
+        rewriteAggsIn(body, allAliases -- declaredNames(body))
+          .map(cur.substring(0, open + 1) + _ + cur.substring(close))
+      }.nextOption() match {
+        case Some(next) => go(next, rounds + 1)
+        case None => cur
       }
-    }
-    cur
+    go(sql, 0)
   }
 
   /** One aggregate-call rewrite inside a subquery body; None if nothing to do. */
   private def rewriteAggsIn(body: String, outerAliases: Set[String]): Option[String] = {
-    if (outerAliases.isEmpty) return None
     // grouped blocks: per-group COUNT(*) identities interact with HAVING —
     // the plan-level rule handles row-constant aggregates there instead
-    if (hasTopLevel(body, "GROUP")) return None
-    val aggRe = "(?i)\\b(SUM|MIN|MAX|COUNT|AVG)\\s*\\(".r
-    aggRe.findAllMatchIn(body).foreach { m =>
+    if (outerAliases.isEmpty || topLevelIndexOf(body, "GROUP") >= 0) return None
+    aggCallRe.findAllMatchIn(mask(body)).foreach { m =>
       val fn = m.group(1).toUpperCase
       val open = m.end - 1
-      var depth = 0; var j = open; var close = -1
-      while (j < body.length && close < 0) {
-        body.charAt(j) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = j
-          case _ =>
-        }
-        j += 1
-      }
+      val close = closeParen(body, open)
       if (close > 0) {
         val arg = body.substring(open + 1, close).trim
         if (arg != "*" && !arg.toUpperCase.startsWith("DISTINCT") &&
@@ -425,84 +312,27 @@ object SqlCanonicalizer {
     * identical. Applied only when the ON clause contains a subquery and the
     * query has no top-level WHERE of its own. */
   def joinOnSubqueryToWhere(sql: String): String = {
-    if (!sql.toUpperCase.contains("INNER JOIN") || topLevelHasWhere(sql)) return sql
-    val re = "(?i)\\bINNER\\s+JOIN\\s+(\\w+(?:\\s+\\w+)?)\\s+ON\\s+".r
-    re.findFirstMatchIn(sql) match {
-      case Some(m) if sql.substring(m.end).toUpperCase.contains("(SELECT") =>
-        sql.substring(0, m.start) + ", " + m.group(1) + " WHERE " + sql.substring(m.end)
+    val m = mask(sql)
+    "(?i)\\bINNER\\s+JOIN\\s+(\\w+(?:\\s+\\w+)?)\\s+ON\\s+".r.findFirstMatchIn(m) match {
+      case Some(j) if m.substring(j.end).toUpperCase.contains("(SELECT") &&
+          topLevelIndexOf(sql, "WHERE") < 0 =>
+        sql.substring(0, j.start) + ", " + j.group(1) + " WHERE " + sql.substring(j.end)
       case _ => sql
     }
-  }
-
-  private def hasTopLevel(text: String, word: String): Boolean = {
-    var d = 0; var inStr = false
-    val up = text.toUpperCase
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-          if (d == 0 && up.regionMatches(i, word, 0, word.length) &&
-            (i == 0 || !text.charAt(i - 1).isLetterOrDigit) &&
-            (i + word.length >= text.length || !text.charAt(i + word.length).isLetterOrDigit))
-            return true
-      }
-      i += 1
-    }
-    false
   }
 
   /** `EXISTS(SELECT <exprs>)` with no FROM: the implicit single row always
     * exists → TRUE (the reference parses multi-column no-FROM selects here;
     * Spark would misread the collapsed form as its higher-order exists()). */
   def existsNoFromToTrue(sql: String): String = {
-    val re = "(?i)\\bEXISTS\\s*\\(\\s*SELECT\\b".r
-    re.findFirstMatchIn(sql) match {
-      case Some(m) =>
-        val open = sql.indexOf('(', m.start)
-        var depth = 0; var i = open; var close = -1
-        while (i < sql.length && close < 0) {
-          sql.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (close > 0) {
-          val body = sql.substring(open + 1, close)
-          if (!hasTopLevel(body, "FROM"))
-            existsNoFromToTrue(
-              sql.substring(0, m.start) + "TRUE" + sql.substring(close + 1))
-          else sql
-        } else sql
-      case None => sql
-    }
-  }
-
-  private def topLevelHasWhere(sql: String): Boolean = {
-    var d = 0; var inStr = false
-    val up = sql.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-          if (d == 0 && up.regionMatches(i, "WHERE", 0, 5) &&
-            (i == 0 || !sql.charAt(i - 1).isLetterOrDigit) &&
-            (i + 5 >= sql.length || !sql.charAt(i + 5).isLetterOrDigit)) return true
-      }
-      i += 1
-    }
-    false
+    val m = mask(sql)
+    "(?i)\\bEXISTS\\s*\\(\\s*SELECT\\b".r.findFirstMatchIn(m).flatMap { e =>
+      val open = m.indexOf('(', e.start)
+      val close = closeParen(sql, open)
+      if (close > 0 && topLevelIndexOf(sql.substring(open + 1, close), "FROM") < 0)
+        Some(existsNoFromToTrue(sql.substring(0, e.start) + "TRUE" + sql.substring(close + 1)))
+      else None
+    }.getOrElse(sql)
   }
 
   /** Multi-level correlation hoist: Spark resolves outer references exactly
@@ -526,72 +356,34 @@ object SqlCanonicalizer {
     cur
   }
 
-  private val fromKeywords = Set("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
-    "UNION", "INTERSECT", "EXCEPT", "INNER", "LEFT", "RIGHT", "FULL", "CROSS",
-    "JOIN", "ON")
-
   private def hoistOnce(sql: String, k: Int): Option[String] = {
-    val up = sql.toUpperCase
-    if (!up.startsWith("SELECT") || "\\(\\s*SELECT".r.findAllIn(up).size < 2) return None
+    val ms = mask(sql)
+    val blocks = selectBlocks(sql)
+    if (!ms.toUpperCase.startsWith("SELECT") || blocks.size < 2) return None
     // top-level FROM: single simple `FROM <table> <alias>`
-    var d = 0; var inStr = false; var fromAt = -1
-    var i = 0
-    while (i < sql.length && fromAt < 0) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-          if (d == 0 && up.regionMatches(i, "FROM", 0, 4) &&
-            (i == 0 || !sql.charAt(i - 1).isLetterOrDigit) &&
-            (i + 4 >= sql.length || !sql.charAt(i + 4).isLetterOrDigit)) fromAt = i
-      }
-      i += 1
-    }
+    val fromAt = topLevelIndexOf(sql, "FROM")
     if (fromAt < 0) return None
-    val selectPart = sql.substring(0, fromAt)
-    if (selectPart.replaceAll("\\([^)]*\\)", "").contains("*")) return None // SELECT *
-    val fromRe = "(?is)^FROM\\s+(\\w+)\\s+(\\w+)\\s*".r
-    val tail = sql.substring(fromAt)
-    val m = fromRe.findFirstMatchIn(tail).getOrElse(return None)
+    if (ms.substring(0, fromAt).replaceAll("\\([^)]*\\)", "").contains("*")) return None // SELECT *
+    val m = "(?is)^FROM\\s+(\\w+)\\s+(\\w+)\\s*".r.findFirstMatchIn(ms.substring(fromAt))
+      .getOrElse(return None)
     val (table, alias) = (m.group(1), m.group(2))
     if (fromKeywords.contains(alias.toUpperCase)) return None
-    val afterFrom = tail.substring(m.end).trim
+    val afterFrom = ms.substring(fromAt + m.end).trim
     if (afterFrom.nonEmpty && !fromKeywords.contains(
       afterFrom.takeWhile(_.isLetterOrDigit).toUpperCase)) return None
-    if (afterFrom.startsWith(",")) return None
     // innermost nested (SELECT ...) block referencing the top alias
-    val opens = "(?i)\\(\\s*SELECT\\b".r.findAllMatchIn(sql).map(_.start).toSeq
-    def closeOf(open: Int): Int = {
-      var depth = 0; var j = open
-      while (j < sql.length) {
-        sql.charAt(j) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) return j
-          case _ =>
-        }
-        j += 1
-      }
-      -1
-    }
-    val blocks = opens.map(o => (o, closeOf(o))).filter(_._2 > 0)
     def isNested(b: (Int, Int)) =
       blocks.exists(p => p._1 < b._1 && p._2 > b._2)
     def isInnermost(b: (Int, Int)) =
       !blocks.exists(p => p._1 > b._1 && p._2 < b._2)
     val qualRe = "(\\w+)\\s*\\.".r
-    val declRe = "(?i)(?:FROM|JOIN|,)\\s+(\\w+)(?:\\s+(\\w+))?".r
     // a block is a TABLE (derived table in FROM/JOIN position, or followed by
     // a bare alias) — only scalar-expression blocks may be hoisted
     def isTablePosition(b: (Int, Int)): Boolean = {
-      val before = sql.substring(0, b._1).reverse.dropWhile(_.isWhitespace)
-      val prevWord = before.takeWhile(c => c.isLetterOrDigit).reverse.toUpperCase
+      val prevWord = SqlScan.wordBefore(sql, b._1)
       if (prevWord == "FROM" || prevWord == "JOIN") true
       else {
-        val after = sql.substring(b._2 + 1).dropWhile(_.isWhitespace)
-        val nextWord = after.takeWhile(_.isLetterOrDigit).toUpperCase
+        val nextWord = SqlScan.wordAfter(sql, b._2 + 1)
         nextWord.nonEmpty && nextWord != "AS" && !fromKeywords.contains(nextWord) &&
           prevWord == "" // e.g. `, (SELECT...) alias` in a FROM list
       }
@@ -600,10 +392,8 @@ object SqlCanonicalizer {
       if (!isNested(b) || !isInnermost(b) || isTablePosition(b)) false
       else {
         val body = sql.substring(b._1 + 1, b._2)
-        val quals = qualRe.findAllMatchIn(body).map(_.group(1)).toSet
-        val own = declRe.findAllMatchIn(body).flatMap(mm =>
-          Seq(Option(mm.group(1)), Option(mm.group(2))).flatten).toSet
-          .filterNot(w => fromKeywords.contains(w.toUpperCase))
+        val quals = qualRe.findAllMatchIn(mask(body)).map(_.group(1)).toSet
+        val own = declaredNames(body)
         quals.contains(alias) && !own.contains(alias) &&
           quals.forall(q => q == alias || own.contains(q))
       }
@@ -631,143 +421,42 @@ object SqlCanonicalizer {
     * Catalyst rejects outer references inside such subqueries
     * (CORRELATED_REFERENCE) and multi-level nesting; the reference's general
     * unnesting (Transforms/Unnesting.cpp) handles them. Applied innermost-
-    * first until fixpoint, this is an exact rewrite, not an approximation. */
+    * first until fixpoint, this is an exact rewrite, not an approximation.
+    * A no-FROM block in DERIVED-TABLE position (`FROM (SELECT 1) t`, `JOIN
+    * (SELECT 2) u`) is a one-row TABLE, not a scalar, and stays. */
   def rewriteNoFromScalar(sql: String): String = {
-    val up0 = "(?i)\\(\\s*SELECT\\b".r
-    var cur = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      // scan on the literal-masked copy (offsets map 1:1 onto cur): a
-      // "(SELECT 1)" shape INSIDE a string literal is data, not a scalar
-      // subquery, and literal parens must not derail the depth matching
-      val maskedCur = maskLiterals(cur)
-      val it = up0.findAllMatchIn(maskedCur).toSeq
-      // innermost first = rightmost opening paren first
-      it.sortBy(-_.start).foreach { m =>
-        if (!changed) {
-          val open = m.start
-          var depth = 0; var i = open; var close = -1
-          while (i < maskedCur.length && close < 0) {
-            maskedCur.charAt(i) match {
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = i
-              case _ =>
-            }
-            i += 1
-          }
-          if (close > 0) {
-            val inner = cur.substring(open + 1, close).trim // SELECT <expr...>
-            val exprPart = inner.substring(6) // drop SELECT
-            // clause detection on the masked slice (same offsets)
-            val exprMasked = maskedCur.substring(open + 1, close).trim.substring(6)
-            val hasClause = {
-              var d = 0; var found = false
-              var j = 0
-              val eUp = exprMasked.toUpperCase
-              while (j < exprMasked.length && !found) {
-                exprMasked.charAt(j) match {
-                  case '(' => d += 1
-                  case ')' => d -= 1
-                  case _ =>
-                    if (d == 0) found = Seq("FROM", "WHERE", "GROUP", "UNION",
-                      "INTERSECT", "EXCEPT").exists { w =>
-                      eUp.regionMatches(j, w, 0, w.length) &&
-                        (j == 0 || !exprMasked.charAt(j - 1).isLetterOrDigit) &&
-                        (j + w.length >= exprMasked.length ||
-                          !exprMasked.charAt(j + w.length).isLetterOrDigit)
-                    }
-                }
-                j += 1
-              }
-              found
-            }
-            // a no-FROM subquery in DERIVED-TABLE position (`FROM (SELECT
-            // 1) t`, `JOIN (SELECT 2) u`) is a one-row TABLE, not a scalar —
-            // collapsing it to `FROM (1) t` broke the statement (latent bug
-            // surfaced by the round-10 quantified-comparison rewrite, whose
-            // generated derived tables hit exactly this shape)
-            val derivedTablePos = {
-              var k = open - 1
-              while (k >= 0 && cur.charAt(k).isWhitespace) k -= 1
-              val end = k
-              while (k >= 0 && (cur.charAt(k).isLetterOrDigit || cur.charAt(k) == '_')) k -= 1
-              val word = cur.substring(k + 1, end + 1).toUpperCase
-              word == "FROM" || word == "JOIN"
-            }
-            if (!hasClause && !derivedTablePos &&
-              !exprMasked.toUpperCase.contains("(SELECT") &&
-              !exprMasked.toUpperCase.contains("( SELECT")) {
-              val collapsed = collapseSingleRowAggs(exprPart.trim)
-              cur = cur.substring(0, open) + s"($collapsed)" + cur.substring(close + 1)
-              changed = true
-            }
-          }
-        }
-      }
+    val ms = mask(sql)
+    // innermost first = rightmost opening paren first
+    selectBlocks(sql).sortBy(-_._1).iterator.map { case (open, close) =>
+      (open, close, ms.indexWhere(!_.isWhitespace, open + 1) + 6) // after SELECT
+    }.find { case (open, close, exprAt) =>
+      val expr = sql.substring(exprAt, close)
+      !Seq("FROM", "WHERE", "GROUP", "UNION", "INTERSECT", "EXCEPT")
+        .exists(topLevelIndexOf(expr, _) >= 0) &&
+        !Set("FROM", "JOIN")(SqlScan.wordBefore(sql, open)) && selectBlocks(expr).isEmpty
+    }.fold(sql) { case (open, close, exprAt) =>
+      val collapsed = collapseSingleRowAggs(sql.substring(exprAt, close).trim)
+      rewriteNoFromScalar(sql.substring(0, open) + s"($collapsed)" + sql.substring(close + 1))
     }
-    cur
   }
 
-  private def collapseSingleRowAggs(expr: String): String = {
-    val aggRe = "(?i)\\b(SUM|MIN|MAX|AVG|COUNT)\\s*\\(".r
-    var cur = expr
-    var changed = true
-    while (changed) {
-      changed = false
-      aggRe.findFirstMatchIn(cur).foreach { m =>
-        val open = m.end - 1
-        var depth = 0; var i = open; var close = -1
-        while (i < cur.length && close < 0) {
-          cur.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case _ =>
-          }
-          i += 1
+  private def collapseSingleRowAggs(expr: String): String =
+    aggCallRe.findFirstMatchIn(mask(expr)).flatMap { m =>
+      val close = closeParen(expr, m.end - 1)
+      if (close < 0) None
+      else {
+        val arg = expr.substring(m.end, close).trim
+        val repl = m.group(1).toUpperCase match {
+          case "COUNT" if arg == "*" => "1"
+          case "COUNT" => s"(CASE WHEN ($arg) IS NULL THEN 0 ELSE 1 END)"
+          case "AVG" => s"(CAST(($arg) AS DOUBLE))"
+          case _ => s"($arg)"
         }
-        if (close > 0) {
-          val arg = cur.substring(open + 1, close).trim
-          val repl = m.group(1).toUpperCase match {
-            case "COUNT" if arg == "*" => "1"
-            case "COUNT" => s"(CASE WHEN ($arg) IS NULL THEN 0 ELSE 1 END)"
-            case "AVG" => s"(CAST(($arg) AS DOUBLE))"
-            case _ => s"($arg)"
-          }
-          cur = cur.substring(0, m.start) + repl + cur.substring(close + 1)
-          changed = true
-        }
+        Some(collapseSingleRowAggs(expr.substring(0, m.start) + repl + expr.substring(close + 1)))
       }
-    }
-    cur
-  }
+    }.getOrElse(expr)
 
-  /** The reference follows Postgres null ordering (ASC → NULLS LAST, DESC →
-    * NULLS FIRST); Spark defaults to the opposite. Make every ORDER BY item
-    * explicit — including window-internal ones. */
   // ------------------------------------------------ structural scan helpers
-
-  /** Index of the matching close paren for the open paren at `open`. */
-  private def closeParenOf(text: String, open: Int): Int = {
-    var depth = 0; var j = open; var inStr = false
-    while (j < text.length) {
-      val c = text.charAt(j)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return j
-        case _ =>
-      }
-      j += 1
-    }
-    -1
-  }
-
-  /** All `(SELECT ...)` spans in `text` (open/close index pairs). */
-  private def selectBlocks(text: String): Seq[(Int, Int)] =
-    "(?i)\\(\\s*SELECT\\b".r.findAllMatchIn(text).map(_.start).toSeq
-      .map(o => (o, closeParenOf(text, o))).filter(_._2 > 0)
 
   /** `(SELECT ...)` spans not nested inside another such span. */
   private def outerSelectBlocks(text: String): Seq[(Int, Int)] = {
@@ -775,66 +464,16 @@ object SqlCanonicalizer {
     bs.filterNot(b => bs.exists(p => p._1 < b._1 && p._2 > b._2))
   }
 
-  /** Position of the first depth-0 occurrence of keyword `word`, or -1. */
-  private def topLevelIndexOf(text: String, word: String): Int = {
-    var d = 0; var inStr = false
-    val up = text.toUpperCase
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-          if (d == 0 && up.regionMatches(i, word, 0, word.length) &&
-            (i == 0 || !text.charAt(i - 1).isLetterOrDigit && text.charAt(i - 1) != '_') &&
-            (i + word.length >= text.length || !text.charAt(i + word.length).isLetterOrDigit))
-            return i
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private val clauseEnders =
-    Seq("GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
-
-  /** First depth-0 clause boundary at/after `from`, else text.length. */
-  private def clauseEndFrom(text: String, from: Int, extra: Seq[String] = Nil): Int = {
-    val enders = clauseEnders ++ extra
-    var d = 0; var inStr = false
-    val up = text.toUpperCase
-    var i = from
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-          if (d == 0 && enders.exists(w => up.regionMatches(i, w, 0, w.length) &&
-            (i == 0 || !text.charAt(i - 1).isLetterOrDigit && text.charAt(i - 1) != '_') &&
-            (i + w.length >= text.length || !text.charAt(i + w.length).isLetterOrDigit)))
-            return i
-      }
-      i += 1
-    }
-    text.length
-  }
-
   /** Top-level WHERE clause of `sql`: (whereKeywordStart, clauseEndExclusive). */
   private def whereSpan(sql: String): Option[(Int, Int)] = {
     val w = topLevelIndexOf(sql, "WHERE")
-    if (w < 0) None else Some((w, clauseEndFrom(sql, w + 5)))
+    if (w < 0) None else Some((w, SqlScan.clauseEnd(sql, w + 5)))
   }
 
   /** Top-level FROM clause text span: (textStart, textEndExclusive). */
   private def fromSpan(sql: String): Option[(Int, Int)] = {
     val f = topLevelIndexOf(sql, "FROM")
-    if (f < 0) None else Some((f + 4, clauseEndFrom(sql, f + 4, Seq("WHERE"))))
+    if (f < 0) None else Some((f + 4, SqlScan.clauseEnd(sql, f + 4, Seq("WHERE"))))
   }
 
   private case class FromItem(text: String, alias: String)
@@ -843,7 +482,7 @@ object SqlCanonicalizer {
     * clause uses explicit JOIN syntax or an item's alias is unrecognizable. */
   private def parseFromItems(fromText: String): Option[Seq[FromItem]] = {
     if (topLevelIndexOf(fromText, "JOIN") >= 0) return None
-    val items = PipeSql.splitTop(fromText, ",").map(_.trim).filter(_.nonEmpty)
+    val items = SqlScan.splitTop(fromText, ",").map(_.trim).filter(_.nonEmpty)
     val parsed = items.map { it =>
       var t = it
       // strip a trailing column-name list `alias(c1, c2)` to find the alias
@@ -867,8 +506,6 @@ object SqlCanonicalizer {
     if (parsed.exists(_.alias.isEmpty)) None else Some(parsed)
   }
 
-  private val aggCallRe = "(?i)\\b(SUM|MIN|MAX|COUNT|AVG)\\s*\\(".r
-
   // ------------------------------------- comparisons of two scalar subqueries
 
   /** `WHERE (SELECT f(agg)·outer FROM t) = (SELECT g(agg)·outer FROM u)`:
@@ -891,7 +528,7 @@ object SqlCanonicalizer {
     val inCmp = blocks.sliding(2).collect {
       case Seq(b1, b2)
         if {
-          val between = whereText.substring(b1._2 + 1, b2._1)
+          val between = mask(whereText).substring(b1._2 + 1, b2._1)
           between.exists(c => c == '=' || c == '<' || c == '>') &&
             "(?i)\\b(AND|OR)\\b".r.findFirstIn(between).isEmpty
         } => Seq(b1, b2)
@@ -911,15 +548,11 @@ object SqlCanonicalizer {
       val selStart = topLevelIndexOf(body, "SELECT")
       if (selStart != body.indexWhere(!_.isWhitespace)) return sql
       val selPart = body.substring(selStart + 6, fromAt).trim
-      val declRe = "(?i)(?:FROM|JOIN|,)\\s+(\\w+)(?:\\s+(\\w+))?".r
-      val own = declRe.findAllMatchIn(body)
-        .flatMap(m => Seq(Option(m.group(1)), Option(m.group(2))).flatten).toSet
-        .filterNot(w => fromKeywords.contains(w.toUpperCase))
-      val outer = topAliases -- own
+      val outer = topAliases -- declaredNames(body)
       val fsplit = factors(selPart)
       val (outF, inF) = fsplit.partition(f => refsOuter(f, outer) && !refsLocal(f, outer))
       if (inF.isEmpty || inF.exists(f => refsOuter(f, outer))) return sql
-      if (aggCallRe.findFirstIn(inF.mkString(" ")).isEmpty) return sql
+      if (aggCallRe.findFirstIn(mask(inF.mkString(" "))).isEmpty) return sql
       // the body's FROM/WHERE tail must be uncorrelated to move into FROM
       if (refsOuter(body.substring(fromAt), outer)) return sql
       val alias = s"__bsq$k"
@@ -969,25 +602,21 @@ object SqlCanonicalizer {
     val selStart = topLevelIndexOf(body, "SELECT")
     if (selStart != body.indexWhere(!_.isWhitespace)) return sql
     val selPart = body.substring(selStart + 6, fromAt).trim
-    if (aggCallRe.findFirstIn(selPart).isDefined) return sql
+    if (aggCallRe.findFirstIn(mask(selPart)).isDefined) return sql
     val fs0 = fromSpan(sql).getOrElse(return sql)
     val items = parseFromItems(sql.substring(fs0._1, fs0._2)).getOrElse(return sql)
-    val declRe = "(?i)(?:FROM|JOIN|,)\\s+(\\w+)(?:\\s+(\\w+))?".r
-    val own = declRe.findAllMatchIn(body)
-      .flatMap(m => Seq(Option(m.group(1)), Option(m.group(2))).flatten).toSet
-      .filterNot(w => fromKeywords.contains(w.toUpperCase))
-    val outer = items.map(_.alias).toSet -- own
+    val outer = items.map(_.alias).toSet -- declaredNames(body)
     if (!refsOuter(selPart, outer)) return sql
     val rest = body.substring(fromAt) // FROM ... [WHERE ...] [...]
     val bw = topLevelIndexOf(rest, "WHERE")
     val newRest =
       if (bw >= 0) {
-        val bwEnd = clauseEndFrom(rest, bw + 5)
+        val bwEnd = SqlScan.clauseEnd(rest, bw + 5)
         rest.substring(0, bw) +
           s"WHERE (${rest.substring(bw + 5, bwEnd).trim}) AND ($selPart)" +
           rest.substring(bwEnd)
       } else {
-        val end = clauseEndFrom(rest, 4)
+        val end = SqlScan.clauseEnd(rest, 4)
         rest.substring(0, end) + s" WHERE ($selPart)" + rest.substring(end)
       }
     sql.substring(0, ws._1) + s"WHERE EXISTS (SELECT 1 $newRest)" + sql.substring(ws._2)
@@ -1009,45 +638,41 @@ object SqlCanonicalizer {
     if (!sql.trim.toUpperCase.startsWith("SELECT")) return sql
     val ws = whereSpan(sql).getOrElse(return sql)
     val whereText = sql.substring(ws._1 + 5, ws._2)
+    val whereMask = mask(whereText)
     val fs0 = fromSpan(sql).getOrElse(return sql)
     val items = parseFromItems(sql.substring(fs0._1, fs0._2)).getOrElse(return sql)
-    val exRe = "(?i)\\bEXISTS\\s*\\(".r
-    for (m <- exRe.findAllMatchIn(whereText)) {
-      val open = whereText.indexOf('(', m.start)
-      val close = closeParenOf(whereText, open)
+    for (m <- "(?i)\\bEXISTS\\s*\\(".r.findAllMatchIn(whereMask)) {
+      val open = whereMask.indexOf('(', m.start)
+      val close = closeParen(whereText, open)
       if (close > 0 && !whereText.substring(open + 1, close).contains("__div")) {
         val body = whereText.substring(open + 1, close)
-        val declRe = "(?i)(?:FROM|JOIN|,)\\s+(\\w+)(?:\\s+(\\w+))?".r
-        val own = declRe.findAllMatchIn(body)
-          .flatMap(mm => Seq(Option(mm.group(1)), Option(mm.group(2))).flatten).toSet
-          .filterNot(w => fromKeywords.contains(w.toUpperCase))
+        val bodyMask = mask(body)
+        val own = declaredNames(body)
         // only nested subquery EXPRESSIONS break Catalyst's one-level outer
         // resolution; a correlated derived table in FROM/JOIN position under
         // EXISTS is decorrelated natively (lateral-style) — don't touch it
         val nested = selectBlocks(body).filterNot { case (no, nc) =>
-          val before = body.substring(0, no).reverse.dropWhile(_.isWhitespace)
-          val prevWord = before.takeWhile(c => c.isLetterOrDigit || c == '_')
-            .reverse.toUpperCase
-          val after = body.substring(nc + 1).dropWhile(_.isWhitespace)
-          val nextWord = after.takeWhile(c => c.isLetterOrDigit || c == '_').toUpperCase
+          val prevWord = SqlScan.wordBefore(body, no)
+          val prev = bodyMask.lastIndexWhere(!_.isWhitespace, no - 1)
           prevWord == "FROM" || prevWord == "JOIN" ||
-            (before.nonEmpty && before.head == ',') || nextWord == "AS"
+            (prev >= 0 && bodyMask.charAt(prev) == ',') || SqlScan.wordAfter(body, nc + 1) == "AS"
         }
         for (item <- items if !own.exists(_.equalsIgnoreCase(item.alias))) {
           val a = item.alias
           val aRef = ("(?i)\\b" + java.util.regex.Pattern.quote(a) + "\\s*\\.").r
           val deepRef = nested.exists { case (no, nc) =>
-            aRef.findFirstIn(body.substring(no, nc + 1)).isDefined
+            aRef.findFirstIn(bodyMask.substring(no, nc + 1)).isDefined
           }
           if (deepRef) {
             val colRe = ("(?i)\\b" + java.util.regex.Pattern.quote(a) + "\\s*\\.\\s*(\\w+)").r
-            val corrCols = colRe.findAllMatchIn(body).map(_.group(1)).toSeq
+            val corrCols = colRe.findAllMatchIn(bodyMask).map(_.group(1)).toSeq
               .foldLeft(Vector.empty[String]) { (acc, c) =>
                 if (acc.exists(_.equalsIgnoreCase(c))) acc else acc :+ c
               }
             if (corrCols.nonEmpty) {
               val divA = "__div"
-              val body2 = aRef.replaceAllIn(body, s"$divA.")
+              val body2 = SqlScan.splice(body,
+                aRef.findAllMatchIn(bodyMask).map(r => (r.start, r.end, s"$divA.")).toSeq)
               val bFrom = topLevelIndexOf(body2, "FROM")
               if (bFrom >= 0) {
                 val derived = s"(SELECT DISTINCT ${corrCols.map(c => s"$a.$c").mkString(", ")} " +
@@ -1058,12 +683,12 @@ object SqlCanonicalizer {
                 val bw = topLevelIndexOf(withDiv, "WHERE")
                 val newBody =
                   if (bw >= 0) {
-                    val bwEnd = clauseEndFrom(withDiv, bw + 5)
+                    val bwEnd = SqlScan.clauseEnd(withDiv, bw + 5)
                     withDiv.substring(0, bw) +
                       s"WHERE (${withDiv.substring(bw + 5, bwEnd).trim}) AND $conj" +
                       withDiv.substring(bwEnd)
                   } else {
-                    val end = clauseEndFrom(withDiv, bFrom + 4)
+                    val end = SqlScan.clauseEnd(withDiv, bFrom + 4)
                     withDiv.substring(0, end) + s" WHERE $conj" + withDiv.substring(end)
                   }
                 val newWhere = whereText.substring(0, open + 1) + newBody +
@@ -1079,70 +704,41 @@ object SqlCanonicalizer {
     sql
   }
 
+  /** The reference follows Postgres null ordering (ASC → NULLS LAST, DESC →
+    * NULLS FIRST); Spark defaults to the opposite. Make every ORDER BY item
+    * explicit — including window-internal ones. A clause runs to the
+    * enclosing `)`, a depth-0 LIMIT/OFFSET, a window frame (ROWS/RANGE/
+    * GROUPS followed by BETWEEN, UNBOUNDED, CURRENT or a number) or a pipe
+    * `|>`; an ORDER BY nested inside a clause is left as written. */
   def pgNullOrder(sql: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var inStr = false
-    val up = sql.toUpperCase
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (!inStr && up.regionMatches(i, "ORDER BY", 0, 8)) {
-        sb.append(sql.substring(i, i + 8)); i += 8
-        // collect the clause: up to depth-(-1) close paren or top-level LIMIT
-        val start = i
-        var depth = 0
-        var end = sql.length
-        var j = i
-        var s2 = false
-        while (j < sql.length && end == sql.length) {
-          val ch = sql.charAt(j)
-          if (s2) { if (ch == '\'') s2 = false }
-          else ch match {
-            case '\'' => s2 = true
-            case '(' => depth += 1
-            case ')' => if (depth == 0) end = j else depth -= 1
-            case _ =>
-              def wordAt(w: String): Boolean =
-                up.regionMatches(j, w, 0, w.length) &&
-                  (j == 0 || sql.charAt(j - 1).isWhitespace) &&
-                  (j + w.length >= sql.length || !sql.charAt(j + w.length).isLetterOrDigit)
-              // a window ORDER BY ends at its frame clause (ROWS/RANGE/
-              // GROUPS BETWEEN|UNBOUNDED|CURRENT|n ...)
-              def frameAt: Boolean =
-                (wordAt("ROWS") || wordAt("RANGE") || wordAt("GROUPS")) && {
-                  var k = j
-                  while (k < sql.length && !sql.charAt(k).isWhitespace) k += 1
-                  while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-                  up.regionMatches(k, "BETWEEN", 0, 7) ||
-                    up.regionMatches(k, "UNBOUNDED", 0, 9) ||
-                    up.regionMatches(k, "CURRENT", 0, 7) ||
-                    (k < sql.length && sql.charAt(k).isDigit)
-                }
-              if (depth == 0 && (wordAt("LIMIT") || wordAt("OFFSET") ||
-                frameAt || sql.startsWith("|>", j))) end = j
-          }
-          j += 1
-        }
-        val clause = sql.substring(start, end)
-        val items = PipeSql.splitTop(clause, ",").map { item =>
-          val t = item.trim
-          // insert before any trailing whitespace so the next token (e.g. a
-          // newline-separated LIMIT) stays separated
-          val core = item.replaceAll("\\s+$", "")
-          val trail = item.substring(core.length)
-          if (t.isEmpty || t.toUpperCase.contains("NULLS")) item
-          else if (t.toUpperCase.endsWith("DESC")) core + " NULLS FIRST" + trail
-          else core + " NULLS LAST" + trail
-        }
-        sb.append(items.mkString(","))
-        i = end
-      } else {
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        sb.append(c)
-        i += 1
+    val m = mask(sql)
+    def frameAt(j: Int): Boolean =
+      Seq("ROWS", "RANGE", "GROUPS").exists(SqlScan.wordAt(m, j, _)) && {
+        val next = m.substring(j).dropWhile(!_.isWhitespace).dropWhile(_.isWhitespace).toUpperCase
+        Seq("BETWEEN", "UNBOUNDED", "CURRENT").exists(next.startsWith) ||
+          next.headOption.exists(_.isDigit)
       }
+    val up = m.toUpperCase
+    val spans = Seq.newBuilder[(Int, Int, String)]
+    var at = up.indexOf("ORDER BY")
+    while (at >= 0) {
+      val start = at + 8
+      val end = SqlScan.scanTop(m, start)(j => SqlScan.wordAt(m, j, "LIMIT") ||
+        SqlScan.wordAt(m, j, "OFFSET") || frameAt(j) || m.startsWith("|>", j))
+      val items = SqlScan.splitTop(sql.substring(start, end), ",").map { item =>
+        val itemMask = mask(item)
+        val t = itemMask.trim.toUpperCase
+        // insert before any trailing whitespace or comment so the next token
+        // (e.g. a newline-separated LIMIT) stays separated
+        val core = item.substring(0, itemMask.replaceAll("\\s+$", "").length)
+        val trail = item.substring(core.length)
+        if (t.isEmpty || t.contains("NULLS")) item
+        else if (t.endsWith("DESC")) core + " NULLS FIRST" + trail
+        else core + " NULLS LAST" + trail
+      }
+      spans += ((start, end, items.mkString(",")))
+      at = up.indexOf("ORDER BY", end)
     }
-    sb.toString
+    SqlScan.splice(sql, spans.result())
   }
 }

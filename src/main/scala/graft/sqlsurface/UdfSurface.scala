@@ -323,7 +323,7 @@ object GraftSql {
       val setRe(key, value) = s
       spark.conf.set(key, value.trim)
       spark.emptyDataFrame
-    } else if (PipeSql.splitTop(s, "|>").length > 1) {
+    } else if (SqlScan.splitTop(s, "|>").length > 1) {
       PipeSql.sql(spark, s)
     } else {
       // index maintenance around DML/DDL that mutates an indexed table: an

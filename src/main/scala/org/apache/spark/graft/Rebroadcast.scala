@@ -28,7 +28,7 @@ import org.apache.spark.util.{KnownSizeEstimation, ThreadUtils, Utils}
   * RDD DAG (graft.Prepared's rdd tier) would otherwise read the same built
   * hash relation on every drain — materialized-state reuse. This wrapper is
   * what gets captured instead: `value()` reads whatever generation is
-  * current, and [[RebroadcastExchangeExec.refresh]] swaps in a freshly
+  * current, and [[RebroadcastExchangeExec.awaitRefresh]] swaps in a freshly
   * rebuilt one (destroying the old generation's blocks) before each
   * re-drain. Tasks deserialize the wrapper from the task binary — which the
   * DAGScheduler re-serializes on every stage submission — so executors
@@ -87,7 +87,7 @@ private[graft] object Rebroadcast {
   * object into codegen references — re-drains would reuse the built hash
   * table. This node is the broadcast analog of the shuffle reset: the
   * consumer captures a [[RefreshableBroadcast]] wrapper once, and
-  * [[refresh]] re-runs the full build, then swaps the fresh relation in.
+  * [[beginRefresh]] re-runs the full build, then [[awaitRefresh]] swaps the fresh relation in.
   *
   * Per rebuild (run 1 and every refresh alike):
   *  - the child subtree's own shuffle map outputs are forgotten first
@@ -180,9 +180,6 @@ case class RebroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
       }
     }
   }
-
-  /** Full synchronous rebuild. */
-  def refresh(): Unit = { beginRefresh(); awaitRefresh() }
 
   override def doExecuteBroadcast[T](): Broadcast[T] = synchronized {
     if (wrapper == null) wrapper = new RefreshableBroadcast[Any](buildOnce())

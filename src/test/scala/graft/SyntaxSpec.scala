@@ -78,6 +78,39 @@ class SyntaxSpec extends SparkSpec {
     val q = "SELECT ')(' AS junk, 2 = ANY(SELECT 2) AS ok"
     val r = GraftSql(spark, q).collect()(0)
     assert(r.getString(0) == ")(" && r.getBoolean(1))
+    // one statement per rewrite that the rewrite changes; the same text only
+    // inside a string literal, or only inside a `--` comment, is left as is
+    val triggers = Seq(
+      "SELECT CAST(1 AS float(30))", // canonTypes
+      "SELECT 1 > ALL(SELECT 1)", // quantifiedCmp
+      "SELECT EXISTS(SELECT 1)", // existsNoFromToTrue
+      "SELECT 1 FROM t INNER JOIN u ON t.x = (SELECT 1)", // joinOnSubqueryToWhere
+      "SELECT (SELECT SUM(i1.i) FROM u) FROM t i1", // decomposeOuterAggs
+      "SELECT i FROM t WHERE (SELECT SUM(y) FROM u) = (SELECT SUM(y) FROM u)", // cmpScalarSubqueriesToFrom
+      "SELECT i FROM t i1 WHERE (SELECT i1.i = u.y FROM u)", // boolScalarFilterToExists
+      "SELECT (SELECT (SELECT i1.i FROM u) FROM u) FROM t i1", // hoistDeepCorrelation
+      "SELECT i FROM t i1 WHERE EXISTS (SELECT 1 FROM u WHERE (SELECT i1.i FROM u) = 1)", // flattenDivision
+      "SELECT (SELECT 1)", // rewriteNoFromScalar
+      "SELECT i FROM t ORDER BY i") // pgNullOrder
+    def rewritten(s: String): String = SqlCanonicalizer.pgNullOrder(SqlCanonicalizer(s))
+    for (code <- triggers) {
+      assert(rewritten(code) != code, s"trigger does not fire: $code")
+      for (q <- Seq(s"SELECT '$code' AS s", s"SELECT 1 AS s -- $code"))
+        assert(rewritten(q) == q)
+    }
+    // a trailing comment stays after the added null ordering
+    assert(SqlCanonicalizer.pgNullOrder("SELECT i FROM t ORDER BY i -- by i\nLIMIT 1")
+      == "SELECT i FROM t ORDER BY i NULLS LAST -- by i\nLIMIT 1")
+    // each of these came back with its literal rewritten
+    spark.sql("SELECT 1 AS i, 1 AS x").createOrReplaceTempView("t")
+    spark.sql("SELECT 1 AS y").createOrReplaceTempView("u")
+    try Seq(
+      "SELECT 'EXISTS(SELECT 1)' AS s" -> "EXISTS(SELECT 1)",
+      "SELECT (SELECT 'SUM(i1.i)' FROM t) AS s FROM t i1" -> "SUM(i1.i)",
+      "SELECT 'a INNER JOIN b ON (SELECT 1)' AS s FROM t INNER JOIN u ON t.x = (SELECT 1)" ->
+        "a INNER JOIN b ON (SELECT 1)"
+    ).foreach { case (q, lit) => assert(GraftSql(spark, q).collect()(0).getString(0) == lit, q) }
+    finally Seq("t", "u").foreach(spark.catalog.dropTempView)
   }
 
   test("no-FROM derived tables survive canonicalization (latent-bug pin)") {

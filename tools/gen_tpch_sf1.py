@@ -1,15 +1,23 @@
 #!/usr/bin/env python3
-"""Driver-side TPC-H fixture generator (dev tooling, like the DuckDB oracle).
+"""TPC-H fixture generator for the golden-answer check (dev tooling, like the
+DuckDB oracle), offline.
 
-The reference CI validates 22 inline golden results against a real dbgen SF1
-dataset (test/sqlite-datasets/tpchSf1.test; generated by the pinned dbgen in
-tools/generate/tpch.sh — a network download this environment cannot make).
-DuckDB's bundled `tpch` extension is a spec-faithful dbgen implementation
-that reproduces the official TPC-H validation answer set, so it stands in as
-the fixture generator; the goldens then validate OUR engine's execution of
-the 22 queries (graft.slt.TpchGolden / TpchGoldenSpec).
+DuckDB's bundled `tpch` extension is a spec-faithful dbgen. It writes the
+eight tables as parquet, then the extension's own 22 query texts
+(`tpch_queries()`) and its answers at the same scale (`tpch_answers()`), so
+data, queries and answers all come from one dbgen. The golden check
+(graft.slt.TpchGolden / TpchGoldenSpec) runs those texts on the engine and
+compares against the answers.
+
+Output, in <outdir>:
+  <table>.parquet   the eight TPC-H tables
+  qNN.sql           DuckDB's text of query NN (01..22)
+  qNN.ans           DuckDB's answer: a header line, then one `|`-separated
+                    row per line; written last, so q22.ans marks a complete
+                    fixture
 
 Usage: python3 tools/gen_tpch_sf1.py [outdir] [sf]
+(tpch_answers() ships answers for sf 0.01, 0.1 and 1 only.)
 """
 import os
 import sys
@@ -27,24 +35,17 @@ for t in ["region", "nation", "customer", "supplier", "part", "partsupp",
     con.execute(f"COPY {t} TO '{out}/{t}.parquet' (FORMAT parquet)")
     print("wrote", t)
 
-# Q13 aggregates over o_comment LIKE-patterns, and the pooled free-text
-# generator is the one stream where DuckDB's dbgen (TPC-H v3 pool) diverges
-# from the reference's pinned 2.14-era dbgen — so the golden runner compares
-# Q13 against a fixture-derived expected result instead of the inline golden
-# (graft.slt.TpchGolden scaladoc). Extract Q13 verbatim from the reference
-# corpus and evaluate it here on the just-generated tables.
-test_file = "/root/reference/test/sqlite-datasets/tpchSf1.test"
-if os.path.exists(test_file):
-    lines = open(test_file).read().splitlines()
-    try:
-        i = next(n for n, l in enumerate(lines) if l.startswith("query") and l.rstrip().endswith("tpchq13"))
-        j = next(n for n in range(i + 1, len(lines)) if lines[n].startswith("----"))
-        q13 = "\n".join(lines[i + 1:j])
-        rows = con.execute(q13).fetchall()
-        with open(f"{out}/q13_expected.tsv", "w") as f:
-            for r in rows:
-                f.write("\t".join(str(c) for c in r) + "\n")
-        print("wrote q13_expected.tsv", len(rows), "rows")
-    except StopIteration:
-        print("WARN: tpchq13 not found in corpus; skipping q13_expected.tsv")
+queries = dict(con.execute("SELECT query_nr, query FROM tpch_queries()").fetchall())
+answers = dict(con.execute(
+    "SELECT query_nr, answer FROM tpch_answers() WHERE scale_factor = ?",
+    [float(sf)]).fetchall())
+if sorted(answers) != list(range(1, 23)):
+    sys.exit(f"tpch_answers() has no complete answer set for sf={sf}")
+for n in range(1, 23):
+    with open(f"{out}/q{n:02d}.sql", "w") as f:
+        f.write(queries[n])
+for n in range(1, 23):
+    with open(f"{out}/q{n:02d}.ans", "w") as f:
+        f.write(answers[n])
+print("wrote 22 queries and answers")
 print("done", out)
