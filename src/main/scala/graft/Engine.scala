@@ -12,22 +12,6 @@ import org.apache.spark.sql.internal.SQLConf
   * re-optimizer standing in for sample-driven DPhyp join ordering (SURVEY §4.1).
   */
 object Engine {
-  /** Scan-split sizing derived from the data directory's actual file layout.
-    *
-    * Parquet scans split at [maxPartitionBytes] boundaries; the right value
-    * is a function of data volume vs core count, not a fixed constant.
-    * Continuous rule: size splits so a scan of the LARGEST table yields
-    * ~3 tasks per core (inside the classic 2-4×-cores target that keeps all
-    * cores busy without per-task overhead dominating), clamped to
-    * [4 MB, 128 MB]. The previous binary ≥64 MB-file threshold had a cliff:
-    * sf10's 32 × 32 MB lineitem files packed into 128 MB bins made only ~9
-    * scan tasks on 32 cores — the same wall time as sf100 on 10× less data —
-    * while sf100's 242 MB files were fine at 128 MB. The continuous rule
-    * gives sf10 ~12 MB splits (≈96 tasks), sf100 ~76 MB (≈128 tasks), and
-    * small SFs the 4 MB floor (one task per MB-sized file), with no cliff in
-    * between. Open cost scales with the split (split/8, clamped to
-    * [512 KB, 4 MB]) so small-file packing stays proportional.
-    */
   /** Largest table's byte size under a scale-factor dir — tables are either
     * single `<name>.parquet` files (the driver's testdata) or
     * `<name>.parquet/` directories (Spark-written, tools.ScaleUp). */
@@ -79,11 +63,38 @@ object Engine {
       case _ => false
     }
 
-  def scanSplitConf(dataDir: String): (Long, Long) = {
+  private val localN = """local\[(\d+)(?:,\s*\d+)?\]""".r
+
+  /** Task slots of a session on `master`: N for `local[N]` (and
+    * `local[N,maxFailures]`), 1 for `local`, the machine's count for
+    * `local[*]` or any other master. */
+  def masterCores(master: String): Int = master match {
+    case "local" => 1
+    case localN(n) => n.toInt
+    case _ => Runtime.getRuntime.availableProcessors
+  }
+
+  /** Scan-split sizing derived from the data directory's actual file layout.
+    *
+    * Parquet scans split at [maxPartitionBytes] boundaries; the right value
+    * is a function of data volume vs the session's core count
+    * ([[masterCores]]), not a fixed constant.
+    * Continuous rule: size splits so a scan of the LARGEST table yields
+    * ~3 tasks per core (inside the classic 2-4×-cores target that keeps all
+    * cores busy without per-task overhead dominating), clamped to
+    * [4 MB, 128 MB]. The previous binary ≥64 MB-file threshold had a cliff:
+    * sf10's 32 × 32 MB lineitem files packed into 128 MB bins made only ~9
+    * scan tasks on 32 cores — the same wall time as sf100 on 10× less data —
+    * while sf100's 242 MB files were fine at 128 MB. The continuous rule
+    * gives sf10 ~12 MB splits (≈96 tasks), sf100 ~76 MB (≈128 tasks), and
+    * small SFs the 4 MB floor (one task per MB-sized file), with no cliff in
+    * between. Open cost scales with the split (split/8, clamped to
+    * [512 KB, 4 MB]) so small-file packing stays proportional.
+    */
+  def scanSplitConf(dataDir: String, cores: Int): (Long, Long) = {
     val largest = largestTableBytes(dataDir)
-    val cores = Runtime.getRuntime.availableProcessors.toLong
     val split = math.max(4L * 1024 * 1024,
-      math.min(128L * 1024 * 1024, largest / (cores * 3)))
+      math.min(128L * 1024 * 1024, largest / (cores * 3L)))
     val openCost = math.max(512L * 1024, math.min(4L * 1024 * 1024, split / 8))
     (split, openCost)
   }
@@ -94,7 +105,8 @@ object Engine {
       appName: String = "graft",
       dataDir: Option[String] = None,
       extraConf: Map[String, String] = Map.empty): SparkSession = {
-    val (splitBytes, openCost) = dataDir.map(scanSplitConf)
+    val cores = masterCores(master)
+    val (splitBytes, openCost) = dataDir.map(scanSplitConf(_, cores))
       .getOrElse((4L * 1024 * 1024, 512L * 1024))
     // tiny-data regime (see TinyBytes): the dataset is so small that AQE's
     // stage-by-stage re-planning and 32-wide shuffles are pure scheduling
@@ -171,7 +183,7 @@ object Engine {
       //   them explicitly, and hints ignore the threshold) and pushes
       //   fact-side joins back to 8-partition shuffles (~40 ms here).
       .config("spark.sql.files.minPartitionNum",
-        if (tiny) "1" else Runtime.getRuntime.availableProcessors.toString)
+        if (tiny) "1" else cores.toString)
       .config("spark.sql.autoBroadcastJoinThreshold",
         if (tiny) (1L * 1024 * 1024).toString
         else if (small) (4L * 1024 * 1024).toString

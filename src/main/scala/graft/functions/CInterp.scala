@@ -12,14 +12,15 @@ import scala.collection.mutable
   * mutation, blocks — the part of the reference's C UDF surface that an
   * expression macro cannot express (the reference compiles arbitrary C via
   * the system compiler and dlopens the result,
-  * src/catalog/UDFImplementer.cpp:30,111-112; this container has no C
-  * toolchain, and a distributed engine shouldn't ship native code to
-  * executors anyway). Expression-shaped bodies (`return x+1;`, guarded
-  * returns) keep the Catalyst-macro fast path in
+  * src/catalog/UDFImplementer.cpp:30,111-112). A C compiler is not enough:
+  * a compiled body could only be called from the JVM through a JNI shim or
+  * the foreign-function API, which JDK 17 has only as an incubator module;
+  * a distributed engine shouldn't ship native code to executors anyway.
+  * Expression-shaped bodies (`return x+1;`, guarded returns) keep the
+  * Catalyst-macro fast path in
   * [[graft.sqlsurface.UdfSurface.translateCBody]] — codegen'd, optimizer
   * visible; this interpreter is the fallback for everything with control
-  * flow, dispatched per-row via [[CUdfExpression]] (same architecture as
-  * the Python path's PyUdfExpression).
+  * flow, dispatched per-row via [[CUdfExpression]].
   *
   * Value model: every C integer type (int, long, short, char, size_t,
   * int64_t, unsigned …) is a Scala Long; float/double are Double; bool is
@@ -768,9 +769,8 @@ object CInterp {
   }
 }
 
-/** Per-row bridge for interpreter-path C UDFs (the statement-shaped bodies);
-  * mirror of PyUdfExpression. Null in → null out, like the reference's
-  * generated null checks. */
+/** Per-row bridge for interpreter-path C UDFs (the statement-shaped bodies).
+  * Null in → null out, like the reference's generated null checks. */
 case class CUdfExpression(fn: CInterp.CFunc, retType: DataType,
     children: Seq[Expression]) extends Expression with CodegenFallback {
 

@@ -273,8 +273,8 @@ object FunctionQueries {
         .orderBy("p_partkey")
     }),
 
-    // interpreted Python UDF (reference py_interp bridge; PyInterp.scala) —
-    // the oracle replays the same arithmetic/string semantics in plain SQL
+    // Python UDF on CPython (reference py_interp bridge; UdfSurface) — the
+    // oracle replays the same arithmetic/string semantics in plain SQL
     "fn_py_udf" -> ((s, d) => {
       graft.sqlsurface.UdfSurface.execute(s,
         "CREATE OR REPLACE FUNCTION graft_py_tax(x int) RETURNS int AS $$\n" +
@@ -290,11 +290,11 @@ object FunctionQueries {
         .orderBy("p_partkey")
     }),
 
-    // round-8 Python surface (try/except + lambda key= kwargs), still with
-    // a full DuckDB oracle: the UDF bodies compute SQL-expressible values,
-    // so the hash compare covers the new interpreter paths end-to-end —
-    // ZeroDivisionError handling replays as a CASE, the lambda-keyed min
-    // as a correlated ORDER BY ... LIMIT 1 over the split words.
+    // try/except + a lambda key= kwarg, with a full DuckDB oracle: the UDF
+    // bodies compute SQL-expressible values, so the hash compare covers
+    // them end to end — ZeroDivisionError handling replays as a CASE, the
+    // lambda-keyed min as a correlated ORDER BY ... LIMIT 1 over the split
+    // words.
     "fn_py_udf2" -> ((s, d) => {
       graft.sqlsurface.UdfSurface.execute(s,
         "CREATE OR REPLACE FUNCTION graft_py_safediv(a bigint, b bigint) RETURNS bigint AS $$\n" +
@@ -312,9 +312,9 @@ object FunctionQueries {
         .orderBy("doc_id")
     }),
 
-    // round-9 Python surface (nested def + nonlocal closure, yield
-    // generator, **kwargs) in one body whose result is SQL-expressible:
-    // sum of non-empty token lengths ×100 + token count of split(' ')
+    // nested def + nonlocal closure, a yield generator and **kwargs in one
+    // body whose result is SQL-expressible: sum of non-empty token lengths
+    // ×100 + token count of split(' ')
     "fn_py_udf3" -> ((s, d) => {
       graft.sqlsurface.UdfSurface.execute(s,
         "CREATE OR REPLACE FUNCTION graft_py_tokmetric(s varchar) RETURNS bigint AS $$\n" +
@@ -337,10 +337,10 @@ object FunctionQueries {
         .orderBy("doc_id")
     }),
 
-    // round-10 Python surface: functools.reduce (char-polynomial hash) and
-    // itertools.groupby (consecutive-run count) — both replayed in DuckDB
-    // (list_reduce lambda / list_filter over adjacent char pairs), so the
-    // whole itertools/functools path is hash-checked end to end.
+    // functools.reduce (char-polynomial hash) and itertools.groupby
+    // (consecutive-run count) — both replayed in DuckDB (list_reduce lambda
+    // / list_filter over adjacent char pairs), so standard-library imports
+    // are hash-checked end to end.
     "fn_py_udf4" -> ((s, d) => {
       graft.sqlsurface.UdfSurface.execute(s,
         "CREATE OR REPLACE FUNCTION graft_py_polyhash(s varchar) RETURNS bigint AS $$\n" +

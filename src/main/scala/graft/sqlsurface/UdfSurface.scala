@@ -4,7 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.types.DataType
+import org.apache.spark.graft.PythonUdf
+import graft.functions.{CInterp, CUdfExpression}
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
 import scala.util.Try
 
 /** User-defined scalar functions from SQL DDL — the Spark counterpart of the
@@ -24,56 +29,33 @@ import scala.util.Try
   * `return <expr>;` single-expression form are rewritten to the expression;
   * `LANGUAGE sql` takes the expression directly.
   *
-  * `LANGUAGE python` bodies are interpreted per row by
-  * [[graft.functions.PyInterp]] (the reference embeds CPython; this
-  * container has no executor-side Python). The accepted grammar is a
-  * structured-Python subset:
+  * `LANGUAGE python` bodies run on CPython through Spark's own Python UDF
+  * path, as the reference embeds CPython (py_interp bridge): all of Python
+  * and every module the interpreter can import. CREATE FUNCTION runs the
+  * interpreter Spark deploys workers with (`spark.pyspark.python`, then
+  * PYSPARK_PYTHON, then `python3`) once: it execs the body as a module,
+  * takes the def named after the SQL function as the entry point, wraps
+  * it and cloudpickles the wrapper, which registers as an Arrow-batched
+  * Python UDF (SQL_ARROW_BATCHED_UDF) behind the same argument casts as
+  * every language.
+  * The wrapper carries the null and type semantics, because Spark lifts a
+  * Python UDF out of any Catalyst guard and evaluates it on every row:
+  *  - a NULL argument returns NULL without calling the body (reference
+  *    py-9);
+  *  - integral returns truncate a float and take a bool as 0/1, double
+  *    returns take an int, string returns take `str()` of any value — where
+  *    stock Spark would silently return NULL — and any other mismatch on
+  *    those types and boolean/date raises TypeError.
+  * No interpreter, a pyspark that is missing or does not match the Spark
+  * jars, no pyarrow, a body that does not exec (SyntaxError, NameError,
+  * ...) or no def named after the function fails CREATE FUNCTION with the
+  * interpreter's stderr, not the first row.
   *
-  *  - module: one or more `def`s (helpers callable from the entry def,
-  *    recursion allowed, default parameter values, annotations stripped),
-  *    module-level constants, `import math` / `from math import f` (the
-  *    only importable module);
-  *  - statements: `return`, plain / parallel-tuple / augmented
-  *    (`+= -= *= /= //= %= **=`) / subscript assignment, `if`/`elif`/
-  *    `else`, `for` over range/list/tuple/string/dict with tuple targets,
-  *    `while`, `break`/`continue`/`pass`;
-  *  - expressions: Python arithmetic (`/` float, `//` floors, `%` follows
-  *    the divisor sign), chained comparisons, `and`/`or` (returning the
-  *    operand), `not`, `in`/`not in`, `is (not)` None, ternary
-  *    `x if c else y`, slices `x[a:b:c]`, list/tuple/dict literals, list
-  *    comprehensions, generator expressions in `sum(...)` etc., f-strings
-  *    with `{expr}` / `{expr:.Nf}` / `{expr:Nd}`;
-  *  - builtins: len int float str bool abs min max sum round sorted
-  *    reversed list tuple dict range enumerate zip any all ord chr;
-  *  - methods: strings (upper lower strip lstrip rstrip startswith endswith
-  *    replace split join find rfind count index isdigit isalpha isalnum
-  *    isspace islower isupper zfill capitalize title format), lists (append
-  *    pop insert extend remove index count sort reverse copy), dicts (get
-  *    keys values items pop setdefault update copy), `math.*`; date
-  *    attributes .year/.month/.day.
-  *
-  * Also in scope (round 8): `lambda` expressions (read-only capture),
-  * `sorted/min/max(key=f[, reverse=b])`, `try/except [Exc [as e]]/else/
-  * finally`, `raise Name('msg')`, keyword arguments + `*args` + call-site
-  * splat on user defs, bitwise `| & ^ << >>`, `%` string formatting,
-  * `map`/`filter`/`isinstance`, raw strings, `import re` (search/match/
-  * fullmatch/findall/split/sub/subn/escape, match objects, flags,
-  * callable replacements), `from collections import Counter, defaultdict`,
-  * and module-level `class Name:` with `__init__`/methods/instance
-  * attributes — see [[graft.functions.PyInterp]].
-  *
-  * Round 9: nested `def` (closures with live enclosing-frame reads and
-  * `nonlocal` write-through), `**kwargs` parameters, single class
-  * inheritance (subclass-aware `isinstance`), `yield`, `global`,
-  * call-site `**d` splat, and zero-arg `super()` joined the subset.
-  * Round 10: lazy generators, the coroutine protocol (`x = yield v`,
-  * `gen.send(v)`), argful `super(C, self)`, and CPython's
-  * UnboundLocalError local-name classification.
-  *
-  * Out of scope — rejected with a clear parse error at CREATE FUNCTION
-  * time: `gen.throw`, parenthesized yield expressions outside an
-  * assignment RHS, imports other than math/re/collections.
-  * (Documented known-gap in COVERAGE.md: full CPython.)
+  * Module globals persist across the rows of one task: each task unpickles
+  * its own copy of the module state, and rows then share it (the JVM
+  * interpreter this replaced re-ran the module per row). The reference's
+  * python-udfs.test relies on neither behaviour — its bodies keep no
+  * module state.
   */
 object UdfSurface {
   private val createFnRe =
@@ -136,90 +118,142 @@ object UdfSurface {
     }
   }
 
-  /** Parse + register as an expression macro; returns the function name. */
-  def execute(spark: SparkSession, stmt: String): String = (stmt match {
-    case createFnRe(name, argList, retType, language, body0) =>
-      (name, argList, retType, language, body0)
-    case createFnRe2(name, argList, retType, body0, language) =>
-      (name, argList, retType, language, body0)
-    case _ => throw new IllegalArgumentException("not a CREATE FUNCTION statement")
-  }) match {
-    case (name, argList, retType, language, body0) if language.equalsIgnoreCase("python") =>
-      // interpreted per row, like the reference's py_interp bridge —
-      // see graft.functions.PyInterp
-      // the def matching the SQL function name is the entry point (the
-      // reference's convention); other defs in the body become helpers
-      val fn = graft.functions.PyInterp.parse(body0.stripPrefix("\n"), Some(name))
-      val retDt = CatalystSqlParser.parseDataType(normalizeType(retType))
-      val argDts = (argList.trim match {
-        case "" => Seq.empty[String]
-        case l => l.split(",").toSeq.map(a => normalizeType(a.trim.split("\\s+", 2)(1)))
-      }).map(CatalystSqlParser.parseDataType)
-      val builder: Seq[Expression] => Expression = { exprs =>
-        require(exprs.length == argDts.length,
-          s"$name expects ${argDts.length} arguments, got ${exprs.length}")
-        val castArgs = exprs.zip(argDts).map { case (e, dt) => Cast(e, dt) }
-        graft.functions.PyUdfExpression(fn, retDt, castArgs)
+  /** The interpreter Spark itself deploys Python workers with:
+    * `spark.pyspark.python`, then PYSPARK_PYTHON, then `python3`. */
+  private[graft] def pythonExec(spark: SparkSession): String =
+    spark.sparkContext.getConf.getOption("spark.pyspark.python")
+      .orElse(sys.env.get("PYSPARK_PYTHON")).getOrElse("python3")
+
+  /** Run by the interpreter once per CREATE FUNCTION; argv is the function
+    * name, the return type's JSON and the Spark version, stdin the body.
+    * Writes `major.minor\n` and the cloudpickled `(wrapper, returnType)`. */
+  private val pickleHelper =
+    """import sys, textwrap
+      |body = sys.stdin.read()
+      |name, ret_json, spark_version = sys.argv[1:]
+      |try:
+      |    import pyspark
+      |except ImportError as e:
+      |    sys.exit(f"pyspark is not importable by {sys.executable}: {e}")
+      |if pyspark.__version__ != spark_version:
+      |    sys.exit(f"pyspark {pyspark.__version__} ({pyspark.__file__}) does not match Spark {spark_version}")
+      |from pyspark.sql.pandas.utils import require_minimum_pyarrow_version
+      |require_minimum_pyarrow_version()
+      |import datetime, types
+      |from pyspark.serializers import CloudPickleSerializer
+      |from pyspark.sql import types as T
+      |ret = T._parse_datatype_json_string(ret_json)
+      |module = {"__name__": "__main__"}
+      |exec(compile(textwrap.dedent(body), name, "exec"), module)
+      |fn = module.get(name)
+      |if not isinstance(fn, types.FunctionType):
+      |    sys.exit(f"the body defines no def named {name}")
+      |if isinstance(ret, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+      |    kinds, conv = (int, float), int
+      |elif isinstance(ret, (T.FloatType, T.DoubleType)):
+      |    kinds, conv = (int, float), float
+      |elif isinstance(ret, T.BooleanType):
+      |    kinds, conv = bool, None
+      |elif isinstance(ret, T.StringType):
+      |    kinds, conv = object, str
+      |elif isinstance(ret, T.DateType):
+      |    kinds, conv = datetime.date, None
+      |else:
+      |    kinds, conv = object, None
+      |def wrapper(*args):
+      |    for a in args:
+      |        if a is None:
+      |            return None
+      |    v = fn(*args)
+      |    if v is None:
+      |        return None
+      |    if not isinstance(v, kinds):
+      |        raise TypeError(f"{name} returned {v!r}: cannot convert to {ret.simpleString()}")
+      |    return conv(v) if conv else v
+      |sys.stdout.buffer.write(b"%d.%d\n" % sys.version_info[:2])
+      |sys.stdout.buffer.write(CloudPickleSerializer().dumps((wrapper, ret)))
+      |""".stripMargin
+
+  /** Runs [[pickleHelper]] on `python`: the interpreter's `major.minor` and
+    * the pickled command. Every failure — no interpreter, no (matching)
+    * pyspark or pyarrow, a body that does not exec, no entry def — is an
+    * IllegalArgumentException carrying the interpreter's stderr. */
+  private[graft] def picklePython(python: String, name: String, retType: DataType,
+      body: String, sparkVersion: String): (String, Array[Byte]) = {
+    def fail(why: String) = throw new IllegalArgumentException(s"CREATE FUNCTION $name: $why")
+    val errFile = Files.createTempFile("graft_pyudf", ".err")
+    try {
+      val pb = new ProcessBuilder(python, "-c", pickleHelper, name, retType.json, sparkVersion)
+        .redirectError(errFile.toFile)
+      PythonUdf.env.foreach { case (k, v) => pb.environment().put(k, v) }
+      val p = try pb.start() catch {
+        case e: java.io.IOException => fail(s"cannot run the Python interpreter: ${e.getMessage}")
       }
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "python_udf")
-      name
-    case (name, argList, retType, "c" | "C", body0)
-        if Try(translateCBody(body0.trim)).isFailure =>
-      // statement-shaped C (loops, mutation, blocks): interpreted per row —
-      // see CInterp. Expression-shaped bodies fall through to the Catalyst
-      // macro below (codegen'd, optimizer-visible) as before.
-      val args: Seq[(String, String)] = argList.trim match {
-        case "" => Seq.empty
-        case l => l.split(",").toSeq.map { a =>
-          val parts = a.trim.split("\\s+", 2)
-          require(parts.length == 2, s"malformed UDF argument: '$a'")
-          (parts(0).toLowerCase, normalizeType(parts(1)))
-        }
+      // an interpreter that exits before reading stdin reports why on stderr
+      try { val in = p.getOutputStream; in.write(body.getBytes(UTF_8)); in.close() }
+      catch { case _: java.io.IOException => () }
+      val out = p.getInputStream.readAllBytes()
+      if (p.waitFor() != 0)
+        fail(s"$python exited ${p.exitValue}:\n${Files.readString(errFile).trim}")
+      val nl = out.indexOf('\n'.toByte)
+      (new String(out, 0, nl, UTF_8), out.drop(nl + 1))
+    } finally Files.delete(errFile)
+  }
+
+  /** Parse + register the function; returns its name. Every language casts
+    * the call-site arguments to the declared types. */
+  def execute(spark: SparkSession, stmt: String): String = {
+    val (name, argList, retType, language, body) = stmt match {
+      case createFnRe(n, a, r, l, b) => (n, a, r, l, b)
+      case createFnRe2(n, a, r, b, l) => (n, a, r, l, b)
+      case _ => throw new IllegalArgumentException("not a CREATE FUNCTION statement")
+    }
+    // a comma inside `<...>` (map<string,bigint>) belongs to the type
+    val args: Seq[(String, DataType)] = argList.trim match {
+      case "" => Seq.empty
+      case l => l.split(",(?![^<]*>)").toSeq.map { a =>
+        val parts = a.trim.split("\\s+", 2)
+        require(parts.length == 2, s"malformed UDF argument: '$a'")
+        (parts(0).toLowerCase, CatalystSqlParser.parseDataType(normalizeType(parts(1))))
       }
-      val fn = graft.functions.CInterp.parse(args.map(_._1), body0.trim)
-      val retDt = CatalystSqlParser.parseDataType(normalizeType(retType))
-      val argDts = args.map(a => CatalystSqlParser.parseDataType(a._2))
-      val builder: Seq[Expression] => Expression = { exprs =>
-        require(exprs.length == argDts.length,
-          s"$name expects ${argDts.length} arguments, got ${exprs.length}")
-        val castArgs = exprs.zip(argDts).map { case (e, dt) => Cast(e, dt) }
-        graft.functions.CUdfExpression(fn, retDt, castArgs)
-      }
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "sql_udf")
-      name
-    case (name, argList, retType, language, body0) =>
-      val body = language.toLowerCase match {
-        case "sql" | "scala" => body0.trim
-        case "c" => translateCBody(body0.trim)
-        case other => throw new IllegalArgumentException(s"unsupported UDF language: $other")
-      }
-      val args: Seq[(String, String)] = argList.trim match {
-        case "" => Seq.empty
-        case l => l.split(",").toSeq.map { a =>
-          val parts = a.trim.split("\\s+", 2)
-          require(parts.length == 2, s"malformed UDF argument: '$a'")
-          (parts(0).toLowerCase, normalizeType(parts(1)))
-        }
-      }
-      val bodyExpr = CatalystSqlParser.parseExpression(body)
-      val retDt = CatalystSqlParser.parseDataType(normalizeType(retType))
-      val argDts = args.map(a => CatalystSqlParser.parseDataType(a._2))
-      val argIndex = args.map(_._1).zipWithIndex.toMap
-      val builder: Seq[Expression] => Expression = { exprs =>
+    }
+    val retDt = CatalystSqlParser.parseDataType(normalizeType(retType))
+    def register(source: String)(build: Seq[Expression] => Expression): String = {
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, { exprs =>
         require(exprs.length == args.length,
           s"$name expects ${args.length} arguments, got ${exprs.length}")
-        val castArgs = exprs.zip(argDts).map { case (e, dt) => Cast(e, dt) }
-        val substituted = bodyExpr.transformUp {
-          case a: UnresolvedAttribute if argIndex.contains(a.name.toLowerCase) =>
-            castArgs(argIndex(a.name.toLowerCase))
-        }
-        Cast(substituted, retDt)
-      }
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "sql_udf")
+        build(exprs.zip(args).map { case (e, (_, dt)) => Cast(e, dt) })
+      }, source)
       name
+    }
+    language.toLowerCase match {
+      case "python" =>
+        // the def matching the SQL function name is the entry point (the
+        // reference's convention); other defs in the body are helpers
+        val python = pythonExec(spark)
+        val (pythonVer, command) =
+          picklePython(python, name, retDt, body.stripPrefix("\n"), spark.version)
+        register("python_udf")(PythonUdf(name, command, python, pythonVer, retDt).builder)
+      case "c" if Try(translateCBody(body.trim)).isFailure =>
+        // statement-shaped C (loops, mutation, blocks): interpreted per row —
+        // see CInterp. Expression-shaped bodies fall through to the Catalyst
+        // macro below (codegen'd, optimizer-visible) as before.
+        val fn = CInterp.parse(args.map(_._1), body.trim)
+        register("sql_udf")(CUdfExpression(fn, retDt, _))
+      case lang =>
+        val bodyExpr = CatalystSqlParser.parseExpression(lang match {
+          case "sql" | "scala" => body.trim
+          case "c" => translateCBody(body.trim)
+          case other => throw new IllegalArgumentException(s"unsupported UDF language: $other")
+        })
+        val argIndex = args.map(_._1).zipWithIndex.toMap
+        register("sql_udf") { castArgs =>
+          Cast(bodyExpr.transformUp {
+            case a: UnresolvedAttribute if argIndex.contains(a.name.toLowerCase) =>
+              castArgs(argIndex(a.name.toLowerCase))
+          }, retDt)
+        }
+    }
   }
 }
 

@@ -685,13 +685,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("codegen-fallback expressions across the WHOLE contract are pinned") {
-    // The round-7 test log carries exactly one runtime codegen-fallback
-    // warning — the deliberately-interpreted Python UDF. Pin the full
-    // fallback surface: walk every contract query's optimized plan
+    // Pin the full codegen-fallback surface: walk every contract query's optimized plan
     // (subqueries included) and collect every CodegenFallback expression.
     // Two locks:
     //  1. no graft-authored expression may be CodegenFallback except
-    //     PyUdfExpression (an external-language UDF is opaque to codegen
+    //     CUdfExpression (an external-language UDF is opaque to codegen
     //     in the reference too, SURVEY §2.7) — a new custom expression
     //     that silently drops out of whole-stage codegen turns red;
     //  2. the set of SPARK-BUILTIN fallback classes is snapshot-locked —
@@ -723,12 +721,13 @@ class PlanSpec extends SparkSpec {
       "CollectList", "CollectSet", "HyperLogLogPlusPlus",
       "ApproximatePercentile", "PivotFirst", "ReplicateRows",
       "ScalaAggregator")
-    // PyUdfExpression / CUdfExpression: external-language UDF bodies are
-    // interpreted per row BY DESIGN (UdfSurface scaladoc — the reference
-    // embeds CPython / dlopens compiled C; generating Java from either
-    // language would be a compiler project, and expression-shaped C/SQL
-    // bodies take the codegen'd Catalyst-macro path instead)
-    val allowedGraft = Set("PyUdfExpression", "CUdfExpression")
+    // CUdfExpression: statement-shaped C bodies are interpreted per row BY
+    // DESIGN (CInterp scaladoc — the reference dlopens compiled C;
+    // generating Java from C would be a compiler project, and
+    // expression-shaped C/SQL bodies take the codegen'd Catalyst-macro path
+    // instead). Python UDFs are Spark PythonUDFs, which the optimizer
+    // extracts into Python evaluation nodes: no CodegenFallback expression.
+    val allowedGraft = Set("CUdfExpression")
 
     val offenders = scala.collection.mutable.SortedMap.empty[String, Set[String]]
     SparkEntry.queries.foreach { case (name, fn) =>
@@ -742,6 +741,14 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"unpinned CodegenFallback expressions (new fallback = conscious choice " +
         s"required; extend the allowed set WITH justification): $offenders")
+  }
+
+  test("session cores come from the master, not the machine") {
+    val machine = Runtime.getRuntime.availableProcessors
+    assert(Engine.masterCores("local[2]") == 2)
+    assert(Engine.masterCores("local[3, 4]") == 3)
+    assert(Engine.masterCores("local[*]") == machine)
+    assert(Engine.masterCores("local") == 1)
   }
 
   test("regime accessor: tiny/small take the latency shapes, bogus/unset the scale shapes") {

@@ -1,19 +1,48 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.PyInterp
-import scala.collection.mutable.ArrayBuffer
+import graft.sqlsurface.GraftSql
+import org.apache.spark.sql.Row
 
-/** Direct interpreter tests for the structured-Python subset (no Spark
-  * session needed). Each expectation mirrors CPython 3 output exactly —
-  * run any of these bodies through `python3` to re-verify. */
-class PyInterpSpec extends AnyFunSuite {
+/** `LANGUAGE python` UDFs end to end: every case runs CREATE FUNCTION and
+  * one SELECT through [[GraftSql]], so the body executes on CPython in a
+  * Spark Python worker. The SQL function is named after the body's last
+  * top-level def (its entry point); the arguments are SQL literals cast to
+  * the declared `sig`, and each call is one column of the SELECT. A Python
+  * list, tuple or mixed-type result comes back through a `string` return,
+  * that is as CPython's `str()` of the value. The spec is named for the
+  * Python interpreter its bodies run on. */
+class PyInterpSpec extends SparkSpec {
 
-  private def run(src: String, args: Any*): Any =
-    PyInterp.call(PyInterp.parse(src.stripMargin), args.toSeq)
+  private case class Case(title: String, body: String, sig: Seq[String], ret: String,
+      calls: (String, Any)*)
 
-  test("while loop with break/continue") {
-    val src =
+  /** The SELECT of `args` fails with `error` in the Python traceback. */
+  private case class Fails(title: String, body: String, sig: Seq[String], ret: String,
+      args: String, error: String)
+
+  private def entry(body: String): String =
+    """(?m)^def (\w+)""".r.findAllMatchIn(body).toSeq.last.group(1)
+
+  private def create(fn: String, sig: Seq[String], ret: String, body: String): Unit =
+    GraftSql(spark, s"CREATE OR REPLACE FUNCTION $fn(" +
+      sig.zipWithIndex.map { case (t, i) => s"a$i $t" }.mkString(", ") +
+      s") RETURNS $ret LANGUAGE python AS $$$$\n$body\n$$$$")
+
+  private def select(fn: String, calls: Seq[String]): Row =
+    GraftSql(spark, calls.zipWithIndex.map { case (a, i) => s"$fn($a) AS c$i" }
+      .mkString("SELECT ", ", ", "")).collect().head
+
+  private def same(got: Any, want: Any): Boolean = (got, want) match {
+    case (g: Double, w: Double) => math.abs(g - w) < 1e-12
+    case _ => got == want
+  }
+
+  /** Every message down the cause chain: Spark wraps the Python traceback. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+
+  private val cases = Seq(
+    Case("while loop with break/continue",
       """def f(n):
         |    total = 0
         |    i = 0
@@ -24,12 +53,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        if i % 2 == 0:
         |            continue
         |        total += i
-        |    return total"""
-    assert(run(src, 10L) == 25L) // 1+3+5+7+9
-  }
-
-  test("elif chains") {
-    val src =
+        |    return total""",
+      Seq("bigint"), "bigint", "10" -> 25L),
+    Case("elif chains",
       """def grade(x):
         |    if x >= 90:
         |        return 'A'
@@ -38,76 +64,46 @@ class PyInterpSpec extends AnyFunSuite {
         |    elif x >= 70:
         |        return 'C'
         |    else:
-        |        return 'F'"""
-    assert(run(src, 95L) == "A")
-    assert(run(src, 85L) == "B")
-    assert(run(src, 71L) == "C")
-    assert(run(src, 3L) == "F")
-  }
-
-  test("and/or return the operand (Python value semantics), not in") {
-    val src =
+        |        return 'F'""",
+      Seq("bigint"), "string", "95" -> "A", "85" -> "B", "71" -> "C", "3" -> "F"),
+    Case("and/or return the operand (Python value semantics), not in",
       """def f(x, y):
         |    a = x or 'default'
         |    b = x and y
         |    c = 'z' not in y
-        |    return a + '|' + str(b) + '|' + str(c)"""
-    assert(run(src, "", "abc") == "default||True")
-    assert(run(src, "v", "xyz") == "v|xyz|False")
-  }
-
-  test("chained comparisons evaluate each operand once, short-circuit") {
-    val src =
+        |    return a + '|' + str(b) + '|' + str(c)""",
+      Seq("string", "string"), "string", "'', 'abc'" -> "default||True", "'v', 'xyz'" -> "v|xyz|False"),
+    Case("chained comparisons evaluate each operand once, short-circuit",
       """def f(x):
-        |    return 1 <= x < 10 == 10"""
-    assert(run(src, 5L) == true)
-    assert(run(src, 10L) == false)
-    assert(run(src, 0L) == false)
-  }
-
-  test("ternary expression") {
-    val src =
+        |    return 1 <= x < 10 == 10""",
+      Seq("bigint"), "boolean", "5" -> true, "10" -> false, "0" -> false),
+    Case("ternary expression",
       """def f(x):
-        |    return 'neg' if x < 0 else ('zero' if x == 0 else 'pos')"""
-    assert(run(src, -3L) == "neg")
-    assert(run(src, 0L) == "zero")
-    assert(run(src, 9L) == "pos")
-  }
-
-  test("dict literal, subscript get/set, get/keys/values/items, in") {
-    val src =
+        |    return 'neg' if x < 0 else ('zero' if x == 0 else 'pos')""",
+      Seq("bigint"), "string", "-3" -> "neg", "0" -> "zero", "9" -> "pos"),
+    Case("dict literal, subscript get/set, get/keys/values/items, in",
       """def f(k):
         |    d = {'a': 1, 'b': 2}
         |    d['c'] = d['a'] + d['b']
         |    d['a'] += 10
         |    has = k in d
-        |    return str(d['c']) + '|' + str(d.get(k, -1)) + '|' + str(has) + '|' + str(len(d))"""
-    assert(run(src, "a") == "3|11|True|3")
-    assert(run(src, "z") == "3|-1|False|3")
-  }
-
-  test("dict iteration preserves insertion order; items unpack in for") {
-    val src =
+        |    return str(d['c']) + '|' + str(d.get(k, -1)) + '|' + str(has) + '|' + str(len(d))""",
+      Seq("string"), "string", "'a'" -> "3|11|True|3", "'z'" -> "3|-1|False|3"),
+    Case("dict iteration preserves insertion order; items unpack in for",
       """def f():
         |    d = {'x': 1, 'y': 2, 'z': 3}
         |    out = ''
         |    for k, v in d.items():
         |        out = out + k + str(v)
-        |    return out"""
-    assert(run(src) == "x1y2z3")
-  }
-
-  test("tuples: literals, indexing, comparison, str()") {
-    val src =
+        |    return out""",
+      Seq(), "string", "" -> "x1y2z3"),
+    Case("tuples: literals, indexing, comparison, str()",
       """def f():
         |    t = (1, 'two', 3.5)
         |    u = (1, 2) < (1, 3)
-        |    return str(t[1]) + '|' + str(u) + '|' + str(t)"""
-    assert(run(src) == "two|True|(1, 'two', 3.5)")
-  }
-
-  test("list methods: append/pop/insert/extend/sort/reverse/remove/index/count") {
-    val src =
+        |    return str(t[1]) + '|' + str(u) + '|' + str(t)""",
+      Seq(), "string", "" -> "two|True|(1, 'two', 3.5)"),
+    Case("list methods: append/pop/insert/extend/sort/reverse/remove/index/count",
       """def f():
         |    xs = [3, 1]
         |    xs.append(2)
@@ -117,127 +113,77 @@ class PyInterpSpec extends AnyFunSuite {
         |    xs.remove(1)
         |    xs.insert(0, 9)
         |    xs.reverse()
-        |    return str(xs) + '|' + str(a) + '|' + str(xs.index(3)) + '|' + str(xs.count(1))"""
-    assert(run(src) == "[3, 2, 1, 9]|5|0|1")
-  }
-
-  test("slicing with negatives, steps, and reversal") {
-    val src =
+        |    return str(xs) + '|' + str(a) + '|' + str(xs.index(3)) + '|' + str(xs.count(1))""",
+      Seq(), "string", "" -> "[3, 2, 1, 9]|5|0|1"),
+    Case("slicing with negatives, steps, and reversal",
       """def f(s):
-        |    return s[1:4] + '|' + s[-3:] + '|' + s[::2] + '|' + s[::-1]"""
-    assert(run(src, "abcdefg") == "bcd|efg|aceg|gfedcba")
-  }
-
-  test("list slicing returns a new list") {
-    val src =
+        |    return s[1:4] + '|' + s[-3:] + '|' + s[::2] + '|' + s[::-1]""",
+      Seq("string"), "string", "'abcdefg'" -> "bcd|efg|aceg|gfedcba"),
+    Case("list slicing returns a new list",
       """def f():
         |    xs = [1, 2, 3, 4, 5]
         |    ys = xs[1:3]
         |    ys.append(99)
-        |    return str(xs) + '|' + str(ys)"""
-    assert(run(src) == "[1, 2, 3, 4, 5]|[2, 3, 99]")
-  }
-
-  test("list comprehension with condition; nested fors") {
-    val src =
+        |    return str(xs) + '|' + str(ys)""",
+      Seq(), "string", "" -> "[1, 2, 3, 4, 5]|[2, 3, 99]"),
+    Case("list comprehension with condition; nested fors",
       """def f(n):
         |    sq = [x * x for x in range(n) if x % 2 == 1]
         |    pairs = [(a, b) for a in range(2) for b in range(2)]
-        |    return str(sq) + '|' + str(len(pairs))"""
-    assert(run(src, 6L) == "[1, 9, 25]|4")
-  }
-
-  test("generator expression inside sum/min/max/any/all") {
-    val src =
+        |    return str(sq) + '|' + str(len(pairs))""",
+      Seq("bigint"), "string", "6" -> "[1, 9, 25]|4"),
+    Case("generator expression inside sum/min/max/any/all",
       """def f(n):
         |    s = sum(x * x for x in range(n))
         |    m = max(x % 7 for x in range(n))
         |    e = any(x > 90 for x in range(n))
         |    a = all(x < 100 for x in range(n))
-        |    return str(s) + '|' + str(m) + '|' + str(e) + '|' + str(a)"""
-    assert(run(src, 100L) == "328350|6|True|True")
-  }
-
-  test("helper functions and recursion with default args") {
-    val src =
+        |    return str(s) + '|' + str(m) + '|' + str(e) + '|' + str(a)""",
+      Seq("bigint"), "string", "100" -> "328350|6|True|True"),
+    Case("helper functions and recursion with default args",
       """def fib(n):
         |    if n < 2:
         |        return n
         |    return fib(n - 1) + fib(n - 2)
         |
         |def main(n, scale=2):
-        |    return fib(n) * scale"""
-    assert(PyInterp.call(PyInterp.parse(src.stripMargin, Some("main")), Seq(10L)) == 110L)
-  }
-
-  test("entry selection: named entry vs last def") {
-    val src =
-      """def helper(x):
-        |    return x + 1
-        |
-        |def target(x):
-        |    return helper(x) * 10"""
-    // default: last def
-    assert(run(src, 4L) == 50L)
-    // explicit entry name
-    assert(PyInterp.call(PyInterp.parse(src.stripMargin, Some("helper")), Seq(4L)) == 5L)
-  }
-
-  test("module-level constants are visible inside functions") {
-    val src =
+        |    return fib(n) * scale""",
+      Seq("bigint"), "bigint", "10" -> 110L),
+    Case("module-level constants are visible inside functions",
       """FACTOR = 3
         |NAMES = ['a', 'b']
         |
         |def f(x):
-        |    return x * FACTOR + len(NAMES)"""
-    assert(run(src, 5L) == 17L)
-  }
-
-  test("import math: functions and constants") {
-    val src =
+        |    return x * FACTOR + len(NAMES)""",
+      Seq("bigint"), "bigint", "5" -> 17L),
+    Case("import math: functions and constants",
       """import math
         |
         |def f(x):
         |    r = math.sqrt(x) + math.floor(2.7) + math.ceil(2.1)
-        |    return r + math.pi"""
-    val got = run(src, 16L).asInstanceOf[Double]
-    assert(math.abs(got - (4.0 + 2 + 3 + math.Pi)) < 1e-12)
-  }
-
-  test("from math import binds names; floor returns int") {
-    val src =
+        |    return r + math.pi""",
+      Seq("bigint"), "double", "16" -> (4.0 + 2 + 3 + math.Pi)),
+    Case("from math import binds names; floor returns int",
       """from math import sqrt, floor
         |
         |def f(x):
-        |    return floor(sqrt(x))"""
-    assert(run(src, 10L) == 3L)
-  }
-
-  test("f-strings with expressions and format specs") {
-    val src =
+        |    return floor(sqrt(x))""",
+      Seq("bigint"), "bigint", "10" -> 3L),
+    Case("f-strings with expressions and format specs",
       """def f(name, v):
-        |    return f"{name}: {v:.2f} ({v * 100:.0f}%)""""
-    assert(run(src, "acc", 0.8756) == "acc: 0.88 (88%)")
-  }
-
-  test("string methods: split/join/find/count/zfill/title/format") {
-    val src =
+        |    return f"{name}: {v:.2f} ({v * 100:.0f}%)"""",
+      Seq("string", "double"), "string", "'acc', 0.8756D" -> "acc: 0.88 (88%)"),
+    Case("string methods: split/join/find/count/zfill/title/format",
       """def f(s):
         |    parts = s.split(',')
         |    j = '-'.join(parts)
-        |    return j + '|' + str(s.find('b')) + '|' + str(s.count(',')) + '|' + '7'.zfill(3) + '|' + 'a b'.title() + '|' + '{} and {}'.format(1, 'x')"""
-    assert(run(src, "a,b,c") == "a-b-c|2|2|007|A B|1 and x")
-  }
-
-  test("split keeps empty fields like Python") {
-    val src =
+        |    return j + '|' + str(s.find('b')) + '|' + str(s.count(',')) + '|' + '7'.zfill(3) + '|' + 'a b'.title() + '|' + '{} and {}'.format(1, 'x')""",
+      Seq("string"), "string", "'a,b,c'" -> "a-b-c|2|2|007|A B|1 and x"),
+    Case("split keeps empty fields like Python",
       """def f(s):
-        |    return str(len(s.split(',')))"""
-    assert(run(src, "a,,b,") == "4")
-  }
-
-  test("builtins: sorted/reversed/enumerate/zip/ord/chr/round half-even") {
-    val src =
+        |    return str(len(s.split(',')))""",
+      Seq("string"), "string", "'a,,b,'" -> "4"),
+    Case("builtins: sorted/reversed/enumerate/zip/ord/chr/round half-even",
       """def f():
         |    xs = sorted([3, 1, 2])
         |    ys = list(reversed(xs))
@@ -246,20 +192,14 @@ class PyInterpSpec extends AnyFunSuite {
         |    for i, c in enumerate('xy'):
         |        out = out + str(i) + c
         |    r = str(round(2.5)) + str(round(3.5)) + str(round(2.675, 2))
-        |    return str(ys) + '|' + str(pairs[1][1]) + '|' + out + '|' + str(ord('A')) + chr(66) + '|' + r"""
-    assert(run(src) == "[3, 2, 1]|20|0x1y|65B|242.67")
-  }
-
-  test("range as a value: len, index, membership, list()") {
-    val src =
+        |    return str(ys) + '|' + str(pairs[1][1]) + '|' + out + '|' + str(ord('A')) + chr(66) + '|' + r""",
+      Seq(), "string", "" -> "[3, 2, 1]|20|0x1y|65B|242.67"),
+    Case("range as a value: len, index, membership, list()",
       """def f():
         |    r = range(2, 20, 3)
-        |    return str(len(r)) + '|' + str(r[2]) + '|' + str(8 in r) + '|' + str(9 in r) + '|' + str(list(range(3)))"""
-    assert(run(src) == "6|8|True|False|[0, 1, 2]")
-  }
-
-  test("while-loop string builder: collatz length") {
-    val src =
+        |    return str(len(r)) + '|' + str(r[2]) + '|' + str(8 in r) + '|' + str(9 in r) + '|' + str(list(range(3)))""",
+      Seq(), "string", "" -> "6|8|True|False|[0, 1, 2]"),
+    Case("while-loop string builder: collatz length",
       """def collatz(n):
         |    steps = 0
         |    while n != 1:
@@ -268,76 +208,35 @@ class PyInterpSpec extends AnyFunSuite {
         |        else:
         |            n = 3 * n + 1
         |        steps += 1
-        |    return steps"""
-    assert(run(src, 27L) == 111L)
-  }
-
-  test("multi-line expressions join implicitly inside brackets") {
-    val src =
+        |    return steps""",
+      Seq("bigint"), "bigint", "27" -> 111L),
+    Case("multi-line expressions join implicitly inside brackets",
       """def f():
         |    xs = [1,
         |          2,
         |          3]
-        |    return sum(xs)"""
-    assert(run(src) == 6L)
-  }
-
-  test("inline comments are stripped outside strings") {
-    val src =
+        |    return sum(xs)""",
+      Seq(), "bigint", "" -> 6L),
+    Case("inline comments are stripped outside strings",
       """def f(s):  # trailing comment
         |    x = 1  # add one
         |    y = '#notacomment'
-        |    return s + y + str(x)"""
-    assert(run(src, "a") == "a#notacomment1")
-  }
-
-  test("is / is not None") {
-    val src =
+        |    return s + y + str(x)""",
+      Seq("string"), "string", "'a'" -> "a#notacomment1"),
+    Case("is / is not None",
       """def f(x):
         |    if x is None:
         |        return 'none'
-        |    return 'value'"""
-    assert(run(src, null) == "none")
-    assert(run(src, 0L) == "value")
-  }
-
-  test("str() of containers matches CPython repr rules") {
-    val src =
+        |    return 'value'""",
+      Seq("bigint"), "string", "NULL" -> null, "0" -> "value"),
+    Case("str() of containers matches CPython repr rules",
       """def f():
-        |    return str([1, 'a', 2.0, None, True, (1,)])"""
-    assert(run(src) == "[1, 'a', 2.0, None, True, (1,)]")
-  }
-
-  test("escape sequences in string literals") {
-    val src =
-      "def f():\n    return 'a\\tb' + \"\\n\" + 'it\\'s'"
-    assert(run(src) == "a\tb\nit's")
-  }
-
-  test("recursion limit guards the stack") {
-    val src =
-      """def f(n):
-        |    return f(n + 1)"""
-    val e = intercept[IllegalArgumentException](run(src, 0L))
-    assert(e.getMessage.contains("recursion"))
-  }
-
-  test("an undefined base class is rejected") {
-    // (nested defs, inheritance, yield statements and — since round 10 —
-    // coroutine-style `x = yield v` are supported; a base that was never
-    // defined must still fail at parse, like CPython's NameError)
-    intercept[IllegalArgumentException](
-      run("class C(Base):\n    pass\ndef f(x):\n    return x", 1L))
-  }
-
-  test("imports beyond math are rejected") {
-    val e = intercept[IllegalArgumentException](
-      run("import os\n\ndef f(x):\n    return x", 1L))
-    assert(e.getMessage.contains("math"))
-  }
-
-  test("realistic UDF: word-frequency top token") {
-    val src =
+        |    return str([1, 'a', 2.0, None, True, (1,)])""",
+      Seq(), "string", "" -> "[1, 'a', 2.0, None, True, (1,)]"),
+    Case("escape sequences in string literals",
+      "def f():\n    return 'a\\tb' + \"\\n\" + 'it\\'s'",
+      Seq(), "string", "" -> "a\tb\nit's"),
+    Case("realistic UDF: word-frequency top token",
       """def top_token(text):
         |    counts = {}
         |    for w in text.lower().split():
@@ -351,13 +250,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        if counts[w] > best_n or (counts[w] == best_n and w < best):
         |            best = w
         |            best_n = counts[w]
-        |    return f"{best}:{best_n}""""
-    // strip('.,') needs arg support — strip with argument
-    assert(run(src, "the cat and the dog and the bird") == "the:3")
-  }
-
-  test("quality-score style UDF with math and comprehension") {
-    val src =
+        |    return f"{best}:{best_n}"""",
+      Seq("string"), "string", "'the cat and the dog and the bird'" -> "the:3"),
+    Case("quality-score style UDF with math and comprehension",
       """import math
         |
         |def score(text):
@@ -366,97 +261,60 @@ class PyInterpSpec extends AnyFunSuite {
         |        return 0.0
         |    avg = sum(len(w) for w in words) / len(words)
         |    caps = sum(1 for w in words if w[0].isupper())
-        |    return round(math.log(1 + avg) * (1 + caps / len(words)), 4)"""
-    val got = run(src, "The quick Brown fox").asInstanceOf[Double]
-    val words = Seq("The", "quick", "Brown", "fox")
-    val avg = words.map(_.length).sum.toDouble / 4
-    val expect = BigDecimal(math.log(1 + avg) * 1.5)
-      .setScale(4, BigDecimal.RoundingMode.HALF_EVEN).toDouble
-    assert(got == expect)
-  }
-  // ---- round 8: lambdas, key=/reverse= kwargs, try/except, module globals
-  // (every expectation below re-verified against python3 this round)
-
-  test("sorted with lambda key") {
-    val src =
+        |    return round(math.log(1 + avg) * (1 + caps / len(words)), 4)""",
+      Seq("string"), "double", "'The quick Brown fox'" -> {
+        val words = Seq("The", "quick", "Brown", "fox")
+        val avg = words.map(_.length).sum.toDouble / 4
+        BigDecimal(math.log(1 + avg) * 1.5)
+          .setScale(4, BigDecimal.RoundingMode.HALF_EVEN).toDouble
+      }),
+    Case("sorted with lambda key",
       """def f(xs):
-        |    return sorted(xs, key=lambda t: t[1])"""
-    assert(run(src, ArrayBuffer(ArrayBuffer(1L, 3L), ArrayBuffer(2L, 1L), ArrayBuffer(3L, 2L)))
-      == ArrayBuffer(ArrayBuffer(2L, 1L), ArrayBuffer(3L, 2L), ArrayBuffer(1L, 3L)))
-  }
-
-  test("sorted key= reverse= is stable (equal keys keep source order)") {
-    val src =
+        |    return sorted(xs, key=lambda t: t[1])""",
+      Seq("array<array<bigint>>"), "string", "array(array(1, 3), array(2, 1), array(3, 2))" -> "[[2, 1], [3, 2], [1, 3]]"),
+    Case("sorted key= reverse= is stable (equal keys keep source order)",
       """def f(xs):
-        |    return sorted(xs, key=lambda s: len(s), reverse=True)"""
-    assert(run(src, ArrayBuffer("aa", "b", "cccc", "dd"))
-      == ArrayBuffer("cccc", "aa", "dd", "b"))
-  }
-
-  test("max with key returns FIRST maximal element, like CPython") {
-    val src =
+        |    return sorted(xs, key=lambda s: len(s), reverse=True)""",
+      Seq("array<string>"), "string", "array('aa', 'b', 'cccc', 'dd')" -> "['cccc', 'aa', 'dd', 'b']"),
+    Case("max with key returns FIRST maximal element, like CPython",
       """def f(xs):
-        |    return max(xs, key=lambda s: len(s))"""
-    assert(run(src, ArrayBuffer("aa", "bbb", "cc", "ddd")) == "bbb")
-  }
-
-  test("min with key= and a helper def as the key") {
-    val src =
+        |    return max(xs, key=lambda s: len(s))""",
+      Seq("array<string>"), "string", "array('aa', 'bbb', 'cc', 'ddd')" -> "bbb"),
+    Case("min with key= and a helper def as the key",
       """def keyfn(s):
         |    return len(s)
         |def f(xs):
-        |    return min(xs, key=keyfn)"""
-    assert(run(src, ArrayBuffer("bbb", "a", "cc")) == "a")
-  }
-
-  test("lambda bound to a name and called directly") {
-    val src =
+        |    return min(xs, key=keyfn)""",
+      Seq("array<string>"), "string", "array('bbb', 'a', 'cc')" -> "a"),
+    Case("lambda bound to a name and called directly",
       """def f(a, b):
         |    g = lambda x, y: x * 10 + y
-        |    return g(a, b) + g(b, a)"""
-    assert(run(src, 3L, 4L) == 77L)
-  }
-
-  test("lambda reads enclosing frame bindings (read-only closure)") {
-    val src =
+        |    return g(a, b) + g(b, a)""",
+      Seq("bigint", "bigint"), "bigint", "3, 4" -> 77L),
+    Case("lambda reads enclosing frame bindings (read-only closure)",
       """def f(xs, n):
-        |    return sorted(xs, key=lambda x: abs(x - n))"""
-    assert(run(src, ArrayBuffer(1L, 5L, 9L), 6L) == ArrayBuffer(5L, 9L, 1L))
-  }
-
-  test("builtin passed as a value (f = abs)") {
-    val src =
+        |    return sorted(xs, key=lambda x: abs(x - n))""",
+      Seq("array<bigint>", "bigint"), "string", "array(1, 5, 9), 6" -> "[5, 9, 1]"),
+    Case("builtin passed as a value (f = abs)",
       """def f(x):
         |    g = abs
-        |    return g(x)"""
-    assert(run(src, -3L) == 3L)
-  }
-
-  test("try/except ValueError around int()") {
-    val src =
+        |    return g(x)""",
+      Seq("bigint"), "bigint", "-3" -> 3L),
+    Case("try/except ValueError around int()",
       """def f(s):
         |    try:
         |        return int(s)
         |    except ValueError:
-        |        return -1"""
-    assert(run(src, "12") == 12L)
-    assert(run(src, "x") == -1L)
-  }
-
-  test("except KeyError as e binds str(e) with CPython's repr quoting") {
-    val src =
+        |        return -1""",
+      Seq("string"), "bigint", "'12'" -> 12L, "'x'" -> -1L),
+    Case("except KeyError as e binds str(e) with CPython's repr quoting",
       """def f(d, k):
         |    try:
         |        return d[k]
         |    except KeyError as e:
-        |        return 'missing ' + str(e)"""
-    val d = scala.collection.mutable.LinkedHashMap[Any, Any]("a" -> 1L)
-    assert(run(src, d, "a") == 1L)
-    assert(run(src, d, "b") == "missing 'b'") // python3: str(KeyError('b')) == "'b'"
-  }
-
-  test("try/except ZeroDivisionError with else and finally") {
-    val src =
+        |        return 'missing ' + str(e)""",
+      Seq("map<string,bigint>", "string"), "string", "map('a', 1), 'a'" -> "1", "map('a', 1), 'b'" -> "missing 'b'"),
+    Case("try/except ZeroDivisionError with else and finally",
       """def f(a, b):
         |    try:
         |        r = a % b
@@ -465,220 +323,124 @@ class PyInterpSpec extends AnyFunSuite {
         |    else:
         |        return r
         |    finally:
-        |        pass"""
-    assert(run(src, 7L, 3L) == 1L)
-    assert(run(src, 7L, 0L) == -1L)
-  }
-
-  test("raise ValueError caught by except as e") {
-    val src =
+        |        pass""",
+      Seq("bigint", "bigint"), "bigint", "7, 3" -> 1L, "7, 0" -> -1L),
+    Case("raise ValueError caught by except as e",
       """def f(x):
         |    try:
         |        if x < 0:
         |            raise ValueError('negative')
         |        return x
         |    except ValueError as e:
-        |        return str(e)"""
-    assert(run(src, 5L) == 5L)
-    assert(run(src, -5L) == "negative")
-  }
-
-  test("unmatched except kind propagates") {
-    val src =
-      """def f(s):
-        |    try:
-        |        return int(s)
-        |    except KeyError:
-        |        return -1"""
-    val e = intercept[Exception] { run(src, "zz") }
-    assert(e.getMessage.contains("ValueError"))
-  }
-
-  test("module-level mutable global is shared with helper frames") {
-    // the old per-frame consts re-evaluation gave add() a fresh SEEN copy
-    // and f returned 0; CPython (and now PyInterp) returns 14
-    val src =
+        |        return str(e)""",
+      Seq("bigint"), "string", "5" -> "5", "-5" -> "negative"),
+    Case("module-level mutable global is shared with helper frames",
       """SEEN = []
         |def add(x):
         |    SEEN.append(x)
         |def f(n):
         |    for i in range(n):
         |        add(i * i)
-        |    return sum(SEEN)"""
-    assert(run(src, 4L) == 14L)
-    // and the module env resets per top-level call (per row): same again
-    assert(run(src, 4L) == 14L)
-  }
-
-  test("rebinding a builtin name shadows it (CPython TypeError)") {
-    val src =
+        |    return sum(SEEN)""",
+      Seq("bigint"), "bigint", "4" -> 14L, "4" -> 14L),
+    Case("rebinding a builtin name shadows it (CPython TypeError)",
       """def f(xs):
         |    sum = 0
         |    try:
         |        return sum(xs)
         |    except Exception:
-        |        return -99"""
-    assert(run(src, ArrayBuffer(1L, 2L)) == -99L)
-  }
-
-  test("Boolean vs non-numeric equality is False, not an error") {
-    val src =
+        |        return -99""",
+      Seq("array<bigint>"), "bigint", "array(1, 2)" -> -99L),
+    Case("Boolean vs non-numeric equality is False, not an error",
       """def f(x):
-        |    return [x == 'x', True == 'x', 1 == True, 0.0 == False]"""
-    assert(run(src, true) == ArrayBuffer(false, false, true, true))
-  }
-
-  test("escaped quote inside a tuple-assign RHS string") {
-    val src =
+        |    return [x == 'x', True == 'x', 1 == True, 0.0 == False]""",
+      Seq("boolean"), "string", "true" -> "[False, False, True, True]"),
+    Case("escaped quote inside a tuple-assign RHS string",
       """def f():
         |    a, b = 'x\'s, y', 2
-        |    return a + str(b)"""
-    assert(run(src) == "x's, y2")
-  }
-
-  // ------------------------------------------------- round-8 additions
-  // (bitwise ops, % formatting, map/filter/isinstance, re, kwargs/*args,
-  // collections, classes — each expectation re-verified against python3)
-
-  test("bitwise operators with Python precedence") {
-    val src =
+        |    return a + str(b)""",
+      Seq(), "string", "" -> "x's, y2"),
+    Case("bitwise operators with Python precedence",
       """def f(a, b):
-        |    return str((a | b, a & b, a ^ b, a << 2, b >> 1))"""
-    assert(run(src, 12L, 10L) == "(14, 8, 6, 48, 5)")
-  }
-
-  test("percent string formatting: s d f width zero-pad hex") {
-    val src =
+        |    return str((a | b, a & b, a ^ b, a << 2, b >> 1))""",
+      Seq("bigint", "bigint"), "string", "12, 10" -> "(14, 8, 6, 48, 5)"),
+    Case("percent string formatting: s d f width zero-pad hex",
       """def f(k, v, x):
-        |    return '%s=%d|%.2f|%05d|%6.1f|%x' % (k, v, x, v, x, 255)"""
-    assert(run(src, "n", 42L, 3.14159) == "n=42|3.14|00042|   3.1|ff")
-  }
-
-  test("map and filter with lambdas (eager lists)") {
-    val src =
+        |    return '%s=%d|%.2f|%05d|%6.1f|%x' % (k, v, x, v, x, 255)""",
+      Seq("string", "bigint", "double"), "string", "'n', 42, 3.14159D" -> "n=42|3.14|00042|   3.1|ff"),
+    Case("map and filter with lambdas (eager lists)",
       """def f(xs):
-        |    return str((sum(map(lambda x: x*x, xs)), list(filter(lambda x: x % 2, range(10)))))"""
-    assert(run(src, ArrayBuffer(1L, 2L, 3L, 4L)) == "(30, [1, 3, 5, 7, 9])")
-  }
-
-  test("isinstance with single type, type tuple, and bool-is-int") {
-    val src =
-      """def f(x):
-        |    return '%s|%s|%s' % (isinstance(x, int), isinstance(x, (str, float)), isinstance(x, bool))"""
-    assert(run(src, 3L) == "True|False|False")
-    assert(run(src, 2.5) == "False|True|False")
-    assert(run(src, true) == "True|False|True")
-  }
-
-  test("re.search with groups, start/end; None on miss") {
-    val src =
+        |    return str((sum(map(lambda x: x*x, xs)), list(filter(lambda x: x % 2, range(10)))))""",
+      Seq("array<bigint>"), "string", "array(1, 2, 3, 4)" -> "(30, [1, 3, 5, 7, 9])"),
+    Case("re.search with groups, start/end; None on miss",
       """import re
         |def f(s):
         |    m = re.search(r'(\d+)-(\d+)', s)
         |    if m:
         |        return int(m.group(1)) + int(m.group(2)) + m.start() + m.end()
-        |    return -1"""
-    assert(run(src, "ab 12-34 cd") == 57L)
-    assert(run(src, "none") == -1L)
-  }
-
-  test("re.sub with backreference template") {
-    val src =
+        |    return -1""",
+      Seq("string"), "bigint", "'ab 12-34 cd'" -> 57L, "'none'" -> -1L),
+    Case("re.sub with backreference template",
       """import re
         |def f(s):
-        |    return re.sub(r'(\w+)@(\w+)', r'\2 at \1', s)"""
-    assert(run(src, "joe@example and amy@test") == "example at joe and test at amy")
-  }
-
-  test("re.sub with callable replacement") {
-    val src =
+        |    return re.sub(r'(\w+)@(\w+)', r'\2 at \1', s)""",
+      Seq("string"), "string", "'joe@example and amy@test'" -> "example at joe and test at amy"),
+    Case("re.sub with callable replacement",
       """import re
         |def f(s):
-        |    return re.sub(r'\d+', lambda m: str(int(m.group(0)) * 2), s)"""
-    assert(run(src, "a1 b22 c333") == "a2 b44 c666")
-  }
-
-  test("re.subn returns (result, count)") {
-    val src =
+        |    return re.sub(r'\d+', lambda m: str(int(m.group(0)) * 2), s)""",
+      Seq("string"), "string", "'a1 b22 c333'" -> "a2 b44 c666"),
+    Case("re.subn returns (result, count)",
       """import re
         |def f(s):
-        |    return str(re.subn(r'a', 'b', s))"""
-    assert(run(src, "banana") == "('bbnbnb', 3)")
-  }
-
-  test("re.findall: no groups, and tuple-per-match with 2 groups") {
-    val src =
+        |    return str(re.subn(r'a', 'b', s))""",
+      Seq("string"), "string", "'banana'" -> "('bbnbnb', 3)"),
+    Case("re.findall: no groups, and tuple-per-match with 2 groups",
       """import re
         |def f(s):
-        |    return str((re.findall(r'[aeiou]', s), re.findall(r'(\w)(\d)', s)))"""
-    assert(run(src, "hello a1 b2") == "(['e', 'o', 'a'], [('a', '1'), ('b', '2')])")
-  }
-
-  test("re.split, with and without capture groups") {
-    val src =
+        |    return str((re.findall(r'[aeiou]', s), re.findall(r'(\w)(\d)', s)))""",
+      Seq("string"), "string", "'hello a1 b2'" -> "(['e', 'o', 'a'], [('a', '1'), ('b', '2')])"),
+    Case("re.split, with and without capture groups",
       """import re
         |def f(s):
-        |    return str((re.split(r'\s*,\s*', s), re.split(r'(\s+)', s)))"""
-    assert(run(src, "a, b ,c") == "(['a', 'b', 'c'], ['a,', ' ', 'b', ' ', ',c'])")
-  }
-
-  test("re.match anchors at start, search anywhere, fullmatch whole") {
-    val src =
+        |    return str((re.split(r'\s*,\s*', s), re.split(r'(\s+)', s)))""",
+      Seq("string"), "string", "'a, b ,c'" -> "(['a', 'b', 'c'], ['a,', ' ', 'b', ' ', ',c'])"),
+    Case("re.match anchors at start, search anywhere, fullmatch whole",
       """import re
         |def f(s):
-        |    return '%s|%s|%s' % (bool(re.match(r'\d+', s)), bool(re.search(r'\d+', s)), bool(re.fullmatch(r'\w+', s)))"""
-    assert(run(src, "ab12") == "False|True|True")
-    assert(run(src, "12ab") == "True|True|True")
-  }
-
-  test("re.IGNORECASE flag through re.sub") {
-    val src =
+        |    return '%s|%s|%s' % (bool(re.match(r'\d+', s)), bool(re.search(r'\d+', s)), bool(re.fullmatch(r'\w+', s)))""",
+      Seq("string"), "string", "'ab12'" -> "False|True|True", "'12ab'" -> "True|True|True"),
+    Case("re.IGNORECASE flag through re.sub",
       """import re
         |def f(s):
-        |    return re.sub(r'cat', 'dog', s, 0, re.IGNORECASE)"""
-    assert(run(src, "Cat CAT cat") == "dog dog dog")
-  }
-
-  test("keyword arguments on user defs, with defaults") {
-    val src =
+        |    return re.sub(r'cat', 'dog', s, 0, re.IGNORECASE)""",
+      Seq("string"), "string", "'Cat CAT cat'" -> "dog dog dog"),
+    Case("keyword arguments on user defs, with defaults",
       """def kw(a, b=2, c=3):
         |    return a*100 + b*10 + c
         |def f(x):
-        |    return str((kw(1, c=9), kw(1, 5), kw(a=4)))"""
-    assert(run(src, 0L) == "(129, 153, 423)")
-  }
-
-  test("*args parameter and call-site splat") {
-    val src =
+        |    return str((kw(1, c=9), kw(1, 5), kw(a=4)))""",
+      Seq("bigint"), "string", "0" -> "(129, 153, 423)"),
+    Case("*args parameter and call-site splat",
       """def star(*xs):
         |    return sum(xs) + len(xs)
         |def f(x):
-        |    return str((star(1, 2, 3), star(), star(*[5, 6])))"""
-    assert(run(src, 0L) == "(9, 0, 13)")
-  }
-
-  test("positional params before *args") {
-    val src =
+        |    return str((star(1, 2, 3), star(), star(*[5, 6])))""",
+      Seq("bigint"), "string", "0" -> "(9, 0, 13)"),
+    Case("positional params before *args",
       """def mixed(a, *rest):
         |    return '%s:%s' % (a, list(rest))
         |def f(x):
-        |    return mixed(1, 2, 3)"""
-    assert(run(src, 0L) == "1:[2, 3]")
-  }
-
-  test("collections.Counter: counts, most_common, missing key is 0") {
-    val src =
+        |    return mixed(1, 2, 3)""",
+      Seq("bigint"), "string", "0" -> "1:[2, 3]"),
+    Case("collections.Counter: counts, most_common, missing key is 0",
       """from collections import Counter
         |def f(s):
         |    c = Counter(s.split())
         |    mc = c.most_common(2)
-        |    return '%s|%s|%s' % (mc, c['the'], c['zzz'])"""
-    assert(run(src, "the cat and the dog and the bird") ==
-      "[('the', 3), ('and', 2)]|3|0")
-  }
-
-  test("collections.defaultdict with int and list factories") {
-    val src =
+        |    return '%s|%s|%s' % (mc, c['the'], c['zzz'])""",
+      Seq("string"), "string", "'the cat and the dog and the bird'" -> "[('the', 3), ('and', 2)]|3|0"),
+    Case("collections.defaultdict with int and list factories",
       """from collections import defaultdict
         |def f(words):
         |    d = defaultdict(int)
@@ -686,13 +448,10 @@ class PyInterpSpec extends AnyFunSuite {
         |    for w in words:
         |        d[w[0]] += 1
         |        g[len(w)].append(w)
-        |    return '%s|%s' % (sorted(d.items()), sorted(g.items()))"""
-    assert(run(src, ArrayBuffer("apple", "ant", "bee", "cow")) ==
-      "[('a', 2), ('b', 1), ('c', 1)]|[(3, ['ant', 'bee', 'cow']), (5, ['apple'])]")
-  }
-
-  test("class with __init__, methods, attribute mutation, class attr") {
-    val src =
+        |    return '%s|%s' % (sorted(d.items()), sorted(g.items()))""",
+      Seq("array<string>"), "string", "array('apple', 'ant', 'bee', 'cow')" ->
+        "[('a', 2), ('b', 1), ('c', 1)]|[(3, ['ant', 'bee', 'cow']), (5, ['apple'])]"),
+    Case("class with __init__, methods, attribute mutation, class attr",
       """class Point:
         |    count = 0
         |    def __init__(self, x, y):
@@ -707,12 +466,9 @@ class PyInterpSpec extends AnyFunSuite {
         |def f(a, b):
         |    p = Point(a, b)
         |    p.shift(1, dy=2)
-        |    return '%s,%s,%s,%s' % (p.x, p.y, p.dist2(), p.count)"""
-    assert(run(src, 3L, 4L) == "4,6,52,0")
-  }
-
-  test("class whose methods call other methods through self") {
-    val src =
+        |    return '%s,%s,%s,%s' % (p.x, p.y, p.dist2(), p.count)""",
+      Seq("bigint", "bigint"), "string", "3, 4" -> "4,6,52,0"),
+    Case("class whose methods call other methods through self",
       """class Acc:
         |    def __init__(self):
         |        self.items = []
@@ -724,44 +480,30 @@ class PyInterpSpec extends AnyFunSuite {
         |def f(xs):
         |    a = Acc()
         |    r = [a.add(x) for x in xs]
-        |    return str(r)"""
-    assert(run(src, ArrayBuffer(1L, 2L, 3L)) == "[1, 3, 6]")
-  }
-
-  test("raw strings keep backslashes literal") {
-    val src =
+        |    return str(r)""",
+      Seq("array<bigint>"), "string", "array(1, 2, 3)" -> "[1, 3, 6]"),
+    Case("raw strings keep backslashes literal",
       """def f():
-        |    return len(r'\n\t') + len('\n\t')"""
-    assert(run(src) == 6L)
-  }
-
-  // ---- round 9: nested defs / closures / nonlocal / **kwargs / inheritance
-
-  test("nested def: closure reads the enclosing frame live") {
-    val src =
+        |    return len(r'\n\t') + len('\n\t')""",
+      Seq(), "bigint", "" -> 6L),
+    Case("nested def: closure reads the enclosing frame live",
       """def f(n):
         |    base = 10
         |    def scaled(x):
         |        return x * base + n
         |    base = 100
-        |    return scaled(3)"""
-    assert(run(src, 7L) == 307L) // reads base=100 at call time, like CPython cells
-  }
-
-  test("nested def: assignment without nonlocal stays local") {
-    val src =
+        |    return scaled(3)""",
+      Seq("bigint"), "bigint", "7" -> 307L),
+    Case("nested def: assignment without nonlocal stays local",
       """def f():
         |    x = 1
         |    def g():
         |        x = 99
         |        return x
         |    r = g()
-        |    return [r, x]"""
-    assert(run(src).asInstanceOf[ArrayBuffer[Any]].toSeq == Seq(99L, 1L))
-  }
-
-  test("nonlocal: counter closure mutates the enclosing frame") {
-    val src =
+        |    return [r, x]""",
+      Seq(), "string", "" -> "[99, 1]"),
+    Case("nonlocal: counter closure mutates the enclosing frame",
       """def f(n):
         |    count = 0
         |    def bump(step):
@@ -770,54 +512,39 @@ class PyInterpSpec extends AnyFunSuite {
         |        return count
         |    for i in range(n):
         |        bump(i)
-        |    return count"""
-    assert(run(src, 5L) == 10L) // 0+1+2+3+4
-  }
-
-  test("nested def: self-recursion and capture of helper args") {
-    val src =
+        |    return count""",
+      Seq("bigint"), "bigint", "5" -> 10L),
+    Case("nested def: self-recursion and capture of helper args",
       """def f(n):
         |    def fact(k):
         |        if k <= 1:
         |            return 1
         |        return k * fact(k - 1)
-        |    return fact(n)"""
-    assert(run(src, 6L) == 720L)
-  }
-
-  test("closures as values: key= and map over a nested def") {
-    val src =
+        |    return fact(n)""",
+      Seq("bigint"), "bigint", "6" -> 720L),
+    Case("closures as values: key= and map over a nested def",
       """def f(xs):
         |    offset = 100
         |    def dist(x):
         |        return abs(x - offset)
-        |    return sorted(xs, key=dist)[0]"""
-    assert(run(src, ArrayBuffer(1L, 90L, 250L)) == 90L)
-  }
-
-  test("**kwargs: unmatched keywords collect into a dict") {
-    val src =
+        |    return sorted(xs, key=dist)[0]""",
+      Seq("array<bigint>"), "bigint", "array(1, 90, 250)" -> 90L),
+    Case("**kwargs: unmatched keywords collect into a dict",
       """def tag(name, **attrs):
         |    parts = [name]
         |    for k in sorted(attrs.keys()):
         |        parts.append(k + '=' + str(attrs[k]))
         |    return ','.join(parts)
         |def f():
-        |    return tag('a', href=1, rel='x')"""
-    assert(run(src) == "a,href=1,rel=x")
-  }
-
-  test("**kwargs: declared params still bind by name; empty kwargs is {}") {
-    val src =
+        |    return tag('a', href=1, rel='x')""",
+      Seq(), "string", "" -> "a,href=1,rel=x"),
+    Case("**kwargs: declared params still bind by name; empty kwargs is {}",
       """def g(a, b=2, **rest):
         |    return a * 10 + b + len(rest)
         |def f():
-        |    return [g(1), g(1, b=5), g(1, c=0, d=0)]"""
-    assert(run(src).asInstanceOf[ArrayBuffer[Any]].toSeq == Seq(12L, 15L, 14L))
-  }
-
-  test("single inheritance: method and __init__ lookup through the base") {
-    val src =
+        |    return [g(1), g(1, b=5), g(1, c=0, d=0)]""",
+      Seq(), "string", "" -> "[12, 15, 14]"),
+    Case("single inheritance: method and __init__ lookup through the base",
       """class Animal:
         |    def __init__(self, name):
         |        self.name = name
@@ -828,12 +555,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        return self.greet() + ', woof'
         |def f():
         |    d = Dog('rex')
-        |    return d.speak()"""
-    assert(run(src) == "I am rex, woof")
-  }
-
-  test("inheritance: child overrides a method; isinstance honors the chain") {
-    val src =
+        |    return d.speak()""",
+      Seq(), "string", "" -> "I am rex, woof"),
+    Case("inheritance: child overrides a method; isinstance honors the chain",
       """class Base:
         |    def kind(self):
         |        return 'base'
@@ -844,12 +568,9 @@ class PyInterpSpec extends AnyFunSuite {
         |    b = Base()
         |    c = Child()
         |    flags = [isinstance(c, Base), isinstance(c, Child), isinstance(b, Child)]
-        |    return c.kind() + '/' + b.kind() + '/' + str(flags)"""
-    assert(run(src) == "child/base/[True, True, False]")
-  }
-
-  test("yield: generator def is iterable; sum/list/for see yields in order") {
-    val src =
+        |    return c.kind() + '/' + b.kind() + '/' + str(flags)""",
+      Seq(), "string", "" -> "child/base/[True, True, False]"),
+    Case("yield: generator def is iterable; sum/list/for see yields in order",
       """def evens(n):
         |    for i in range(n):
         |        if i % 2 == 0:
@@ -858,12 +579,9 @@ class PyInterpSpec extends AnyFunSuite {
         |    total = 0
         |    for v in evens(n):
         |        total += v
-        |    return [total, sum(evens(n)), list(evens(n))[-1]]"""
-    assert(run(src, 10L).asInstanceOf[ArrayBuffer[Any]].toSeq == Seq(20L, 20L, 8L))
-  }
-
-  test("yield: bare return ends iteration early") {
-    val src =
+        |    return [total, sum(evens(n)), list(evens(n))[-1]]""",
+      Seq("bigint"), "string", "10" -> "[20, 20, 8]"),
+    Case("yield: bare return ends iteration early",
       """def firstk(xs, k):
         |    n = 0
         |    for x in xs:
@@ -872,14 +590,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        yield x
         |        n += 1
         |def f(xs):
-        |    return ','.join([str(v) for v in firstk(xs, 2)])"""
-    assert(run(src, ArrayBuffer(7L, 8L, 9L, 10L)) == "7,8")
-  }
-
-  test("yield: INFINITE generator with an early-exit zip does not materialize") {
-    // CPython: zip stops at the shortest iterable; an eager-list generator
-    // implementation would hang here
-    val src =
+        |    return ','.join([str(v) for v in firstk(xs, 2)])""",
+      Seq("array<bigint>"), "string", "array(7, 8, 9, 10)" -> "7,8"),
+    Case("yield: INFINITE generator with an early-exit zip does not materialize",
       """def naturals():
         |    n = 0
         |    while True:
@@ -889,12 +602,9 @@ class PyInterpSpec extends AnyFunSuite {
         |    out = []
         |    for p in zip(naturals(), range(k)):
         |        out.append(p[0] * 10 + p[1])
-        |    return out"""
-    assert(run(src, 3L).asInstanceOf[ArrayBuffer[Any]].toSeq == Seq(0L, 11L, 22L))
-  }
-
-  test("yield: for-loop break over an infinite generator") {
-    val src =
+        |    return out""",
+      Seq("bigint"), "string", "3" -> "[0, 11, 22]"),
+    Case("yield: for-loop break over an infinite generator",
       """def powers():
         |    p = 1
         |    while True:
@@ -906,36 +616,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        if v > limit:
         |            break
         |        total += v
-        |    return total"""
-    assert(run(src, 100L) == 127L) // 1+2+4+8+16+32+64
-  }
-
-  test("yield: next(gen), next(gen, default), StopIteration on exhaustion") {
-    val src =
-      """def two():
-        |    yield 'a'
-        |    yield 'b'
-        |def f():
-        |    g = two()
-        |    first = next(g)
-        |    second = next(g)
-        |    fallback = next(g, 'z')
-        |    return first + second + fallback"""
-    assert(run(src) == "abz")
-    val src2 =
-      """def one():
-        |    yield 1
-        |def f():
-        |    g = one()
-        |    next(g)
-        |    return next(g)"""
-    val e = intercept[Exception](run(src2))
-    assert(e.getMessage == null || e.getMessage.isEmpty ||
-      e.toString.contains("StopIteration"), e.toString)
-  }
-
-  test("yield: no body code runs at call time; a spent generator iterates empty") {
-    val src =
+        |    return total""",
+      Seq("bigint"), "bigint", "100" -> 127L),
+    Case("yield: no body code runs at call time; a spent generator iterates empty",
       """def f():
         |    log = []
         |    def g():
@@ -945,16 +628,9 @@ class PyInterpSpec extends AnyFunSuite {
         |    before = len(log)
         |    first = list(h)
         |    again = list(h)
-        |    return [before, len(log), first, again]"""
-    val r = run(src).asInstanceOf[ArrayBuffer[Any]]
-    assert(r(0) == 0L, "body must not run at call time")
-    assert(r(1) == 1L)
-    assert(r(2).asInstanceOf[ArrayBuffer[Any]].toSeq == Seq(1L))
-    assert(r(3).asInstanceOf[ArrayBuffer[Any]].isEmpty, "spent generator must iterate empty")
-  }
-
-  test("yield: a body exception surfaces at the pull that triggers it") {
-    val src =
+        |    return [before, len(log), first, again]""",
+      Seq(), "string", "" -> "[0, 1, [1], []]"),
+    Case("yield: a body exception surfaces at the pull that triggers it",
       """def bad():
         |    yield 1
         |    yield 1 // 0
@@ -965,22 +641,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        second = next(g)
         |    except ZeroDivisionError:
         |        return first + 100
-        |    return -1"""
-    assert(run(src) == 101L)
-  }
-
-  test("yield: generator returned from the UDF materializes to a list") {
-    val src =
-      """def f(n):
-        |    def squares(k):
-        |        for i in range(k):
-        |            yield i * i
-        |    return squares(n)"""
-    assert(run(src, 4L).asInstanceOf[ArrayBuffer[Any]].toSeq == Seq(0L, 1L, 4L, 9L))
-  }
-
-  test("global: a helper mutates a module-level counter") {
-    val src =
+        |    return -1""",
+      Seq(), "bigint", "" -> 101L),
+    Case("global: a helper mutates a module-level counter",
       """calls = 0
         |def bump():
         |    global calls
@@ -989,33 +652,24 @@ class PyInterpSpec extends AnyFunSuite {
         |def f(n):
         |    for i in range(n):
         |        bump()
-        |    return calls"""
-    assert(run(src, 4L) == 4L)
-  }
-
-  test("call-site **d splat expands into keyword arguments") {
-    val src =
+        |    return calls""",
+      Seq("bigint"), "bigint", "4" -> 4L),
+    Case("call-site **d splat expands into keyword arguments",
       """def box(w, h, unit='px'):
         |    return str(w) + 'x' + str(h) + unit
         |def f():
         |    opts = {'h': 2, 'unit': 'em'}
-        |    return box(1, **opts)"""
-    assert(run(src) == "1x2em")
-  }
-
-  test("**d splat merges with explicit keywords into **kwargs") {
-    val src =
+        |    return box(1, **opts)""",
+      Seq(), "string", "" -> "1x2em"),
+    Case("**d splat merges with explicit keywords into **kwargs",
       """def render(tag, **attrs):
         |    keys = sorted(attrs.keys())
         |    return tag + ':' + ','.join([k + '=' + str(attrs[k]) for k in keys])
         |def f():
         |    d = {'b': 2}
-        |    return render('p', a=1, **d)"""
-    assert(run(src) == "p:a=1,b=2")
-  }
-
-  test("super(): child __init__ extends the base initializer") {
-    val src =
+        |    return render('p', a=1, **d)""",
+      Seq(), "string", "" -> "p:a=1,b=2"),
+    Case("super(): child __init__ extends the base initializer",
       """class Point:
         |    def __init__(self, x, y):
         |        self.x = x
@@ -1026,12 +680,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        self.z = z
         |def f():
         |    p = Point3(1, 2, 3)
-        |    return p.x * 100 + p.y * 10 + p.z"""
-    assert(run(src) == 123L)
-  }
-
-  test("super(): overridden method calls the base version") {
-    val src =
+        |    return p.x * 100 + p.y * 10 + p.z""",
+      Seq(), "bigint", "" -> 123L),
+    Case("super(): overridden method calls the base version",
       """class Greeter:
         |    def greet(self):
         |        return 'hello'
@@ -1039,20 +690,9 @@ class PyInterpSpec extends AnyFunSuite {
         |    def greet(self):
         |        return super().greet().upper() + '!'
         |def f():
-        |    return Loud().greet()"""
-    assert(run(src) == "HELLO!")
-  }
-
-  test("super() outside a method raises like CPython") {
-    val src =
-      """def f(x):
-        |    return super().foo() + x"""
-    val e = intercept[Exception](run(src, 1L))
-    assert(e.getMessage.contains("super"))
-  }
-
-  test("inheritance: class attrs flow base-first, child overrides") {
-    val src =
+        |    return Loud().greet()""",
+      Seq(), "string", "" -> "HELLO!"),
+    Case("inheritance: class attrs flow base-first, child overrides",
       """class A:
         |    limit = 10
         |    tag = 'a'
@@ -1060,27 +700,9 @@ class PyInterpSpec extends AnyFunSuite {
         |    tag = 'b'
         |def f():
         |    x = B()
-        |    return str(x.limit) + x.tag"""
-    assert(run(src) == "10b")
-  }
-
-  // ---------------------------------------------------- round 10 semantics
-
-  test("UnboundLocalError: read before assignment of a function local") {
-    // CPython 3.11: UnboundLocalError even though module-level g exists
-    val src =
-      """g = 10
-        |def f1():
-        |    y = g
-        |    g = 5
-        |    return y"""
-    val e = intercept[Exception](run(src))
-    assert(e.getMessage.contains(
-      "UnboundLocalError: cannot access local variable 'g' where it is not associated with a value"))
-  }
-
-  test("UnboundLocalError: closure assignment without nonlocal makes the name local") {
-    val src =
+        |    return str(x.limit) + x.tag""",
+      Seq(), "string", "" -> "10b"),
+    Case("UnboundLocalError: closure assignment without nonlocal makes the name local",
       """def f2():
         |    c = 0
         |    def inner():
@@ -1090,36 +712,18 @@ class PyInterpSpec extends AnyFunSuite {
         |    try:
         |        return inner()
         |    except UnboundLocalError as e:
-        |        return 'UBL: ' + str(e)"""
-    assert(run(src) ==
-      "UBL: cannot access local variable 'c' where it is not associated with a value")
-  }
-
-  test("UnboundLocalError: a for-loop variable is a local") {
-    val src =
-      """def f3(n):
-        |    y = i
-        |    for i in range(n):
-        |        pass
-        |    return y"""
-    val e = intercept[Exception](run(src, 3L))
-    assert(e.getMessage.contains("UnboundLocalError") &&
-      e.getMessage.contains("'i'"))
-  }
-
-  test("global declaration exempts the name from local classification") {
-    val src =
+        |        return 'UBL: ' + str(e)""",
+      Seq(), "string", "" ->
+        "UBL: cannot access local variable 'c' where it is not associated with a value"),
+    Case("global declaration exempts the name from local classification",
       """tot = 1
         |def f4():
         |    global tot
         |    x = tot
         |    tot = x + 1
-        |    return tot"""
-    assert(run(src) == 2L)
-  }
-
-  test("nonlocal declaration exempts the name: counter still works") {
-    val src =
+        |    return tot""",
+      Seq(), "bigint", "" -> 2L),
+    Case("nonlocal declaration exempts the name: counter still works",
       """def f():
         |    c = 0
         |    def inc():
@@ -1128,13 +732,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        return c
         |    inc()
         |    inc()
-        |    return inc()"""
-    assert(run(src) == 3L)
-  }
-
-  test("coroutine: running average via gen.send") {
-    // CPython: next(a)=None, then send(10)=10.0, send(20)=15.0, send(30)=20.0
-    val src =
+        |    return inc()""",
+      Seq(), "bigint", "" -> 3L),
+    Case("coroutine: running average via gen.send",
       """def avg():
         |    total = 0.0
         |    n = 0
@@ -1147,13 +747,9 @@ class PyInterpSpec extends AnyFunSuite {
         |    a = avg()
         |    first = next(a)
         |    r = [a.send(10), a.send(20), a.send(30)]
-        |    return [first] + r"""
-    assert(run(src) == ArrayBuffer(null, 10.0, 15.0, 20.0))
-  }
-
-  test("coroutine: x = yield v receive points, StopIteration at exhaustion") {
-    // CPython: next(e)=7, send(3)=6, send(4)=7, then StopIteration
-    val src =
+        |    return [first] + r""",
+      Seq(), "string", "" -> "[None, 10.0, 15.0, 20.0]"),
+    Case("coroutine: x = yield v receive points, StopIteration at exhaustion",
       """def echo(start):
         |    x = yield start
         |    y = yield x * 2
@@ -1165,12 +761,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        e.send(0)
         |    except StopIteration:
         |        out.append('done')
-        |    return out"""
-    assert(run(src) == ArrayBuffer(7L, 6L, 7L, "done"))
-  }
-
-  test("coroutine: non-None send to a just-started generator is a TypeError") {
-    val src =
+        |    return out""",
+      Seq(), "string", "" -> "[7, 6, 7, 'done']"),
+    Case("coroutine: non-None send to a just-started generator is a TypeError",
       """def g7():
         |    yield 1
         |def f():
@@ -1178,22 +771,16 @@ class PyInterpSpec extends AnyFunSuite {
         |    try:
         |        gg.send(9)
         |    except TypeError as t:
-        |        return str(t)"""
-    assert(run(src) == "can't send non-None value to a just-started generator")
-  }
-
-  test("bare yield yields None") {
-    val src =
+        |        return str(t)""",
+      Seq(), "string", "" -> "can't send non-None value to a just-started generator"),
+    Case("bare yield yields None",
       """def g():
         |    yield
         |    yield 2
         |def f():
-        |    return list(g())"""
-    assert(run(src) == ArrayBuffer(null, 2L))
-  }
-
-  test("argful super(C, self): base method and base __init__ dispatch") {
-    val src =
+        |    return list(g())""",
+      Seq(), "string", "" -> "[None, 2]"),
+    Case("argful super(C, self): base method and base __init__ dispatch",
       """class Shape:
         |    def __init__(self, name):
         |        self.name = name
@@ -1207,12 +794,9 @@ class PyInterpSpec extends AnyFunSuite {
         |        return super(Circle, self).describe() + ' r=' + str(self.r)
         |def f():
         |    c = Circle(2)
-        |    return c.describe()"""
-    assert(run(src) == "shape circle r=2")
-  }
-
-  test("functools.reduce: fold, initializer, empty-iterable TypeError") {
-    val src =
+        |    return c.describe()""",
+      Seq(), "string", "" -> "shape circle r=2"),
+    Case("functools.reduce: fold, initializer, empty-iterable TypeError",
       """from functools import reduce
         |def f():
         |    a = reduce(lambda a, b: a * b, [1, 2, 3, 4])
@@ -1220,61 +804,40 @@ class PyInterpSpec extends AnyFunSuite {
         |    try:
         |        reduce(lambda a, b: a + b, [])
         |    except TypeError as e:
-        |        return [a, b, str(e)]"""
-    assert(run(src) == ArrayBuffer(24L, 10L,
-      "reduce() of empty iterable with no initial value"))
-  }
-
-  test("itertools.chain flattens mixed iterables incl. strings") {
-    val src =
+        |        return [a, b, str(e)]""",
+      Seq(), "string", "" ->
+        "[24, 10, 'reduce() of empty iterable with no initial value']"),
+    Case("itertools.chain flattens mixed iterables incl. strings",
       """from itertools import chain
         |def f():
-        |    return list(chain([1, 2], (3, 4), 'ab'))"""
-    assert(run(src) == ArrayBuffer(1L, 2L, 3L, 4L, "a", "b"))
-  }
-
-  test("itertools.product: two pools and repeat=") {
-    val src =
+        |    return list(chain([1, 2], (3, 4), 'ab'))""",
+      Seq(), "string", "" -> "[1, 2, 3, 4, 'a', 'b']"),
+    Case("itertools.product: two pools and repeat=",
       """from itertools import product
         |def f():
         |    a = list(product([1, 2], 'xy'))
         |    b = list(product([1, 2], repeat=2))
-        |    return [a, b]"""
-    assert(run(src) == ArrayBuffer(
-      ArrayBuffer(Vector(1L, "x"), Vector(1L, "y"), Vector(2L, "x"), Vector(2L, "y")),
-      ArrayBuffer(Vector(1L, 1L), Vector(1L, 2L), Vector(2L, 1L), Vector(2L, 2L))))
-  }
-
-  test("itertools.combinations/permutations use positional semantics") {
-    val src =
+        |    return [a, b]""",
+      Seq(), "string", "" ->
+        "[[(1, 'x'), (1, 'y'), (2, 'x'), (2, 'y')], [(1, 1), (1, 2), (2, 1), (2, 2)]]"),
+    Case("itertools.combinations/permutations use positional semantics",
       """from itertools import combinations, permutations
         |def f():
         |    a = list(combinations('abcd', 2))
         |    b = list(permutations([1, 2, 3], 2))
         |    c = list(combinations([1, 1, 2], 2))
-        |    return [a, b, c]"""
-    // CPython: combinations([1,1,2],2) keeps the duplicate-element pairs
-    assert(run(src) == ArrayBuffer(
-      ArrayBuffer(Vector("a", "b"), Vector("a", "c"), Vector("a", "d"),
-        Vector("b", "c"), Vector("b", "d"), Vector("c", "d")),
-      ArrayBuffer(Vector(1L, 2L), Vector(1L, 3L), Vector(2L, 1L),
-        Vector(2L, 3L), Vector(3L, 1L), Vector(3L, 2L)),
-      ArrayBuffer(Vector(1L, 1L), Vector(1L, 2L), Vector(1L, 2L))))
-  }
-
-  test("itertools.accumulate: running sum and custom func") {
-    val src =
+        |    return [a, b, c]""",
+      Seq(), "string", "" ->
+        ("[[('a', 'b'), ('a', 'c'), ('a', 'd'), ('b', 'c'), ('b', 'd'), ('c', 'd')], " +
+        "[(1, 2), (1, 3), (2, 1), (2, 3), (3, 1), (3, 2)], [(1, 1), (1, 2), (1, 2)]]")),
+    Case("itertools.accumulate: running sum and custom func",
       """from itertools import accumulate
         |def f():
         |    a = list(accumulate([1, 2, 3, 4]))
         |    b = list(accumulate([1, 2, 3], lambda a, b: a * b))
-        |    return [a, b]"""
-    assert(run(src) == ArrayBuffer(
-      ArrayBuffer(1L, 3L, 6L, 10L), ArrayBuffer(1L, 2L, 6L)))
-  }
-
-  test("itertools.count/cycle/repeat are lazy; islice bounds them") {
-    val src =
+        |    return [a, b]""",
+      Seq(), "string", "" -> "[[1, 3, 6, 10], [1, 2, 6]]"),
+    Case("itertools.count/cycle/repeat are lazy; islice bounds them",
       """from itertools import islice, count, cycle, repeat
         |def f():
         |    a = list(islice(count(5), 4))
@@ -1282,39 +845,19 @@ class PyInterpSpec extends AnyFunSuite {
         |    c = list(repeat('x', 3))
         |    d = list(islice(cycle([1, 2, 3]), 7))
         |    e = list(islice(repeat(9), 2))
-        |    return [a, b, c, d, e]"""
-    assert(run(src) == ArrayBuffer(
-      ArrayBuffer(5L, 6L, 7L, 8L),
-      ArrayBuffer(6L, 9L, 12L),
-      ArrayBuffer("x", "x", "x"),
-      ArrayBuffer(1L, 2L, 3L, 1L, 2L, 3L, 1L),
-      ArrayBuffer(9L, 9L)))
-  }
-
-  test("itertools.groupby groups consecutive runs, identity and key=") {
-    val src =
+        |    return [a, b, c, d, e]""",
+      Seq(), "string", "" ->
+        "[[5, 6, 7, 8], [6, 9, 12], ['x', 'x', 'x'], [1, 2, 3, 1, 2, 3, 1], [9, 9]]"),
+    Case("itertools.groupby groups consecutive runs, identity and key=",
       """from itertools import groupby
         |def f():
         |    a = [(k, list(g)) for k, g in groupby('aabbbca')]
         |    b = [(k, list(g)) for k, g in groupby([1, 2, 4, 3, 5], key=lambda x: x % 2)]
-        |    return [a, b]"""
-    assert(run(src) == ArrayBuffer(
-      ArrayBuffer(
-        Vector("a", ArrayBuffer("a", "a")), Vector("b", ArrayBuffer("b", "b", "b")),
-        Vector("c", ArrayBuffer("c")), Vector("a", ArrayBuffer("a"))),
-      ArrayBuffer(
-        Vector(1L, ArrayBuffer(1L)), Vector(0L, ArrayBuffer(2L, 4L)),
-        Vector(1L, ArrayBuffer(3L, 5L)))))
-  }
-
-  test("unknown itertools/functools names are rejected at parse") {
-    val e = intercept[IllegalArgumentException](
-      run("from itertools import tee\n\ndef f(x):\n    return x", 1L))
-    assert(e.getMessage.contains("unsupported itertools import"))
-  }
-
-  test("argful super outside a method; wrong-instance TypeError") {
-    val src =
+        |    return [a, b]""",
+      Seq(), "string", "" ->
+        ("[[('a', ['a', 'a']), ('b', ['b', 'b', 'b']), ('c', ['c']), ('a', ['a'])], " +
+        "[(1, [1]), (0, [2, 4]), (1, [3, 5])]]")),
+    Case("argful super outside a method; wrong-instance TypeError",
       """class Shape:
         |    def __init__(self, name):
         |        self.name = name
@@ -1332,8 +875,130 @@ class PyInterpSpec extends AnyFunSuite {
         |    try:
         |        super(Circle, Other())
         |    except TypeError as t:
-        |        return a + '|' + str(t)"""
-    assert(run(src) ==
-      "shape x|super(type, obj): obj must be an instance or subtype of type")
+        |        return a + '|' + str(t)""",
+      Seq(), "string", "" ->
+        "shape x|super(type, obj): obj must be an instance or subtype of type")
+  )
+
+  cases.foreach { c =>
+    test(c.title) {
+      val body = c.body.stripMargin
+      val fn = entry(body)
+      create(fn, c.sig, c.ret, body)
+      val row = select(fn, c.calls.map(_._1))
+      c.calls.map(_._2).zipWithIndex.foreach { case (want, i) =>
+        assert(same(row.get(i), want), s"call ${c.calls(i)._1}: got ${row.get(i)}")
+      }
+    }
+  }
+
+  private val failing = Seq(
+    Fails("recursion limit guards the stack",
+      """def f(n):
+        |    return f(n + 1)""",
+      Seq("bigint"), "bigint", "0", "RecursionError"),
+    Fails("unmatched except kind propagates",
+      """def f(s):
+        |    try:
+        |        return int(s)
+        |    except KeyError:
+        |        return -1""",
+      Seq("string"), "bigint", "'zz'", "ValueError"),
+    Fails("super() outside a method raises like CPython",
+      """def f(x):
+        |    return super().foo() + x""",
+      Seq("bigint"), "bigint", "1", "super"),
+    Fails("UnboundLocalError: read before assignment of a function local",
+      """g = 10
+        |def f1():
+        |    y = g
+        |    g = 5
+        |    return y""",
+      Seq(), "bigint", "", "UnboundLocalError: cannot access local variable 'g' where it is not associated with a value"),
+    Fails("UnboundLocalError: a for-loop variable is a local",
+      """def f3(n):
+        |    y = i
+        |    for i in range(n):
+        |        pass
+        |    return y""",
+      Seq("bigint"), "bigint", "3", "UnboundLocalError: cannot access local variable 'i'")
+  )
+
+  failing.foreach { c =>
+    test(c.title) {
+      val body = c.body.stripMargin
+      val fn = entry(body)
+      create(fn, c.sig, c.ret, body)
+      val e = intercept[Exception](select(fn, Seq(c.args)))
+      assert(messages(e).contains(c.error), messages(e))
+    }
+  }
+
+  test("entry selection: the def named after the SQL function") {
+    val body =
+      """def helper(x):
+        |    return x + 1
+        |
+        |def target(x):
+        |    return helper(x) * 10""".stripMargin
+    create("target", Seq("bigint"), "bigint", body)
+    assert(select("target", Seq("4")).getLong(0) == 50L)
+    create("helper", Seq("bigint"), "bigint", body)
+    assert(select("helper", Seq("4")).getLong(0) == 5L)
+  }
+
+  test("an undefined base class is rejected") {
+    // CPython's NameError, raised while CREATE FUNCTION execs the module
+    val e = intercept[IllegalArgumentException](
+      create("f", Seq("bigint"), "bigint", "class C(Base):\n    pass\ndef f(x):\n    return x"))
+    assert(e.getMessage.contains("NameError"), e.getMessage)
+  }
+
+  test("isinstance with single type, type tuple, and bool-is-int") {
+    val body =
+      """def f(x):
+        |    return '%s|%s|%s' % (isinstance(x, int), isinstance(x, (str, float)), isinstance(x, bool))""".stripMargin
+    Seq(("bigint", "3", "True|False|False"), ("double", "2.5D", "False|True|False"),
+      ("boolean", "true", "True|False|True")).foreach { case (t, arg, want) =>
+      create("f", Seq(t), "string", body)
+      assert(select("f", Seq(arg)).getString(0) == want)
+    }
+  }
+
+  test("yield: next(gen), next(gen, default), StopIteration on exhaustion") {
+    val src =
+      """def two():
+        |    yield 'a'
+        |    yield 'b'
+        |def f():
+        |    g = two()
+        |    first = next(g)
+        |    second = next(g)
+        |    fallback = next(g, 'z')
+        |    return first + second + fallback""".stripMargin
+    create("f", Seq(), "string", src)
+    assert(select("f", Seq("")).getString(0) == "abz")
+    val src2 =
+      """def one():
+        |    yield 1
+        |def f():
+        |    g = one()
+        |    next(g)
+        |    return next(g)""".stripMargin
+    create("f", Seq(), "bigint", src2)
+    val e = intercept[Exception](select("f", Seq("")))
+    assert(messages(e).contains("StopIteration"), messages(e))
+  }
+
+  test("yield: a generator returned from the UDF stays a generator object") {
+    // CPython does not materialize it: a string return is str() of the object
+    val src =
+      """def f(n):
+        |    def squares(k):
+        |        for i in range(k):
+        |            yield i * i
+        |    return squares(n)""".stripMargin
+    create("f", Seq("bigint"), "string", src)
+    assert(select("f", Seq("4")).getString(0).startsWith("<generator object"))
   }
 }

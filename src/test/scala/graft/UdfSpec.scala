@@ -123,6 +123,87 @@ $$""")
     assert(math.abs(got - math.sqrt((9.0 + 16.0 + 144.0) / 3)) < 1e-12)
   }
 
+  // ---- CPython semantics the pickled wrapper carries (UdfSurface scaladoc)
+
+  test("python UDF: a float result for an int return truncates (stock Spark gives NULL)") {
+    GraftSql(spark, """CREATE OR REPLACE FUNCTION py_f2i(x int) RETURNS int LANGUAGE python AS $$
+def py_f2i(x):
+    return x / 2
+$$""")
+    val r = spark.sql("SELECT py_f2i(3), py_f2i(-7)").collect().head
+    assert(r.getInt(0) == 1 && r.getInt(1) == -3)
+  }
+
+  test("python UDF: a bool result for an int return is 0/1 (stock Spark gives NULL)") {
+    GraftSql(spark, """CREATE OR REPLACE FUNCTION py_b2i(x int) RETURNS int LANGUAGE python AS $$
+def py_b2i(x):
+    return x > 1
+$$""")
+    val r = spark.sql("SELECT py_b2i(3), py_b2i(0)").collect().head
+    assert(r.getInt(0) == 1 && r.getInt(1) == 0)
+  }
+
+  test("python UDF: a non-string result for a string return is its str()") {
+    GraftSql(spark, """CREATE OR REPLACE FUNCTION py_pair(x double) RETURNS varchar LANGUAGE python AS $$
+def py_pair(x):
+    if x < 0:
+        return x
+    return (x, [int(x), None])
+$$""")
+    val r = spark.sql("SELECT py_pair(2.5), py_pair(-1.0)").collect().head
+    assert(r.getString(0) == "(2.5, [2, None])" && r.getString(1) == "-1.0")
+  }
+
+  test("python UDF: a NULL argument is NULL without calling the body") {
+    // the body raises on None; Spark lifts the UDF out of the CASE guard,
+    // so only the wrapper's own null check keeps it from seeing None
+    GraftSql(spark, """CREATE OR REPLACE FUNCTION py_up(s varchar) RETURNS varchar LANGUAGE python AS $$
+def py_up(s):
+    return s.upper()
+$$""")
+    val rows = spark.sql(
+      """SELECT py_up(s) AS u, CASE WHEN s IS NULL THEN 'none' ELSE py_up(s) END AS g
+         FROM VALUES ('a'), (NULL) AS t(s) ORDER BY s NULLS LAST""").collect()
+    assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("A", "A"), (null, "none")))
+  }
+
+  // ---- failures surface at CREATE FUNCTION with the interpreter's stderr
+
+  private def createPy(name: String, body: String): IllegalArgumentException =
+    intercept[IllegalArgumentException](GraftSql(spark,
+      s"CREATE OR REPLACE FUNCTION $name(x bigint) RETURNS bigint LANGUAGE python AS $$$$\n$body\n$$$$"))
+
+  test("python UDF: a SyntaxError fails CREATE FUNCTION") {
+    val e = createPy("py_bad", "def py_bad(x):\n    return x +")
+    assert(e.getMessage.contains("SyntaxError"), e.getMessage)
+  }
+
+  test("python UDF: a NameError while executing the module fails CREATE FUNCTION") {
+    val e = createPy("py_bad", "class C(Missing):\n    pass\ndef py_bad(x):\n    return x")
+    assert(e.getMessage.contains("NameError: name 'Missing' is not defined"), e.getMessage)
+  }
+
+  test("python UDF: no def named after the function fails CREATE FUNCTION") {
+    val e = createPy("py_bad", "def other(x):\n    return x")
+    assert(e.getMessage.contains("no def named py_bad"), e.getMessage)
+  }
+
+  test("python UDF: a missing interpreter or a mismatched pyspark fails before any row") {
+    import org.apache.spark.sql.types.LongType
+    val body = "def f(x):\n    return x"
+    val missing = intercept[IllegalArgumentException](
+      UdfSurface.picklePython("/nonexistent/python3", "f", LongType, body, spark.version))
+    assert(missing.getMessage.contains("/nonexistent/python3"), missing.getMessage)
+    val python = UdfSurface.pythonExec(spark)
+    val mismatch = intercept[IllegalArgumentException](
+      UdfSurface.picklePython(python, "f", LongType, body, "0.0.0"))
+    assert(mismatch.getMessage.contains("does not match Spark 0.0.0"), mismatch.getMessage)
+    // the same call with the session's version pickles
+    val (ver, command) = UdfSurface.picklePython(python, "f", LongType, body, spark.version)
+    assert(ver.matches("""3\.\d+""") && command.nonEmpty)
+  }
+
   test("router dispatches SQL, pipe-SQL, SET, CREATE FUNCTION") {
     Tables.registerAll(spark, sf)
     assert(GraftSql(spark, "SELECT count(*) AS n FROM region").collect().head.getLong(0) == 5L)
