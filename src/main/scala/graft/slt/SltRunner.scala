@@ -327,17 +327,18 @@ object SltRunner {
   }
 }
 
-/** CLI: run corpus files, print per-file pass/fail. */
+/** CLI: run corpus files, print per-file pass/fail. With no arguments it
+  * runs every file of the vendored sqlite-small corpus (run from the repo
+  * root). */
 object SltMain {
   def main(args: Array[String]): Unit = {
+    val files = if (args.nonEmpty) args.toSeq else {
+      val dir = new java.io.File("src/test/resources/slt/sqlite-small")
+      require(dir.isDirectory, s"no corpus at ${dir.getAbsolutePath}; run from the repo root")
+      dir.listFiles().map(_.getPath).filter(_.endsWith(".test")).sorted.toSeq
+    }
     val spark = graft.Engine.create(master = "local[4]", shufflePartitions = 4,
       appName = "graft-slt")
-    val files = if (args.nonEmpty) args.toSeq else Seq(
-      "/root/reference/test/sqlite-small/groupby.test",
-      "/root/reference/test/sqlite-small/setops.test",
-      "/root/reference/test/sqlite-small/join.test",
-      "/root/reference/test/sqlite-small/udf.test",
-      "/root/reference/test/sqlite-small/uni.test")
     var totalPass = 0
     var totalFail = 0
     files.foreach { f =>

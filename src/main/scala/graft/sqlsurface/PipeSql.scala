@@ -1,9 +1,7 @@
 package graft.sqlsurface
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.expr
-import SqlScan.{closeParen, splitTop, topLevelIndexOf}
+import SqlScan.{clauseEnd, closeParen, mask, splitTop, topLevelIndexOf, wordAt}
 
 /** GoogleSQL-style pipe-syntax SQL, the reference's second query language
   * (reference src/compiler/frontend/parser.y:450-566 "GOOLE PIPE syntax",
@@ -11,214 +9,94 @@ import SqlScan.{closeParen, splitTop, topLevelIndexOf}
   * WHERE, SELECT, JOIN, GROUP_BY/AGGREGATE, sort/limit RESULT_MODIFIERs,
   * UNION/INTERSECT/EXCEPT, FROM, EXTEND, DROP, SET).
   *
-  * Spark has no pipe syntax, so each stage is folded left-to-right into the
-  * running DataFrame: SQL-fragment stages go through spark.sql over a unique
-  * temp view of the previous stage (Catalyst parses the expressions — we never
-  * re-implement an expression grammar), structural stages (EXTEND/DROP/SET)
-  * use the DataFrame API directly. The fold IS the pipe semantics: each
-  * operator sees exactly the previous operator's output relation.
+  * Spark 4.1 parses the same `|>` operators, so a pipe query is rewritten as
+  * text into Spark's pipe grammar (pipes nested in parentheses too) and runs
+  * as one `spark.sql` after the [[SqlCanonicalizer]] pass classic SQL gets.
+  * Two rules of the reference that Spark lacks are kept:
+  *  - Shared FROM scope. Until the first stage that reshapes rows
+  *    (AGGREGATE, ORDER BY, LIMIT, a set operation, DROP, SET), the
+  *    FROM/JOIN/WHERE/SELECT/EXTEND stages fold into one classic
+  *    `SELECT … FROM … WHERE …`, so a WHERE after a SELECT still sees the
+  *    FROM clause's aliases; AGGREGATE reads that FROM scope, not a pending
+  *    SELECT. A WHERE after a windowed SELECT, and a RIGHT/FULL JOIN after a
+  *    WHERE, end the scope instead: folding them would change the rows.
+  *  - `AGGREGATE … GROUP BY ROLLUP|CUBE(…)`, which Spark's pipe AGGREGATE
+  *    rejects, becomes a classic grouped SELECT.
+  * A classic head with its own top-level ORDER BY, LIMIT or OFFSET is
+  * parenthesized: Spark refuses `|>` after one.
   */
 object PipeSql {
-  private val viewCounter = new AtomicInteger(0)
+  def sql(spark: SparkSession, pipeQuery: String): DataFrame =
+    spark.sql(SqlCanonicalizer(translate(pipeQuery)))
 
-  /** Pending relational context: a growing FROM clause (+ WHERE conjuncts)
-    * whose table aliases must stay visible to later stages — collapsing to a
-    * subquery too early would lose `v.sws`-style qualified references
-    * (the reference keeps aliases visible across pipe stages). */
-  private case class Pending(from: String, wheres: Seq[String],
+  private case class Scope(from: String, wheres: Seq[String] = Nil,
       select: Option[String] = None) {
-    def sqlFrom: String =
-      s"FROM $from" + (if (wheres.isEmpty) "" else s" WHERE ${wheres.map(w => s"($w)").mkString(" AND ")}")
-    def sqlSelect: String = s"SELECT ${select.getOrElse("*")} $sqlFrom"
+    // `WHERE ((w))`: `t WHERE (w)` would parse as the alias `WHERE` with a
+    // column list
+    def render(sel: String): String = s"SELECT $sel FROM $from" +
+      (if (wheres.isEmpty) "" else wheres.map(w => s"($w)").mkString(" WHERE (", " AND ", ")"))
   }
 
-  def sql(spark: SparkSession, pipeQuery: String): DataFrame = {
-    val stages = splitTop(inlineNestedPipes(pipeQuery.trim), "|>")
-    require(stages.nonEmpty, "empty pipe query")
-    val headSql = stages.head.trim
-    val head: Either[Pending, DataFrame] =
-      if (headSql.toUpperCase.startsWith("FROM")) Left(Pending(headSql.drop(4).trim, Nil))
-      else {
-        // plain SELECT head is allowed (parser.y:551); keep its FROM clause
-        // pending so later stages still see the table aliases
-        val fromIdx = topLevelIndexOf(headSql, "FROM")
-        if (headSql.toUpperCase.startsWith("SELECT") && fromIdx > 0)
-          Left(Pending(headSql.substring(fromIdx + 4).trim, Nil,
-            Some(headSql.substring(6, fromIdx).trim)))
-        else Right(spark.sql(headSql))
-      }
-    val out = stages.tail.foldLeft(head)((st, stage) => applyStage(spark, st, stage.trim))
-    materialize(spark, out)
+  private val joinWords = Set("JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "NATURAL")
+  private val groupingSetsRe = "(?is)(?:ROLLUP|CUBE)\\s*\\((.*)\\)".r
+  private val overRe = "(?i)\\bOVER\\b".r
+  private def windowed(sel: String): Boolean = overRe.findFirstIn(mask(sel)).isDefined
+
+  /** `q` in Spark's pipe grammar; classic SQL without `|>` comes back as is. */
+  def translate(q: String): String = {
+    val text = translateNested(q, 0)
+    val stages = splitTop(text, "|>").map(_.trim)
+    if (stages.length == 1) text else fold(stages)
   }
 
-  private def materialize(spark: SparkSession, st: Either[Pending, DataFrame]): DataFrame =
-    st match {
-      case Right(df) => df
-      case Left(p) => spark.sql(p.sqlSelect)
-    }
-
-  private def applyStage(spark: SparkSession, st: Either[Pending, DataFrame],
-      stage: String): Either[Pending, DataFrame] = {
-    val up = stage.toUpperCase
-    lazy val df = materialize(spark, st)
-    def view(): String = {
-      val v = s"__pipe_${viewCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(v)
-      v
-    }
-    // FROM-context form of the current state (aliases preserved if pending)
-    def fromCtx: Pending = st match {
-      case Left(p) => p
-      case Right(_) => Pending(view(), Nil)
-    }
-    // context for stages that must see the raw FROM scope (JOIN): a pending
-    // projection is kept pending — reference scoping resolves against tables
-    def joinCtx: Pending = fromCtx
-    val joinRe = "(?is)^((?:LEFT|RIGHT|FULL|INNER|CROSS)(?:\\s+OUTER)?\\s+)?JOIN\\s+(.*)$".r
-    up match {
-      case s if s.startsWith("WHERE") =>
-        val p = fromCtx
-        Left(p.copy(wheres = p.wheres :+ stage.drop(5).trim))
-      case s if s.startsWith("SELECT") =>
-        val p = fromCtx
-        if (p.select.isEmpty) Left(p.copy(select = Some(stage.drop(6).trim)))
-        else Right(spark.sql(s"SELECT ${stage.drop(6)} FROM ${view()}"))
-      case s if s.startsWith("ORDER BY") =>
-        val p = fromCtx
-        Right(try spark.sql(s"${p.sqlSelect} ORDER BY ${stage.drop(8)}")
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          // post-aggregate ORDER BY may still use pre-aggregate qualifiers
-          spark.sql(s"${p.sqlSelect} ORDER BY ${stripQualifiers(stage.drop(8))}")
-        })
-      case s if s.startsWith("LIMIT") =>
-        Right(spark.sql(s"${fromCtx.sqlSelect} LIMIT ${stage.drop(5)}"))
-      case s if s.startsWith("AGGREGATE") =>
-        val rest = stage.drop(9)
-        // AGGREGATE <aggs with aliases> [GROUP BY <keys with aliases>]
-        val gbIdx = topLevelIndexOf(rest, "GROUP BY")
-        if (gbIdx < 0) Right(spark.sql(s"SELECT ${rest.trim} ${fromCtx.sqlFrom}"))
-        else {
-          val aggs = rest.substring(0, gbIdx).trim.stripSuffix(",")
-          val keys = splitTop(rest.substring(gbIdx + 8).trim, ",").map(_.trim)
-          val rollupRe = "(?is)^\\s*(ROLLUP|CUBE)\\s*\\((.*)\\)\\s*$".r
-          keys match {
-            // GROUP BY ROLLUP(x,y) / CUBE(x,y): grouping columns are the
-            // INNER exprs; the grouping-set operator stays in GROUP BY only
-            case Seq(rollupRe(kind, inner)) =>
-              Right(spark.sql(
-                s"SELECT ${inner.trim}, $aggs ${fromCtx.sqlFrom} " +
-                  s"GROUP BY $kind(${inner.trim})"))
-            case _ =>
-              // keys may carry aliases: SELECT uses the aliased form,
-              // GROUP BY the bare expr
-              val keyExprs = keys.map(k => "(?is)\\s+AS\\s+\\w+\\s*$".r.replaceAllIn(k, ""))
-              Right(spark.sql(
-                s"SELECT ${keys.mkString(", ")}, $aggs ${fromCtx.sqlFrom} " +
-                  s"GROUP BY ${keyExprs.mkString(", ")}"))
-          }
-        }
-      case s if s.startsWith("EXTEND") =>
-        st match {
-          case Left(p) =>
-            Left(p.copy(select = Some(s"${p.select.getOrElse("*")}, ${stage.drop(6).trim}")))
-          case Right(_) =>
-            Right(df.selectExpr("*" +: splitTop(stage.drop(6), ",").map(_.trim): _*))
-        }
-      case s if s.startsWith("DROP") =>
-        Right(df.drop(splitTop(stage.drop(4), ",").map(_.trim): _*))
-      case s if s.startsWith("SET") =>
-        Right(splitTop(stage.drop(3), ",").foldLeft(df) { (d, assign) =>
-          val Array(name, rhs) = assign.split("=", 2)
-          d.withColumn(name.trim, expr(rhs.trim))
-        })
-      case s if s.startsWith("UNION") || s.startsWith("INTERSECT") || s.startsWith("EXCEPT") =>
-        val (op, rest0) =
-          if (s.startsWith("UNION")) ("union", stage.drop(5))
-          else if (s.startsWith("INTERSECT")) ("intersect", stage.drop(9))
-          else ("except", stage.drop(6))
-        val restUp = rest0.trim.toUpperCase
-        val (all, subSql) =
-          if (restUp.startsWith("ALL")) (true, rest0.trim.drop(3).trim)
-          else if (restUp.startsWith("DISTINCT")) (false, rest0.trim.drop(8).trim)
-          else (false, rest0.trim)
-        val inner = stripParens(subSql)
-        val other = if (containsTop(inner, "|>")) sql(spark, inner) else spark.sql(inner)
-        Right((op, all) match {
-          case ("union", true)      => df.unionAll(other)
-          case ("union", false)     => df.union(other).distinct()
-          case ("intersect", true)  => df.intersectAll(other)
-          case ("intersect", false) => df.intersect(other)
-          case ("except", true)     => df.exceptAll(other)
-          case ("except", false)    => df.except(other)
-          case unexpected => throw new IllegalStateException(
-            s"unreachable set-op combination: $unexpected") // op is one of the three literals above
-        })
-      case _ => joinRe.findFirstMatchIn(stage) match {
-        case Some(m) =>
-          val jt = Option(m.group(1)).map(_.trim + " ").getOrElse("")
-          val p = fromCtx
-          // grow the FROM clause so earlier table aliases stay referencable
-          Left(p.copy(from = s"${p.from} ${jt}JOIN ${m.group(2)}"))
-        case None =>
-          throw new IllegalArgumentException(s"unsupported pipe operator: $stage")
-      }
+  /** `q` with the body of every parenthesized group at/after `from` translated. */
+  private def translateNested(q: String, from: Int): String = {
+    val open = mask(q).indexOf('(', from)
+    val close = if (open < 0) -1 else closeParen(q, open)
+    if (close < 0) q
+    else {
+      val body = translate(q.substring(open + 1, close))
+      translateNested(q.substring(0, open + 1) + body + q.substring(close), open + body.length + 2)
     }
   }
 
-  /** `a.b` → `b` outside string literals (post-projection re-resolution). */
-  private def stripQualifiers(s: String): String =
-    SqlScan.splice(s, "\\b\\w+\\.(\\w+)\\b".r.findAllMatchIn(SqlScan.mask(s))
-      .map(m => (m.start, m.end, m.group(1))).toSeq)
-
-  /** Rewrite innermost parenthesized pipe fragments `( from t |> ... )` into
-    * classic SQL subqueries so they can appear inside expressions
-    * (EXISTS/IN — the reference allows pipe syntax anywhere a subquery is
-    * legal, pipe_sql_with_parens parser.y:465-468). */
-  private[sqlsurface] def inlineNestedPipes(q: String): String = {
-    val m = SqlScan.mask(q)
-    m.indices.iterator.filter(m.charAt(_) == '(').flatMap { open =>
-      val close = closeParen(q, open)
-      val inner = if (close > 0) m.substring(open + 1, close) else ""
-      if (!inner.contains("(") && inner.trim.toUpperCase.startsWith("FROM") &&
-        splitTop(inner, "|>").length > 1)
-        assembleSql(q.substring(open + 1, close)).map(sqlText =>
-          q.substring(0, open) + s"($sqlText)" + q.substring(close + 1))
+  private def fold(stages: Seq[String]): String = {
+    val head = stages.head
+    val f = topLevelIndexOf(head, "FROM")
+    var scope =
+      if (wordAt(mask(head), 0, "FROM")) Some(Scope(head.drop(4).trim))
+      else if (wordAt(mask(head), 0, "SELECT") && f > 0 &&
+        clauseEnd(head, f, Seq("WHERE")) == head.length)
+        Some(Scope(head.substring(f + 4).trim, select = Some(head.substring(6, f).trim)))
       else None
-    }.nextOption().fold(q)(inlineNestedPipes)
-  }
-
-  /** Pure-SQL assembly of a simple pipe chain (FROM/JOIN/WHERE/SELECT/ORDER
-    * BY/LIMIT only); None if a stage needs DataFrame-level handling. */
-  private def assembleSql(pipe: String): Option[String] = {
-    val stages = splitTop(pipe.trim, "|>").map(_.trim)
-    if (!stages.head.toUpperCase.startsWith("FROM")) return None
-    var from = stages.head.drop(4).trim
-    var select = "*"
-    val wheres = Seq.newBuilder[String]
-    var suffix = ""
-    val joinRe = "(?is)^((?:LEFT|RIGHT|FULL|INNER|CROSS)(?:\\s+OUTER)?\\s+)?JOIN\\s+(.*)$".r
-    for (st <- stages.tail) {
-      val up = st.toUpperCase
-      if (up.startsWith("WHERE")) wheres += st.drop(5).trim
-      else if (up.startsWith("SELECT")) select = st.drop(6).trim
-      else if (up.startsWith("ORDER BY") || up.startsWith("LIMIT")) suffix += " " + st
-      else joinRe.findFirstMatchIn(st) match {
-        case Some(m) =>
-          from += " " + Option(m.group(1)).map(_.trim + " ").getOrElse("") + "JOIN " + m.group(2)
-        case None => return None
+    var out =
+      if (Seq("ORDER", "LIMIT", "OFFSET").exists(topLevelIndexOf(head, _) >= 0)) s"($head)"
+      else head
+    for (stage <- stages.tail) {
+      val word = stage.takeWhile(_.isLetter).toUpperCase
+      val rest = stage.drop(word.length).trim
+      (scope, word) match {
+        case (Some(s), "WHERE") if !s.select.exists(windowed) =>
+          scope = Some(s.copy(wheres = s.wheres :+ rest))
+        case (Some(s), "SELECT") if s.select.isEmpty => scope = Some(s.copy(select = Some(rest)))
+        case (Some(s), "EXTEND") =>
+          scope = Some(s.copy(select = Some(s.select.getOrElse("*") + ", " + rest)))
+        case (Some(s), j) if joinWords(j) && (s.wheres.isEmpty || !Set("RIGHT", "FULL")(j)) =>
+          scope = Some(s.copy(from = s"${s.from} $stage"))
+        case _ =>
+          val gb = topLevelIndexOf(rest, "GROUP BY")
+          out = (word, if (gb < 0) "" else rest.substring(gb + 8).trim) match {
+            case ("AGGREGATE", group @ groupingSetsRe(keys)) =>
+              val src = scope.getOrElse(Scope(s"($out)"))
+              src.render(s"$keys, ${rest.take(gb).trim}") + s" GROUP BY $group"
+            case _ =>
+              val sel = if (word == "AGGREGATE") None else scope.flatMap(_.select)
+              s"${scope.fold(out)(_.render(sel.getOrElse("*")))} |> $stage"
+          }
+          scope = None
       }
     }
-    val ws = wheres.result()
-    val whereSql = if (ws.isEmpty) "" else s" WHERE ${ws.map(w => s"($w)").mkString(" AND ")}"
-    Some(s"SELECT $select FROM $from$whereSql$suffix")
-  }
-
-  private def containsTop(s: String, delim: String): Boolean = splitTop(s, delim).length > 1
-
-  private def stripParens(s: String): String = {
-    val t = s.trim
-    // only strip parens that wrap the whole string
-    if (t.startsWith("(") && closeParen(t, 0) == t.length - 1) t.substring(1, t.length - 1) else t
+    scope.fold(out)(s => s.render(s.select.getOrElse("*")))
   }
 }
 

@@ -310,27 +310,31 @@ object SqlCanonicalizer {
     * cannot prepare subquery expressions inside join conditions (physical
     * planning limitation); for INNER joins the comma-join + WHERE form is
     * identical. Applied only when the ON clause contains a subquery and the
-    * query has no top-level WHERE of its own. */
+    * query has no top-level WHERE of its own, and only in the classic head
+    * of a pipe query (a `|> INNER JOIN` stage has no comma form). */
   def joinOnSubqueryToWhere(sql: String): String = {
-    val m = mask(sql)
+    val head = classicHead(sql)
+    val m = mask(head)
     "(?i)\\bINNER\\s+JOIN\\s+(\\w+(?:\\s+\\w+)?)\\s+ON\\s+".r.findFirstMatchIn(m) match {
       case Some(j) if m.substring(j.end).toUpperCase.contains("(SELECT") &&
-          topLevelIndexOf(sql, "WHERE") < 0 =>
+          topLevelIndexOf(head, "WHERE") < 0 =>
         sql.substring(0, j.start) + ", " + j.group(1) + " WHERE " + sql.substring(j.end)
       case _ => sql
     }
   }
 
   /** `EXISTS(SELECT <exprs>)` with no FROM: the implicit single row always
-    * exists → TRUE (the reference parses multi-column no-FROM selects here;
-    * Spark would misread the collapsed form as its higher-order exists()). */
+    * exists → `(1 = 1)` (the reference parses multi-column no-FROM selects
+    * here; Spark would misread the collapsed form as its higher-order
+    * exists()). Not `TRUE`: `FROM t WHERE (TRUE)` parses as the table alias
+    * `WHERE` with a column list, and the filter is lost. */
   def existsNoFromToTrue(sql: String): String = {
     val m = mask(sql)
     "(?i)\\bEXISTS\\s*\\(\\s*SELECT\\b".r.findFirstMatchIn(m).flatMap { e =>
       val open = m.indexOf('(', e.start)
       val close = closeParen(sql, open)
       if (close > 0 && topLevelIndexOf(sql.substring(open + 1, close), "FROM") < 0)
-        Some(existsNoFromToTrue(sql.substring(0, e.start) + "TRUE" + sql.substring(close + 1)))
+        Some(existsNoFromToTrue(sql.substring(0, e.start) + "(1 = 1)" + sql.substring(close + 1)))
       else None
     }.getOrElse(sql)
   }
@@ -423,7 +427,9 @@ object SqlCanonicalizer {
     * unnesting (Transforms/Unnesting.cpp) handles them. Applied innermost-
     * first until fixpoint, this is an exact rewrite, not an approximation.
     * A no-FROM block in DERIVED-TABLE position (`FROM (SELECT 1) t`, `JOIN
-    * (SELECT 2) u`) is a one-row TABLE, not a scalar, and stays. */
+    * (SELECT 2) u`), a set-operation operand (`UNION ALL (SELECT 1)`) or a
+    * parenthesized whole statement is a one-row TABLE, not a scalar, and
+    * stays. */
   def rewriteNoFromScalar(sql: String): String = {
     val ms = mask(sql)
     // innermost first = rightmost opening paren first
@@ -433,12 +439,16 @@ object SqlCanonicalizer {
       val expr = sql.substring(exprAt, close)
       !Seq("FROM", "WHERE", "GROUP", "UNION", "INTERSECT", "EXCEPT")
         .exists(topLevelIndexOf(expr, _) >= 0) &&
-        !Set("FROM", "JOIN")(SqlScan.wordBefore(sql, open)) && selectBlocks(expr).isEmpty
+        tableOperandRe.findFirstIn(ms.substring(0, open)).isEmpty && selectBlocks(expr).isEmpty
     }.fold(sql) { case (open, close, exprAt) =>
       val collapsed = collapseSingleRowAggs(sql.substring(exprAt, close).trim)
       rewriteNoFromScalar(sql.substring(0, open) + s"($collapsed)" + sql.substring(close + 1))
     }
   }
+
+  /** Text that a table operand follows: FROM, JOIN, a set operator, or nothing. */
+  private val tableOperandRe =
+    "(?is)(?:^|\\b(?:FROM|JOIN|UNION|INTERSECT|EXCEPT|MINUS)(?:\\s+(?:ALL|DISTINCT))?)\\s*$".r
 
   private def collapseSingleRowAggs(expr: String): String =
     aggCallRe.findFirstMatchIn(mask(expr)).flatMap { m =>
@@ -464,16 +474,24 @@ object SqlCanonicalizer {
     bs.filterNot(b => bs.exists(p => p._1 < b._1 && p._2 > b._2))
   }
 
-  /** Top-level WHERE clause of `sql`: (whereKeywordStart, clauseEndExclusive). */
+  /** The text before the first top-level `|>`: the classic head of a pipe
+    * query, all of classic SQL. */
+  private def classicHead(sql: String): String = SqlScan.splitTop(sql, "|>").head
+
+  /** Top-level WHERE clause of `sql`'s classic head: (whereKeywordStart,
+    * clauseEndExclusive). */
   private def whereSpan(sql: String): Option[(Int, Int)] = {
-    val w = topLevelIndexOf(sql, "WHERE")
-    if (w < 0) None else Some((w, SqlScan.clauseEnd(sql, w + 5)))
+    val head = classicHead(sql)
+    val w = topLevelIndexOf(head, "WHERE")
+    if (w < 0) None else Some((w, SqlScan.clauseEnd(head, w + 5)))
   }
 
-  /** Top-level FROM clause text span: (textStart, textEndExclusive). */
+  /** Top-level FROM clause text span of `sql`'s classic head: (textStart,
+    * textEndExclusive). */
   private def fromSpan(sql: String): Option[(Int, Int)] = {
-    val f = topLevelIndexOf(sql, "FROM")
-    if (f < 0) None else Some((f + 4, SqlScan.clauseEnd(sql, f + 4, Seq("WHERE"))))
+    val head = classicHead(sql)
+    val f = topLevelIndexOf(head, "FROM")
+    if (f < 0) None else Some((f + 4, SqlScan.clauseEnd(head, f + 4, Seq("WHERE"))))
   }
 
   private case class FromItem(text: String, alias: String)

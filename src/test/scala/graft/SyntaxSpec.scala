@@ -113,6 +113,16 @@ class SyntaxSpec extends SparkSpec {
     finally Seq("t", "u").foreach(spark.catalog.dropTempView)
   }
 
+  test("EXISTS without FROM inside parentheses keeps the WHERE a filter") {
+    spark.sql("SELECT * FROM VALUES (1, 10), (2, 20) AS v(i, j)").createOrReplaceTempView("t")
+    try assert(GraftSql(spark, "SELECT i FROM t WHERE (EXISTS (SELECT 1, 2))").count() == 2)
+    finally spark.catalog.dropTempView("t")
+  }
+
+  test("no-FROM set-operation operands survive canonicalization") {
+    assert(GraftSql(spark, "SELECT 1 AS a UNION ALL (SELECT 2)").count() == 2)
+  }
+
   test("no-FROM derived tables survive canonicalization (latent-bug pin)") {
     assert(GraftSql(spark, "SELECT * FROM (SELECT 1) t").collect()(0).get(0) == 1)
     assert(GraftSql(spark,
