@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.ExecSubqueryExpression
 
 import scala.collection.mutable
@@ -38,14 +40,27 @@ import scala.collection.mutable
   *    re-drain RebroadcastExchangeExec.beginRefresh/awaitRefresh re-runs the FULL build
   *    (child subtree re-executed with its own shuffle outputs forgotten,
   *    rows re-collected, hash relation rebuilt, fresh TorrentBroadcast) and
-  *    swaps it in, innermost-first so a nested rebuild only observes
+  *    swaps it in, innermost-first (depth groups: a node's depth is one
+  *    more than the deepest rebroadcast in its build subtree, and groups
+  *    run in ascending depth) so a nested rebuild only observes
   *    already-refreshed inner relations. Amortized per run: plan, codegen
   *    source text, RDD object construction. Recomputed per run: every byte
   *    of data movement, every broadcast build and all operator work.
-  *    ReusedExchangeExec is fine here: the DAG is reused as-is, so a shared
-  *    shuffle recomputes once per drain and a shared broadcast resolves to
-  *    the SAME RebroadcastExchangeExec (identity-preserving rewrite) and
-  *    rebuilds once per drain — exactly the plan's intra-query reuse.
+  *    Intra-query reuse is kept: the DAG is reused as-is, so a shared
+  *    shuffle recomputes once per drain, and the rewrite follows each
+  *    ReusedExchangeExec into the exchange it shares, so every site of a
+  *    shared broadcast resolves to the SAME RebroadcastExchangeExec and it
+  *    rebuilds once per drain.
+  *
+  *    Lifetime: a broadcast generation lives exactly as long as the handle
+  *    freshRdd returned for the drain that reads it, Spark's own rule for
+  *    broadcasts. For a plan with rebroadcasts the handle is a one-parent
+  *    pass-through RDD over the cached DAG that pins the generations this
+  *    call built (the wrappers hold them only weakly); once the caller
+  *    drops it, the ContextCleaner frees their blocks, so between drains a
+  *    prepared query keeps no built relation. A drain reads the generations
+  *    of the latest call, so drain the latest handle. Plans without
+  *    broadcasts get the cached RDD itself.
   *
   *  - Fresh re-plan ([[freshExec]]) for everything else:
   *     - adaptive plans (AQE re-plans from runtime stats by design; it is
@@ -97,20 +112,23 @@ object Prepared {
 
   /** Rewrite every BroadcastExchangeExec to a RebroadcastExchangeExec,
     * preserving instance identity: ReuseExchange points its
-    * ReusedExchangeExec at the SAME exchange instance it deduplicated, so
-    * the rewrite is keyed on object identity — both sites resolve to one
-    * rebroadcast node and a shared relation still builds once per drain.
-    * `out` collects the new nodes bottom-up (children before parents), the
-    * order [[graft.Prepared.freshRdd]] refreshes them in. */
+    * ReusedExchangeExec (a leaf) at the SAME exchange instance it
+    * deduplicated, so the rewrite descends into that child and is keyed on
+    * object identity — both sites resolve to one rebroadcast node and a
+    * shared relation still builds once per drain. `out` collects the new
+    * nodes bottom-up (children before parents). */
   private def rewriteBroadcasts(
       plan: SparkPlan,
       seen: java.util.IdentityHashMap[SparkPlan, SparkPlan],
       out: mutable.ArrayBuffer[org.apache.spark.graft.RebroadcastExchangeExec]): SparkPlan = {
     val hit = seen.get(plan)
     if (hit != null) return hit
-    val withChildren =
-      if (plan.children.isEmpty) plan
-      else plan.withNewChildren(plan.children.map(rewriteBroadcasts(_, seen, out)))
+    val withChildren = plan match {
+      case r: ReusedExchangeExec =>
+        r.copy(child = rewriteBroadcasts(r.child, seen, out).asInstanceOf[Exchange])
+      case _ if plan.children.isEmpty => plan
+      case _ => plan.withNewChildren(plan.children.map(rewriteBroadcasts(_, seen, out)))
+    }
     val result = withChildren match {
       case b: BroadcastExchangeExec =>
         val r = org.apache.spark.graft.RebroadcastExchangeExec(b.mode, b.child)
@@ -122,7 +140,14 @@ object Prepared {
     result
   }
 
-  /** Group rebroadcast nodes by nesting depth, DEEPEST first. Rebuilds
+  /** True when `node` is in `plan`'s tree, looking through every
+    * ReusedExchangeExec into the exchange it shares. */
+  private def reaches(plan: SparkPlan, node: SparkPlan): Boolean = (plan eq node) || (plan match {
+    case r: ReusedExchangeExec => reaches(r.child, node)
+    case _ => plan.children.exists(reaches(_, node))
+  })
+
+  /** Group rebroadcast nodes by nesting depth, innermost first. Rebuilds
     * within one group are independent (none consumes another's wrapper),
     * so freshRdd submits a whole group's build jobs before awaiting any —
     * the same build overlap the normal execution path gets from prepare().
@@ -136,17 +161,24 @@ object Prepared {
     val depth =
       new java.util.IdentityHashMap[org.apache.spark.graft.RebroadcastExchangeExec, Int]()
     rebs.foreach { r => // rebs is bottom-up: inners precede outers
-      val inner = rebs.filter(i => (i ne r) && depth.containsKey(i) &&
-        r.child.exists(n => n eq i))
+      val inner = rebs.filter(i => (i ne r) && depth.containsKey(i) && reaches(r.child, i))
       depth.put(r, if (inner.isEmpty) 0 else inner.map(depth.get(_)).max + 1)
     }
-    rebs.groupBy(depth.get(_)).toSeq.sortBy(-_._1).map(_._2)
+    rebs.groupBy(depth.get(_)).toSeq.sortBy(_._1).map(_._2)
   }
+
+  /** The drain handle over a cached DAG: `rebs`' just-built generations
+    * pinned to a pass-through RDD, or the DAG itself when it has none. */
+  private def handle(dag: RDD[InternalRow],
+      rebs: Seq[org.apache.spark.graft.RebroadcastExchangeExec]): RDD[InternalRow] =
+    if (rebs.isEmpty) dag
+    else new Pinned(dag, rebs.flatMap(r => Option(r.claimGeneration())))
 
   /** Execute `df`'s query: a hit re-drains the cached RDD after a shuffle
     * reset and broadcast refresh; a miss builds and caches the RDD when the
     * plan is eligible, else re-plans on a fresh QueryExecution (see
-    * [[freshExec]]). The returned RDD recomputes fully when drained. */
+    * [[freshExec]]). The returned RDD recomputes fully when drained; keep it
+    * until its drain ends (it pins the broadcast relations the drain reads). */
   def freshRdd(df: DataFrame): RDD[InternalRow] = {
     val spark = df.sparkSession
     val qe = df.queryExecution
@@ -164,7 +196,7 @@ object Prepared {
         rebroadcastGroups.foreach { g =>
           g.foreach(_.beginRefresh()); g.foreach(_.awaitRefresh())
         }
-        rdd
+        handle(rdd, rebroadcastGroups.flatten)
       case None =>
         val p = qe.executedPlan
         if (rddCacheable(p)) {
@@ -179,8 +211,18 @@ object Prepared {
           val rdd = p2.execute()
           rm(key) = (rdd, org.apache.spark.graft.ShuffleReset.shuffleIds(rdd),
             depthGroups(rebroadcasts.toSeq))
-          rdd
+          handle(rdd, rebroadcasts.toSeq)
         } else freshExec(df)
     }
+  }
+
+  /** A pass-through over `dag` that keeps `generations` reachable on the
+    * driver for as long as the handle itself is. */
+  private[graft] final class Pinned(dag: RDD[InternalRow],
+      @transient val generations: Seq[Broadcast[Any]])
+      extends RDD[InternalRow](dag) {
+    override protected def getPartitions: Array[Partition] = firstParent[InternalRow].partitions
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      firstParent[InternalRow].iterator(split, context)
   }
 }

@@ -19,7 +19,9 @@ import SqlScan.{clauseEnd, closeParen, mask, splitTop, topLevelIndexOf, wordAt}
   *    `SELECT … FROM … WHERE …`, so a WHERE after a SELECT still sees the
   *    FROM clause's aliases; AGGREGATE reads that FROM scope, not a pending
   *    SELECT. A WHERE after a windowed SELECT, and a RIGHT/FULL JOIN after a
-  *    WHERE, end the scope instead: folding them would change the rows.
+  *    WHERE, end the scope instead: folding them would change the rows. So
+  *    does a WHERE or AGGREGATE that names a column alias of the pending
+  *    SELECT/EXTEND, which only the native stage can see.
   *  - `AGGREGATE … GROUP BY ROLLUP|CUBE(…)`, which Spark's pipe AGGREGATE
   *    rejects, becomes a classic grouped SELECT.
   * A classic head with its own top-level ORDER BY, LIMIT or OFFSET is
@@ -41,6 +43,13 @@ object PipeSql {
   private val groupingSetsRe = "(?is)(?:ROLLUP|CUBE)\\s*\\((.*)\\)".r
   private val overRe = "(?i)\\bOVER\\b".r
   private def windowed(sel: String): Boolean = overRe.findFirstIn(mask(sel)).isDefined
+  private val aliasRe = "(?is).*\\bAS\\s+(\\w+)\\s*".r
+
+  /** True when `stage` names a column alias (`… AS a`) of `s`'s pending select. */
+  private def namesAlias(s: Scope, stage: String): Boolean = s.select.exists { sel =>
+    val aliases = splitTop(sel, ",").flatMap(i => aliasRe.unapplySeq(mask(i)).toSeq.flatten)
+    aliases.exists(a => s"(?i)\\b$a\\b".r.findFirstIn(mask(stage)).isDefined)
+  }
 
   /** `q` in Spark's pipe grammar; classic SQL without `|>` comes back as is. */
   def translate(q: String): String = {
@@ -76,7 +85,7 @@ object PipeSql {
       val word = stage.takeWhile(_.isLetter).toUpperCase
       val rest = stage.drop(word.length).trim
       (scope, word) match {
-        case (Some(s), "WHERE") if !s.select.exists(windowed) =>
+        case (Some(s), "WHERE") if !s.select.exists(windowed) && !namesAlias(s, rest) =>
           scope = Some(s.copy(wheres = s.wheres :+ rest))
         case (Some(s), "SELECT") if s.select.isEmpty => scope = Some(s.copy(select = Some(rest)))
         case (Some(s), "EXTEND") =>
@@ -85,13 +94,14 @@ object PipeSql {
           scope = Some(s.copy(from = s"${s.from} $stage"))
         case _ =>
           val gb = topLevelIndexOf(rest, "GROUP BY")
+          val ended = scope.map(s =>
+            if (word == "AGGREGATE" && !namesAlias(s, rest)) s.copy(select = None) else s)
+          val prefix = ended.fold(out)(s => s.render(s.select.getOrElse("*")))
           out = (word, if (gb < 0) "" else rest.substring(gb + 8).trim) match {
             case ("AGGREGATE", group @ groupingSetsRe(keys)) =>
-              val src = scope.getOrElse(Scope(s"($out)"))
+              val src = ended.filter(_.select.isEmpty).getOrElse(Scope(s"($prefix)"))
               src.render(s"$keys, ${rest.take(gb).trim}") + s" GROUP BY $group"
-            case _ =>
-              val sel = if (word == "AGGREGATE") None else scope.flatMap(_.select)
-              s"${scope.fold(out)(_.render(sel.getOrElse("*")))} |> $stage"
+            case _ => s"$prefix |> $stage"
           }
           scope = None
       }

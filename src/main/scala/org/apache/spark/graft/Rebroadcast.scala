@@ -1,5 +1,7 @@
 package org.apache.spark.graft
 
+import java.io.{ObjectInputStream, ObjectOutputStream}
+import java.lang.ref.WeakReference
 import java.util.concurrent.{Future => JFuture}
 
 import scala.concurrent.{ExecutionContext, Future => SFuture}
@@ -33,20 +35,48 @@ import org.apache.spark.util.{KnownSizeEstimation, ThreadUtils, Utils}
   * re-drain. Tasks deserialize the wrapper from the task binary — which the
   * DAGScheduler re-serializes on every stage submission — so executors
   * always observe the current generation.
+  *
+  * Lifetime: on the driver the wrapper holds its generation only weakly.
+  * What keeps a generation alive is the drain handle graft.Prepared returns
+  * for the call that built it; once that handle is unreachable, Spark's
+  * ContextCleaner frees the generation's blocks, as it does for any
+  * broadcast. The task binary carries the generation strongly
+  * (writeObject/readObject), so an executor holds it while its task reads
+  * it.
   */
 class RefreshableBroadcast[T: ClassTag](first: Broadcast[T])
     extends Broadcast[T](first.id) {
-  @volatile private var cur: Broadcast[T] = first
+  @transient @volatile private var cur = new WeakReference(first)
+  /** The generation a deserialized copy (a task's) was shipped with. */
+  @transient private var shipped: Broadcast[T] = _
+
+  private def current: Broadcast[T] =
+    if (shipped != null) shipped
+    else Option(cur.get).getOrElse(throw new IllegalStateException(
+      s"broadcast $id: its current generation was released with the drain handle " +
+        "that pinned it; drain the handle of the latest graft.Prepared.freshRdd call"))
 
   private[graft] def swap(next: Broadcast[T]): Unit = {
-    val old = cur
-    cur = next
-    if (old ne next) old.destroy() // async: frees the stale generation's blocks
+    val old = cur.get
+    cur = new WeakReference(next)
+    if (old != null && (old ne next)) old.destroy() // async: frees the stale generation's blocks
   }
 
-  override protected def getValue(): T = cur.value
-  override protected def doUnpersist(blocking: Boolean): Unit = cur.unpersist(blocking)
-  override protected def doDestroy(blocking: Boolean): Unit = cur.destroy(blocking)
+  private def writeObject(out: ObjectOutputStream): Unit = {
+    out.defaultWriteObject()
+    out.writeObject(current)
+  }
+
+  private def readObject(in: ObjectInputStream): Unit = {
+    in.defaultReadObject()
+    shipped = in.readObject().asInstanceOf[Broadcast[T]]
+  }
+
+  override protected def getValue(): T = current.value
+  override protected def doUnpersist(blocking: Boolean): Unit =
+    Option(cur.get).foreach(_.unpersist(blocking))
+  override protected def doDestroy(blocking: Boolean): Unit =
+    Option(cur.get).foreach(_.destroy(blocking))
 }
 
 private[graft] object Rebroadcast {
@@ -99,6 +129,12 @@ private[graft] object Rebroadcast {
   *  - the relation is rebuilt on the driver (`mode.transform`) and shipped
   *    as a fresh TorrentBroadcast; the previous generation is destroyed.
   *
+  * Each generation built (run 1's inside `execute()`, or a refresh's) is
+  * held strongly only until the caller takes it with [[claimGeneration]];
+  * graft.Prepared pins the claimed generations to the drain handle it
+  * returns, so a generation lives exactly as long as that handle (see
+  * [[RefreshableBroadcast]]).
+  *
   * Every build enforces the stock node's limits with its errors: the row
   * cap (512M rows, ~358M for a hashed build on anything but one bigint
   * key) and `spark.sql.maxBroadcastTableSize`. Both are checked on the
@@ -110,7 +146,9 @@ private[graft] object Rebroadcast {
   * node's child subtree keeps its own wrapper, which the re-collected child
   * consumes; graft.Prepared refreshes innermost-first (depth groups,
   * overlapped within a group via [[beginRefresh]]/[[awaitRefresh]]) so an
-  * outer rebuild only ever observes already-refreshed inner relations.
+  * outer rebuild only ever observes already-refreshed inner relations. An
+  * inner generation stays unclaimed, so strongly held, while the outer
+  * rebuild reads it.
   */
 case class RebroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
     extends Exchange with BroadcastExchangeLike {
@@ -130,6 +168,7 @@ case class RebroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
 
   @transient private var wrapper: RefreshableBroadcast[Any] = _
   @transient private var pending: SFuture[Broadcast[Any]] = _
+  @transient private var unclaimed: Broadcast[Any] = _
   @transient private var lastRows: Long = 0L
   @transient private var lastBytes: Long = 0L
 
@@ -176,13 +215,25 @@ case class RebroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
         p, Duration(SQLConf.get.broadcastTimeout, "s"))
       synchronized {
         wrapper.swap(next)
+        unclaimed = next
         pending = null
       }
     }
   }
 
+  /** The generation built since the last call (null if none), handed to the
+    * caller, who keeps it alive: the wrapper itself holds it only weakly. */
+  def claimGeneration(): Broadcast[Any] = synchronized {
+    val g = unclaimed
+    unclaimed = null
+    g
+  }
+
   override def doExecuteBroadcast[T](): Broadcast[T] = synchronized {
-    if (wrapper == null) wrapper = new RefreshableBroadcast[Any](buildOnce())
+    if (wrapper == null) {
+      unclaimed = buildOnce()
+      wrapper = new RefreshableBroadcast[Any](unclaimed)
+    }
     wrapper.asInstanceOf[Broadcast[T]]
   }
 

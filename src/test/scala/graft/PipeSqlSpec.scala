@@ -88,6 +88,15 @@ class PipeSqlSpec extends SparkSpec {
     assert(rows(df.orderBy("y")) == Seq(Seq(1, 1), Seq(null, 2)))
   }
 
+  test("WHERE naming a SELECT alias runs after the SELECT") {
+    assert(run("FROM region |> SELECT r_regionkey + 1 AS b |> WHERE b > 2").count() == 3)
+  }
+
+  test("AGGREGATE naming an EXTEND alias reads the extended rows") {
+    val df = run("FROM region |> EXTEND r_regionkey * 2 AS k2 |> AGGREGATE sum(k2) AS s")
+    assert(rows(df) == Seq(Seq(20L)))
+  }
+
   test("pipe queries leave no temp view behind") {
     Seq("pipe_filter_agg", "pipe_extend_set_drop", "pipe_setop").foreach { q =>
       assert(sqlsurface.PipeSqlQueries.queries(q)(spark, sf).count() > 0, q)

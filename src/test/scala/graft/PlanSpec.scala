@@ -780,15 +780,36 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  private def rowsOf(rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(df.schema)
+    rdd.map(_.copy()).collect()
+      .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row].toString).toSeq.sorted
+  }
+  private def freshRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** The cached DAG under a drain handle: a plan with rebroadcasts gets a
+    * pass-through RDD over it that pins the call's broadcast relations. */
+  private def dagOf(rdd: org.apache.spark.rdd.RDD[_]): org.apache.spark.rdd.RDD[_] = rdd match {
+    case h: Prepared.Pinned => h.dependencies.head.rdd
+    case _ => rdd
+  }
+
+  /** The rdd tier only engages for non-adaptive plans (the engine's
+    * tiny/small regime); this shared test session has no dataDir, so pin
+    * AQE off the way Engine.create's tiny regime does. */
+  private def withoutAqe[A](body: => A): A = {
+    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
+  }
+
+  private def drain(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.foreachPartition(it => while (it.hasNext) it.next())
+
   test("Prepared rdd tier: re-drains match fresh rows; persisted and AQE plans re-plan") {
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    def rowsOf(rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-        df: DataFrame): Seq[String] = {
-      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-      rdd.map(_.copy()).collect().map(r => toRow(r).asInstanceOf[Row].toString).toSeq.sorted
-    }
-    def freshRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
     // the rdd tier only engages for non-adaptive plans (the engine's
     // tiny/small regime); this shared test session has no dataDir, so pin
     // AQE off the way Engine.create's tiny regime does
@@ -805,13 +826,15 @@ class PlanSpec extends SparkSpec {
         // call, then drain, as the prepared-statement protocol does: run 1
         // builds the RDD; runs 2-3 reset it and re-drain
         val rdds = (1 to 3).map { i =>
-          val rdd = Prepared.freshRdd(df)
-          // a repeat call before the first drain has no map outputs to reset
-          if (i == 1) assert(Prepared.freshRdd(df) eq rdd, s"$name: undrained repeat call")
+          val first = Prepared.freshRdd(df)
+          // a repeat call before the first drain has no map outputs to reset;
+          // its handle pins the relations it rebuilt, so the drain takes it
+          val rdd = if (i > 1) first else Prepared.freshRdd(df)
+          if (i == 1) assert(dagOf(rdd) eq dagOf(first), s"$name: undrained repeat call")
           assert(rowsOf(rdd, df) == expected, s"$name: drain $i rows differ from a fresh collect")
           rdd
         }
-        assert(rdds(1) eq rdds(0), s"$name did not hit the prepared-RDD tier")
+        assert(dagOf(rdds(1)) eq dagOf(rdds(0)), s"$name did not hit the prepared-RDD tier")
       }
       // a persisted subtree (InMemoryTableScan) must FALL BACK to a fresh
       // re-plan per call: a cross-run re-drain would read the materialized
@@ -887,7 +910,7 @@ class PlanSpec extends SparkSpec {
     val afterJoin1 = bacc.value.longValue
     assert(afterJoin1 > 0, "broadcast build side never ran")
     val j2 = Prepared.freshRdd(joined)
-    assert(j2 eq j1, "broadcast plan did not hit the prepared-RDD tier")
+    assert(dagOf(j2) eq dagOf(j1), "broadcast plan did not hit the prepared-RDD tier")
     val jr2 = j2.mapPartitions(it => Iterator.single(it.size.toLong)).collect().sum
     assert(jr2 == jr1, s"re-drain rows $jr2 != first drain $jr1")
     assert(bacc.value.longValue == 2 * afterJoin1,
@@ -919,6 +942,96 @@ class PlanSpec extends SparkSpec {
       spark.conf.unset("spark.sql.maxBroadcastTableSize")
       spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
       Prepared.invalidate(spark)
+    }
+  }
+
+  test("Prepared rebroadcast: a build side shared through ReusedExchangeExec rebuilds every drain") {
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.functions.{broadcast, col, sum, udf}
+    withoutAqe {
+      // both join sites read one relation; the reuse site must neither keep
+      // the relation its first drain built nor build a second one. The build
+      // side has no shuffle of its own, whose map outputs would let a second
+      // build skip the bumps
+      val acc = spark.sparkContext.longAccumulator("graft_reused_rebroadcast")
+      val bump = udf { (x: Long) => acc.add(1L); x }
+      val build = Tables.load(spark, sf, "orders")
+        .select(bump(col("o_orderkey")).as("k"), col("o_custkey").as("c"))
+      val joined = Tables.load(spark, sf, "lineitem")
+        .join(broadcast(build.as("a")), col("l_orderkey") === col("a.k"))
+        .join(broadcast(build.as("b")), col("l_partkey") === col("b.k"))
+        .agg(sum(col("a.c") + col("b.c")))
+      assert(joined.queryExecution.executedPlan.exists(_.isInstanceOf[ReusedExchangeExec]),
+        "the second build side should be a reused exchange")
+      val bumps = (1 to 3).map { _ =>
+        val before = acc.value.longValue
+        drain(Prepared.freshRdd(joined))
+        acc.value.longValue - before
+      }
+      assert(bumps.head > 0 && bumps.forall(_ == bumps.head),
+        s"build rows processed per drain: $bumps")
+    }
+  }
+
+  test("Prepared rebroadcast: an outer relation is rebuilt from the current drain's inner one") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions.{broadcast, col, max, min, udf}
+    withoutAqe {
+      // the inner build side emits the drain number; the task binary carries
+      // the counter's value at submission, i.e. at the inner rebuild
+      val drainNo = new java.util.concurrent.atomic.AtomicLong()
+      val tag = udf(() => drainNo.get)
+      val inner = Tables.load(spark, sf, "region").select(col("r_regionkey"), tag().as("v"))
+      val middle = Tables.load(spark, sf, "nation")
+        .join(broadcast(inner), col("n_regionkey") === col("r_regionkey"))
+        .select(col("n_nationkey"), col("v"))
+      val outer = Tables.load(spark, sf, "supplier")
+        .join(broadcast(middle), col("s_nationkey") === col("n_nationkey"))
+        .agg(min("v"), max("v"))
+      assert(outer.queryExecution.executedPlan.exists {
+        case b: BroadcastExchangeExec => b.child.exists(_.isInstanceOf[BroadcastExchangeExec])
+        case _ => false
+      }, "the outer build side should hold the inner broadcast")
+      for (d <- 1L to 3L) {
+        drainNo.set(d)
+        val r = Prepared.freshRdd(outer).map(_.copy()).collect().head
+        assert((r.getLong(0), r.getLong(1)) == (d, d), s"drain $d read inner generation(s) " +
+          s"${r.getLong(0)}..${r.getLong(1)}")
+      }
+    }
+  }
+
+  test("Prepared rebroadcast: broadcast plans re-drained across GCs match a fresh collect") {
+    withoutAqe {
+      for (name <- Seq("tpch_q5", "tpch_q9", "tpch_q10", "tpch_q21", "sim_cosine_topk")) {
+        val df = SparkEntry.queries(name)(spark, sf)
+        val expected = freshRows(SparkEntry.queries(name)(spark, sf))
+        for (i <- 1 to 3) {
+          System.gc()
+          assert(rowsOf(Prepared.freshRdd(df), df) == expected,
+            s"$name: drain $i rows differ from a fresh collect")
+        }
+      }
+    }
+  }
+
+  test("Prepared rebroadcast: a dropped drain handle frees its broadcast relations") {
+    withoutAqe {
+      val df = SparkEntry.queries("tpch_q5")(spark, sf)
+      // its own frame, so no stack slot outlives the handle
+      def drainedGenerations(): Seq[Long] = {
+        val h = Prepared.freshRdd(df)
+        drain(h)
+        h.asInstanceOf[Prepared.Pinned].generations.map(_.id)
+      }
+      drain(Prepared.freshRdd(df)) // run 1: builds the DAG
+      val ids = drainedGenerations()
+      val sc = spark.sparkContext
+      def held = ids.filter(id => org.apache.spark.graft.BroadcastBlocks.of(sc, id).nonEmpty)
+      assert(ids.nonEmpty && held == ids, s"drained generations $ids, blocks for $held")
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (held.nonEmpty && System.nanoTime() < deadline) { System.gc(); Thread.sleep(100) }
+      assert(held.isEmpty, s"blocks of released generations $held remain")
     }
   }
 }
