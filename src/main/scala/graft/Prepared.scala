@@ -38,9 +38,12 @@ import scala.collection.mutable
   *    org.apache.spark.graft.RebroadcastExchangeExec, whose consumer-visible
   *    Broadcast is a stable RefreshableBroadcast wrapper; before each
   *    re-drain RebroadcastExchangeExec.beginRefresh/awaitRefresh re-runs the FULL build
-  *    (child subtree re-executed with its own shuffle outputs forgotten,
-  *    rows re-collected, hash relation rebuilt, fresh TorrentBroadcast) and
-  *    swaps it in, innermost-first (depth groups: a node's depth is one
+  *    as a stock one: a fresh BroadcastExchangeExec over the cached child
+  *    (its shuffle outputs forgotten first) re-collects the rows, checks
+  *    Spark's broadcast limits, rebuilds the hash relation and ships a
+  *    fresh TorrentBroadcast on Spark's broadcast pool under the caller's
+  *    local properties. The fresh relation is swapped in innermost-first
+  *    (depth groups: a node's depth is one
   *    more than the deepest rebroadcast in its build subtree, and groups
   *    run in ascending depth) so a nested rebuild only observes
   *    already-refreshed inner relations. Amortized per run: plan, codegen

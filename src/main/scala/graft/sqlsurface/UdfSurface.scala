@@ -26,7 +26,8 @@ import scala.util.Try
   * and visible to the optimizer (constant folding, pushdown THROUGH the
   * function) and avoids shipping compiled classes to executors — the right
   * trade at cluster scale. `LANGUAGE c` bodies of the reference corpus's
-  * `return <expr>;` single-expression form are rewritten to the expression;
+  * `return <expr>;` single-expression form are rewritten to the expression
+  * when SQL reads it as C does; every other C body runs on CInterp.
   * `LANGUAGE sql` takes the expression directly.
   *
   * `LANGUAGE python` bodies run on CPython through Spark's own Python UDF
@@ -117,6 +118,15 @@ object UdfSurface {
       s"CASE WHEN $c THEN $v ELSE $els END"
     }
   }
+
+  /** A `LANGUAGE c` body as a Catalyst expression, when it has one whose
+    * SQL reading is its C reading; None sends it to CInterp. Bodies holding
+    * `/`, `|`, `&`, `?` or `'` never qualify: SQL divides fractionally,
+    * reads `||` as concatenation and `'a'` as a string, and cannot parse
+    * `&&` or `?:`. */
+  private def cMacro(body: String): Option[Expression] =
+    if (body.exists("/|&?'".contains(_))) None
+    else Try(CatalystSqlParser.parseExpression(translateCBody(body))).toOption
 
   /** The interpreter Spark itself deploys Python workers with:
     * `spark.pyspark.python`, then PYSPARK_PYTHON, then `python3`. */
@@ -226,6 +236,16 @@ object UdfSurface {
       }, source)
       name
     }
+    // the body as a Catalyst macro over the cast call-site arguments
+    def registerMacro(bodyExpr: Expression): String = {
+      val argIndex = args.map(_._1).zipWithIndex.toMap
+      register("sql_udf") { castArgs =>
+        Cast(bodyExpr.transformUp {
+          case a: UnresolvedAttribute if argIndex.contains(a.name.toLowerCase) =>
+            castArgs(argIndex(a.name.toLowerCase))
+        }, retDt)
+      }
+    }
     language.toLowerCase match {
       case "python" =>
         // the def matching the SQL function name is the entry point (the
@@ -234,25 +254,15 @@ object UdfSurface {
         val (pythonVer, command) =
           picklePython(python, name, retDt, body.stripPrefix("\n"), spark.version)
         register("python_udf")(PythonUdf(name, command, python, pythonVer, retDt).builder)
-      case "c" if Try(translateCBody(body.trim)).isFailure =>
-        // statement-shaped C (loops, mutation, blocks): interpreted per row —
-        // see CInterp. Expression-shaped bodies fall through to the Catalyst
-        // macro below (codegen'd, optimizer-visible) as before.
-        val fn = CInterp.parse(args.map(_._1), body.trim)
-        register("sql_udf")(CUdfExpression(fn, retDt, _))
-      case lang =>
-        val bodyExpr = CatalystSqlParser.parseExpression(lang match {
-          case "sql" | "scala" => body.trim
-          case "c" => translateCBody(body.trim)
-          case other => throw new IllegalArgumentException(s"unsupported UDF language: $other")
-        })
-        val argIndex = args.map(_._1).zipWithIndex.toMap
-        register("sql_udf") { castArgs =>
-          Cast(bodyExpr.transformUp {
-            case a: UnresolvedAttribute if argIndex.contains(a.name.toLowerCase) =>
-              castArgs(argIndex(a.name.toLowerCase))
-          }, retDt)
+      case "c" =>
+        cMacro(body.trim).map(registerMacro).getOrElse {
+          // statement-shaped C (loops, mutation, blocks) and C operators SQL
+          // reads differently: interpreted per row — see CInterp
+          val fn = CInterp.parse(args.map(_._1), body.trim)
+          register("sql_udf")(CUdfExpression(fn, retDt, _))
         }
+      case "sql" | "scala" => registerMacro(CatalystSqlParser.parseExpression(body.trim))
+      case other => throw new IllegalArgumentException(s"unsupported UDF language: $other")
     }
   }
 }

@@ -2,26 +2,15 @@ package org.apache.spark.graft
 
 import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.lang.ref.WeakReference
-import java.util.concurrent.{Future => JFuture}
 
-import scala.concurrent.{ExecutionContext, Future => SFuture}
-import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 
-import org.apache.spark.SparkException
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastMode, BroadcastPartitioning, Partitioning}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, BroadcastExchangeLike, Exchange}
-import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.LongType
-import org.apache.spark.unsafe.map.BytesToBytesMap
-import org.apache.spark.util.{KnownSizeEstimation, ThreadUtils, Utils}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 
 /** A stable [[Broadcast]] handle over a swappable current generation.
   *
@@ -79,35 +68,6 @@ class RefreshableBroadcast[T: ClassTag](first: Broadcast[T])
     Option(cur.get).foreach(_.destroy(blocking))
 }
 
-private[graft] object Rebroadcast {
-  /** Build pool for overlapped rebuilds (the analog of
-    * BroadcastExchangeExec.executionContext). */
-  lazy val ec: ExecutionContext = ExecutionContext.fromExecutorService(
-    ThreadUtils.newDaemonCachedThreadPool("graft-rebroadcast", 32))
-
-  /** BroadcastExchangeExec's build limits, with its errors. A hashed build
-    * on anything but one bigint key is an UnsafeHashedRelation, capped by
-    * BytesToBytesMap's capacity at its 70% load factor. */
-  def checkLimits(mode: BroadcastMode, rows: Long, bytes: Long): Unit = {
-    val maxRows = mode match {
-      case HashedRelationBroadcastMode(key, _)
-          if !(key.length == 1 && key.head.dataType == LongType) =>
-        (BytesToBytesMap.MAX_CAPACITY / 1.5).toLong
-      case _ => 512000000L
-    }
-    // QueryExecutionErrors is private to the sql package: these are its
-    // cannotBroadcastTableOverMaxTable{Rows,Bytes}Error, verbatim
-    if (rows >= maxRows)
-      throw new SparkException("_LEGACY_ERROR_TEMP_2248", Map(
-        "maxBroadcastTableRows" -> maxRows.toString, "numRows" -> rows.toString), null)
-    val maxBytes = SQLConf.get.maxBroadcastTableSizeInBytes
-    if (bytes >= maxBytes)
-      throw new SparkException("_LEGACY_ERROR_TEMP_2249", Map(
-        "maxBroadcastTableBytes" -> Utils.bytesToString(maxBytes),
-        "dataSize" -> Utils.bytesToString(bytes)), null)
-  }
-}
-
 /** A broadcast exchange whose built relation is honestly REBUILT per drain.
   *
   * The prepared-RDD tier (graft.Prepared) caches a built RDD DAG and forces
@@ -117,30 +77,27 @@ private[graft] object Rebroadcast {
   * object into codegen references — re-drains would reuse the built hash
   * table. This node is the broadcast analog of the shuffle reset: the
   * consumer captures a [[RefreshableBroadcast]] wrapper once, and
-  * [[beginRefresh]] re-runs the full build, then [[awaitRefresh]] swaps the fresh relation in.
+  * [[beginRefresh]] re-runs the full build, then [[awaitRefresh]] swaps the
+  * fresh relation in.
   *
-  * Per rebuild (run 1 and every refresh alike):
-  *  - the child subtree's own shuffle map outputs are forgotten first
-  *    (ShuffleExchangeExec memoizes its ShuffledRowRDD, so without the
-  *    reset a rebuild would skip the build side's map stages);
-  *  - the rows are re-collected from the child's CACHED RDD DAG (built
-  *    once, like the main DAG — what is amortized here is codegen source
-  *    text and RDD construction, never data movement);
-  *  - the relation is rebuilt on the driver (`mode.transform`) and shipped
-  *    as a fresh TorrentBroadcast; the previous generation is destroyed.
+  * Every generation (run 1's and every refresh's) is a stock build: a fresh
+  * `BroadcastExchangeExec(mode, child)` whose relationFuture collects the
+  * child, applies the stock row and byte limits with their errors, builds
+  * the relation (`mode.transform`) and ships it as a fresh TorrentBroadcast
+  * on Spark's broadcast pool, with the calling thread's local properties
+  * and session captured and a job tag for cancellation; `executeBroadcast`
+  * brings the stock timeout. The copy is dropped once its relation is
+  * taken: its relationFuture would otherwise pin that generation. Before a
+  * refresh the child subtree's own shuffle map outputs are forgotten
+  * (`execute()` and ShuffleExchangeExec's dependency are memoized, so the
+  * copy re-reads the child's CACHED RDD DAG and would otherwise skip the
+  * build side's map stages). What is amortized is codegen source text and
+  * RDD construction, never data movement.
   *
-  * Each generation built (run 1's inside `execute()`, or a refresh's) is
-  * held strongly only until the caller takes it with [[claimGeneration]];
-  * graft.Prepared pins the claimed generations to the drain handle it
-  * returns, so a generation lives exactly as long as that handle (see
-  * [[RefreshableBroadcast]]).
-  *
-  * Every build enforces the stock node's limits with its errors: the row
-  * cap (512M rows, ~358M for a hashed build on anything but one bigint
-  * key) and `spark.sql.maxBroadcastTableSize`. Both are checked on the
-  * collected rows, before `mode.transform` builds the relation, so an
-  * oversized build side fails before its hash table is built (the stock
-  * node sizes the built relation instead of the rows).
+  * Each generation built is held strongly only until the caller takes it
+  * with [[claimGeneration]]; graft.Prepared pins the claimed generations to
+  * the drain handle it returns, so a generation lives exactly as long as
+  * that handle (see [[RefreshableBroadcast]]).
   *
   * Nested broadcasts compose: an inner RebroadcastExchangeExec inside this
   * node's child subtree keeps its own wrapper, which the re-collected child
@@ -150,74 +107,39 @@ private[graft] object Rebroadcast {
   * inner generation stays unclaimed, so strongly held, while the outer
   * rebuild reads it.
   */
-case class RebroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
-    extends Exchange with BroadcastExchangeLike {
+case class RebroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan) extends Exchange {
 
   override def outputPartitioning: Partitioning = BroadcastPartitioning(mode)
 
-  /** The child's RDD DAG, built once; rows copied out of codegen's reused
-    * UnsafeRow buffers before they cross the collect boundary. */
-  @transient private lazy val collectRdd: RDD[InternalRow] =
-    child.execute().mapPartitions(it => it.map(_.copy()))
-
-  /** Shuffles feeding the child subtree. Stable across rebuilds:
-    * ShuffleExchangeExec's ShuffleDependency is a memoized lazy val, which
-    * is exactly why they must be forgotten per rebuild. */
+  /** Shuffles feeding the child subtree, read off its memoized RDD DAG. */
   @transient private lazy val childShuffleIds: Seq[Int] =
-    ShuffleReset.shuffleIds(collectRdd)
+    ShuffleReset.shuffleIds(child.execute())
 
   @transient private var wrapper: RefreshableBroadcast[Any] = _
-  @transient private var pending: SFuture[Broadcast[Any]] = _
+  @transient private var pending: BroadcastExchangeExec = _
   @transient private var unclaimed: Broadcast[Any] = _
-  @transient private var lastRows: Long = 0L
-  @transient private var lastBytes: Long = 0L
-
-  /** One full honest build: collect job over the child DAG, driver-side
-    * relation build, fresh TorrentBroadcast. */
-  private def buildOnce(): Broadcast[Any] = {
-    val rows = collectRdd.collect()
-    val rowBytes = rows.iterator.map {
-      case u: UnsafeRow => u.getSizeInBytes.toLong
-      case _ => 64L
-    }.sum
-    Rebroadcast.checkLimits(mode, rows.length.toLong, rowBytes)
-    val relation = mode.transform(rows)
-    synchronized {
-      lastRows = rows.length.toLong
-      lastBytes = relation match {
-        case h: KnownSizeEstimation => h.estimatedSize // HashedRelation
-        case _ => rowBytes
-      }
-    }
-    session.sparkContext.broadcastInternal(relation, serializedOnly = true)
-      .asInstanceOf[Broadcast[Any]]
-  }
 
   /** First half of a refresh: forget the child subtree's shuffle outputs
-    * and submit the rebuild asynchronously, so graft.Prepared can overlap
-    * all rebuilds of one nesting-depth group — the same overlap the normal
-    * execution path gets from prepare(). No-op until a consumer has
-    * captured the wrapper (run 1 builds through [[doExecuteBroadcast]]). */
+    * and start a stock build, so graft.Prepared can overlap all rebuilds of
+    * one nesting-depth group — the same overlap the normal execution path
+    * gets from prepare(). No-op until a consumer has captured the wrapper
+    * (run 1 builds through [[doExecuteBroadcast]]). */
   def beginRefresh(): Unit = synchronized {
     if (wrapper != null) {
       if (childShuffleIds.nonEmpty)
         ShuffleReset.forgetMapOutputs(session.sparkContext, childShuffleIds)
-      pending = SFuture(buildOnce())(Rebroadcast.ec)
+      pending = BroadcastExchangeExec(mode, child)
+      pending.relationFuture // starts the build
     }
   }
 
   /** Second half: await the rebuild and swap the fresh relation into the
     * stable wrapper (destroying the old generation). */
   def awaitRefresh(): Unit = {
-    val p = synchronized(pending)
+    val p = synchronized { val p = pending; pending = null; p }
     if (p != null) {
-      val next = ThreadUtils.awaitResult(
-        p, Duration(SQLConf.get.broadcastTimeout, "s"))
-      synchronized {
-        wrapper.swap(next)
-        unclaimed = next
-        pending = null
-      }
+      val next = p.executeBroadcast[Any]()
+      synchronized { wrapper.swap(next); unclaimed = next }
     }
   }
 
@@ -231,21 +153,10 @@ case class RebroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
 
   override def doExecuteBroadcast[T](): Broadcast[T] = synchronized {
     if (wrapper == null) {
-      unclaimed = buildOnce()
+      unclaimed = BroadcastExchangeExec(mode, child).executeBroadcast[Any]()
       wrapper = new RefreshableBroadcast[Any](unclaimed)
     }
     wrapper.asInstanceOf[Broadcast[T]]
-  }
-
-  // BroadcastExchangeLike surface — non-AQE plans (the only ones the rdd
-  // tier admits) consume broadcasts solely through doExecuteBroadcast, but
-  // keep these truthful for any other caller.
-  override def relationFuture: JFuture[Broadcast[Any]] =
-    java.util.concurrent.CompletableFuture.completedFuture(doExecuteBroadcast[Any]())
-  override def completionFuture: SFuture[Broadcast[Any]] =
-    SFuture.successful(doExecuteBroadcast[Any]())
-  override def runtimeStatistics: Statistics = synchronized {
-    Statistics(sizeInBytes = BigInt(lastBytes), rowCount = Some(BigInt(lastRows)))
   }
 
   override protected def doExecute(): RDD[InternalRow] =

@@ -144,6 +144,31 @@ class CUdfSpec extends SparkSpec {
     assert(plan.contains("42"), s"macro not folded: $plan")
   }
 
+  test("ternary: `?:` is C's conditional, not a parse error") {
+    define("CREATE OR REPLACE FUNCTION c_pos(x int) RETURNS int LANGUAGE c AS $$ return x > 0 ? 1 : 0; $$")
+    assert(spark.sql("SELECT c_pos(5) AS a, c_pos(-2) AS b").collect().head.toSeq == Seq(1, 0))
+  }
+
+  test("logical and: `&&` yields C's 0/1, not a parse error") {
+    define("CREATE OR REPLACE FUNCTION c_both(a int, b int) RETURNS int LANGUAGE c AS $$ return a > 0 && b > 0; $$")
+    assert(spark.sql("SELECT c_both(1, 2) AS a, c_both(1, -1) AS b").collect().head.toSeq == Seq(1, 0))
+  }
+
+  test("logical or: `||` yields C's 0/1, not a string concatenation") {
+    define("CREATE OR REPLACE FUNCTION c_either(a int, b int) RETURNS int LANGUAGE c AS $$ return a || b; $$")
+    assert(spark.sql("SELECT c_either(2, 3) AS a, c_either(0, 0) AS b").collect().head.toSeq == Seq(1, 0))
+  }
+
+  test("int division in an expression body truncates before the double return") {
+    define("CREATE OR REPLACE FUNCTION c_mid(a int, b int) RETURNS double LANGUAGE c AS $$ return (a + b) / 2; $$")
+    assert(spark.sql("SELECT c_mid(1, 2) AS v").collect().head.getDouble(0) == 1.0)
+  }
+
+  test("char literal: 'a' is the int 97, not a string") {
+    define("CREATE OR REPLACE FUNCTION c_isa(x int) RETURNS boolean LANGUAGE c AS $$ return x == 'a'; $$")
+    assert(spark.sql("SELECT c_isa(97) AS a, c_isa(98) AS b").collect().head.toSeq == Seq(true, false))
+  }
+
   // ---------------------------------------------- round 10: arrays + strings
 
   private def sqlStr(q: String): String = spark.sql(q).collect().head.getString(0)

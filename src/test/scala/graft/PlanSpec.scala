@@ -1034,4 +1034,47 @@ class PlanSpec extends SparkSpec {
       assert(held.isEmpty, s"blocks of released generations $held remain")
     }
   }
+
+  test("Prepared rebroadcast: rebuild jobs carry the caller's local properties") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    withoutAqe {
+      val df = SparkEntry.queries("tpch_q5")(spark, sf)
+      val sc = spark.sparkContext
+      val key = "graft.test.drain"
+      // every job's value for `key`, in start order; the listener bus
+      // delivers in order, so the sentinel job's start flushes the rest
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val sentinel = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+            case Some("sentinel") => sentinel.countDown()
+            case Some(v) => seen.add(v)
+            case None => ()
+          }
+      }
+      Prepared.invalidate(spark)
+      sc.addSparkListener(listener)
+      // drain 1 builds the DAG and run-1 relations, drains 2-10 rebuild them:
+      // more rebuilds than a 32-thread cached pool starts threads for, so a
+      // reused pool thread that kept the properties it was created with
+      // shows up as a job under an earlier drain's value
+      val drains = 1 to 10
+      try {
+        for (d <- drains) {
+          sc.setLocalProperty(key, s"$d")
+          try drain(Prepared.freshRdd(df)) finally sc.setLocalProperty(key, null)
+        }
+        sc.setLocalProperty(key, "sentinel")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+        assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      } finally sc.removeSparkListener(listener)
+      val values = seen.toArray(Array.empty[String]).toSeq.map(_.toInt)
+      val perDrain = drains.map(d => values.count(_ == d))
+      // each refresh: one job per broadcast rebuild plus the drain's own job,
+      // all started in drain order and each under the value set for its drain
+      assert(values == values.sorted && perDrain(1) >= 2 && perDrain.tail.forall(_ == perDrain(1)),
+        s"jobs per drain $perDrain, values in start order $values")
+    }
+  }
 }

@@ -3,7 +3,8 @@
 # sbt server lock so long-running data generation / bench jobs can overlap
 # with compilation). Usage: tools/run_main.sh graft.Bench [args...]
 #
-# Heap policy (GRAFT_HEAP to override, default 24g): FIXED size (-Xms=-Xmx)
+# Heap policy (GRAFT_HEAP to override; default half of MemTotal, clamped to
+# 2-8g, as the test JVM's SPARK_DRIVER_MEM is sized): FIXED size (-Xms=-Xmx)
 # and -XX:+AlwaysPreTouch. This VM's memory is lazily backed by the host:
 # first-touch of fresh pages runs at ~0.2-1 GB/s in multi-second stalls
 # (measured: touching 5 GB chunks took 5-28 s, re-paid by every new
@@ -16,7 +17,7 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
-HEAP="${GRAFT_HEAP:-24g}"
+HEAP="${GRAFT_HEAP:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 exec java -Xms$HEAP -Xmx$HEAP -XX:+AlwaysPreTouch \
   -XX:+UseG1GC -XX:+ExplicitGCInvokesConcurrent \
   --add-exports=java.base/sun.nio.ch=ALL-UNNAMED \
