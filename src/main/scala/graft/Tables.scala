@@ -4,6 +4,7 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import graft.util.ParquetMeta
 
 /** Parquet-backed table loader over a scale-factor directory.
   *
@@ -31,10 +32,9 @@ object Tables {
 
   /** Session-scoped catalog cache: (dir, table) → loaded DataFrame.
     *
-    * `spark.read.parquet` pays a directory listing plus a schema-inference
-    * Spark job (a footer read) on EVERY call — measured ~68 ms per table at
-    * sf0.1, so a 6-table query spent ~0.4 s re-deriving schemas it already
-    * knew (stage timeline, PERF_r10 §2). A real engine resolves tables
+    * Opening a table pays a directory listing, a footer read in the driver
+    * ([[ParquetMeta.read]]: no schema-inference Spark job) and the analysis
+    * of a new relation on every call. A real engine resolves tables
     * against a persistent catalog (the reference keeps Arrow-table metadata
     * in src/catalog/Catalog.cpp; DuckDB likewise never re-reads footers per
     * query), so caching the resolved LogicalRelation is the Spark-native
@@ -75,7 +75,7 @@ object Tables {
     sessionCache(spark).computeIfAbsent((dir, name), { _ =>
       normalizeTs(bucketSpec(dir, name) match {
         case Some((key, n)) => bucketed(spark, dir, name, key, n)
-        case None => spark.read.parquet(s"$dir/$name.parquet")
+        case None => ParquetMeta.read(spark, s"$dir/$name.parquet")
       })
     })
 
@@ -92,7 +92,7 @@ object Tables {
     * optimizer makes between a clustered index scan and a heap scan. */
   def loadScan(spark: SparkSession, dir: String, name: String): DataFrame =
     sessionCache(spark).computeIfAbsent((dir, name + "#scan"), { _ =>
-      normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+      normalizeTs(ParquetMeta.read(spark, s"$dir/$name.parquet"))
     })
 
   /** The driver's `events.ts` has shipped as TIMESTAMP(NANOS) (read as raw
@@ -122,7 +122,7 @@ object Tables {
     val tbl = s"graft_bkt_${name}_${Integer.toHexString(dir.hashCode)}"
     if (!spark.catalog.tableExists(tbl)) {
       val path = s"$dir/_bucketed/$name"
-      val ddl = spark.read.parquet(path).schema.toDDL
+      val ddl = ParquetMeta.schema(spark, path).toDDL
       spark.sql(
         s"CREATE TABLE IF NOT EXISTS $tbl ($ddl) USING parquet " +
           s"CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS " +

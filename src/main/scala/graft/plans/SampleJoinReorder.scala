@@ -23,9 +23,10 @@ import graft.util.PlanningSamples.Sample
   *
   * Mechanics: [[graft.util.PlanningSamples]] stores a ~2k-row uniform
   * sample per table plus its true row count, and loads each table's sample
-  * into driver memory once per JVM (one Spark job per table — the one
-  * deliberately driver-sized object, like the reference's Arrow sample
-  * blocks). At optimize time this rule flattens each maximal inner-join
+  * into driver memory once per JVM, read in the driver from the sample's
+  * parquet footer and rows with no Spark job ([[graft.util.ParquetMeta]]):
+  * the one deliberately driver-sized object, like the reference's Arrow
+  * sample blocks. At optimize time this rule flattens each maximal inner-join
   * tree and estimates every leaf as plain functions over those rows, with
   * no Spark job: base rows from the stored count, filter selectivity by
   * evaluating the leaf's pushed-down filter with Catalyst's interpreted
@@ -50,7 +51,8 @@ import graft.util.PlanningSamples.Sample
   * broadcast conversion; with the hint the static plan never exchanges it).
   *
   * Gated by `spark.graft.sampleReorder.enabled` (Engine turns it on for
-  * generator-scale sessions, off under a dataDir — see Engine.create) and
+  * generator-scale sessions, off under a dataDir — see Engine.create; a
+  * value that is not a boolean leaves it off, the unset default) and
   * conservative: it only fires when EVERY leaf of the join tree maps to a
   * sampled table, the joins are plain hint-free inner joins, and
   * predicates are deterministic and subquery-free. PlanSpec holds the
@@ -61,7 +63,8 @@ case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
   import SampleJoinReorder._
 
   private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.sampleReorder.enabled").exists(_.toBoolean)
+    spark.conf.getOption("spark.graft.sampleReorder.enabled").flatMap(_.toBooleanOption)
+      .getOrElse(false)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled) plan

@@ -30,7 +30,7 @@ object TpchGolden {
 
   def register(spark: SparkSession, dir: String): Unit =
     tables.foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
+      graft.util.ParquetMeta.read(spark, s"$dir/$t.parquet").createOrReplaceTempView(t)
     }
 
   private def rstrip(s: String): String = s.replaceAll("\\s+$", "")

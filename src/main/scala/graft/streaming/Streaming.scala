@@ -27,7 +27,7 @@ object Streaming {
     // revisions), then normalize ts to ns-since-epoch longs exactly like the
     // batch path. Glob form: the source needs a directory or pattern, not a
     // bare file path.
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.util.ParquetMeta.schema(spark, s"$dir/events.parquet")
     graft.Tables.normalizeTs(
       spark.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
   }

@@ -49,12 +49,13 @@ object PlanningSamples {
     names.filterNot { n =>
       new java.io.File(s"$dir/_samples/$n.parquet").isDirectory &&
         new java.io.File(s"$dir/_samples/$n.count").isFile
-    }.foreach(n => write(dir, n, spark.read.parquet(s"$dir/$n")))
+    }.foreach(n => write(dir, n, ParquetMeta.read(spark, s"$dir/$n")))
 
   /** The sample of the table stored at `tableRoot` (a relation root path,
-    * `file:` prefix allowed), read once per JVM by one Spark job on
-    * `spark`; None when the table has no sample or its count file does
-    * not hold a row count. */
+    * `file:` prefix allowed), read once per JVM in the driver
+    * ([[ParquetMeta]]: the footer's schema and the rows, no Spark job);
+    * None when the table has no sample or its count file does not hold a
+    * row count. */
   def of(spark: SparkSession, tableRoot: String): Option[Sample] = {
     val f = new java.io.File(tableRoot.stripPrefix("file:"))
     val (dir, name) =
@@ -63,38 +64,17 @@ object PlanningSamples {
       else (f.getParent, f.getName.stripSuffix(".parquet"))
     val path = s"$dir/_samples/$name.parquet"
     val countFile = new java.io.File(s"$dir/_samples/$name.count")
-    Option(loaded.get(path)).orElse {
+    Option(loaded.computeIfAbsent(path, { _ =>
       val count =
         if (!new java.io.File(path).isDirectory || !countFile.isFile) None
         else {
           val src = scala.io.Source.fromFile(countFile)
           try scala.util.Try(src.mkString.trim.toLong).toOption finally src.close()
         }
-      // loaded outside the map's compute lock: the read plans a query,
-      // which re-enters the optimizer
       count.map { n =>
-        val (schema, rows) = withActive(spark) {
-          val df = spark.read.parquet(path)
-          (df.schema, df.queryExecution.executedPlan.executeCollect())
-        }
-        val fresh = Sample(path, schema, rows, n)
-        Option(loaded.putIfAbsent(path, fresh)).getOrElse(fresh)
-      }
-    }
-  }
-
-  /** Runs `f` with `spark` as the thread's active session. The optimizer
-    * can be reached through a bare `queryExecution.optimizedPlan` access
-    * (no action), where the active-session thread-local is unset — the
-    * sample read then builds physical plan nodes that capture a NULL
-    * session and NPE at first metric access. */
-  private def withActive[T](spark: SparkSession)(f: => T): T = {
-    val prev = SparkSession.getActiveSession
-    SparkSession.setActiveSession(spark)
-    try f
-    finally prev match {
-      case Some(s) => SparkSession.setActiveSession(s)
-      case None => SparkSession.clearActiveSession()
-    }
+        val schema = ParquetMeta.schema(spark, path)
+        Sample(path, schema, ParquetMeta.rows(spark, path, schema), n)
+      }.orNull
+    }))
   }
 }

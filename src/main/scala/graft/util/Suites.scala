@@ -64,7 +64,7 @@ object Suites {
           }
           tables.foreach { case (name, _) =>
             if (analyzed) CatalogStats.registerAnalyzed(spark, prefix + name, s"$dataDir/$name")
-            else spark.read.parquet(s"$dataDir/$name").createOrReplaceTempView(prefix + name)
+            else ParquetMeta.read(spark, s"$dataDir/$name").createOrReplaceTempView(prefix + name)
           }
           // mark only after the views exist: a transient generation failure
           // must retry on the next query, not poison the whole session

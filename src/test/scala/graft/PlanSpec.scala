@@ -214,13 +214,10 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("sample selectivity: complex-predicate join order flips with the rule ON, not OFF") {
-    // The reference evaluates predicates on stored samples before join
-    // ordering (QueryGraph.cpp:264-294); Catalyst's CBO histogram path
-    // (previous test) cannot see through a correlated two-column predicate.
-    // plans.SampleJoinReorder evaluates the pushed-down filter on the
-    // ScaleUp-persisted sample and moves the filtered table first.
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+  /** A three-table join over sampled tables whose best order only the
+    * samples reveal (see the flip test below); the query is built fresh per
+    * call. */
+  private def flipQuery(): () => org.apache.spark.sql.DataFrame = {
     val dir = "/tmp/graft_test_samples"
     import spark.implicits._
     def save(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
@@ -234,7 +231,7 @@ class PlanSpec extends SparkSpec {
       .toDF("dim_big_k", "dim_big_v", "dim_big_w", "dim_big_u"))
     save("s_dim_mid", (0 until 800)
       .map(i => (i.toLong, (i % 50).toLong)).toDF("dim_mid_k", "dim_mid_v"))
-    def q(): org.apache.spark.sql.DataFrame = {
+    () => {
       import org.apache.spark.sql.functions.col
       val fact = spark.read.parquet(s"$dir/s_fact.parquet")
       // correlated complex predicate on NON-join columns (a join-column
@@ -247,12 +244,24 @@ class PlanSpec extends SparkSpec {
       fact.join(big, col("fact_v") === col("dim_big_k"))
         .join(mid, col("dim_big_v") === col("dim_mid_k"))
     }
-    def leafOrder(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.queryExecution.optimizedPlan.collect {
-        case l: LogicalRelation => l.relation match {
-          case fs: HadoopFsRelation => fs.location.rootPaths.head.getName
-        }
+  }
+
+  private def leafOrder(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.head.getName
       }
+    }
+  }
+
+  test("sample selectivity: complex-predicate join order flips with the rule ON, not OFF") {
+    // The reference evaluates predicates on stored samples before join
+    // ordering (QueryGraph.cpp:264-294); Catalyst's CBO histogram path
+    // (previous test) cannot see through a correlated two-column predicate.
+    // plans.SampleJoinReorder evaluates the pushed-down filter on the
+    // ScaleUp-persisted sample and moves the filtered table first.
+    val q = flipQuery()
     spark.conf.set("spark.graft.sampleReorder.enabled", "false") // session default is ON (no-dataDir)
     val off = leafOrder(q())
     val offRows = q().collect().map(_.toString).sorted.toSeq
@@ -264,6 +273,25 @@ class PlanSpec extends SparkSpec {
       assert(on.head == "s_dim_big.parquet",
         s"the sampled ~1% filtered table must lead the join order, got $on")
       assert(onRows == offRows, "reordering must not change results")
+    } finally spark.conf.unset("spark.graft.sampleReorder.enabled")
+  }
+
+  test("sample reorder: a spark.graft.sampleReorder.enabled that is not a boolean leaves the rule off") {
+    // a bad conf value falls back to the unset default (off) instead of
+    // throwing inside the optimizer and failing every query
+    val q = flipQuery()
+    def plan(v: String): String = {
+      spark.conf.set("spark.graft.sampleReorder.enabled", v)
+      q().queryExecution.optimizedPlan.toString.replaceAll("#\\d+L?", "#N")
+    }
+    try {
+      val off = plan("false")
+      val offRows = q().collect().map(_.toString).sorted.toSeq
+      assert(plan("true") != off, "fixture broken: the rule must change this plan when on")
+      for (bad <- Seq("yes", "")) {
+        assert(plan(bad) == off, s"value '$bad' must plan as with the rule off")
+        assert(q().collect().map(_.toString).sorted.toSeq == offRows, s"rows under '$bad'")
+      }
     } finally spark.conf.unset("spark.graft.sampleReorder.enabled")
   }
 
@@ -432,7 +460,8 @@ class PlanSpec extends SparkSpec {
   test("sample estimates run no Spark job once a table's sample is loaded") {
     // The reference evaluates predicates on in-memory Arrow samples
     // (QueryGraph.cpp:264-294); SampleJoinReorder does the same over the
-    // rows PlanningSamples loads once per JVM. Planning a second query over
+    // rows PlanningSamples loads once per JVM. Planning the first query,
+    // which loads the three samples in the driver, and a second query over
     // the same tables, with new predicates and new join columns, must not
     // start a single Spark job — and each in-memory selectivity must equal
     // the Spark filter's own count over the sample.
@@ -465,31 +494,17 @@ class PlanSpec extends SparkSpec {
       .join(read("nj_dim").filter(col("d_n") > 4 && col("d_s").like("%x1")),
         col("f_b") === col("d_b"))
       .join(read("nj_side").filter(col("s_t").isin("tag2", "tag5")), col("f_b") === col("s_b"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.test.sentinel") != null)
-          sentinel.countDown()
-        else jobs.incrementAndGet()
-    }
     spark.conf.set("spark.graft.sampleReorder.enabled", "true")
     try {
-      q1().queryExecution.optimizedPlan // loads the three samples
-      val df2 = q2() // built (schema resolved) before counting starts
-      spark.sparkContext.addSparkListener(listener)
-      val plan2 = try df2.queryExecution.optimizedPlan finally {
-        // the listener bus delivers in order: once the sentinel job's start
-        // arrives, every job started while planning has been counted
-        spark.sparkContext.setLocalProperty("graft.test.sentinel", "1")
-        try spark.sparkContext.parallelize(Seq(1), 1).count()
-        finally spark.sparkContext.setLocalProperty("graft.test.sentinel", null)
-        assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      assert(plan2.collect { case j: Join => j.hint }.exists(_ != JoinHint.NONE),
-        s"the rule must have estimated q2 (it hints the small sides):\n$plan2")
-      assert(jobs.get == 0, s"planning q2 started ${jobs.get} Spark job(s)")
+      // both built (schema resolved) before counting starts
+      val (df1, df2) = (q1(), q2())
+      val (plan1, firstJobs) = jobsDuring(df1.queryExecution.optimizedPlan) // loads the samples
+      val (plan2, jobs) = jobsDuring(df2.queryExecution.optimizedPlan)
+      for ((plan, q) <- Seq(plan1 -> "q1", plan2 -> "q2"))
+        assert(plan.collect { case j: Join => j.hint }.exists(_ != JoinHint.NONE),
+          s"the rule must have estimated $q (it hints the small sides):\n$plan")
+      assert(firstJobs == 0, s"planning q1 (first sample load) started $firstJobs Spark job(s)")
+      assert(jobs == 0, s"planning q2 started $jobs Spark job(s)")
       // pinned: in-memory selectivity == Spark's filter count over the sample
       val sample = PlanningSamples.of(spark, s"$dir/nj_dim.parquet").get
       val frame = spark.read.parquet(sample.path)
