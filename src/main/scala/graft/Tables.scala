@@ -148,9 +148,9 @@ object Tables {
     * re-deserialized per task — HitProbe r11 measured that broadcast path
     * at 0.06–0.18 s per run across the seven broadcast-bearing headline
     * queries, several times the actual fact-side work at these sizes.
-    * Keeping the plan broadcast-free also makes it eligible for the
-    * prepared-RDD execution tier (Prepared.scala), which amortizes
-    * whole-stage-codegen source generation across runs. */
+    * Both shapes run on the prepared-RDD tier (Prepared.scala): a
+    * broadcast plan rebuilds its relations before each re-drain, which is
+    * exactly the per-run driver cost the hint avoids. */
   def dim(df: DataFrame): DataFrame =
     if (Engine.smallRegime(df.sparkSession.sessionState.conf)) df.hint("shuffle_hash")
     else org.apache.spark.sql.functions.broadcast(df)

@@ -2,6 +2,7 @@ package graft.clickbench
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sqlsurface.SqlScan.{splitTop, topLevelIndexOf}
 import graft.util.Suites
 
 /** ClickBench surface: the reference's 43 query texts
@@ -25,46 +26,9 @@ object Clickbench {
 
   val qnames: Seq[String] = (1 to 43).map(_.toString)
 
-  def loadQuery(qn: String): String =
-    graft.util.SqlResources.loadQuery("clickbench", s"$qn.sql", "GRAFT_CB_SQL")
+  def loadQuery(qn: String): String = graft.util.SqlResources.loadQuery("clickbench", qn)
 
   // --------------------------------------------------------- canonicalization
-
-  private def topLevelIndexOf(text: String, word: String): Int = {
-    var d = 0; var inStr = false
-    val up = text.toUpperCase
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-          if (d == 0 && up.regionMatches(i, word, 0, word.length) &&
-            (i == 0 || !text.charAt(i - 1).isLetterOrDigit && text.charAt(i - 1) != '_') &&
-            (i + word.length >= text.length || !text.charAt(i + word.length).isLetterOrDigit))
-            return i
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def splitTopCommas(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0; var inStr = false
-    for (i <- s.indices) s.charAt(i) match {
-      case '\'' => inStr = !inStr
-      case '(' if !inStr => depth += 1
-      case ')' if !inStr => depth -= 1
-      case ',' if !inStr && depth == 0 => out += s.substring(start, i); start = i + 1
-      case _ =>
-    }
-    out += s.substring(start)
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
 
   /** Append a refining total-order tiebreak to ORDER BY ... LIMIT queries
     * (identically on both engines — see class doc). */
@@ -81,7 +45,7 @@ object Clickbench {
           case Nil => gText.length
           case xs => xs.min
         }
-        splitTopCommas(gText.substring(byAt + 2, end))
+        splitTop(gText.substring(byAt + 2, end), ",").map(_.trim).filter(_.nonEmpty)
       } else Seq("WatchID")
     val oAt = topLevelIndexOf(sql, "ORDER")
     if (oAt >= 0) {
@@ -100,11 +64,10 @@ object Clickbench {
   private def sparkRegexFix(sql: String): String =
     sql.replace("'\\1'", "'$1'")
 
-  private def sparkSql(sql: String): String =
-    sparkRegexFix(detOrder(sql)).replaceAll("(?i)\\bhits\\b", "cb_hits")
+  private def sparkSql(sql: String): String = sparkRegexFix(duckSql(sql))
 
   private def duckSql(sql: String): String =
-    detOrder(sql).replaceAll("(?i)\\bhits\\b", "cb_hits")
+    Suites.renameTables(detOrder(sql), Set("hits"), "cb_", members = true)
 
   // ------------------------------------------------------------ registration
 

@@ -50,9 +50,9 @@ object Dedup {
   /** Tiny/small-regime shuffle-hash hint for joins whose both sides are
     * corpus-scale (e.g. the shared-shingle self-join): per-partition hash
     * build of a KB–MB side beats both the planner's estimate-driven
-    * BROADCAST (a driver collect + a BroadcastExchange that disqualifies
-    * the plan from the prepared-RDD tier, so codegen re-runs per
-    * execution) and a sort-merge's per-consumption sorts. At scale the
+    * BROADCAST (a driver collect, and on the prepared-RDD tier a full
+    * relation rebuild before every re-drain) and a sort-merge's
+    * per-consumption sorts. At scale the
     * hint is NOT applied: a per-partition hash table of a fact-scale side
     * can exhaust execution memory, and sort-merge's graceful spill is the
     * right trade (the sf100 campaign shape). Joins whose build side is
@@ -62,32 +62,25 @@ object Dedup {
     if (smallRegime(df)) df.hint("shuffle_hash")
     else df
 
-  /** Df-capped shingles shared by several consumers of one query (signature
-    * pass + both verification-join sides). NOT persisted: the consumers'
-    * subtrees are identical, so Spark's ReuseExchange dedupes the shuffle
-    * map sides — the corpus is scanned and exploded ONCE and each consumer
-    * re-reduces from shuffle files (local disk), never re-reading the
-    * corpus. Measured at sf0.1 this beats persist() by ~25% (the columnar
-    * cache build serializes branches that otherwise run concurrently), and
-    * at 100 TB it avoids pinning a corpus-sized shingle set in the cache —
-    * shuffle files already live on local disk. PlanSpec asserts the reuse.
-    *
-    * Uses the hashed-gram representation: every jaccard consumer depends
-    * only on per-doc gram-set sizes and pairwise intersection COUNTS, never
-    * on gram identity, so collapsing each gram to its xxhash64 preserves
-    * every result (including the DuckDB string-gram oracle's) except under
-    * a 2⁻⁶⁴ hash collision — while moving 8-byte longs instead of ~25-byte
-    * strings through the pair join's dominant shuffles. */
-  private def sharedCapped(docs: DataFrame): DataFrame =
-    hashedCapped(docs)
-
   /** Hashed-gram shingles: the gram string collapses to its xxhash64, so
     * every downstream shuffle — df-count, the signature aggregate, both
     * verification-join sides, the jaccard pair join — moves 8-byte longs
     * instead of ~25-byte strings. An in-doc collision merges two grams
     * (set size −1), a cross-doc collision adds one shared gram; in a 2⁶⁴
     * keyspace both are vanishing (P ≈ n²/2⁶⁵ ≈ 10⁻⁸ at the oracle gate's
-    * corpus size).
+    * corpus size). Every jaccard consumer depends only on per-doc gram-set
+    * sizes and pairwise intersection COUNTS, never on gram identity, so the
+    * hash preserves every result, the DuckDB string-gram oracle's included.
+    *
+    * One query often has several consumers of these shingles (signature
+    * pass + both verification-join sides). They are NOT persisted: the
+    * consumers' subtrees are identical, so Spark's ReuseExchange dedupes
+    * the shuffle map sides — the corpus is scanned and exploded ONCE and
+    * each consumer re-reduces from shuffle files (local disk), never
+    * re-reading the corpus. Measured at sf0.1 this beats persist() by ~25%
+    * (the columnar cache build serializes branches that otherwise run
+    * concurrently), and at 100 TB it avoids pinning a corpus-sized shingle
+    * set in the cache. PlanSpec asserts the reuse.
     *
     * PRECONDITION (load-bearing for the row-local-dedup equivalence): the
     * input has ONE ROW PER doc_id — true of the `documents` table (doc_id
@@ -574,7 +567,7 @@ object Dedup {
     // N-gram Jaccard near-dup with full DuckDB oracle. Pair generation via
     // shared-shingle join only.
     "dedup_ngram_jaccard" -> ((s, d) =>
-      jaccardPairs(sharedCapped(t(s, d, "documents")))
+      jaccardPairs(hashedCapped(t(s, d, "documents")))
         .filter(col("jac") >= 0.1)
         .orderBy("a", "b")),
 
@@ -588,7 +581,7 @@ object Dedup {
     "dedup_minhash_lsh" -> ((s, d) => {
       // shared by the signature pass AND both sides of the verification
       // join — the identical subtrees let ReuseExchange compute the
-      // shingle+df-cap map work once (see sharedCapped's doc; PlanSpec
+      // shingle+df-cap map work once (see hashedCapped's doc; PlanSpec
       // asserts the ReusedExchange)
       val grams = hashedCapped(t(s, d, "documents"))
       val nHash = 32
@@ -650,7 +643,7 @@ object Dedup {
       val grams = hashedCapped(t(s, d, "documents"))
       // sig feeds candidate generation and both hamming-join sides; its
       // subtrees are identical, so the shuffle map sides are reused (see
-      // sharedCapped) — only the cheap post-shuffle agg repeats
+      // hashedCapped) — only the cheap post-shuffle agg repeats
       val sig = simhashSignatures(grams)
       val cand = simhashCandidates(sig)
       val sa = sig.toDF("a", "siga")
@@ -732,7 +725,7 @@ object Dedup {
     * jaccard>=0.5 near-dup pair graph via iterative min-label propagation
     * (see the dedup_cluster scaladoc above for the 100 TB analysis). */
   private[data] def clusterLabels(docs: DataFrame): DataFrame = {
-    val pairs = jaccardPairs(sharedCapped(docs))
+    val pairs = jaccardPairs(hashedCapped(docs))
       .filter(col("jac") >= 0.5).select(col("a"), col("b"))
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))

@@ -31,7 +31,7 @@ object Job {
   }
 
   def loadQuery(qn: String): String =
-    graft.util.SqlResources.loadQuery("job", s"$qn.sql", "GRAFT_JOB_SQL")
+    graft.util.SqlResources.loadQuery("job", qn)
 
   /** Prefix JOB table identifiers with job_ (outside string literals).
     * Unlike TPC-DS, the IMDB schema reuses table names as COLUMN names

@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import graft.sqlsurface.GraftSql
+import graft.sqlsurface.{GraftSql, SqlCanonicalizer}
 
 /** sqllogictest runner — the reference's primary correctness harness
   * (reference src/tools/sqlite-tester.cpp: record parsing :380-:497, result
@@ -14,12 +14,11 @@ import graft.sqlsurface.GraftSql
   * the GraftSql statement router, so CREATE TABLE / INSERT / CREATE FUNCTION /
   * SELECT all flow through the engine's own surface, canonicalization
   * included ([[graft.sqlsurface.SqlCanonicalizer]]: quantified comparisons,
-  * decorrelation rewrites, table-level PRIMARY KEY).
+  * decorrelation rewrites, type synonyms, table-level PRIMARY KEY).
   *
-  * The only harness shims left: Postgres cast-type synonyms (`::text`, …),
-  * the column-level PRIMARY KEY strip (Spark's DDL rejects it; metadata-only
-  * in the corpus) and bare CHAR/VARCHAR (no length) as STRING. Queries also
-  * get the corpus's Postgres null ordering through
+  * The only harness shim left is the column-level PRIMARY KEY strip
+  * (Spark's DDL rejects it; metadata-only in the corpus). Queries also get
+  * the corpus's Postgres null ordering through
   * [[graft.sqlsurface.SqlCanonicalizer.pgNullOrder]].
   */
 object SltRunner {
@@ -85,27 +84,11 @@ object SltRunner {
     records.result()
   }
 
-  /** Column-level PRIMARY KEY (Spark's DDL rejects it) and bare CHAR/VARCHAR. */
-  private[slt] def adaptDdl(sql: String): String = {
+  /** Column-level PRIMARY KEY: Spark's DDL rejects it, and the corpus's
+    * is metadata only. */
+  private[slt] def adaptDdl(sql: String): String =
     if (!sql.toUpperCase.startsWith("CREATE TABLE")) sql
-    else sql
-      .replaceAll("(?i)\\s+primary\\s+key\\b(?!\\s*\\()", "")
-      .replaceAll("(?i)\\bchar\\b(?!\\s*\\()", "string") // bare CHAR has no length
-      .replaceAll("(?i)\\bvarchar\\b(?!\\s*\\()", "string") // bare VARCHAR too
-  }
-
-  /** Query-side shims: cast-type synonyms, then Postgres null ordering. */
-  private[slt] def adaptQuery(sql: String): String =
-    graft.sqlsurface.SqlCanonicalizer.pgNullOrder(castTextSynonym(sql))
-
-  /** Postgres cast-type synonyms → Spark type names. */
-  private[slt] def castTextSynonym(sql: String): String =
-    sql.replaceAll("(?i)::text\\b", "::string")
-      .replaceAll("(?i)::float8\\b", "::double")
-      .replaceAll("(?i)::float4\\b", "::float")
-      .replaceAll("(?i)::int8\\b", "::bigint")
-      .replaceAll("(?i)::int4\\b", "::int")
-      .replaceAll("(?i)::int2\\b", "::smallint")
+    else sql.replaceAll("(?i)\\s+primary\\s+key\\b(?!\\s*\\()", "")
 
   private def fmt(v: Any): String = v match {
     case null => "NULL"
@@ -248,7 +231,7 @@ object SltRunner {
             case Failure(e) => failed += 1; failures += s"${short(sql)} -> ${short(e.getMessage)}"
           }
         case Query(sql0, sortMode0, expected, valueWise, _) =>
-          val sql = adaptQuery(sql0)
+          val sql = SqlCanonicalizer.pgNullOrder(sql0)
           // a distributed engine has no deterministic row order without
           // ORDER BY; fall back to rowsort for unordered nosort queries
           val coercedToRowsort =

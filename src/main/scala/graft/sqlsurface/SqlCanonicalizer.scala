@@ -1,16 +1,18 @@
 package graft.sqlsurface
 
-import SqlScan.{closeParen, declaredNames, fromKeywords, mask, selectBlocks, topLevelIndexOf}
+import SqlScan.{closeParen, declaredNames, fromKeywords, mask, selectBlocks, topLevelHits,
+  topLevelIndexOf, wordAfter}
 
 /** Engine-side SQL canonicalization: source-level rewrites that widen the
   * accepted SQL surface beyond what Catalyst resolves, applied by
   * [[GraftSql]] to every statement BEFORE `spark.sql` — the Spark analog of
   * the reference's SQL canonicalization inside the engine front-end
   * (reference src/compiler/frontend/SQL/sql_analyzer.cpp; general unnesting
-  * in Transforms/Unnesting.cpp). A user issuing SQL through GraftSql gets
-  * the same treatment as the sqllogictest harness, whose only remaining
-  * shims ([[graft.slt.SltRunner]]) are cast-type synonyms, the column-level
-  * PRIMARY KEY strip and bare CHAR/VARCHAR.
+  * in Transforms/Unnesting.cpp). This package is the only place that
+  * rewrites dialect text: the Postgres/DuckDB type synonyms ([[canonTypes]])
+  * serve GraftSql, CREATE FUNCTION signatures and the suites' Spark texts
+  * alike, and the sqllogictest harness ([[graft.slt.SltRunner]]) keeps only
+  * the column-level PRIMARY KEY strip.
   *
   * Every rewrite finds its offsets through [[SqlScan]] on the literal-masked
   * text and slices the original by them, so no rewrite fires inside a string
@@ -29,49 +31,92 @@ object SqlCanonicalizer {
         joinOnSubqueryToWhere(existsNoFromToTrue(
           quantifiedCmp(canonTypes(sql))))))))))
 
-  /** Parameterized FLOAT(p): the SQL-standard binary-precision spec Spark's
-    * parser rejects — p <= 24 is single precision, larger is double
-    * (Postgres rule; reference parser accepts it, test/lit/SQL/syntax.sql).
-    * Applied only in TYPE position — preceded by `AS`/`::` (a cast type) or
-    * inside the column-definition list of a plain CREATE TABLE — so Spark's
-    * float(x) cast-FUNCTION call (`SELECT float(30)`) survives untouched.
-    * In the same column-definition list, the `bool` type alias maps to
-    * `boolean` (only when followed by `,` or `)`, so a column NAMED bool in
-    * a CTAS select list survives). All scans run on the literal-masked text
-    * (ADVICE r10): occurrences inside strings/comments are never touched. */
-  private def canonTypes(sql: String): String = {
-    val masked = mask(sql)
-    // column-definition region of a plain CREATE TABLE (never CTAS: a
-    // paren group followed by AS is a column-ALIAS list, not types)
-    val colDefRegion: Option[(Int, Int)] =
-      "(?is)^\\s*CREATE\\s+TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?[\\w.\"`]+\\s*\\(".r
-        .findPrefixMatchOf(masked).flatMap { m =>
-          val open = m.end - 1
-          val close = closeParen(masked, open)
-          val after = masked.drop(close + 1).trim.toUpperCase
-          if (close > 0 && !after.startsWith("AS")) Some((open, close)) else None
-        }
-    def inColDefs(pos: Int): Boolean =
-      colDefRegion.exists { case (a, b) => pos > a && pos < b }
-    def castPosition(pos: Int): Boolean = {
-      var j = pos - 1
-      while (j >= 0 && masked.charAt(j).isWhitespace) j -= 1
-      (j >= 1 && masked.charAt(j) == ':' && masked.charAt(j - 1) == ':') ||
-        (j >= 1 && masked.substring(j - 1, j + 1).equalsIgnoreCase("as") &&
-          (j < 2 || !masked.charAt(j - 2).isLetterOrDigit))
+  /** Postgres/DuckDB type names by their Spark name (Spark's parser reads
+    * only REAL of them); CHAR and VARCHAR only bare (no length). The one
+    * synonym table:
+    * [[canonTypes]] applies it to statements, [[UdfSurface]] to CREATE
+    * FUNCTION signatures. */
+  private val typeSynonyms = Map(
+    "int2" -> "smallint", "int4" -> "int", "int8" -> "bigint",
+    "float4" -> "float", "real" -> "float", "float8" -> "double",
+    "text" -> "string", "bool" -> "boolean", "char" -> "string", "varchar" -> "string")
+
+  private val bareTypeRe = "(?i)(\\w+)\\b(?!\\s*\\()".r
+  /** FLOAT(p), the SQL-standard binary-precision spec Spark's parser
+    * rejects: p <= 24 is single precision, larger is double (Postgres rule;
+    * the reference parser accepts it, test/lit/SQL/syntax.sql). */
+  private val floatPRe = "(?i)float\\s*\\(\\s*(\\d+)\\s*\\)".r
+
+  /** The Spark spelling of the type name at `pos` of masked `m` as a splice
+    * span, or None when Spark parses it as written. */
+  private def typeSpan(m: String, pos: Int): Option[(Int, Int, String)] = {
+    val rest = m.substring(pos)
+    floatPRe.findPrefixMatchOf(rest)
+      .map(f => (f.end, if (f.group(1).toInt <= 24) "float" else "double"))
+      .orElse(bareTypeRe.findPrefixMatchOf(rest)
+        .flatMap(w => typeSynonyms.get(w.group(1).toLowerCase).map((w.end, _))))
+      .map { case (len, spark) => (pos, pos + len, spark) }
+  }
+
+  private def skipSpace(m: String, i: Int): Int =
+    m.indexWhere(!_.isWhitespace, i) match { case -1 => m.length; case j => j }
+
+  /** Where each element's type starts in the column list `m(from until
+    * until)` (`name type ...`, comma-separated): the word after the column
+    * name, which may be quoted. */
+  private def columnTypes(m: String, from: Int, until: Int): Seq[Int] = {
+    val list = m.substring(from, until)
+    (-1 +: topLevelHits(list)(list.charAt(_) == ',')).map { comma =>
+      val name = skipSpace(list, comma + 1)
+      val nameEnd =
+        if (name < list.length && "\"`".contains(list.charAt(name)))
+          list.indexOf(list.charAt(name), name + 1) + 1
+        else list.indexWhere(c => !c.isLetterOrDigit && c != '_', name)
+      from + skipSpace(list, if (nameEnd <= 0) list.length else nameEnd)
     }
-    val floatSpans = "(?i)\\bfloat\\s*\\(\\s*(\\d+)\\s*\\)".r
-      .findAllMatchIn(masked)
-      .filter(m => castPosition(m.start) || inColDefs(m.start))
-      .map(m => (m.start, m.end,
-        if (m.group(1).toInt <= 24) "float" else "double"))
-      .toSeq
-    val boolSpans = "(?i)\\bbool\\b(?=\\s*[,)])".r
-      .findAllMatchIn(masked)
-      .filter(m => inColDefs(m.start))
-      .map(m => (m.start, m.end, "boolean"))
-      .toSeq
-    SqlScan.splice(sql, floatSpans ++ boolSpans)
+  }
+
+  private val createTableRe =
+    "(?is)^\\s*CREATE\\s+TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?[\\w.\"`]+\\s*\\(".r
+
+  /** Type positions of masked `m`: after `::`, after the AS of a
+    * CAST(/TRY_CAST(, and in the column list of a plain CREATE TABLE
+    * (never a CTAS: a paren group followed by AS is a column-alias list).
+    * An alias (`SELECT 1 AS real`) or a cast function (`SELECT float(30)`)
+    * is not a type position. */
+  private def typePositions(m: String): Seq[Int] = {
+    val afterColons = "::".r.findAllMatchIn(m).map(c => skipSpace(m, c.end))
+    val castAs = "(?i)\\b(?:TRY_)?CAST\\s*\\(".r.findAllMatchIn(m).flatMap { c =>
+      Some(topLevelIndexOf(m, "AS", c.end)).filter(_ >= 0).map(as => skipSpace(m, as + 2))
+    }
+    val columns = createTableRe.findPrefixMatchOf(m).toSeq.flatMap { c =>
+      val close = closeParen(m, c.end - 1)
+      if (close > 0 && wordAfter(m, close + 1) != "AS") columnTypes(m, c.end, close)
+      else Nil
+    }
+    (afterColons ++ castAs ++ columns).toSeq.distinct
+  }
+
+  /** Dialect type names in type positions ([[typePositions]]) rewritten to
+    * Spark's through the one synonym table, on the literal-masked text:
+    * `2::int4`, `CAST(1.5 AS float8)`, `CREATE TABLE t (a text, b varchar,
+    * c float(30))`. The suites' Spark texts take this pass too. */
+  def canonTypes(sql: String): String = {
+    val m = mask(sql)
+    SqlScan.splice(sql, typePositions(m).flatMap(typeSpan(m, _)))
+  }
+
+  /** One type name (a CREATE FUNCTION return type) in Spark's spelling. */
+  def canonType(t: String): String = {
+    val m = mask(t)
+    SqlScan.splice(t, typeSpan(m, skipSpace(m, 0)).toSeq)
+  }
+
+  /** A `name type, ...` list (CREATE FUNCTION arguments) with each type in
+    * Spark's spelling. */
+  def canonColumns(list: String): String = {
+    val m = mask(list)
+    SqlScan.splice(list, columnTypes(m, 0, m.length).flatMap(typeSpan(m, _)))
   }
 
   /** Quantified comparisons `<lhs> <op> ALL|ANY|SOME (<subquery>)` — the
@@ -152,19 +197,8 @@ object SqlCanonicalizer {
     var j = pos - 1
     while (j >= 0 && text.charAt(j).isWhitespace) j -= 1
     if (j < 0) None
-    else if (text.charAt(j) == ')') {
-      var depth = 0
-      var k = j
-      while (k >= 0) {
-        text.charAt(k) match {
-          case ')' => depth += 1
-          case '(' => depth -= 1; if (depth == 0) return Some(k)
-          case _ =>
-        }
-        k -= 1
-      }
-      None
-    } else {
+    else if (text.charAt(j) == ')') Some(SqlScan.openParen(text, j)).filter(_ >= 0)
+    else {
       var k = j
       while (k >= 0 && (text.charAt(k).isLetterOrDigit ||
         "_.'\"".contains(text.charAt(k)))) k -= 1

@@ -57,6 +57,22 @@ object SqlScan {
   /** Offset of the `)` matching the `(` at `open`, or -1. */
   def closeParen(sql: String, open: Int): Int = closeIn(mask(sql), open)
 
+  /** Offset of the `(` matching the `)` at `close`, or -1. */
+  def openParen(sql: String, close: Int): Int = {
+    val m = mask(sql)
+    var d = 0
+    var j = close
+    while (j >= 0) {
+      m.charAt(j) match {
+        case ')' => d += 1
+        case '(' => d -= 1; if (d == 0) return j
+        case _ =>
+      }
+      j -= 1
+    }
+    -1
+  }
+
   private def closeIn(m: String, open: Int): Int = {
     var d = 0
     var j = open

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils.replaceCharVarcharWithString
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.graft.PythonUdf
 import graft.functions.{CInterp, CUdfExpression}
@@ -60,27 +61,30 @@ import scala.util.Try
   */
 object UdfSurface {
   private val createFnRe =
-    """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?FUNCTION\s+(\w+)\s*\(([^)]*)\)\s*RETURNS\s+(\w+(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)\s+LANGUAGE\s+(\w+)\s+AS\s+\$\$(.*)\$\$\s*;?\s*$""".r
+    """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?FUNCTION\s+(\w+)\s*\(""".r
+  private val returnsRe = """(?is)\s*RETURNS\s+(\w+(?:\s*\([\d\s,]*\))?)"""
+  private val tailRe =
+    (returnsRe + """\s+LANGUAGE\s+(\w+)\s+AS\s+\$\$(.*)\$\$\s*;?\s*$""").r
   /** Postgres also accepts the clause order `AS $$...$$ LANGUAGE x` (the
     * reference's python-udfs.test uses it). */
-  private val createFnRe2 =
-    """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?FUNCTION\s+(\w+)\s*\(([^)]*)\)\s*RETURNS\s+(\w+(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)\s+AS\s+\$\$(.*)\$\$\s+LANGUAGE\s+(\w+)\s*;?\s*$""".r
+  private val tailRe2 =
+    (returnsRe + """\s+AS\s+\$\$(.*)\$\$\s+LANGUAGE\s+(\w+)\s*;?\s*$""").r
 
-  /** Reference/Postgres type aliases → Spark SQL type names. */
-  private def normalizeType(t: String): String =
-    t.trim.toLowerCase.replaceAll("\\s*\\(.*", "") match {
-      case "int4"            => "int"
-      case "int8"            => "bigint"
-      case "int2"            => "smallint"
-      case "float4" | "real" => "float"
-      case "float8"          => "double"
-      case "text" | "varchar" | "char" => "string"
-      case "bool"            => "boolean"
-      case other             => other
+  /** (name, argument list, return type, language, body) of a CREATE
+    * FUNCTION statement; the argument list ends at its own closing paren,
+    * so parameterized types (`varchar(3)`, `decimal(10,2)`) stay whole. */
+  private def parse(stmt: String): Option[(String, String, String, String, String)] =
+    createFnRe.findPrefixMatchOf(stmt).flatMap { m =>
+      val close = SqlScan.closeParen(stmt, m.end - 1)
+      val tail = if (close < 0) "" else stmt.substring(close + 1)
+      (tail match {
+        case tailRe(r, l, b) => Some((r, l, b))
+        case tailRe2(r, b, l) => Some((r, l, b))
+        case _ => None
+      }).map { case (r, l, b) => (m.group(1), stmt.substring(m.end, close), r, l, b) }
     }
 
-  def isCreateFunction(stmt: String): Boolean =
-    createFnRe.findFirstIn(stmt).isDefined || createFnRe2.findFirstIn(stmt).isDefined
+  def isCreateFunction(stmt: String): Boolean = parse(stmt).isDefined
 
   private val declRe = """^\w+\s+(\w+)\s*=\s*(.+)$""".r
   private val ifReturnRe = """(?s)^if\s*\((.+)\)\s*return\s+(.+)$""".r
@@ -213,21 +217,15 @@ object UdfSurface {
   /** Parse + register the function; returns its name. Every language casts
     * the call-site arguments to the declared types. */
   def execute(spark: SparkSession, stmt: String): String = {
-    val (name, argList, retType, language, body) = stmt match {
-      case createFnRe(n, a, r, l, b) => (n, a, r, l, b)
-      case createFnRe2(n, a, r, b, l) => (n, a, r, l, b)
-      case _ => throw new IllegalArgumentException("not a CREATE FUNCTION statement")
-    }
-    // a comma inside `<...>` (map<string,bigint>) belongs to the type
-    val args: Seq[(String, DataType)] = argList.trim match {
-      case "" => Seq.empty
-      case l => l.split(",(?![^<]*>)").toSeq.map { a =>
-        val parts = a.trim.split("\\s+", 2)
-        require(parts.length == 2, s"malformed UDF argument: '$a'")
-        (parts(0).toLowerCase, CatalystSqlParser.parseDataType(normalizeType(parts(1))))
-      }
-    }
-    val retDt = CatalystSqlParser.parseDataType(normalizeType(retType))
+    val (name, argList, retType, language, body) = parse(stmt).getOrElse(
+      throw new IllegalArgumentException("not a CREATE FUNCTION statement"))
+    // declared CHAR(n)/VARCHAR(n) cast as STRING, as Spark's own CAST reads them
+    val args: Seq[(String, DataType)] =
+      if (argList.trim.isEmpty) Nil
+      else CatalystSqlParser.parseTableSchema(SqlCanonicalizer.canonColumns(argList)).fields
+        .toSeq.map(f => (f.name.toLowerCase, replaceCharVarcharWithString(f.dataType)))
+    val retDt = replaceCharVarcharWithString(
+      CatalystSqlParser.parseDataType(SqlCanonicalizer.canonType(retType)))
     def register(source: String)(build: Seq[Expression] => Expression): String = {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, { exprs =>
         require(exprs.length == args.length,
@@ -329,8 +327,7 @@ object GraftSql {
       // tokens.
       val (table, path, opts) = s match {
         case copyRe(t, p, optStr) =>
-          (t, p, Option(optStr).getOrElse("")
-            .split(",(?=(?:[^']*'[^']*')*[^']*$)").map(_.trim)
+          (t, p, SqlScan.splitTop(Option(optStr).getOrElse(""), ",").map(_.trim)
             .filter(_.nonEmpty)
             .map { o =>
               val kv = o.split("\\s+", 2)

@@ -14,9 +14,7 @@ object Ssb {
     "31", "32", "33", "34", "41", "42", "43")
 
   def loadQuery(qn: String, simplified: Boolean): String =
-    if (simplified)
-      graft.util.SqlResources.loadQuery("ssb_simplified", s"$qn.sql", "GRAFT_SSB2_SQL")
-    else graft.util.SqlResources.loadQuery("ssb", s"$qn.sql", "GRAFT_SSB_SQL")
+    graft.util.SqlResources.loadQuery(if (simplified) "ssb_simplified" else "ssb", qn)
 
   private def prefix(simplified: Boolean): String = if (simplified) "ssb2_" else "ssb_"
 

@@ -1,20 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Driver-shaped smoke check: builds the flagship query on sf0.001 and prints
-  * its row count (the driver's t1 gate is rows > 0). */
+/** Smoke check: builds the flagship query ([[graft.SparkEntry.entry]],
+  * TPC-H Q1 on sf0.001) in an [[graft.Engine]] session (extensions,
+  * regime, functions) and prints its row count, which must be positive. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = graft.Engine.create(master = "local[4]", shufflePartitions = 4,
+      appName = "graft-smoke")
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

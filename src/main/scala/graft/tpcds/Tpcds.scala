@@ -21,56 +21,14 @@ object Tpcds {
   }
 
   def loadQuery(qn: String): String =
-    graft.util.SqlResources.loadQuery("tpcds", s"$qn.sql", "GRAFT_TPCDS_SQL")
+    graft.util.SqlResources.loadQuery("tpcds", qn)
 
   // -------------------------------------------------------- canonicalization
-
-  /** Rewrite Postgres-style `expr::type` casts to portable cast(expr as t).
-    * With `truncInt` (the DuckDB side), double→integer casts truncate toward
-    * zero via trunc(), matching Spark and the reference's C++ fptosi
-    * semantics; DuckDB alone rounds to nearest on that cast. */
-  private[tpcds] def uncolon(sql: String, truncInt: Boolean = false): String = {
-    val idx = sql.indexOf("::")
-    if (idx < 0) return sql
-    var t = idx + 2
-    while (t < sql.length && sql.charAt(t).isWhitespace) t += 1
-    val tStart = t
-    while (t < sql.length && (sql.charAt(t).isLetterOrDigit || sql.charAt(t) == '_')) t += 1
-    val typ = sql.substring(tStart, t)
-    var i = idx - 1
-    while (i >= 0 && sql.charAt(i).isWhitespace) i -= 1
-    val end = i
-    var start = 0
-    if (i >= 0 && sql.charAt(i) == ')') {
-      var depth = 0
-      var j = i
-      var done = false
-      while (j >= 0 && !done) {
-        val c = sql.charAt(j)
-        if (c == ')') depth += 1
-        else if (c == '(') { depth -= 1; if (depth == 0) done = true }
-        if (!done) j -= 1
-      }
-      j -= 1 // move before '('
-      while (j >= 0 && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j -= 1
-      start = j + 1
-    } else {
-      var j = i
-      while (j >= 0 && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_' || sql.charAt(j) == '.')) j -= 1
-      start = j + 1
-    }
-    val expr = sql.substring(start, end + 1)
-    val body =
-      if (truncInt && Set("integer", "int", "bigint")(typ.toLowerCase))
-        s"cast(trunc($expr) as $typ)"
-      else s"cast($expr as $typ)"
-    uncolon(sql.substring(0, start) + body + sql.substring(t), truncInt)
-  }
 
   private val tableNames: Set[String] = TpcdsGen.tables.map(_._1).toSet
 
   /** Spark dialect over the table names `names`, each renamed to a tpcds_
-    * prefix (outside string literals): the plain names collide with the
+    * prefix (outside literals and comments): the plain names collide with the
     * TPC-H tables — `customer` exists in both schemas — on the
     * shared Spark session and in the oracle's DuckDB catalog. Qualified
     * members are renamed too: a column alias can shadow a table name (q49
@@ -78,23 +36,29 @@ object Tpcds {
     * `as "30 days"`); Spark wants backticks. ORDER BY gets the Postgres null
     * ordering the reference (and DuckDB) default to — Spark's NULLS FIRST
     * default would select different LIMIT-100 windows on the ROLLUP
-    * queries. Tpcxbb shares this pipeline with an extended name set. */
+    * queries. Dialect type names (`sm::FLOAT8`) take the engine's own pass
+    * ([[SqlCanonicalizer.canonTypes]]); `expr::type` casts stay, Spark and
+    * DuckDB both parse them. Tpcxbb shares this pipeline with an extended
+    * name set. */
   private[tpcds] def sparkSqlText(sql: String, names: Set[String]): String =
-    SqlCanonicalizer.pgNullOrder(Suites.renameTables(uncolon(sql), names, "tpcds_",
-      members = true).replaceAll("\"([^\"]+)\"", "`$1`"))
+    SqlCanonicalizer.pgNullOrder(SqlCanonicalizer.canonTypes(duckSqlText(sql, names)
+      .replaceAll("\"([^\"]+)\"", "`$1`")))
 
   private[tpcds] def duckSqlText(sql: String, names: Set[String]): String =
-    Suites.renameTables(uncolon(sql, truncInt = true), names, "tpcds_", members = true)
+    Suites.renameTables(sql, names, "tpcds_", members = true)
 
-  /** Duck-only ORDER BY disambiguations: DuckDB binds ORDER BY names in the
-    * input scope (ambiguous), Spark against the output columns; the picked
-    * column is join/group-equal to every alternative, so semantics match. */
+  /** Duck-only text fixes: ORDER BY disambiguations (DuckDB binds ORDER BY
+    * names in the input scope, ambiguously, Spark against the output
+    * columns; the picked column is join/group-equal to every alternative,
+    * so semantics match), and trunc() before the integer casts of
+    * fractional values in q54 and q78, which DuckDB rounds where Spark and
+    * the reference's fptosi truncate toward zero. */
   private val duckFixups: Map[String, Seq[(String, String)]] = Map(
     "58" -> Seq("order by item_id" -> "order by ss_items.item_id"),
     "72" -> Seq("w_warehouse_name, d_week_seq" -> "w_warehouse_name, d1.d_week_seq"),
-    // DuckDB rounds on numeric→int casts where Spark (and the reference's
-    // fptosi) truncates; same rewrite uncolon() applies to `::int` casts.
-    "54" -> Seq("cast((revenue/50) as int)" -> "cast(trunc(revenue/50) as int)"))
+    "54" -> Seq("cast((revenue/50) as int)" -> "cast(trunc(revenue/50) as int)"),
+    "78" -> Seq("round(ss_qty/(coalesce(ws_qty,0)+coalesce(cs_qty,0)),2)::integer" ->
+      "trunc(round(ss_qty/(coalesce(ws_qty,0)+coalesce(cs_qty,0)),2))::integer"))
 
   private def duckSql(qn: String, sql: String): String =
     duckSqlText(duckFixups.getOrElse(qn, Nil)

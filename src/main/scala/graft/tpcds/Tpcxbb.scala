@@ -37,7 +37,7 @@ object Tpcxbb {
     "24" -> Seq("i.i_item_sk = 10000" -> "i.i_item_sk = 1000"))
 
   def loadQuery(qn: String): String = {
-    val raw = graft.util.SqlResources.loadQuery("tpcxbb", s"$qn.sql", "GRAFT_TPCXBB_SQL")
+    val raw = graft.util.SqlResources.loadQuery("tpcxbb", qn)
     val fixed = qfix.getOrElse(qn, Nil)
       .foldLeft(raw) { case (s, (from, to)) => s.replace(from, to) }
     // shift BigBench day-since-1900 date_sk literals into our epoch
@@ -139,10 +139,8 @@ object Tpcxbb {
 
   def run(spark: SparkSession, qn: String): DataFrame = {
     ensure(spark)
-    // Spark dialect shims: FLOAT8 type synonym; DuckDB/Postgres-style
-    // datediff('unit', a, b) → timestampdiff(UNIT, a, b)
+    // DuckDB/Postgres-style datediff('unit', a, b) → timestampdiff(UNIT, a, b)
     val text = Tpcds.sparkSqlText(loadQuery(qn), allNames)
-      .replaceAll("(?i)\\bFLOAT8\\b", "double")
       .replaceAll("(?i)\\bdatediff\\(\\s*'(\\w+)'\\s*,", "timestampdiff($1,")
     Tpcds.nonAnsi(spark)(Suites.wrap(spark.sql(text), Tpcds.round3))
   }

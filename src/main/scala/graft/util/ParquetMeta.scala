@@ -9,7 +9,7 @@ import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
-import org.apache.parquet.hadoop.metadata.FileMetaData
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -40,29 +40,32 @@ object ParquetMeta {
   def schema(spark: SparkSession, dir: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
     val files = visible(conf, dir)
-    if (spark.sessionState.conf.isParquetSchemaMergingEnabled || files.isEmpty ||
-        files.exists(f => f.isDirectory || f.getPath.getName.startsWith("_")))
-      spark.read.parquet(dir).schema
-    else {
-      val meta = footer(conf, files.head)
-      val stored = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-        .flatMap(json => Try(DataType.fromJson(json)).toOption)
-        .collect { case s: StructType => s }
-      nullable(stored.getOrElse(
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema)))
-        .asInstanceOf[StructType]
-    }
+    if (footerRule(spark, files)) footerSchema(spark, footer(conf, files.head))
+    else spark.read.parquet(dir).schema
+  }
+
+  private def footerRule(spark: SparkSession, files: Seq[FileStatus]): Boolean =
+    !spark.sessionState.conf.isParquetSchemaMergingEnabled && files.nonEmpty &&
+      !files.exists(f => f.isDirectory || f.getPath.getName.startsWith("_"))
+
+  private def footerSchema(spark: SparkSession, meta: ParquetMetadata): StructType = {
+    val stored = Option(meta.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+    nullable(stored.getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(meta.getFileMetaData.getSchema))).asInstanceOf[StructType]
   }
 
   /** `spark.read.parquet(dir)` with its schema taken from [[schema]]. */
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(schema(spark, dir)).parquet(dir)
 
-  /** Every row of the parquet files at `dir`, read as `requested` in path
+  /** [[schema]] and every row of the parquet files at `dir`, read in path
     * order by Spark's `VectorizedParquetRecordReader` in the driver and
     * copied to UnsafeRows. Meant for small files (planning samples): it
-    * starts no job and creates no broadcast. */
-  def rows(spark: SparkSession, dir: String, requested: StructType): Array[InternalRow] = {
+    * starts no job and creates no broadcast, lists `dir` once and reads
+    * each file's footer once (the reader takes it as given). */
+  def sample(spark: SparkSession, dir: String): (StructType, Array[InternalRow]) = {
     val sql = spark.sessionState.conf
     // what ParquetFileFormat puts in a scan task's Hadoop conf: every conf
     // the session sets, plus the effective values of the flags the reader's
@@ -73,6 +76,11 @@ object ParquetMeta {
       SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
       SQLConf.SESSION_LOCAL_TIMEZONE, SQLConf.CASE_SENSITIVE
     ).foreach(e => conf.set(e.key, spark.conf.get(e.key)))
+    val files = visible(conf, dir)
+    val footers = files.filter(_.isFile).map(f => f -> footer(conf, f))
+    val requested =
+      if (footerRule(spark, files)) footerSchema(spark, footers.head._2)
+      else spark.read.parquet(dir).schema
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
     // interpreted: compiling a projection per schema costs more than
@@ -81,11 +89,11 @@ object ParquetMeta {
     val project = InterpretedUnsafeProjection.createProjection(
       requested.fields.toSeq.zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
     val out = ArrayBuffer[InternalRow]()
-    visible(conf, dir).filter(_.isFile).foreach { f =>
-      val meta = footer(conf, f)
-      val kv = meta.getKeyValueMetaData.get _
+    footers.foreach { case (f, meta) =>
+      val kv = meta.getFileMetaData.getKeyValueMetaData.get _
       val convertTz =
-        if (sql.isParquetINT96TimestampConversion && !meta.getCreatedBy.startsWith("parquet-mr"))
+        if (sql.isParquetINT96TimestampConversion &&
+            !meta.getFileMetaData.getCreatedBy.startsWith("parquet-mr"))
           java.time.ZoneId.of(sql.sessionLocalTimeZone)
         else null
       val dt = DataSourceUtils.datetimeRebaseSpec(kv,
@@ -96,12 +104,12 @@ object ParquetMeta {
         int96.mode.toString, int96.timeZone, false, sql.parquetVectorizedReaderBatchSize)
       try {
         reader.initialize(new FileSplit(f.getPath, 0, f.getLen, Array.empty[String]),
-          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()), None, None, Some(meta))
         while (reader.nextKeyValue())
           out += project(reader.getCurrentValue.asInstanceOf[InternalRow]).copy()
       } finally reader.close()
     }
-    out.toArray
+    (requested, out.toArray)
   }
 
   /** The entries of `dir` (or `dir` itself when it is a file) that Spark's
@@ -119,9 +127,10 @@ object ParquetMeta {
     ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")) &&
       !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
 
-  private def footer(conf: Configuration, f: FileStatus): FileMetaData = {
+  /** The whole footer of `f`, row groups included. */
+  private def footer(conf: Configuration, f: FileStatus): ParquetMetadata = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-    try reader.getFooter.getFileMetaData finally reader.close()
+    try reader.getFooter finally reader.close()
   }
 
   /** `DataType.asNullable` (private to Spark): file sources read every

@@ -72,8 +72,8 @@ object PlanningSamples {
           try scala.util.Try(src.mkString.trim.toLong).toOption finally src.close()
         }
       count.map { n =>
-        val schema = ParquetMeta.schema(spark, path)
-        Sample(path, schema, ParquetMeta.rows(spark, path, schema), n)
+        val (schema, rows) = ParquetMeta.sample(spark, path)
+        Sample(path, schema, rows, n)
       }.orNull
     }))
   }

@@ -1,33 +1,22 @@
 package graft.util
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 
 /** Loader for the benchmark suites' query texts.
   *
-  * The texts are the public TPC-H/TPC-DS/JOB/SSB/ClickBench/TPCx-BB SQL the
+  * The texts are the public TPC-DS/JOB/SSB/ClickBench/TPCx-BB SQL the
   * reference also ships (reference resources/sql); they are vendored under
-  * `src/main/resources/graft/sql/<suite>/` so the engine's benchmark surface
-  * is self-contained — no reference tree needs to be mounted at runtime.
-  *
-  * Resolution order per file:
-  *   1. `$envVar` directory override (ad-hoc experiments with edited texts),
-  *   2. bundled classpath resource (the normal path),
-  *   3. the reference tree (dev fallback when 1-2 are absent).
+  * `src/main/resources/graft/sql/<suite>/` and read from the classpath only,
+  * so the engine's benchmark surface is self-contained.
   */
 object SqlResources {
-  def load(suite: String, file: String, envVar: String): String =
-    sys.env.get(envVar) match {
-      case Some(dir) => Files.readString(Paths.get(s"$dir/$file"))
-      case None =>
-        val in = getClass.getResourceAsStream(s"/graft/sql/$suite/$file")
-        if (in != null)
-          try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-          finally in.close()
-        else Files.readString(Paths.get(s"/root/reference/resources/sql/$suite/$file"))
-    }
 
-  /** load + the trim/strip-semicolon normalization every suite applies. */
-  def loadQuery(suite: String, file: String, envVar: String): String =
-    load(suite, file, envVar).trim.stripSuffix(";").trim
+  /** Query `qn` of `suite`, trimmed and without its trailing semicolon. */
+  def loadQuery(suite: String, qn: String): String = {
+    val path = s"/graft/sql/$suite/$qn.sql"
+    val in = getClass.getResourceAsStream(path)
+    require(in != null, s"no query text $path on the classpath")
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.stripSuffix(";").trim
+    finally in.close()
+  }
 }

@@ -125,33 +125,22 @@ object Suites {
     s"SELECT $sel FROM (\n$body\n) AS t(${cols.mkString(", ")})"
   }
 
-  /** Prefix every whole-word table name outside string literals. The
+  private val wordRe = "[\\p{L}_][\\p{L}\\p{N}_]*".r
+
+  /** Prefix every whole-word table name outside string literals, quoted
+    * identifiers and comments ([[graft.sqlsurface.SqlScan.mask]]). The
     * rename covers aliases too, so it is a pure alpha-rename. With
     * `members = false`, a word right after a `.` (a qualified column) is
     * left alone, for schemas that reuse table names as column names. */
   def renameTables(sql: String, names: Set[String], prefix: String,
       members: Boolean): String = {
-    val sb = new StringBuilder(sql.length + 64)
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb.append(c); inStr = true; i += 1 }
-      else if (c.isLetter || c == '_') {
-        var j = i
-        while (j < sql.length && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-        val w = sql.substring(i, j)
-        def afterDot = {
-          var k = i - 1
-          while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
-          k >= 0 && sql.charAt(k) == '.'
-        }
-        if (names.contains(w.toLowerCase) && (members || !afterDot)) sb.append(prefix)
-        sb.append(w)
-        i = j
-      } else { sb.append(c); i += 1 }
+    val m = graft.sqlsurface.SqlScan.mask(sql)
+    def afterDot(i: Int): Boolean = {
+      val k = m.lastIndexWhere(!_.isWhitespace, i - 1)
+      k >= 0 && m.charAt(k) == '.'
     }
-    sb.toString
+    graft.sqlsurface.SqlScan.splice(sql, wordRe.findAllMatchIn(m)
+      .filter(w => names(w.matched.toLowerCase) && (members || !afterDot(w.start)))
+      .map(w => (w.start, w.start, prefix)).toSeq)
   }
 }

@@ -4,7 +4,7 @@ import graft.slt.SltRunner
 
 /** The engine runs the reference's own sqllogictest corpora (SURVEY §5 / M0).
   * The corpora are vendored under src/test/resources/slt so the suite is
-  * self-contained; the reference tree is only a fallback for ad-hoc runs.
+  * self-contained; a missing file fails the test.
   *
   * The full ~13.5k-statement sqlite corpus is CI-locked by a per-file exact
   * count on select1 (the sampled subset) plus GRAFT_SLT_FULL=1 for the whole
@@ -14,8 +14,8 @@ class SltSpec extends SparkSpec {
 
   private def corpus(rel: String): String = {
     val url = getClass.getResource(s"/slt/$rel")
-    if (url != null) java.nio.file.Paths.get(url.toURI).toString
-    else s"/root/reference/test/$rel"
+    require(url != null, s"vendored corpus file slt/$rel is missing")
+    java.nio.file.Paths.get(url.toURI).toString
   }
 
   private def run(name: String) =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sqlsurface.GraftSql
+import graft.sqlsurface.{GraftSql, SqlCanonicalizer}
 import graft.tools.SyntaxProbe
 import scala.util.{Failure, Success, Try}
 
@@ -57,7 +57,6 @@ class SyntaxSpec extends SparkSpec {
   }
 
   test("canonicalizer rewrites never fire inside literals or non-type positions") {
-    import graft.sqlsurface.SqlCanonicalizer
     // Spark's float(x) CAST-FUNCTION call is not a type spec (ADVICE r10)
     assert(GraftSql(spark, "SELECT float(30) AS f").collect()(0).get(0) == 30.0f)
     // type positions still canonicalize: :: and CAST ... AS
@@ -111,6 +110,24 @@ class SyntaxSpec extends SparkSpec {
         "a INNER JOIN b ON (SELECT 1)"
     ).foreach { case (q, lit) => assert(GraftSql(spark, q).collect()(0).getString(0) == lit, q) }
     finally Seq("t", "u").foreach(spark.catalog.dropTempView)
+  }
+
+  test("dialect type synonyms run through GraftSql alone, in type positions only") {
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
+    val r = GraftSql(spark, "SELECT 2::int4 AS a, CAST(1.5 AS float8) AS b, 'a'::text AS c")
+    assert(r.schema.map(_.dataType) == Seq(IntegerType, DoubleType, StringType))
+    assert(r.collect()(0).toSeq == Seq(2, 1.5d, "a"))
+    spark.sql("DROP TABLE IF EXISTS syn_t")
+    try {
+      GraftSql(spark, "CREATE TABLE syn_t (a int4, b text, c varchar, d float8)")
+      assert(spark.table("syn_t").schema.map(_.dataType) ==
+        Seq(IntegerType, StringType, StringType, DoubleType))
+    } finally spark.sql("DROP TABLE IF EXISTS syn_t")
+    // a literal and an alias are not type positions
+    assert(GraftSql(spark, "SELECT 'x::int4'").collect()(0).getString(0) == "x::int4")
+    val alias = GraftSql(spark, "SELECT 1 AS real")
+    assert(alias.columns.toSeq == Seq("real") && alias.collect()(0).getInt(0) == 1)
+    for (q <- Seq("SELECT 'x::int4'", "SELECT 1 AS real")) assert(SqlCanonicalizer(q) == q)
   }
 
   test("EXISTS without FROM inside parentheses keeps the WHERE a filter") {

@@ -28,6 +28,21 @@ class UdfSpec extends SparkSpec {
     assert(plan.contains("HI!"), s"macro not folded: $plan")
   }
 
+  test("CREATE FUNCTION keeps a declared return type's parameters") {
+    GraftSql(spark, "CREATE OR REPLACE FUNCTION half(x double) RETURNS decimal(10,2) " +
+      "LANGUAGE sql AS $$ x / 2 $$")
+    assert(spark.sql("SELECT half(2.5) AS v").collect().head.getDecimal(0) ==
+      new java.math.BigDecimal("1.25"))
+  }
+
+  test("CREATE FUNCTION takes a parameterized argument type and dialect synonyms") {
+    GraftSql(spark, "CREATE OR REPLACE FUNCTION vlen(x varchar(3), n int4) RETURNS int8 " +
+      "LANGUAGE sql AS $$ length(x) + n $$")
+    val r = spark.sql("SELECT vlen('ab', 1) AS v")
+    assert(r.schema.head.dataType == org.apache.spark.sql.types.LongType)
+    assert(r.collect().head.getLong(0) == 3L)
+  }
+
   test("python UDF: tuple assignment swaps via parallel semantics") {
     UdfSurface.execute(spark,
       """CREATE FUNCTION py_swapdiff(a bigint, b bigint) RETURNS bigint LANGUAGE python AS $$
