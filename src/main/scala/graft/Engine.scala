@@ -138,8 +138,10 @@ object Engine {
       .withExtensions { e =>
         e.injectResolutionRule(_ => plans.DecorrelateComplexAggs)
         // sample-driven join reorder + broadcast hints (reference
-        // QueryGraph.cpp:264-294); gated by spark.graft.sampleReorder.enabled
-        // — see its scaladoc. PRE-CBO, not the operator batch: inside the
+        // QueryGraph.cpp:264-294); it fires only where every join leaf has
+        // a planning sample, and `spark.sql.optimizer.excludedRules=
+        // graft.plans.SampleJoinReorder` turns it off for A/Bs — see its
+        // scaladoc. PRE-CBO, not the operator batch: inside the
         // operator fixpoint the rule saw half-formed join trees (conditions
         // not yet extracted from WHERE), hinted an inner 2-leaf join early,
         // and the hint then blocked flatten() for the real tree on later
@@ -236,18 +238,6 @@ object Engine {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")
-      // Sample-driven join order + broadcast-side hints (SampleJoinReorder;
-      // reference QueryGraph.cpp:264-294): ON for generator-scale sessions
-      // (suite benches, tests — the suites' LIKE/Contains/IN dimension
-      // predicates are invisible to Catalyst stats, which planned JOB's
-      // 87k-row filtered sides as corpus-scale title/fact shuffles), OFF
-      // for dataDir sessions: the driver protocol's testdata has no
-      // samples (the rule would stand down anyway) and the campaign dirs'
-      // hand-shaped bucketed fact plans must not be re-ordered. The rule
-      // stands down unless EVERY leaf of a hint-free inner-join tree has a
-      // stored sample, so enabling it here is inert wherever samples are
-      // absent. Runtime-settable for A/Bs (PlanSpec sets it explicitly).
-      .config("spark.graft.sampleReorder.enabled", dataDir.isEmpty.toString)
       .config("spark.ui.enabled", "false")
     // caller-provided overrides, then ad-hoc env overrides ("k=v;k=v") —
     // env wins so a bench A/B can still override a caller default

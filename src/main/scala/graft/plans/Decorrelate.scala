@@ -5,18 +5,18 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType}
 
 /** General decorrelation for scalar subqueries Catalyst rejects.
   *
   * Catalyst's subquery validation only admits outer references in a
-  * subquery's WHERE/HAVING; aggregates mixing outer and local references
-  * (AGGREGATE_FUNCTION_MIXED_OUTER_LOCAL_REFERENCES), outer references in a
-  * subquery's select list (CORRELATED_REFERENCE), outer-only GROUP BY keys,
-  * and outer references in inner-join conditions are all refused. The
-  * reference engine's Neumann-style general unnesting handles every one of
-  * these (reference src/compiler/Dialect/RelAlg/Transforms/Unnesting.cpp,
-  * following "Unnesting Arbitrary Queries", Neumann & Kemper, BTW 2015).
+  * subquery's WHERE/HAVING; aggregates over outer references, outer
+  * references in a subquery's select list (CORRELATED_REFERENCE),
+  * outer-only GROUP BY keys, and outer references in inner-join conditions
+  * are all refused. The reference engine's Neumann-style general unnesting
+  * handles every one of these (reference
+  * src/compiler/Dialect/RelAlg/Transforms/Unnesting.cpp, following
+  * "Unnesting Arbitrary Queries", Neumann & Kemper, BTW 2015).
   *
   * This rule closes the gap ALGEBRAICALLY instead of building a dependent
   * join: a rejected scalar subquery is decomposed into outer-level arithmetic
@@ -27,11 +27,19 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, 
   *   SUM(o)        = CASE WHEN COUNT(1)=0 THEN NULL ELSE o*COUNT(1) END
   *   MIN/MAX/AVG(o)= CASE WHEN COUNT(1)=0 THEN NULL ELSE o END
   *   COUNT(o)      = CASE WHEN o IS NULL THEN 0 ELSE COUNT(1) END
-  *   SUM(o*l)      = o * SUM(l)
-  *   SUM(o+l)      = o * COUNT(l) + SUM(l)
-  *   MIN(l+o)      = MIN(l) + o        (order-preserving shift)
   *   f(aggs, o)    = f((SELECT agg_i FROM ...), o)   -- splice into the outer
   *   GROUP BY o    = drop the key; guard with COUNT(1)=0 → NULL
+  *
+  * Aggregates whose argument MIXES outer and local references (SUM(o*l),
+  * SUM(l±o), MIN/MAX(l+o)) never reach this rule: Spark's analyzer raises
+  * AGGREGATE_FUNCTION_MIXED_OUTER_LOCAL_REFERENCES before any injected
+  * resolution rule runs. Their identities live in the text rewrite
+  * [[graft.sqlsurface.SqlCanonicalizer.decomposeOuterAggs]], which GraftSql
+  * applies before parsing (PlanSpec pins both halves). The pure-outer
+  * identities stay here as well: a query that reaches `spark.sql` directly
+  * skips the text rewrite, and the text rewrite only recognizes qualified
+  * outer columns (`a.c`), so an unqualified outer `SUM(c)` arrives here
+  * through GraftSql too.
   *
   * Non-aggregate subqueries with outer references in the select list are
   * rewritten as f(o, (SELECT l FROM ...)) guarded by a probe subquery for the
@@ -40,9 +48,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, 
   *
   * The rule only fires on subqueries Catalyst would REJECT, so supported
   * queries keep their stock plans. It runs in the resolution fixpoint, so
-  * type coercion re-normalizes any mixed-type arithmetic it emits. Mixed
-  * SUM identities route through double intermediates (exact for the integer
-  * corpus; decimal-typed inputs are left untouched → original error).
+  * type coercion re-normalizes any mixed-type arithmetic it emits.
   */
 object DecorrelateComplexAggs extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -120,101 +126,28 @@ object DecorrelateComplexAggs extends Rule[LogicalPlan] with PredicateHelper {
 
   // ---- aggregate decomposition ----------------------------------------
 
-  /** Split e into (localPart, outerPart) with e ≡ localPart + outerPart and
-    * outerPart row-constant. */
-  private def additiveSplit(e: Expression): Option[(Option[Expression], Option[Expression])] =
-    e match {
-      case _ if pureOuter(e) => Some((None, Some(e)))
-      case _ if !hasOuter(e) => Some((Some(e), None))
-      case Add(a, b, _) =>
-        for ((la, oa) <- additiveSplit(a); (lb, ob) <- additiveSplit(b)) yield {
-          val l = (la, lb) match {
-            case (Some(x), Some(y)) => Some(Add(x, y)): Option[Expression]
-            case (x, y) => x.orElse(y)
-          }
-          val o = (oa, ob) match {
-            case (Some(x), Some(y)) => Some(Add(x, y)): Option[Expression]
-            case (x, y) => x.orElse(y)
-          }
-          (l, o)
-        }
-      case Subtract(a, b, _) =>
-        for ((la, oa) <- additiveSplit(a); (lb, ob) <- additiveSplit(b)) yield {
-          val l: Option[Expression] = (la, lb) match {
-            case (Some(x), Some(y)) => Some(Subtract(x, y))
-            case (Some(x), None) => Some(x)
-            case (None, Some(y)) => Some(UnaryMinus(y))
-            case _ => None
-          }
-          val o: Option[Expression] = (oa, ob) match {
-            case (Some(x), Some(y)) => Some(Subtract(x, y))
-            case (Some(x), None) => Some(x)
-            case (None, Some(y)) => Some(UnaryMinus(y))
-            case _ => None
-          }
-          (l, o)
-        }
-      case _ => None
-    }
-
-  /** A local part produced by additiveSplit is safe for MIN/MAX only when it
-    * entered the sum positively (no UnaryMinus introduced). */
-  private def positivePart(l: Expression): Boolean =
-    !l.exists(_.isInstanceOf[UnaryMinus])
-
-  /** Rewrite one aggregate call whose argument references outer columns into
-    * outer arithmetic over pure-local mini-subqueries. None when no exact
-    * identity applies. */
+  /** Rewrite one aggregate call whose argument is purely outer into outer
+    * arithmetic over pure-local mini-subqueries. None otherwise: a mixed
+    * outer/local argument never gets here (see the object's scaladoc). */
   private def decomposeAgg(ae: AggregateExpression, child: LogicalPlan): Option[Expression] = {
     if (ae.isDistinct || ae.filter.isDefined) return None
-    // SUM identities route through LongType when every operand is integral —
-    // exact for int64 beyond 2^53, where the former DoubleType path silently
-    // rounded — and DoubleType otherwise (decimal stays with Catalyst).
-    def integral(dts: DataType*): Boolean = dts.forall {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    def wideFor(dts: DataType*): Expression => Expression = {
-      val t = if (integral(dts: _*)) LongType else DoubleType
-      e => Cast(e, t)
-    }
     val out: Option[Expression] = ae.aggregateFunction match {
       // NOTE: outer expressions stay OuterReference-wrapped here; the caller
       // strips wrappers once, when splicing into the outer plan.
       case Sum(e, _) if pureOuter(e) =>
+        // o*COUNT(1) in LongType when o is integral — exact for int64 beyond
+        // 2^53, where a DoubleType product silently rounds — else DoubleType
+        val t = e.dataType match {
+          case ByteType | ShortType | IntegerType | LongType => LongType
+          case _ => DoubleType
+        }
         val cnt = countMini(child)
-        val w = wideFor(e.dataType)
-        Some(guarded(cnt, Multiply(w(e), w(cnt)), ae))
+        Some(guarded(cnt, Multiply(Cast(e, t), Cast(cnt, t)), ae))
       case Min(e) if pureOuter(e) => Some(guarded(countMini(child), e, ae))
       case Max(e) if pureOuter(e) => Some(guarded(countMini(child), e, ae))
       case Average(e, _) if pureOuter(e) => Some(guarded(countMini(child), e, ae))
       case Count(Seq(e)) if pureOuter(e) =>
         Some(If(IsNull(e), Literal(0L), countMini(child)))
-      case Sum(Multiply(a, b, _), _) if pureOuter(a) && pureLocal(b) =>
-        val w = wideFor(a.dataType, b.dataType)
-        Some(Multiply(w(a), w(aggMini(Sum(b).toAggregateExpression(), child))))
-      case Sum(Multiply(a, b, _), _) if pureLocal(a) && pureOuter(b) =>
-        val w = wideFor(a.dataType, b.dataType)
-        Some(Multiply(w(b), w(aggMini(Sum(a).toAggregateExpression(), child))))
-      case Sum(e, _) =>
-        additiveSplit(e).collect { case (Some(l), Some(o)) =>
-          // SUM(l ⊕ o) = SUM(l) ⊕ o·COUNT(l): NULL-l terms are skipped on
-          // both sides; NULL o nulls both sides.
-          val w = wideFor(e.dataType)
-          Add(w(aggMini(Sum(l).toAggregateExpression(), child)),
-            Multiply(w(o),
-              w(aggMini(Count(l).toAggregateExpression(), child))))
-        }
-      case Min(e) =>
-        additiveSplit(e).collect {
-          case (Some(l), Some(o)) if positivePart(l) =>
-            Add(aggMini(Min(l).toAggregateExpression(), child), o)
-        }
-      case Max(e) =>
-        additiveSplit(e).collect {
-          case (Some(l), Some(o)) if positivePart(l) =>
-            Add(aggMini(Max(l).toAggregateExpression(), child), o)
-        }
       case _ => None
     }
     out.map(e => Cast(e, ae.dataType))

@@ -50,68 +50,63 @@ import graft.util.PlanningSamples.Sample
   * (measured on JOB q1a: the full 2.5M-row title exchange survived AQE's
   * broadcast conversion; with the hint the static plan never exchanges it).
   *
-  * Gated by `spark.graft.sampleReorder.enabled` (Engine turns it on for
-  * generator-scale sessions, off under a dataDir — see Engine.create; a
-  * value that is not a boolean leaves it off, the unset default) and
-  * conservative: it only fires when EVERY leaf of the join tree maps to a
-  * sampled table, the joins are plain hint-free inner joins, and
-  * predicates are deterministic and subquery-free. PlanSpec holds the
-  * ON/OFF flip test.
+  * No conf gates it: like the reference, which uses stored samples
+  * wherever the catalog has them, the rule decides from its samples alone.
+  * It only fires when EVERY leaf of the join tree maps to a sampled table,
+  * the joins are plain hint-free inner joins, and predicates are
+  * deterministic and subquery-free; a tree with an unsampled leaf keeps
+  * Catalyst's plan. Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.SampleJoinReorder` turns
+  * it off for A/Bs (PlanSpec's ON/OFF tests, [[graft.tools.SuiteAB]]).
   */
 case class SampleJoinReorder(spark: SparkSession) extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
   import SampleJoinReorder._
 
-  private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.sampleReorder.enabled").flatMap(_.toBooleanOption)
-      .getOrElse(false)
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformDown {
-      case j: Join if eligible(j) =>
-        val (items, conds) = flatten(j)
-        if (items.size < 2) j
-        else estimateAll(items) match {
-          case Some(est) if est.size == 2 =>
-            // 2-relation tree: ordering is moot (inner join is symmetric),
-            // but the sampled estimate can still rescue the join STRATEGY —
-            // Catalyst's stats are blind to string-predicate selectivity
-            // (LIKE/Contains/IN keep the full row count), so a side that is
-            // tiny after its filter gets planned as a corpus-scale shuffle
-            // join. Attach a broadcast hint in the original orientation
-            // when a side's estimated bytes fit the session threshold
-            // (guide §3.1: hint when you know a side is small).
-            val hint = hintFor(bytesOf(est(0)._1, est(0)._2), bytesOf(est(1)._1, est(1)._2),
-              est(0)._2, est(1)._2, false, false, broadcastThreshold)
-            if (hint == JoinHint.NONE) j
-            else Join(j.left, j.right, j.joinType, j.condition, hint)
-          case Some(est) =>
-            // ≤DpMaxRelations: exact DP enumeration (the reference runs DPhyp
-            // when the subgraph count is small, OptimizeJoinOrder.cpp:122,
-            // queryopt/DPhyp.cpp:4-70); larger trees and disconnected
-            // graphs keep the greedy pass
-            // canonical leaf order (estimate, then sample path, then the
-            // canonicalized leaf's text): the DP must be IDEMPOTENT — after
-            // a rewrite the optimizer re-runs the rule on the rebuilt tree,
-            // whose flatten() yields leaves in a different order; a tie
-            // broken differently would emit a flipped orientation forever
-            // (no fixpoint). Ties break by content, never by a hash:
-            // semanticHash() mixes in identity hashes (ParquetFileFormat's
-            // hashCode), so a tied order would depend on JVM history.
-            val canon = est.sortBy { case (p, e) =>
-              (e, relOf(p).flatMap(sampleOf).fold("")(_.path), p.canonicalized.toString)
-            }
-            val topNeeded = org.apache.spark.sql.catalyst.expressions.AttributeSet(j.output)
-            val ordered =
-              (if (est.size <= DpMaxRelations)
-                dpOrder(canon, conds, topNeeded)
-              else None).getOrElse(greedyOrder(est, conds, topNeeded))
-            // no-op when the chosen order confirms the written one
-            if (ordered.fastEquals(j)) j else Project(j.output, ordered)
-          case None => j
-        }
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+    case j: Join if eligible(j) =>
+      val (items, conds) = flatten(j)
+      if (items.size < 2) j
+      else estimateAll(items) match {
+        case Some(est) if est.size == 2 =>
+          // 2-relation tree: ordering is moot (inner join is symmetric),
+          // but the sampled estimate can still rescue the join STRATEGY —
+          // Catalyst's stats are blind to string-predicate selectivity
+          // (LIKE/Contains/IN keep the full row count), so a side that is
+          // tiny after its filter gets planned as a corpus-scale shuffle
+          // join. Attach a broadcast hint in the original orientation
+          // when a side's estimated bytes fit the session threshold
+          // (guide §3.1: hint when you know a side is small).
+          val hint = hintFor(bytesOf(est(0)._1, est(0)._2), bytesOf(est(1)._1, est(1)._2),
+            est(0)._2, est(1)._2, false, false, broadcastThreshold)
+          if (hint == JoinHint.NONE) j
+          else Join(j.left, j.right, j.joinType, j.condition, hint)
+        case Some(est) =>
+          // ≤DpMaxRelations: exact DP enumeration (the reference runs DPhyp
+          // when the subgraph count is small, OptimizeJoinOrder.cpp:122,
+          // queryopt/DPhyp.cpp:4-70); larger trees and disconnected
+          // graphs keep the greedy pass
+          // canonical leaf order (estimate, then sample path, then the
+          // canonicalized leaf's text): the DP must be IDEMPOTENT — after
+          // a rewrite the optimizer re-runs the rule on the rebuilt tree,
+          // whose flatten() yields leaves in a different order; a tie
+          // broken differently would emit a flipped orientation forever
+          // (no fixpoint). Ties break by content, never by a hash:
+          // semanticHash() mixes in identity hashes (ParquetFileFormat's
+          // hashCode), so a tied order would depend on JVM history.
+          val canon = est.sortBy { case (p, e) =>
+            (e, relOf(p).flatMap(sampleOf).fold("")(_.path), p.canonicalized.toString)
+          }
+          val topNeeded = org.apache.spark.sql.catalyst.expressions.AttributeSet(j.output)
+          val ordered =
+            (if (est.size <= DpMaxRelations)
+              dpOrder(canon, conds, topNeeded)
+            else None).getOrElse(greedyOrder(est, conds, topNeeded))
+          // no-op when the chosen order confirms the written one
+          if (ordered.fastEquals(j)) j else Project(j.output, ordered)
+        case None => j
+      }
+  }
 
   /** Estimated in-memory bytes of a subtree: estimated rows × (8 + Σ column
     * defaultSize) — the same size model Catalyst's

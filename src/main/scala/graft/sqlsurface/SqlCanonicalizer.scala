@@ -263,8 +263,12 @@ object SqlCanonicalizer {
     * (AGGREGATE_FUNCTION_MIXED_OUTER_LOCAL_REFERENCES) or mis-attributes the
     * aggregate to the outer block (SQL-standard outer aggregation — the
     * corpus expects the reference's inner-scope semantics), so this has to
-    * happen before analysis; [[graft.plans.DecorrelateComplexAggs]] then
-    * handles the outer references that remain OUTSIDE aggregate calls. */
+    * happen before analysis. The mixed identities (SUM(l±o), SUM(o*l),
+    * MIN/MAX(l±o)) live here only: Spark raises that error before any
+    * injected resolution rule runs. [[graft.plans.DecorrelateComplexAggs]]
+    * repeats the pure-outer ones for what this rewrite does not see (plain
+    * `spark.sql`, unqualified outer columns) and handles the outer
+    * references that remain OUTSIDE aggregate calls. */
   def decomposeOuterAggs(sql: String): String = {
     val allAliases = declaredNames(sql)
     @annotation.tailrec def go(cur: String, rounds: Int): String =

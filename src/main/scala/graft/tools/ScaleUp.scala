@@ -23,8 +23,8 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val k = if (args.length > 2) args(2).toInt else 10
-    // optional table filter for partial regeneration (bucketed/sample steps
-    // are filtered the same way)
+    // optional table filter for partial regeneration (the bucketed step is
+    // filtered the same way)
     val tableFilter: String => Boolean =
       if (args.length > 3) args(3).split(",").toSet else _ => true
     val spark = SparkSession.builder()
@@ -186,13 +186,6 @@ object ScaleUp {
         s"$key $nb".getBytes("UTF-8"))
       println(f"[scaleup] $name%-12s bucketed($nb on $key)  ${(System.nanoTime() - t0) / 1e9}%6.2fs")
       System.gc() // let ContextCleaner delete the finished table's shuffle files
-    }
-
-    // Per-table planning samples (~2k rows, deterministic seed) + true row
-    // counts, consumed by plans.SampleJoinReorder (see util.PlanningSamples).
-    jobs.map(_._1).filter(tableFilter).foreach { name =>
-      val total = graft.util.PlanningSamples.write(out, name, spark.read.parquet(s"$out/$name.parquet"))
-      println(f"[scaleup] $name%-12s sample written ($total%d rows total)")
     }
   }
 }

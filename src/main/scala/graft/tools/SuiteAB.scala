@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 
 /** Result-equality A/B for the sample-driven join reorder + broadcast-hint
   * rule over the vendored suites: every named query (default: every
-  * tpcds/tpcxbb/job/ssb/ssb2/cb query) runs once with
-  * spark.graft.sampleReorder.enabled=false and once =true at the current
-  * generator scale, and the collected row multisets must be identical.
-  * This is the correctness gate for a rule the driver's oracle contract
-  * cannot see (Verify runs under a dataDir, where the rule is off by
-  * design).
+  * tpcds/tpcxbb/job/ssb/ssb2/cb query) runs once with the rule off
+  * (`spark.sql.optimizer.excludedRules=graft.plans.SampleJoinReorder`) and
+  * once on at the current generator scale, and the collected row multisets
+  * must be identical. The oracle gate (Verify) grades the rule-on plans
+  * against DuckDB; this checks that turning the rule off, which every
+  * plan's correctness then rests on, changes no row.
   *
   * Usage: [GRAFT_*_SCALE=...] runMain graft.tools.SuiteAB [time] [names...]
   *
@@ -19,6 +19,8 @@ import org.apache.spark.sql.DataFrame
   * ±40% window noise across JVMs.
   */
 object SuiteAB {
+  private val ExcludedRules = "spark.sql.optimizer.excludedRules"
+
   def main(args: Array[String]): Unit = {
     val timeMode = args.headOption.contains("time")
     val qargs = if (timeMode) args.drop(1) else args
@@ -40,6 +42,10 @@ object SuiteAB {
     def rows(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
 
+    def leg(on: Boolean): Unit =
+      if (on) spark.conf.unset(ExcludedRules)
+      else spark.conf.set(ExcludedRules, classOf[graft.plans.SampleJoinReorder].getName)
+
     if (timeMode) {
       val lastPlanS = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
       def once(n: String): Double = {
@@ -50,8 +56,6 @@ object SuiteAB {
         (System.nanoTime() - t0) / 1e9
       }
       names.foreach { n =>
-        def leg(on: Boolean): Unit =
-          spark.conf.set("spark.graft.sampleReorder.enabled", on.toString)
         leg(false); once(n); leg(true); once(n) // warmups
         val offs = scala.collection.mutable.Buffer[Double]()
         val ons = scala.collection.mutable.Buffer[Double]()
@@ -74,9 +78,9 @@ object SuiteAB {
     var bad = 0
     names.foreach { n =>
       try {
-        spark.conf.set("spark.graft.sampleReorder.enabled", "false")
+        leg(false)
         val off = rows(build(n))
-        spark.conf.set("spark.graft.sampleReorder.enabled", "true")
+        leg(true)
         val on = rows(build(n))
         if (off == on) println(s"[suiteab] $n OK (${on.size} rows)")
         else {

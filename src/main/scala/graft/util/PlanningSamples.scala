@@ -16,9 +16,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Layout: the table `<dir>/<t>` (or `<dir>/<t>.parquet`) samples to
   * `<dir>/_samples/<t>.parquet` plus `<dir>/_samples/<t>.count` holding the
-  * true row count; the bucketed layout `<dir>/_bucketed/<t>` resolves to
-  * its parent dir's samples. This object is the one writer and the one
-  * reader of that layout. Planning metadata only — never query data.
+  * true row count. This object is the one writer and the one reader of
+  * that layout. Planning metadata only — never query data.
   */
 object PlanningSamples {
 
@@ -58,10 +57,7 @@ object PlanningSamples {
     * row count. */
   def of(spark: SparkSession, tableRoot: String): Option[Sample] = {
     val f = new java.io.File(tableRoot.stripPrefix("file:"))
-    val (dir, name) =
-      if (f.getParentFile != null && f.getParentFile.getName == "_bucketed")
-        (f.getParentFile.getParentFile.getPath, f.getName)
-      else (f.getParent, f.getName.stripSuffix(".parquet"))
+    val (dir, name) = (f.getParent, f.getName.stripSuffix(".parquet"))
     val path = s"$dir/_samples/$name.parquet"
     val countFile = new java.io.File(s"$dir/_samples/$name.count")
     Option(loaded.computeIfAbsent(path, { _ =>

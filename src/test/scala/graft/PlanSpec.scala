@@ -125,6 +125,25 @@ class PlanSpec extends SparkSpec {
       "expected exact long arithmetic, not double-rounded")
   }
 
+  test("Decorrelate: a mixed outer/local aggregate is answered by the text rewrite alone") {
+    // Spark's analyzer rejects SUM(o*l) before any injected resolution rule
+    // runs, so its identity o*SUM(l) lives in SqlCanonicalizer's text
+    // rewrite, not in DecorrelateComplexAggs. If Spark ever starts
+    // accepting the shape, the spark.sql half fails and the plan-level
+    // rule needs its mixed identities back.
+    import spark.implicits._
+    Seq[Option[Int]](Some(1), Some(2), Some(3), None).toDF("i").createOrReplaceTempView("dc_ints")
+    val q = "SELECT i, (SELECT SUM(i1.i*i) FROM dc_ints) FROM dc_ints i1 GROUP BY i"
+    try {
+      val err = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(err.getCondition.endsWith(".AGGREGATE_FUNCTION_MIXED_OUTER_LOCAL_REFERENCES"), err.getMessage)
+      val rows = graft.sqlsurface.GraftSql(spark, q).collect()
+        .map(r => (Option(r.get(0)).map(_.toString), Option(r.get(1)).map(_.toString))).toSet
+      assert(rows == Set(Some("1") -> Some("6"), Some("2") -> Some("12"),
+        Some("3") -> Some("18"), None -> None), rows)
+    } finally spark.catalog.dropTempView("dc_ints")
+  }
+
   test("CBO: column stats flip a JOB-style multi-join order (ANALYZE TABLE)") {
     // the reference reorders joins from sampled statistics (DPhyp,
     // OptimizeJoinOrder.cpp:13-140); the Spark-native equivalent is
@@ -255,44 +274,27 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** `body` planned and run with SampleJoinReorder off, through Spark's own
+    * rule exclusion (the rule is on wherever every join leaf has a sample). */
+  private def withRuleOff[A](body: => A): A = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.SampleJoinReorder")
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
   test("sample selectivity: complex-predicate join order flips with the rule ON, not OFF") {
     // The reference evaluates predicates on stored samples before join
     // ordering (QueryGraph.cpp:264-294); Catalyst's CBO histogram path
     // (previous test) cannot see through a correlated two-column predicate.
-    // plans.SampleJoinReorder evaluates the pushed-down filter on the
-    // ScaleUp-persisted sample and moves the filtered table first.
+    // plans.SampleJoinReorder evaluates the pushed-down filter on each
+    // table's planning sample and moves the filtered table first; Spark's
+    // excludedRules switch turns it off.
     val q = flipQuery()
-    spark.conf.set("spark.graft.sampleReorder.enabled", "false") // session default is ON (no-dataDir)
-    val off = leafOrder(q())
-    val offRows = q().collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.sampleReorder.enabled", "true")
-    try {
-      val on = leafOrder(q())
-      val onRows = q().collect().map(_.toString).sorted.toSeq
-      assert(off != on, s"sampled selectivity should flip the join order; both were $off")
-      assert(on.head == "s_dim_big.parquet",
-        s"the sampled ~1% filtered table must lead the join order, got $on")
-      assert(onRows == offRows, "reordering must not change results")
-    } finally spark.conf.unset("spark.graft.sampleReorder.enabled")
-  }
-
-  test("sample reorder: a spark.graft.sampleReorder.enabled that is not a boolean leaves the rule off") {
-    // a bad conf value falls back to the unset default (off) instead of
-    // throwing inside the optimizer and failing every query
-    val q = flipQuery()
-    def plan(v: String): String = {
-      spark.conf.set("spark.graft.sampleReorder.enabled", v)
-      q().queryExecution.optimizedPlan.toString.replaceAll("#\\d+L?", "#N")
-    }
-    try {
-      val off = plan("false")
-      val offRows = q().collect().map(_.toString).sorted.toSeq
-      assert(plan("true") != off, "fixture broken: the rule must change this plan when on")
-      for (bad <- Seq("yes", "")) {
-        assert(plan(bad) == off, s"value '$bad' must plan as with the rule off")
-        assert(q().collect().map(_.toString).sorted.toSeq == offRows, s"rows under '$bad'")
-      }
-    } finally spark.conf.unset("spark.graft.sampleReorder.enabled")
+    val (off, offRows) = withRuleOff((leafOrder(q()), freshRows(q())))
+    val on = leafOrder(q())
+    assert(off != on, s"sampled selectivity should flip the join order; both were $off")
+    assert(on.head == "s_dim_big.parquet",
+      s"the sampled ~1% filtered table must lead the join order, got $on")
+    assert(freshRows(q()) == offRows, "reordering must not change results")
   }
 
   test("sample reorder: exact DP beats greedy where smallest-leaf-first is a trap") {
@@ -337,16 +339,11 @@ class PlanSpec extends SparkSpec {
           }
       }.toSet).getOrElse(Set.empty)
     }
-    spark.conf.set("spark.graft.sampleReorder.enabled", "false") // session default is ON (no-dataDir)
-    val offRows = q().collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.sampleReorder.enabled", "true")
-    try {
-      val bottom = bottomJoinTables(q())
-      assert(bottom == Set("dp_b.parquet", "dp_c.parquet"),
-        s"exact DP should join B⋈C first (greedy leads with smallest leaf A); got $bottom")
-      val onRows = q().collect().map(_.toString).sorted.toSeq
-      assert(onRows == offRows, "DP reordering must not change results")
-    } finally spark.conf.unset("spark.graft.sampleReorder.enabled")
+    val offRows = withRuleOff(freshRows(q()))
+    val bottom = bottomJoinTables(q())
+    assert(bottom == Set("dp_b.parquet", "dp_c.parquet"),
+      s"exact DP should join B⋈C first (greedy leads with smallest leaf A); got $bottom")
+    assert(freshRows(q()) == offRows, "DP reordering must not change results")
   }
 
   test("sample broadcast hints: a string-filtered side invisible to stats broadcasts with the rule ON") {
@@ -380,22 +377,19 @@ class PlanSpec extends SparkSpec {
         .filter(col("d_note").contains("xyz"))
       big.join(dim, col("b_k") === col("d_k"))
     }
-    spark.conf.set("spark.graft.sampleReorder.enabled", "false")
-    val offDf = q()
-    val offRows = offDf.collect().map(_.toString).sorted.toSeq
-    val offPlan = offDf.queryExecution.executedPlan.toString
-    spark.conf.set("spark.graft.sampleReorder.enabled", "true")
-    try {
-      val onDf = q()
-      val onRows = onDf.collect().map(_.toString).sorted.toSeq
-      val onPlan = onDf.queryExecution.executedPlan.toString
-      assert(offPlan.contains("Exchange hashpartitioning"),
-        "fixture broken: the rule-OFF plan should shuffle (estimate over threshold):\n" + offPlan)
-      assert(onPlan.contains("BroadcastHashJoin"), onPlan)
-      assert(!onPlan.contains("Exchange hashpartitioning"),
-        "rule-ON plan must not shuffle the big side:\n" + onPlan)
-      assert(onRows == offRows, "broadcast hint must not change results")
-    } finally spark.conf.set("spark.graft.sampleReorder.enabled", "true")
+    val (offRows, offPlan) = withRuleOff {
+      val offDf = q()
+      (freshRows(offDf), offDf.queryExecution.executedPlan.toString)
+    }
+    val onDf = q()
+    val onRows = freshRows(onDf)
+    val onPlan = onDf.queryExecution.executedPlan.toString
+    assert(offPlan.contains("Exchange hashpartitioning"),
+      "fixture broken: the rule-OFF plan should shuffle (estimate over threshold):\n" + offPlan)
+    assert(onPlan.contains("BroadcastHashJoin"), onPlan)
+    assert(!onPlan.contains("Exchange hashpartitioning"),
+      "rule-ON plan must not shuffle the big side:\n" + onPlan)
+    assert(onRows == offRows, "broadcast hint must not change results")
   }
 
   test("sample broadcast hints: composite-side hint is gated by probe size (serialized-stage pricing)") {
@@ -435,7 +429,6 @@ class PlanSpec extends SparkSpec {
     // 40 B = 12 kB) fits — neither probe (480 kB / 1.4 MB) may, or the
     // leaf-preference path would broadcast the probe and bypass the gate
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "50000")
-    spark.conf.set("spark.graft.sampleReorder.enabled", "true")
     try {
       val gated = topHint(q(20000))
       assert(!hasBroadcastSide(gated),
@@ -444,17 +437,10 @@ class PlanSpec extends SparkSpec {
       assert(hasBroadcastSide(hinted),
         s"composite-side hint must fire when the probe exchange outweighs the penalty: $hinted")
       // the hint decision must not change results
-      for (n <- Seq(20000, 60000)) {
-        spark.conf.set("spark.graft.sampleReorder.enabled", "true")
-        val onRows = q(n).collect().map(_.toString).sorted.toSeq
-        spark.conf.set("spark.graft.sampleReorder.enabled", "false")
-        val offRows = q(n).collect().map(_.toString).sorted.toSeq
-        assert(onRows == offRows, s"gated hints must not change results (probe $n)")
-      }
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
-      spark.conf.set("spark.graft.sampleReorder.enabled", "true")
-    }
+      for (n <- Seq(20000, 60000))
+        assert(freshRows(q(n)) == withRuleOff(freshRows(q(n))),
+          s"gated hints must not change results (probe $n)")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
   }
 
   test("sample estimates run no Spark job once a table's sample is loaded") {
@@ -494,29 +480,26 @@ class PlanSpec extends SparkSpec {
       .join(read("nj_dim").filter(col("d_n") > 4 && col("d_s").like("%x1")),
         col("f_b") === col("d_b"))
       .join(read("nj_side").filter(col("s_t").isin("tag2", "tag5")), col("f_b") === col("s_b"))
-    spark.conf.set("spark.graft.sampleReorder.enabled", "true")
-    try {
-      // both built (schema resolved) before counting starts
-      val (df1, df2) = (q1(), q2())
-      val (plan1, firstJobs) = jobsDuring(df1.queryExecution.optimizedPlan) // loads the samples
-      val (plan2, jobs) = jobsDuring(df2.queryExecution.optimizedPlan)
-      for ((plan, q) <- Seq(plan1 -> "q1", plan2 -> "q2"))
-        assert(plan.collect { case j: Join => j.hint }.exists(_ != JoinHint.NONE),
-          s"the rule must have estimated $q (it hints the small sides):\n$plan")
-      assert(firstJobs == 0, s"planning q1 (first sample load) started $firstJobs Spark job(s)")
-      assert(jobs == 0, s"planning q2 started $jobs Spark job(s)")
-      // pinned: in-memory selectivity == Spark's filter count over the sample
-      val sample = PlanningSamples.of(spark, s"$dir/nj_dim.parquet").get
-      val frame = spark.read.parquet(sample.path)
-      val n = frame.count().toDouble
-      for (c <- Seq(col("d_s").contains("_3"), col("d_s").like("name_1%x2"),
-          col("d_n").isin(1, 4, 9), col("d_r") >= 100.0 && col("d_r") < 612.5,
-          col("d_n") > 4 || col("d_s").contains("_9"))) {
-        val f = frame.filter(c)
-        val cond = f.queryExecution.analyzed match { case Filter(e, _) => e }
-        assert(SampleJoinReorder.selectivity(sample, cond) == Some(f.count() / n), s"selectivity of $c")
-      }
-    } finally spark.conf.set("spark.graft.sampleReorder.enabled", "true")
+    // both built (schema resolved) before counting starts
+    val (df1, df2) = (q1(), q2())
+    val (plan1, firstJobs) = jobsDuring(df1.queryExecution.optimizedPlan) // loads the samples
+    val (plan2, jobs) = jobsDuring(df2.queryExecution.optimizedPlan)
+    for ((plan, q) <- Seq(plan1 -> "q1", plan2 -> "q2"))
+      assert(plan.collect { case j: Join => j.hint }.exists(_ != JoinHint.NONE),
+        s"the rule must have estimated $q (it hints the small sides):\n$plan")
+    assert(firstJobs == 0, s"planning q1 (first sample load) started $firstJobs Spark job(s)")
+    assert(jobs == 0, s"planning q2 started $jobs Spark job(s)")
+    // pinned: in-memory selectivity == Spark's filter count over the sample
+    val sample = PlanningSamples.of(spark, s"$dir/nj_dim.parquet").get
+    val frame = spark.read.parquet(sample.path)
+    val n = frame.count().toDouble
+    for (c <- Seq(col("d_s").contains("_3"), col("d_s").like("name_1%x2"),
+        col("d_n").isin(1, 4, 9), col("d_r") >= 100.0 && col("d_r") < 612.5,
+        col("d_n") > 4 || col("d_s").contains("_9"))) {
+      val f = frame.filter(c)
+      val cond = f.queryExecution.analyzed match { case Filter(e, _) => e }
+      assert(SampleJoinReorder.selectivity(sample, cond) == Some(f.count() / n), s"selectivity of $c")
+    }
   }
 
   test("sample NDV groups values as Spark's groupBy does") {
@@ -556,18 +539,14 @@ class PlanSpec extends SparkSpec {
     def q() = spark.read.parquet(s"$dir/bad_a.parquet")
       .join(spark.read.parquet(s"$dir/bad_b.parquet").filter(col("b_s").contains("1")),
         col("a_k") === col("b_k"))
-    spark.conf.set("spark.graft.sampleReorder.enabled", "false")
-    val offRows = q().collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.sampleReorder.enabled", "true")
-    try {
-      val df = q()
-      val onRows = df.collect().map(_.toString).sorted.toSeq
-      assert(df.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.hint
-      }.forall(_ == org.apache.spark.sql.catalyst.plans.logical.JoinHint.NONE),
-        "a table without a usable sample must leave the join untouched")
-      assert(onRows.nonEmpty && onRows == offRows)
-    } finally spark.conf.set("spark.graft.sampleReorder.enabled", "true")
+    val offRows = withRuleOff(freshRows(q()))
+    val df = q()
+    val onRows = freshRows(df)
+    assert(df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.hint
+    }.forall(_ == org.apache.spark.sql.catalyst.plans.logical.JoinHint.NONE),
+      "a table without a usable sample must leave the join untouched")
+    assert(onRows.nonEmpty && onRows == offRows)
   }
 
   test("bucketed layout: q21's fact pipeline is exchange-free; results match plain layout") {

@@ -25,7 +25,7 @@ class Sf1Spec extends SparkSpec {
   private def provisioned: Boolean = this.synchronized {
     if (skipped) false
     else {
-      val done = new java.io.File(sf1, "_samples/embeddings.count")
+      val done = new java.io.File(sf1, "_bucketed/orders/_bucketspec")
       if (!done.isFile) {
         info(s"provisioning $sf1 via ScaleUp (absent or incomplete)")
         graft.tools.ScaleUp.run(spark, "/root/testdata/sf0.1", sf1, k = 10)
